@@ -27,6 +27,7 @@ object BuildProfileProbe {
     // warm codegen on the micro SF like the bench does
     val warm = graft.etl.Warehouse.build(spark, "/root/testdata/sf0.001")
     noop(warm.factSalesElt); noop(warm.dimDate)
+    warm.release()
     spark.sharedState.cacheManager.clearCache()
 
     val stgC = Staging.customers(spark, sfDir)

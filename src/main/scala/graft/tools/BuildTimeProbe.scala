@@ -21,12 +21,14 @@ object BuildTimeProbe {
     // untimed micro-SF warm-up, exactly like Bench
     val ww = graft.etl.Warehouse.build(spark, "/root/testdata/sf0.001")
     noop(ww.factSalesElt); noop(ww.dimDate)
+    ww.release()
     spark.sharedState.cacheManager.clearCache()
     val times = (1 to reps).map { _ =>
       val t0 = System.nanoTime()
       val wh = graft.etl.Warehouse.build(spark, dir)
       noop(wh.factSalesElt); noop(wh.dimDate)
       val s = (System.nanoTime() - t0) / 1e9
+      wh.release()
       spark.sharedState.cacheManager.clearCache()
       s
     }

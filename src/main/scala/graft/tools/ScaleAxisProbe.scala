@@ -124,7 +124,8 @@ object ScaleAxisProbe {
       noop(wh.dimDate)
       (wh, (System.nanoTime() - t0) / 1e9)
     }
-    val (_, b1) = timedBuild()
+    val (w1, b1) = timedBuild()
+    w1.release()
     spark.sharedState.cacheManager.clearCache()
     val (w, b2) = timedBuild()
     recs += RowRec("warehouse_build", math.min(b1, b2), Map.empty)
@@ -315,6 +316,7 @@ object ScaleAxisProbe {
     // one untimed micro-scale build pays codegen/JIT before any timed row
     val ww = Warehouse.build(spark, "/root/testdata/sf0.001")
     noop(ww.factSalesElt); noop(ww.dimDate)
+    ww.release()
     spark.sharedState.cacheManager.clearCache()
 
     // the scale claim itself, recorded: the fixture must carry rep× the rows
