@@ -15,6 +15,8 @@ import scala.collection.concurrent.TrieMap
   * re-prints (in each SQL execution's formatted explain) or re-ships (in each
   * task's RDD lineage) the ETL tree that built it. The cache sits OVER the
   * checkpoint, so its per-batch min/max stats still prune `date_key` ranges.
+  * Summary tables over the star (the MOLAP pre-aggregations) become the same
+  * kind of leaf on their first read (see [[Warehouse.summary]]).
   *
   * The trade-off: local-checkpoint blocks live on the executor that wrote
   * them and cannot be recomputed once it is lost. That fits one long-lived
@@ -61,14 +63,36 @@ final case class Warehouse(
     "dimProduct" -> dimProduct, "salesFinal" -> salesFinal, "dimDate" -> dimDate,
     "factSales" -> factSales, "factSalesElt" -> factSalesElt)
 
+  /** Summary tables built from this warehouse, by name (see [[summary]]). */
+  private val summaries = scala.collection.mutable.Map.empty[String, DataFrame]
+
+  /** The summary table `name` as a shallow leaf, built from `plan` on its
+    * first read and reused by every later one — the reference's
+    * `CREATE TABLE … AS` over the star. Concurrent first reads build one
+    * leaf. Each call returns a fresh Dataset over the leaf, so no query
+    * execution (nor its AQE state) is shared between callers. */
+  def summary(name: String)(plan: Warehouse => DataFrame): DataFrame = {
+    val leaf = summaries.synchronized {
+      summaries.getOrElseUpdate(name, Warehouse.leaf(plan(this)))
+    }
+    leaf.select("*")
+  }
+
   /** Drops this build: each leaf's in-memory cache and the local-checkpoint
-    * blocks under it. `cacheManager.clearCache()` drops only the former, so a
-    * caller that rebuilds releases the build it abandons first. The frames
-    * are unreadable afterwards. */
-  def release(): Unit = cachedFrames.foreach { case (_, df) =>
-    df.unpersist(blocking = false)
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    * blocks under it, the summary leaves included. `cacheManager.clearCache()`
+    * drops only the former, so a caller that rebuilds releases the build it
+    * abandons first. The frames are unreadable afterwards. */
+  def release(): Unit = {
+    val built = summaries.synchronized {
+      val leaves = summaries.values.toList
+      summaries.clear()
+      leaves
+    }
+    (cachedFrames.map(_._2) ++ built).foreach { df =>
+      df.unpersist(blocking = false)
+      df.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      }
     }
   }
 }
@@ -84,17 +108,18 @@ object Warehouse {
   def apply(spark: SparkSession, dir: String): Warehouse =
     cache.getOrElseUpdate((spark, dir), build(spark, dir))
 
-  /** Builds the star and caches each reused frame as a shallow leaf:
-    * `localCheckpoint(eager = false, DISK_ONLY)` cuts the plan and RDD lineage
-    * at local disk blocks (written by the first action, with the cache), and
-    * `.cache()` keeps one columnar copy on top for the queries to scan.
-    * Lazy still runs each frame's shuffle and broadcast stages here: the
-    * checkpoint needs the frame's RDD, and AQE executes those stages to
-    * plan it. Only the final stages wait for the first action. */
-  def build(spark: SparkSession, dir: String): Warehouse = {
-    def leaf(df: DataFrame): DataFrame =
-      df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY).cache()
+  /** A shallow leaf: `localCheckpoint(eager = false, DISK_ONLY)` cuts the
+    * plan and RDD lineage at local disk blocks (written by the first action,
+    * with the cache), and `.cache()` keeps one columnar copy on top for the
+    * queries to scan. Lazy still runs the frame's shuffle and broadcast
+    * stages here: the checkpoint needs the frame's RDD, and AQE executes
+    * those stages to plan it. Only the final stages wait for the first
+    * action. */
+  private def leaf(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY).cache()
 
+  /** Builds the star and caches each reused frame as a shallow [[leaf]]. */
+  def build(spark: SparkSession, dir: String): Warehouse = {
     val stgC = Staging.customers(spark, dir)
     val stgP = Staging.products(spark, dir)
     val stgS = Staging.sales(spark, dir)

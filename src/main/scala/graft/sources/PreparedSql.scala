@@ -10,9 +10,17 @@ import org.apache.spark.sql.graft.{expressions => bridge}
   * row, irrelevant per-scan at 100 TB but dominant for a dashboard's
   * repeated sub-second queries. [[prepare]] plans the text ONCE and pins
   * the PHYSICAL plan; every later [[Prepared.run]]/[[Prepared.executedPlan]]
-  * re-executes it directly (new Spark jobs, real scan work — only the
-  * planning amortizes), the PostgreSQL `PREPARE`/`EXECUTE` contract the
+  * re-executes it directly, the PostgreSQL `PREPARE`/`EXECUTE` contract the
   * reference's serving layer gets from its DBMS.
+  *
+  * More than the planning amortizes. The pinned plan is adaptive: the first
+  * run executes every stage, and AQE fixes the final plan over the shuffle
+  * and broadcast stages it materialized. Every later run re-executes that
+  * final plan, so it runs only the result stage, over the first run's
+  * shuffle output — no scan, no map side. On the `sql_olap_q1` text over a
+  * ~120k-row fact the first run executes 4 jobs and 4 stages, and every
+  * later run 1 job and 1 stage (`PreparedSqlSpec` records both, with their
+  * tasks). Rows are unchanged, because the views under the plan are stable.
   *
   * Staleness contract: a statement over VERSIONED tables (a non-empty
   * `tables` map, resolved through [[SqlDml.query]]) re-reads each table's
@@ -55,9 +63,11 @@ object PreparedSql {
       ensureCurrent().executedPlan
 
     /** Serve the statement from the pinned plan: no parse, no analysis, no
-      * optimization — the physical plan executes and the rows come back as
-      * an eagerly materialized DataFrame (the handle's results must not
-      * lazily re-plan later). */
+      * optimization. The first run executes every stage; a later run
+      * re-executes only the final plan's result stage over the shuffle
+      * output the first run materialized. The rows come back as an eagerly
+      * materialized DataFrame (the handle's results must not lazily re-plan
+      * later). */
     def run(): DataFrame = {
       val (rows, schema) = bridge.collectExecuted(spark, ensureCurrent())
       spark.createDataFrame(

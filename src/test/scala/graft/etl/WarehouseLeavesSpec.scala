@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.SparkSpec
+import graft.olap.Molap
 
 /** The cached warehouse frames are shallow leaves: a columnar cache over a
   * local checkpoint, so a dashboard query neither re-plans nor re-prints nor
@@ -84,6 +85,10 @@ class WarehouseLeavesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert((held & one).isEmpty, held)
     // the live build is intact: its frames still read
     assert(w3.factSalesElt.count() === factRows)
+    // its summary leaves go with it on release
+    Seq(Molap.monthCountry _, Molap.monthProduct _, Molap.customerMonth _)
+      .foreach(read => read(w3).count())
+    assert((persisted -- before).size === one.size + 2 * 3)
     w3.release()
     assert(persisted -- before === Set.empty)
   }
