@@ -60,7 +60,7 @@ object Bench {
     // r11 drift-watch resolution (VERDICT r10 #6): in BENCH context (after
     // the doc-op family has warmed JIT/codegen) the row measures 0.384 at
     // sf0.1 — at its recorded value; the 0.48-0.52 readings (two artifacts
-    // + a cold tools/R11Probe where it ran FIRST in a fresh session) are
+    // + a cold tools/R11Probe @ 8323d6e where it ran FIRST in a fresh session) are
     // first-query JIT cost, which the in-bench untimed warm-up + the rows
     // ahead of it absorb. Keep 0.40: it grants best-of-5 and keeps the
     // 0.60s WARN line tight.
@@ -133,26 +133,26 @@ object Bench {
     // r13-late row: observed 0.11-0.15 across probe + clean bench runs
     "multimodal_y4m_decode" -> 0.14,
     // r16: the prepared-handle serve (pinned plan + shuffle-stage reuse —
-    // final-stage latency; tools/PrepProbe measured 0.021 steady)
+    // final-stage latency; tools/PrepProbe @ 8323d6e measured 0.021 steady)
     "sql_olap_q1_prepared" -> 0.03,
     // r16: color JPEG decode, steady value from the clean builder run
     "multimodal_jpeg_color_decode" -> 0.47,
     // r17 RE-RECORD: the r16 honest value (1.45 — the old 0.49 measured
     // cross-rep cache reuse) dropped to 0.77-0.88 once the greedy rounds
-    // localCheckpoint instead of chaining cached plans (tools/MmrProbe,
+    // localCheckpoint instead of chaining cached plans (tools/MmrProbe @ 8323d6e,
     // identical output) — same fix class as doc_bpe_merges
     "emb_mmr_rerank" -> 0.80,
     // r16 late: MJPEG/AVI decode — 2-6 full color-JPEG frames per doc plus
     // the container walk; 1.24/1.21 across the two recording runs
     "multimodal_mjpeg_decode" -> 1.21,
     // r17: progressive JPEG — ten-scan encode fixture + multi-scan decode;
-    // steady 0.57-0.67 across tools/ProgJpegProbe's 8 reps at sf0.1
+    // steady 0.57-0.67 across the 8 reps of tools/ProgJpegProbe @ 8323d6e at sf0.1
     "multimodal_jpeg_progressive_decode" -> 0.60,
     // r17 (VERDICT r16 #2): the +44% drift was the honest cost of the
     // cached-lineage trainer once b4cf7f7 stopped cross-rep cache reuse —
     // each generation's plan nested i HOF folds, so analysis cost grew
     // O(n²) in the merge count. bpeTrain now truncates lineage per
-    // generation (localCheckpoint); tools/BpeProbe measures 1.37-1.47
+    // generation (localCheckpoint); tools/BpeProbe @ 8323d6e measures 1.37-1.47
     // warm-steady at sf0.1 and the r17 clean IN-BENCH recording (fully
     // warm context) 1.08-1.22 — recorded at the bench-context value so
     // the warn line is tight where the row actually runs
@@ -313,6 +313,19 @@ object Bench {
         (col("id") * 2654435761L % 1048576L).as("k"))
       .groupBy("k")
       .agg(count(lit(1)).as("n"), sum(length(col("h"))).as("hl"), max("h").as("hmax"))
+  /** One calibration reading, the protocol both the in-bench checkpoints and
+    * tools/CalibProbe's re-recording use: best of 3 runs of
+    * [[calibrationFrame]], after two codegen/JIT warm-up runs when `warmUp`
+    * (the bench warms up once, before its first checkpoint). */
+  private[graft] def calibrationSample(spark: SparkSession, warmUp: Boolean): Double = {
+    def run(): Double = {
+      val t0 = System.nanoTime()
+      noop(calibrationFrame(spark))
+      (System.nanoTime() - t0) / 1e9
+    }
+    if (warmUp) { run(); run() }
+    (1 to 3).map(_ => run()).min
+  }
   private val calibObs = scala.collection.mutable.ArrayBuffer.empty[Double]
   // wall-clock stamp of each calibration checkpoint, so every row can be
   // normalized by its NEAREST-in-time factor (r21, VERDICT r20 #1 / r19
@@ -329,14 +342,8 @@ object Bench {
         System.err.println(s"[bench] WARN $wmsg")
       }
     }
-    def run(): Double = {
-      val t0 = System.nanoTime()
-      noop(calibrationFrame(spark))
-      (System.nanoTime() - t0) / 1e9
-    }
     try {
-      if (calibObs.isEmpty) { run(); run() } // one-time codegen/JIT warm-up
-      val best = (1 to 3).map(_ => run()).min
+      val best = calibrationSample(spark, warmUp = calibObs.isEmpty)
       calibObs += best
       calibTimes += System.nanoTime()
       calibFactor = best / CalibrationRecordedSec
@@ -444,9 +451,34 @@ object Bench {
         && !mine.contains(p.pid())).count()
   }
 
+  /** The session every timed row and calibration checkpoint runs in:
+    * `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle partitions.
+    * tools/CalibProbe records `CalibrationRecordedSec` in this same session. */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // cache compression trades CPU for memory; the warehouse caches are a
+      // few hundred MB on a 128 GiB box, so spend the memory and keep the
+      // build/query CPU (measured ~30% off the build at sf0.1)
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // The approx-segmentation release handles unpersist locally-checkpointed
+    // frames AFTER their last consumer, which is safe by construction but
+    // makes RDD.unpersist log a benign "lineage has been truncated" WARN per
+    // rep — hundreds of lines that bury real warnings in the artifact tail
+    // (VERDICT r19). Suppress that one logger; every other WARN still lands.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // Idle-host launch guard (r16, VERDICT r15 #5): three consecutive
     // official artifacts came from a contended machine (another JVM live at
@@ -471,24 +503,7 @@ object Bench {
     }
     val javaProcsAtLaunch = foreignJavaProcs()
     val loadAtLaunch = loadNow()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cache compression trades CPU for memory; the warehouse caches are a
-      // few hundred MB on a 128 GiB box, so spend the memory and keep the
-      // build/query CPU (measured ~30% off the build at sf0.1)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The approx-segmentation release handles unpersist locally-checkpointed
-    // frames AFTER their last consumer, which is safe by construction but
-    // makes RDD.unpersist log a benign "lineage has been truncated" WARN per
-    // rep — hundreds of lines that bury real warnings in the artifact tail
-    // (VERDICT r19). Suppress that one logger; every other WARN still lands.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    val spark = session()
 
     // Every fresh warehouse build, so each rebuild can drop the builds it
     // replaces: clearCache() drops the in-memory caches but not a build's
@@ -754,7 +769,7 @@ object Bench {
           col("totalamount").cast("double").as("totalamount"),
           graft.dateOfDateKey(col("date_key")).as("full_date"))
       time("oltp_invoice_lookup_bucketed")(bucketedLookup)
-      // Prepared-statement analog (tools/OltpProbe decomposition, COVERAGE.md):
+      // Prepared-statement analog (tools/OltpProbe @ 8323d6e decomposition, COVERAGE.md):
       // of the bucketed row's ~50 ms, ~13 ms is plan construction and ~20 ms
       // the noop write's per-action planning/commit — costs PostgreSQL's µs
       // planner and EXPLAIN ANALYZE don't pay. This row builds the physical
@@ -824,7 +839,7 @@ object Bench {
       // row-per-second dateMonth frame for a month digit was the engine's own
       // anti-pattern (VERDICT r5). The fallback-key filter reproduces the row
       // set the inner dim join produced.
-      // Plan choices here are probe-measured (tools/MvProbe, COVERAGE.md):
+      // Plan choices here are probe-measured (tools/MvProbe @ 8323d6e, COVERAGE.md):
       // pre-aggregating month×product before the join (VERDICT r7 #6's
       // suggestion) measures 2× WORSE — the ~|months|×|products| group space
       // barely reduces the fact, so the extra shuffle dominates while the
@@ -854,7 +869,7 @@ object Bench {
       time("sql_olap_q1")(SparkEntry.queries("sql_olap_q1")(spark, sfDir))
       // r16 (VERDICT r15 #3): the same verbatim SQL served from a PREPARED
       // handle — planned once, the pinned physical plan re-executed per
-      // rep. What this measures (probe-verified, tools/PrepProbe): beyond
+      // rep. What this measures (probe-verified, tools/PrepProbe @ 8323d6e): beyond
       // amortizing parse/analyze/optimize/planning, re-executing the SAME
       // plan instance reuses its already-materialized shuffle map stages
       // (Spark's exchange RDDs are pinned in the plan), so a repeated

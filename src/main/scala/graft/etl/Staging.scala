@@ -75,7 +75,7 @@ object Staging {
     * sort-merge join, exactly what we want at 100 TB (both sides partition on
     * the join key; AQE handles skew). */
   def sales(spark: SparkSession, dir: String): DataFrame = {
-    // Partition-starvation guard (r18, found by tools/ScaleAxisProbe): a
+    // Partition-starvation guard (r18, found by tools/ScaleAxisProbe @ 8323d6e): a
     // small-SF lineitem ships as ONE parquet file with a handful of row
     // groups, so the scan yields ~3 partitions (Spark's split formula:
     // max(openCost, bytes/defaultParallelism) caps the split at 4 MB) —

@@ -143,7 +143,7 @@ object Warehouse {
     // rows twice per build for no extra reuse.
     val sp = Transforms.salesParsed(stgS)
     // One AQE-coalescible shuffle before the cache (r18, found by
-    // tools/ScaleAxisProbe): the parse layer above runs WIDE (the staging
+    // tools/ScaleAxisProbe @ 8323d6e): the parse layer above runs WIDE (the staging
     // guard), but a cache that inherits that width hurts tiny-SF query
     // latency — 32 near-empty partitions make partial aggregation useless
     // for ~20k-group keys (every partition emits ~1 row per group). No
@@ -155,7 +155,7 @@ object Warehouse {
     // bounds (one extra full pass at any scale). Cache batches are built
     // from partition-SORTED rows, so per-batch min/max stats stay as tight
     // as the range layout's and date-range predicates prune identically
-    // (A/B'd in tools/R20Probe: build 3.37→3.17 s min, datekey/composite
+    // (A/B'd in tools/R20Probe @ 8323d6e: build 3.37→3.17 s min, datekey/composite
     // range rows flat-to-better). NULL sale_ts rows sort first per
     // partition, clustering into few batches, as before.
     val sf = leaf(Transforms.salesFinal(sp, dimP)

@@ -495,7 +495,7 @@ object EmbeddingOps extends QueryRegistry {
     * `transform` against only that round's pick (the incremental-max
     * trick). The previous shape paid a window + an equi-join + a
     * localCheckpoint materialization PER ROUND — 2k+1 sequential jobs whose
-    * scheduling floor dominated the row (probed: tools/MmrProbe) — where
+    * scheduling floor dominated the row (probed: tools/MmrProbe @ 8323d6e) — where
     * this is one window + one per-query aggregate, with the rounds fused
     * into the projection. All rounds operate on the rerank window —
     * |queries|·nCand rows, independent of corpus size; candidate generation
@@ -598,7 +598,7 @@ object EmbeddingOps extends QueryRegistry {
 
   /** Multi-probe ANN (Hamming ≤ 1): each query probes its own LSH bucket
     * PLUS the 8 buckets one bit-flip away — the standard multi-probe LSH
-    * recall fix for the single-bucket loss `tools/QuantRecallProbe` measures
+    * recall fix for the single-bucket loss `tools/QuantRecallProbe @ 8323d6e` measures
     * (a near-random corpus splits true neighbors across adjacent buckets).
     * Shape is unchanged at scale: the query side explodes 9x (still tiny)
     * and candidates remain an equi-join on the bucket key — candidate mass
@@ -737,7 +737,7 @@ object EmbeddingOps extends QueryRegistry {
     * evaluate on reconstructed vectors, exactly as a deployed int8 index
     * would (the float corpus never enters the search). Double arrays, so the
     * HOF cosine ([[cosAny]]) re-ranks instead of the float-native kernel.
-    * Recall vs the float path is measured by `tools/QuantRecallProbe`
+    * Recall vs the float path is measured by `tools/QuantRecallProbe @ 8323d6e`
     * (COVERAGE.md). */
   def annBucketedQuantized(emb: DataFrame): DataFrame = {
     val wb = quantizeDecode(emb)
@@ -1000,7 +1000,7 @@ object EmbeddingOps extends QueryRegistry {
       GROUP BY b.query_id"""))),
 
     // Multi-probe ANN: Hamming<=1 bucket expansion before the exact re-rank
-    // (the recall fix QuantRecallProbe motivated).
+    // (the recall fix tools/QuantRecallProbe @ 8323d6e motivated).
     QueryDef("emb_ann_multiprobe", (s, d) => annMultiProbe(emb(s, d)), Some(oq(s"""
       , $sqlBuckets,
       wb AS (SELECT e.vec_id, e.embedding, b.bucket FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id),

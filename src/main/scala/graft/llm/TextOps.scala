@@ -600,7 +600,7 @@ object TextOps extends QueryRegistry {
     * (pre-aggregate on (token, doc_id), then sum/count per token) rather
     * than `count + count_distinct` in one agg: Spark plans the mixed form
     * through an Expand that duplicates every exploded row, which probe-
-    * measures ~1.8× slower at sf0.1 (tools/VocabProbe, VERDICT r9 #5) and
+    * measures ~1.8× slower at sf0.1 (tools/VocabProbe @ 8323d6e, VERDICT r9 #5) and
     * doubles the shuffled volume at any scale. The global top-k is a
     * TakeOrdered over the aggregated vocab (|vocab| rows, not |corpus|),
     * deterministic via the token tie-break.
@@ -1199,7 +1199,7 @@ object TextOps extends QueryRegistry {
     * per-digest entries are those docs' repeat counts — the same group the
     * self-join's SMJ buffered per key, minus one full shuffle+sort. A/B'd
     * 1.381 → 1.138 s min at sf0.1 and probed on hot-digest fixtures at 10×
-    * and 100× the bench doc count (tools/R21Probe skew_spans_*, numbers in
+    * and 100× the bench doc count (tools/R21Probe @ 8323d6e skew_spans_*, numbers in
     * OPTIMIZATION_r21.md); output row-identical (probe sorted compare +
     * shared oracle). */
   def sharedSpans(docs: DataFrame, segWords: Int = SegWords,

@@ -117,7 +117,7 @@ object Olap extends QueryRegistry {
   /** Q6: cohort — signup month vs first-3-months revenue (non-equi theta join
     * J6: equi on customer_key + month-range residual).
     *
-    * r20 reshape (guide §2.3/§2.4, A/B'd in tools/R20Probe: 1.030 → 0.675 s
+    * r20 reshape (guide §2.3/§2.4, A/B'd in tools/R20Probe @ 8323d6e: 1.030 → 0.675 s
     * min at sf0.1, rows identical): the old shape pre-aggregated the fact by
     * (customer_key, sale_month) — a fact-wide exchange into a barely-smaller
     * group space — before the signup join and then shuffled AGAIN onto the
@@ -135,7 +135,7 @@ object Olap extends QueryRegistry {
     * broadcast. The hint is gone: the dim is cached (accurate size stats),
     * so Spark/AQE picks BHJ while signup genuinely fits and degrades to a
     * shuffle join when it doesn't. A/B'd flat-to-better without the hint
-    * (tools/R21Probe q6_nohint: 0.795 → 0.751 s min, 48/48 rows identical)
+    * (tools/R21Probe @ 8323d6e q6_nohint: 0.795 → 0.751 s min, 48/48 rows identical)
     * and the bench-SF plan still shows BroadcastHashJoin, now AQE-chosen. */
   def q6(w: Warehouse): DataFrame = {
     val signup = w.dimCustomerElt
@@ -329,7 +329,7 @@ object Olap extends QueryRegistry {
 
   /** Shared core of [[basketLift]] / [[basketLiftPruned]] over any
     * `(invoiceid, stockcode)` feed — generic so the long-tail fixture
-    * probe (tools/BasketProbe) drives both variants over a Zipfian
+    * probe (tools/BasketProbe @ 8323d6e) drives both variants over a Zipfian
     * catalog, the shape the prune argues from (r17, VERDICT r16 #6). */
   private[graft] def basketLiftOver(sales: DataFrame, minPairN: Long,
       maxBasket: Int, prune: Boolean): DataFrame = {
@@ -342,7 +342,7 @@ object Olap extends QueryRegistry {
     // consumers (item counts, the basket total, and the pair fan-out).
     // Exchange reuse shares the map-side shuffle write, but the reduce-side
     // object-hash collect_set merge re-ran per consumer — the dominant cost
-    // of the row (probed 3×: tools/R20Probe). One materialization of the
+    // of the row (probed 3×: tools/R20Probe @ 8323d6e). One materialization of the
     // |baskets|-sized array frame runs it once; blocks release via the
     // context cleaner when the frame goes out of scope (the bpeTrain
     // discipline).
@@ -393,7 +393,7 @@ object Olap extends QueryRegistry {
     * re-aggregation of pruned baskets), so it WINS exactly when the pruned
     * pair mass exceeds that item mass: on the synthetic sf0.1 feed, where
     * minPairN=2 keeps almost every item frequent, it measures 1.91 → 2.39 s
-    * (the shuffle with nothing to prune — probe-recorded, tools/RowProbe)
+    * (the shuffle with nothing to prune — probe-recorded, tools/RowProbe @ 8323d6e)
     * — the default [[basketLift]] stays the unconditional-path row, and
     * this is the shape a long-tail catalog switches to. A per-row
     * `array_intersect` against a broadcast catalog array was measured 70×
@@ -452,7 +452,7 @@ object Olap extends QueryRegistry {
   /** [[ltvQuartilesApprox]] plus an explicit release handle (ADVICE r18):
     * the checkpointed per-customer frame's executor-local blocks are
     * otherwise reclaimed only by the ContextCleaner after a GC, so a timed
-    * rep loop (Bench, ScaleAxisProbe) pins one |customers|-sized frame per
+    * rep loop (Bench, tools/ScaleAxisProbe @ 8323d6e) pins one |customers|-sized frame per
     * rep until the JVM happens to collect. Callers invoke the handle after
     * consuming the frame; one-shot callers can keep using the plain form. */
   def ltvQuartilesApproxReleasable(w: Warehouse, accuracy: Int = 10000)

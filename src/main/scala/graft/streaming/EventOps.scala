@@ -802,7 +802,7 @@ object EventOps extends QueryRegistry {
     * per the same watermark-emission rule as `stream_hourly_roundtrip`.
     * The on-time half lands as TWO time-ordered drops first, because of
     * Spark's two-watermark design (probed empirically —
-    * `tools/WmProbe`): a batch filters late events against the PREVIOUS
+    * `tools/WmProbe @ 8323d6e`): a batch filters late events against the PREVIOUS
     * batch's watermark and evicts/emits against the current one, so the
     * watermark that drops the late file must have been established one
     * batch before it arrives. This is the state-bound contract that makes

@@ -1,0 +1,33 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `src/main` ships the library and exactly four entry points: the bench and
+  * verify mains, the calibration recorder behind
+  * `Bench.CalibrationRecordedSec`, and the `PLANS.md` generator. A one-off
+  * probe or measurement main belongs under `src/test` or outside the repo;
+  * this spec fails when one lands in `src/main`. */
+class EntryPointsSpec extends AnyFunSuite {
+  private val objectDecl = """\bobject\s+(\w+)""".r
+  private val mainDecl = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+
+  /** The object each `main` (or `App`) in `file` belongs to: the nearest
+    * `object` declared before it. */
+  private def mainObjects(file: Path): Iterator[String] = {
+    val src = new String(Files.readAllBytes(file), "UTF-8")
+    val objects = objectDecl.findAllMatchIn(src).map(m => (m.start, m.group(1))).toSeq
+    mainDecl.findAllMatchIn(src).map(m =>
+      objects.takeWhile(_._1 < m.start).lastOption.fold(s"<top level of $file>")(_._2))
+  }
+
+  test("src/main defines main only in Bench, Verify, CalibProbe and PlanDump") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val mains = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(mainObjects).toList finally walk.close()
+    assert(mains.sorted == List("Bench", "CalibProbe", "PlanDump", "Verify"))
+  }
+}
