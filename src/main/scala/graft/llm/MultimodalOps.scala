@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -350,14 +352,20 @@ object MultimodalOps extends QueryRegistry {
   }
 
   // ---------------------------------------------------------------------
-  // Baseline JPEG (r13, VERDICT r12 #7) — the LOSSY codec: full marker
-  // walk, canonical Huffman entropy decode, DQT dequantization, reference
-  // IDCT, restart markers, byte unstuffing. Scope: 8-bit baseline
-  // sequential GRAYSCALE (SOF0, one component, 1x1 sampling) — the
-  // Huffman+dequant+IDCT core of the format without the chroma-subsample /
-  // color-transform rounding chains, which keeps decoded features exactly
-  // derivable for the oracle. Progressive (SOF2) and multi-component scans
-  // are rejected loudly.
+  // JPEG (r13, VERDICT r12 #7) — the LOSSY codec, behind ONE core that
+  // every JPEG path shares: the marker walk ([[JpegHeader]]: SOI, DQT,
+  // DHT, DRI, APPn/COM skip, Adobe APP14, frame/scan routing, EOI), the
+  // entropy bit reader ([[JpegBits]]: FF00 unstuffing, receive/extend,
+  // restart markers), the baseline sequential MCU decoder over N
+  // components with per-component sampling ([[decodeBaseline]]), the
+  // reference IDCT ([[idct8x8]]) and block placement ([[JpegPlanes]]), and
+  // the fixture writer ([[JpegWriter]]). The grayscale, color, CMYK/YCCK and
+  // MJPEG decoders keep only their frame/scan validators and feature
+  // reductions; progressive keeps its own scan state machine on the same
+  // pieces. The grayscale face below is 8-bit baseline sequential, one
+  // component, 1x1 — the Huffman+dequant+IDCT core without the
+  // chroma-subsample / color-transform rounding chains, which keeps
+  // decoded features exactly derivable for the oracle.
   // ---------------------------------------------------------------------
 
   final case class JpegFeatures(doc_id: Long, width: Int, height: Int,
@@ -390,9 +398,9 @@ object MultimodalOps extends QueryRegistry {
     if (w.toLong * h > 100000000L)
       err(s"${w}x$h exceeds the 100M-pixel decode cap")
 
-  /** One DQT segment (possibly several tables, 8- or 16-bit entries),
-    * shared by all three JPEG decoders: fills `qTables` in zigzag order
-    * and returns the offset past the segment. */
+  /** One DQT segment (possibly several tables, 8- or 16-bit entries), as
+    * the shared marker walk meets it: fills `qTables` in zigzag order and
+    * returns the offset past the segment. */
   private def parseDqtSegment(bytes: Array[Byte], at: Int,
       qTables: Array[Array[Int]], err: String => Nothing): Int = {
     def u8(o: Int): Int =
@@ -419,27 +427,32 @@ object MultimodalOps extends QueryRegistry {
   }
 
   /** Reference 8x8 inverse DCT over a DEQUANTIZED natural-order block:
-    * level shift, StrictMath.rint, clamp — the one pixel-domain kernel all
-    * three JPEG decoders share. */
+    * level shift, StrictMath.rint, clamp — the one pixel-domain kernel
+    * behind every JPEG decode. Each sample sums only the nonzero
+    * coefficients, in (v, u) order: the same terms in the same order as
+    * the full 64-term sum that skips zeros, so the same doubles, at a cost
+    * that no longer depends on whether the JIT inlines this method (it
+    * swung the shared decoders ±25% between JVMs). */
   private def idct8x8(dq: Array[Int], out: Array[Int]): Unit = {
+    var nonzero = 0L // bit v * 8 + u set when that coefficient is nonzero
+    var k = 0
+    while (k < 64) {
+      if (dq(k) != 0) nonzero |= 1L << k
+      k += 1
+    }
     var y0 = 0
     while (y0 < 8) {
       var x0 = 0
       while (x0 < 8) {
         var f = 0.0
-        var v = 0
-        while (v < 8) {
+        var m = nonzero
+        while (m != 0) {
+          val k = java.lang.Long.numberOfTrailingZeros(m)
+          val v = k >> 3; val u = k & 7
           val cv = if (v == 0) InvSqrt2 else 1.0
-          var u = 0
-          while (u < 8) {
-            val c = dq(v * 8 + u)
-            if (c != 0) {
-              val cu = if (u == 0) InvSqrt2 else 1.0
-              f += cu * cv * c * CosTable(x0)(u) * CosTable(y0)(v)
-            }
-            u += 1
-          }
-          v += 1
+          val cu = if (u == 0) InvSqrt2 else 1.0
+          f += cu * cv * dq(k) * CosTable(x0)(u) * CosTable(y0)(v)
+          m &= m - 1
         }
         val p = StrictMath.rint(f / 4 + 128).toInt
         out(y0 * 8 + x0) = if (p < 0) 0 else if (p > 255) 255 else p
@@ -469,10 +482,10 @@ object MultimodalOps extends QueryRegistry {
         l += 1
       }
     }
-    def decode(nextBit: () => Int): Int = {
+    def decode(bits: JpegBits): Int = {
       var code = 0; var l = 0
       while (l < 16) {
-        code = (code << 1) | nextBit()
+        code = (code << 1) | bits.bit()
         if (code - firstCode(l) < counts(l))
           return symbols(firstIndex(l) + (code - firstCode(l)))
         l += 1
@@ -495,170 +508,412 @@ object MultimodalOps extends QueryRegistry {
     }
   }
 
-  /** Baseline grayscale JPEG decode: marker walk (APPn/COM skipped, SOF0 +
-    * DQT + DHT + optional DRI honored, progressive/multi-component
-    * rejected), canonical Huffman DC/AC entropy decode with DC prediction,
-    * ZRL/EOB run-length semantics, restart-marker handling (byte-align,
-    * RSTn sequence check, predictor reset), FF00 byte unstuffing, zigzag →
-    * natural reorder, per-coefficient dequantization, and the
-    * double-precision reference IDCT with level shift + clamp. Edge MCUs
-    * clip to the declared geometry. Features are exact integer statistics
-    * until one IEEE division — oracle-exact. */
-  private[llm] def parseJpeg(id: Long, bytes: Array[Byte]): JpegFeatures = {
-    def err(msg: String): Nothing =
-      throw new IllegalArgumentException(s"media of doc $id: $msg")
+  private def docErr(id: Long): String => Nothing =
+    msg => throw new IllegalArgumentException(s"media of doc $id: $msg")
+
+  /** The header side of one JPEG stream, shared by every decoder: the SOI
+    * check and marker walk ([[walk]]), the tables it fills (DQT, DHT),
+    * DRI, the Adobe APP14 transform, and the frame and scan fields the
+    * variants' validators read. `err` carries the caller's context (doc,
+    * or doc+frame) into failures. */
+  private final class JpegHeader(bytes: Array[Byte], val err: String => Nothing) {
     def u8(o: Int): Int =
       if (o < bytes.length) bytes(o) & 0xff else err("truncated JPEG")
     def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
-    if (bytes.length < 2 || u16(0) != 0xffd8) err("not a JPEG (missing SOI)")
 
     val qTables = new Array[Array[Int]](4)
     val dcTables = new Array[Huff](4)
     val acTables = new Array[Huff](4)
-    var w = 0; var h = 0; var qSel = -1; var dcSel = -1; var acSel = -1
     var restartInterval = 0
-    var sosAt = -1
-    var i = 2
-    while (sosAt < 0) {
-      if (u8(i) != 0xff) err(f"expected a marker at $i, got ${u8(i)}%02x")
-      val m = u8(i + 1)
-      m match {
-        case 0xc0 => // SOF0 — baseline sequential
-          if (u8(i + 4) != 8) err(s"unsupported sample precision ${u8(i + 4)}")
-          h = u16(i + 5); w = u16(i + 7)
-          if (w <= 0 || h <= 0) err(s"degenerate dimensions ${w}x$h")
-          guardPixels(w, h, err)
-          if (u8(i + 9) != 1) err(s"${u8(i + 9)} components (grayscale only)")
-          if (u8(i + 11) != 0x11) err("subsampled grayscale is malformed")
-          qSel = u8(i + 12)
-          if (qSel > 3) err(s"bad quantization table selector $qSel")
-          i += 2 + u16(i + 2)
-        case 0xc2 => err("progressive JPEG unsupported (baseline only)")
-        case x if x >= 0xc1 && x <= 0xcf && x != 0xc4 && x != 0xc8 && x != 0xcc =>
-          err(f"non-baseline frame marker ff$x%02x")
-        case 0xc4 => // DHT — possibly several tables in one segment
-          val end = i + 2 + u16(i + 2)
-          var o = i + 4
-          while (o < end) {
-            val tc = u8(o) >> 4; val th = u8(o) & 15
-            if (tc > 1 || th > 3) err("bad DHT table class/id")
-            val counts = Array.tabulate(16)(j => u8(o + 1 + j))
-            val n = counts.sum
-            val syms = Array.tabulate(n)(j => u8(o + 17 + j))
-            if (tc == 0) dcTables(th) = new Huff(counts, syms)
-            else acTables(th) = new Huff(counts, syms)
-            o += 17 + n
-          }
-          i = end
-        case 0xdb => // DQT — shared parser, 8/16-bit entries
-          i = parseDqtSegment(bytes, i, qTables, err)
-        case 0xdd =>
-          restartInterval = u16(i + 4); i += 2 + u16(i + 2)
-        case 0xda => // SOS
-          if (u8(i + 4) != 1) err("multi-component scan (grayscale only)")
-          dcSel = u8(i + 6) >> 4; acSel = u8(i + 6) & 15
-          if (dcSel > 3 || acSel > 3)
-            err(s"bad Huffman table selector $dcSel/$acSel")
-          if (u8(i + 7) != 0 || u8(i + 8) != 63 || u8(i + 9) != 0)
-            err("spectral selection / successive approximation unsupported")
-          sosAt = i + 2 + u16(i + 2)
-        case 0xd9 => err("EOI before any scan")
-        case x if (x >= 0xe0 && x <= 0xef) || x == 0xfe => // APPn / COM
-          i += 2 + u16(i + 2)
-        case other => err(f"unsupported marker ff$other%02x")
+    var adobeTransform = -1 // -1 = no Adobe APP14 marker seen
+    // frame fields (a repeated SOF overwrites), scan selectors by frame slot
+    var w = 0; var h = 0
+    val compId = new Array[Int](4)
+    val sampH = new Array[Int](4); val sampV = new Array[Int](4)
+    val qSel = new Array[Int](4)
+    val dcSel = new Array[Int](4); val acSel = new Array[Int](4)
+
+    /** Walks the markers from SOI. The variant's own frame marker (`sof`:
+      * SOF0 baseline, SOF2 progressive) goes to `frame`; every other SOFn
+      * is rejected, SOF2 in a baseline walk with `progressiveRejected`.
+      * Each SOS goes to `scan`, which returns the offset the walk resumes
+      * at. A baseline walk ends at its one scan and returns where the
+      * entropy-coded data starts; a progressive walk ends at EOI. */
+    def walk(sof: Int, frame: Int => Unit, scan: Int => Int,
+        progressiveRejected: String = "progressive JPEG unsupported (baseline only)"): Int = {
+      if (bytes.length < 2 || u16(0) != 0xffd8) err("not a JPEG (missing SOI)")
+      val progressive = sof == 0xc2
+      var i = 2
+      var end = -1
+      while (end < 0) {
+        if (u8(i) != 0xff) err(f"expected a marker at $i, got ${u8(i)}%02x")
+        u8(i + 1) match {
+          case m if m == sof =>
+            frame(i); i += 2 + u16(i + 2)
+          case 0xc4 => // DHT — possibly several tables in one segment
+            val segEnd = i + 2 + u16(i + 2)
+            var o = i + 4
+            while (o < segEnd) {
+              val tc = u8(o) >> 4; val th = u8(o) & 15
+              if (tc > 1 || th > 3) err("bad DHT table class/id")
+              val counts = Array.tabulate(16)(j => u8(o + 1 + j))
+              val n = counts.sum
+              val syms = Array.tabulate(n)(j => u8(o + 17 + j))
+              if (tc == 0) dcTables(th) = new Huff(counts, syms)
+              else acTables(th) = new Huff(counts, syms)
+              o += 17 + n
+            }
+            i = segEnd
+          case m if m >= 0xc0 && m <= 0xcf && m != 0xc8 && m != 0xcc =>
+            if (!progressive)
+              err(if (m == 0xc2) progressiveRejected else f"non-baseline frame marker ff$m%02x")
+            else if (m < 0xc4)
+              err("sequential frame in the progressive decoder (route to baseline)")
+            else err(f"unsupported frame marker ff$m%02x")
+          case 0xdb => // DQT — 8/16-bit entries
+            i = parseDqtSegment(bytes, i, qTables, err)
+          case 0xdd =>
+            restartInterval = u16(i + 4); i += 2 + u16(i + 2)
+          case 0xee => // APP14 — the Adobe transform declaration
+            val len = u16(i + 2)
+            if (len >= 14 && u8(i + 4) == 'A' && u8(i + 5) == 'd' &&
+                u8(i + 6) == 'o' && u8(i + 7) == 'b' && u8(i + 8) == 'e')
+              adobeTransform = u8(i + 15)
+            i += 2 + len
+          case 0xda =>
+            i = scan(i)
+            if (!progressive) end = i
+          case 0xd9 =>
+            if (!progressive) err("EOI before any scan")
+            end = i
+          case m if (m >= 0xe0 && m <= 0xef) || m == 0xfe => // APPn / COM
+            i += 2 + u16(i + 2)
+          case m => err(f"unsupported marker ff$m%02x")
+        }
+      }
+      if (w == 0) err(if (progressive) "missing SOF2" else "missing SOF0")
+      end
+    }
+
+    /** The SOFn fields every variant reads — 8-bit precision, non-zero
+      * dimensions under the pixel cap, then per component its id,
+      * sampling factors and quantization selector — under the variant's
+      * own `count` and `sampling` (slot, h, v) rules. */
+    def readFrame(at: Int, count: Int => Unit,
+        sampling: (Int, Int, Int) => Unit): Unit = {
+      if (u8(at + 4) != 8) err(s"unsupported sample precision ${u8(at + 4)}")
+      h = u16(at + 5); w = u16(at + 7)
+      if (w <= 0 || h <= 0) err(s"degenerate dimensions ${w}x$h")
+      guardPixels(w, h, err)
+      val n = u8(at + 9)
+      count(n)
+      var c = 0
+      while (c < n) {
+        compId(c) = u8(at + 10 + 3 * c)
+        val samp = u8(at + 11 + 3 * c)
+        sampH(c) = samp >> 4; sampV(c) = samp & 15
+        sampling(c, sampH(c), sampV(c))
+        qSel(c) = u8(at + 12 + 3 * c)
+        if (qSel(c) > 3) err(s"bad quantization table selector ${qSel(c)}")
+        c += 1
       }
     }
-    if (w == 0) err("missing SOF0")
-    val q = if (qSel >= 0 && qTables(qSel) != null) qTables(qSel)
-      else err("scan references an undefined quantization table")
-    val dcT = if (dcSel >= 0 && dcTables(dcSel) != null) dcTables(dcSel)
-      else err("scan references an undefined DC Huffman table")
-    val acT = if (acSel >= 0 && acTables(acSel) != null) acTables(acSel)
-      else err("scan references an undefined AC Huffman table")
 
-    // entropy-coded segment bit reader with FF00 unstuffing
-    var pos = sosAt
-    var bitBuf = 0; var bitCnt = 0
-    def nextBit(): Int = {
-      if (bitCnt == 0) {
-        val b = u8(pos)
+    /** Frame slot of scan component `cid` among the first `n` components. */
+    def frameSlot(cid: Int, n: Int): Int = {
+      var s = 0
+      while (s < n && compId(s) != cid) s += 1
+      if (s == n) err(s"scan references unknown component $cid")
+      s
+    }
+
+    /** A baseline SOS over `n` components: Huffman selectors stored by the
+      * frame slot `slot(scan position, component id)` picks, then the full
+      * spectral band at full precision. Returns where entropy data starts. */
+    def baselineScan(at: Int, n: Int, countRejected: String,
+        slot: (Int, Int) => Int): Int = {
+      if (u8(at + 4) != n) err(countRejected)
+      var c = 0
+      while (c < n) {
+        val s = slot(c, u8(at + 5 + 2 * c))
+        dcSel(s) = u8(at + 6 + 2 * c) >> 4; acSel(s) = u8(at + 6 + 2 * c) & 15
+        if (dcSel(s) > 3 || acSel(s) > 3)
+          err(s"bad Huffman table selector ${dcSel(s)}/${acSel(s)}")
+        c += 1
+      }
+      if (u8(at + 5 + 2 * n) != 0 || u8(at + 6 + 2 * n) != 63 || u8(at + 7 + 2 * n) != 0)
+        err("spectral selection / successive approximation unsupported")
+      at + 2 + u16(at + 2)
+    }
+
+    /** The `tables` that frame slots 0 until `n` select through `sel`;
+      * an undefined one fails as "`who(slot)` references an undefined
+      * `what`". */
+    def selected[T <: AnyRef: ClassTag](tables: Array[T], sel: Array[Int],
+        n: Int, what: String, who: Int => String): Array[T] =
+      Array.tabulate(n) { c =>
+        val t = tables(sel(c))
+        if (t != null) t else err(s"${who(c)} references an undefined $what")
+      }
+  }
+
+  /** The entropy-coded-segment reader every JPEG decoder shares: MSB-first
+    * bits with FF00 unstuffing, RECEIVE/EXTEND (T.81 F.2.2.1), and the
+    * restart step (byte-align, RSTn sequence check, DC predictor reset). */
+  private final class JpegBits(hd: JpegHeader, var pos: Int) {
+    private var buf = 0
+    private var cnt = 0
+    /** DC predictors by frame slot. */
+    val pred = new Array[Int](4)
+
+    def bit(): Int = {
+      if (cnt == 0) {
+        val b = hd.u8(pos)
         if (b == 0xff) {
-          if (u8(pos + 1) != 0x00) err("marker inside entropy-coded segment")
+          if (hd.u8(pos + 1) != 0x00) hd.err("marker inside entropy-coded segment")
           pos += 1 // skip the stuffed zero
         }
         pos += 1
-        bitBuf = b; bitCnt = 8
+        buf = b; cnt = 8
       }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
+      cnt -= 1
+      (buf >> cnt) & 1
     }
     def receive(n: Int): Int = {
       var v = 0; var j = 0
-      while (j < n) { v = (v << 1) | nextBit(); j += 1 }
+      while (j < n) { v = (v << 1) | bit(); j += 1 }
       v
     }
-    def extend(v: Int, t: Int): Int =
+    /** The value of a category-`t` coefficient: `t` bits, sign-extended. */
+    def signed(t: Int): Int = {
+      val v = receive(t)
       if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
+    }
+    def restart(mcu: Int): Unit = {
+      cnt = 0 // byte-align
+      val exp = 0xd0 + ((mcu / hd.restartInterval - 1) % 8)
+      if (hd.u8(pos) != 0xff || hd.u8(pos + 1) != exp)
+        hd.err(f"expected restart marker ff$exp%02x at MCU $mcu")
+      pos += 2
+      java.util.Arrays.fill(pred, 0)
+    }
+  }
 
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    val px = new Array[Int](w * h)
+  /** Decoded sample planes of the first `n` frame components. A component
+    * sampled like slot 0 (the MCU's factors) is stored at the declared
+    * w×h, edge blocks clipped; a subsampled one keeps its MCU-padded size
+    * and is read by replication (`plane((y / vs) * pw + x / hs)`). */
+  private final class JpegPlanes(hd: JpegHeader, n: Int) {
+    val w = hd.w; val h = hd.h
+    val hs = hd.sampH(0); val vs = hd.sampV(0)
+    val mw = (w + 8 * hs - 1) / (8 * hs); val mh = (h + 8 * vs - 1) / (8 * vs)
+    private def full(c: Int) = hd.sampH(c) == hs && hd.sampV(c) == vs
+    val pw = Array.tabulate(n)(c => if (full(c)) w else mw * 8 * hd.sampH(c))
+    val ph = Array.tabulate(n)(c => if (full(c)) h else mh * 8 * hd.sampV(c))
+    val plane = Array.tabulate(n)(c => new Array[Int](pw(c) * ph(c)))
+
+    /** Copy one [[idct8x8]] output `block` into component `c` with its
+      * top-left sample at (`y`, `x`), clipped to the plane. */
+    def put(c: Int, block: Array[Int], y: Int, x: Int): Unit = {
+      val cw = pw(c)
+      val rows = math.min(8, ph(c) - y); val cols = math.min(8, cw - x)
+      var y0 = 0
+      while (y0 < rows && cols > 0) {
+        System.arraycopy(block, y0 * 8, plane(c), (y + y0) * cw + x, cols)
+        y0 += 1
+      }
+    }
+  }
+
+  /** Baseline sequential decode of one interleaved scan over the first `n`
+    * frame components: per MCU, each component's h×v blocks in raster
+    * order — DC DPCM, AC run-length (ZRL/EOB), dequantization, IDCT —
+    * placed by [[JpegPlanes.put]], restarts between MCUs, then EOI. `who`
+    * names a component in an undefined-table failure. */
+  private def decodeBaseline(hd: JpegHeader, at: Int, n: Int,
+      who: Int => String): JpegPlanes = {
+    val q = hd.selected(hd.qTables, hd.qSel, n, "quantization table", who)
+    val dcT = hd.selected(hd.dcTables, hd.dcSel, n, "DC Huffman table", who)
+    val acT = hd.selected(hd.acTables, hd.acSel, n, "AC Huffman table", who)
+    val p = new JpegPlanes(hd, n)
+    val bits = new JpegBits(hd, at)
     val coef = new Array[Int](64)
     val block = new Array[Int](64)
-    var pred = 0
     var mcu = 0
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bitCnt = 0 // byte-align
-          val exp = 0xd0 + ((mcu / restartInterval - 1) % 8)
-          if (u8(pos) != 0xff || u8(pos + 1) != exp)
-            err(f"expected restart marker ff$exp%02x at MCU $mcu")
-          pos += 2
-          pred = 0
-        }
-        java.util.Arrays.fill(coef, 0)
-        val t = dcT.decode(nextBit)
-        if (t > 11) err(s"DC category $t out of range")
-        pred += extend(receive(t), t)
-        coef(0) = pred * q(0)
-        var z = 1
-        var eob = false
-        while (z < 64 && !eob) {
-          val rs = acT.decode(nextBit)
-          val r = rs >> 4; val s = rs & 15
-          if (s == 0) {
-            if (r == 15) z += 16 // ZRL: sixteen zeros
-            else eob = true
-          } else {
-            z += r
-            if (z > 63) err("AC run overruns the block")
-            coef(Zigzag(z)) = extend(receive(s), s) * q(z)
-            z += 1
+    var my = 0
+    while (my < p.mh) {
+      var mx = 0
+      while (mx < p.mw) {
+        if (restartDue(mcu, hd.restartInterval)) bits.restart(mcu)
+        var c = 0
+        while (c < n) {
+          val hc = hd.sampH(c); val vc = hd.sampV(c); val qc = q(c)
+          var bv = 0
+          while (bv < vc) {
+            var bu = 0
+            while (bu < hc) {
+              java.util.Arrays.fill(coef, 0)
+              val t = dcT(c).decode(bits)
+              if (t > 11) hd.err(s"DC category $t out of range")
+              bits.pred(c) += bits.signed(t)
+              coef(0) = bits.pred(c) * qc(0)
+              var z = 1
+              while (z < 64) {
+                val rs = acT(c).decode(bits)
+                val r = rs >> 4; val s = rs & 15
+                if (s == 0) z += (if (r == 15) 16 else 64) // ZRL, else EOB
+                else {
+                  z += r
+                  if (z > 63) hd.err("AC run overruns the block")
+                  coef(Zigzag(z)) = bits.signed(s) * qc(z)
+                  z += 1
+                }
+              }
+              idct8x8(coef, block)
+              p.put(c, block, (my * vc + bv) * 8, (mx * hc + bu) * 8)
+              bu += 1
+            }
+            bv += 1
           }
-        }
-        // reference IDCT + level shift + clamp (shared kernel), clipped
-        idct8x8(coef, block)
-        var y0 = 0
-        while (y0 < 8) {
-          val yy = by * 8 + y0
-          var x0 = 0
-          while (x0 < 8) {
-            val xx = bx * 8 + x0
-            if (yy < h && xx < w) px(yy * w + xx) = block(y0 * 8 + x0)
-            x0 += 1
-          }
-          y0 += 1
+          c += 1
         }
         mcu += 1
-        bx += 1
+        mx += 1
       }
-      by += 1
+      my += 1
     }
     // after the last MCU: byte-align and expect EOI
-    if (u8(pos) != 0xff || u8(pos + 1) != 0xd9) err("missing EOI after scan")
+    if (hd.u8(bits.pos) != 0xff || hd.u8(bits.pos + 1) != 0xd9)
+      hd.err("missing EOI after scan")
+    p
+  }
 
+  /** Fixture-side JPEG writer shared by every encoder: SOI on creation,
+    * the header segments (all tables id 0, component ids slot+1), then
+    * the entropy-coded bits — MSB first, FF00-stuffed, 1-padded at a
+    * flush — with the DC-difference and restart emission. DC codes come
+    * from the Annex K fixture table, AC codes from `acCounts`/`acSyms`. */
+  private final class JpegWriter(capacity: Int, acCounts: Array[Int],
+      acSyms: Array[Int]) {
+    private val out = new java.io.ByteArrayOutputStream(capacity)
+    private val dcH = new Huff(FixtureDcCounts, FixtureDcSyms)
+    private val acH = new Huff(acCounts, acSyms)
+    private def w8(v: Int): Unit = out.write(v & 0xff)
+    private def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
+    private def marker(m: Int): Unit = { w8(0xff); w8(m) }
+    marker(0xd8)
+
+    /** JFIF APP0 — ancillary, the decoders skip it. */
+    def jfif(): Unit = {
+      marker(0xe0); w16(16)
+      out.write("JFIF".getBytes("US-ASCII")); w8(0)
+      w8(1); w8(1); w8(0); w16(1); w16(1); w8(0); w8(0)
+    }
+    /** APP14: "Adobe" + version + flags + transform. */
+    def adobe(transform: Int): Unit = {
+      marker(0xee); w16(14)
+      out.write("Adobe".getBytes("US-ASCII"))
+      w16(100); w16(0); w16(0); w8(transform)
+    }
+    /** DQT `qz` (zigzag order), SOFn with one JFIF sampling byte per
+      * component, the DC and AC tables, and DRI when `restartInterval` > 0. */
+    def frame(sof: Int, w: Int, h: Int, samplings: Seq[Int], qz: Array[Int],
+        restartInterval: Int): Unit = {
+      marker(0xdb); w16(67); w8(0x00); qz.foreach(w8)
+      marker(sof); w16(8 + 3 * samplings.length); w8(8); w16(h); w16(w)
+      w8(samplings.length)
+      samplings.zipWithIndex.foreach { case (s, c) => w8(c + 1); w8(s); w8(0) }
+      def dht(tc: Int, counts: Array[Int], syms: Array[Int]): Unit = {
+        marker(0xc4); w16(2 + 1 + 16 + syms.length)
+        w8(tc << 4); counts.foreach(w8); syms.foreach(w8)
+      }
+      dht(0, FixtureDcCounts, FixtureDcSyms)
+      dht(1, acCounts, acSyms)
+      if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
+    }
+    /** SOS over frame `slots`, band Ss..Se, approximation Ah/Al. */
+    def sos(slots: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
+      marker(0xda); w16(6 + 2 * slots.length); w8(slots.length)
+      slots.foreach { c => w8(c + 1); w8(0x00) }
+      w8(ss); w8(se); w8((ah << 4) | al)
+    }
+
+    private var bitBuf = 0
+    private var bitCnt = 0
+    def putBits(v: Int, n: Int): Unit = {
+      var j = n - 1
+      while (j >= 0) {
+        bitBuf = (bitBuf << 1) | ((v >> j) & 1); bitCnt += 1
+        if (bitCnt == 8) {
+          w8(bitBuf)
+          if ((bitBuf & 0xff) == 0xff) w8(0x00)
+          bitBuf = 0; bitCnt = 0
+        }
+        j -= 1
+      }
+    }
+    def flushBits(): Unit = if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
+    private def putCode(huff: Huff, sym: Int): Unit = {
+      val (code, len) = huff.codeOf.getOrElse(sym,
+        throw new IllegalArgumentException(f"fixture table lacks symbol $sym%02x"))
+      putBits(code, len)
+    }
+    def putAc(sym: Int): Unit = putCode(acH, sym)
+    /** The `s` low bits of a category-`s` value (negatives offset by 2^s−1). */
+    def putValue(v: Int, s: Int): Unit = putBits(if (v < 0) v + (1 << s) - 1 else v, s)
+
+    /** DC predictors by frame slot. */
+    val pred = new Array[Int](4)
+    /** Quantized DC `v` of slot `c`: its difference to the predictor. */
+    def putDc(c: Int, v: Int): Unit = {
+      val diff = v - pred(c)
+      pred(c) = v
+      val t = category(diff)
+      putCode(dcH, t)
+      putValue(diff, t)
+    }
+    def restart(mcu: Int, restartInterval: Int): Unit = {
+      flushBits()
+      marker(0xd0 + ((mcu / restartInterval - 1) % 8))
+      java.util.Arrays.fill(pred, 0)
+    }
+    def finish(): Array[Byte] = {
+      flushBits()
+      marker(0xd9)
+      out.toByteArray
+    }
+  }
+
+  private def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
+
+  /** True when an RSTn marker precedes MCU `mcu` under `restartInterval`. */
+  private def restartDue(mcu: Int, restartInterval: Int): Boolean =
+    restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0
+
+  /** The fixtures' quantization table: 16 everywhere, Q(0,0)=8 (× the
+    * IDCT's ÷8 → exact DC constants) and, with `ac44`, Q(4,4)=8 at its
+    * zigzag position 39 (the same exactness for the AC(4,4) term). */
+  private def fixtureQuant(ac44: Boolean): Array[Int] = {
+    val qz = Array.fill(64)(16)
+    qz(0) = 8
+    if (ac44) qz(39) = 8
+    qz
+  }
+
+  /** Baseline grayscale JPEG decode: the shared walk with a one-component
+    * 1x1 frame and scan (progressive/multi-component rejected), then the
+    * shared MCU decoder — canonical Huffman DC/AC with DC prediction,
+    * ZRL/EOB, restarts, FF00 unstuffing, zigzag → natural,
+    * dequantization, the reference IDCT with level shift + clamp, edge
+    * MCUs clipped to the declared geometry. Features are exact integer
+    * statistics until one IEEE division — oracle-exact. */
+  private[llm] def parseJpeg(id: Long, bytes: Array[Byte]): JpegFeatures = {
+    val hd = new JpegHeader(bytes, docErr(id))
+    val at = hd.walk(0xc0,
+      hd.readFrame(_, n => if (n != 1) hd.err(s"$n components (grayscale only)"),
+        (_, hc, vc) => if (hc != 1 || vc != 1) hd.err("subsampled grayscale is malformed")),
+      hd.baselineScan(_, 1, "multi-component scan (grayscale only)", (_, _) => 0))
+    val px = decodeBaseline(hd, at, 1, _ => "scan").plane(0)
     var sum = 0L; var mn = 255; var mx = 0
     var p = 0
     while (p < px.length) {
@@ -668,7 +923,7 @@ object MultimodalOps extends QueryRegistry {
       if (v > mx) mx = v
       p += 1
     }
-    JpegFeatures(id, w, h, sum.toDouble / (w.toLong * h), mn, mx)
+    JpegFeatures(id, hd.w, hd.h, sum.toDouble / px.length, mn, mx)
   }
 
   def decodeJpeg(media: Dataset[MediaRow]): Dataset[JpegFeatures] = {
@@ -696,12 +951,6 @@ object MultimodalOps extends QueryRegistry {
       mean_r: Double, mean_g: Double, mean_b: Double,
       min_luma: Int, max_luma: Int)
 
-  /** Baseline interleaved YCbCr decode (3 components; luma sampling 1x1 or
-    * 2x2 with 1x1 chroma). Per-component quantization/Huffman selectors
-    * and DC predictors; restart markers reset ALL predictors; chroma
-    * upsamples by replication; RGB via the JFIF transform with
-    * `StrictMath.rint` + clamp. Statistics are exact integer sums until
-    * one IEEE division each — oracle-exact. */
   /** JFIF subsampling label from the luma sampling factors (r17 widens
     * the supported set): 1x1 → 4:4:4, 2x2 → 4:2:0, 2x1 → 4:2:2 (the
     * video-derived shape), 1x2 → 4:4:0. */
@@ -713,9 +962,14 @@ object MultimodalOps extends QueryRegistry {
     case _ => throw new IllegalStateException(s"unreachable sampling ${hs}x$vs")
   }
 
+  /** Baseline interleaved YCbCr decode (3 components; luma sampling 1-2
+    * per axis with 1x1 chroma). Per-component quantization/Huffman
+    * selectors and DC predictors; restart markers reset ALL predictors;
+    * chroma upsamples by replication; RGB via the JFIF transform with
+    * `StrictMath.rint` + clamp. Statistics are exact integer sums until
+    * one IEEE division each — oracle-exact. */
   private[llm] def parseJpegColor(id: Long, bytes: Array[Byte]): JpegColorFeatures = {
-    val d = jpegColorDecode(bytes,
-      msg => throw new IllegalArgumentException(s"media of doc $id: $msg"))
+    val d = jpegColorDecode(bytes, docErr(id))
     val n = d.w.toLong * d.h
     JpegColorFeatures(id, d.w, d.h, subsamplingName(d.hs, d.vs),
       d.sy.toDouble / n, d.scb.toDouble / n, d.scr.toDouble / n,
@@ -729,13 +983,13 @@ object MultimodalOps extends QueryRegistry {
       sy: Long, scb: Long, scr: Long, sr: Long, sg: Long, sb: Long,
       mn: Int, mx: Int)
 
-  /** Pixel statistics over decoded planes — chroma replicated to full
-    * resolution, RGB via the JFIF transform (rint + clamp), exact integer
-    * sums with one division each left to the caller. Shared by the
+  /** Pixel statistics over decoded YCbCr planes — chroma replicated to
+    * full resolution, RGB via the JFIF transform (rint + clamp), exact
+    * integer sums with one division each left to the caller. Shared by the
     * baseline color and progressive decoders. */
-  private def colorPlaneStats(w: Int, h: Int, hs: Int, vs: Int, cw: Int,
-      yPlane: Array[Int], cbPlane: Array[Int],
-      crPlane: Array[Int]): JpegColorDecoded = {
+  private def colorPlaneStats(p: JpegPlanes): JpegColorDecoded = {
+    val w = p.w; val h = p.h; val hs = p.hs; val vs = p.vs; val cw = p.pw(1)
+    val yPlane = p.plane(0); val cbPlane = p.plane(1); val crPlane = p.plane(2)
     var sy = 0L; var scb = 0L; var scr = 0L
     var sr = 0L; var sg = 0L; var sb = 0L
     var mn = 255; var mx2 = 0
@@ -763,225 +1017,30 @@ object MultimodalOps extends QueryRegistry {
     JpegColorDecoded(w, h, hs, vs, sy, scb, scr, sr, sg, sb, mn, mx2)
   }
 
-  /** The color-JPEG decode core behind [[parseJpegColor]] and the MJPEG
-    * frame loop: full marker walk + entropy decode + IDCT + upsample +
-    * RGB transform, reduced to [[JpegColorDecoded]] exact sums. `err`
-    * carries the caller's context (doc, or doc+frame) into failures. */
+  /** The YCbCr frame rule of the baseline color and progressive decoders:
+    * three components, luma sampling 1-2 per axis, chroma 1x1. */
+  private def ycbcrFrame(hd: JpegHeader)(at: Int): Unit =
+    hd.readFrame(at,
+      n => {
+        if (n == 4) hd.err("4-component stream (CMYK/YCCK — route to decodeJpegCmyk)")
+        if (n != 3) hd.err(s"$n components (YCbCr color only)")
+      },
+      (c, hc, vc) =>
+        if (c == 0) {
+          if (hc < 1 || hc > 2 || vc < 1 || vc > 2)
+            hd.err(f"unsupported luma sampling ${hc}x$vc (factors 1-2 only)")
+        } else if (hc != 1 || vc != 1) hd.err("chroma sampling must be 1x1"))
+
+  /** The color-JPEG decode behind [[parseJpegColor]] and the MJPEG frame
+    * loop: the shared walk and MCU decoder over the YCbCr frame, reduced
+    * to [[JpegColorDecoded]] exact sums. `err` carries the caller's
+    * context (doc, or doc+frame) into failures. */
   private def jpegColorDecode(bytes: Array[Byte], err: String => Nothing): JpegColorDecoded = {
-    def u8(o: Int): Int =
-      if (o < bytes.length) bytes(o) & 0xff else err("truncated JPEG")
-    def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
-    if (bytes.length < 2 || u16(0) != 0xffd8) err("not a JPEG (missing SOI)")
-
-    val qTables = new Array[Array[Int]](4)
-    val dcTables = new Array[Huff](4)
-    val acTables = new Array[Huff](4)
-    var w = 0; var h = 0
-    var hs = 0; var vs = 0 // luma sampling factors
-    val qSel = new Array[Int](3)
-    val compId = new Array[Int](3)
-    val dcSel = new Array[Int](3); val acSel = new Array[Int](3)
-    var restartInterval = 0
-    var sosAt = -1
-    var i = 2
-    while (sosAt < 0) {
-      if (u8(i) != 0xff) err(f"expected a marker at $i, got ${u8(i)}%02x")
-      val m = u8(i + 1)
-      m match {
-        case 0xc0 => // SOF0 — baseline sequential
-          if (u8(i + 4) != 8) err(s"unsupported sample precision ${u8(i + 4)}")
-          h = u16(i + 5); w = u16(i + 7)
-          if (w <= 0 || h <= 0) err(s"degenerate dimensions ${w}x$h")
-          guardPixels(w, h, err)
-          if (u8(i + 9) == 4)
-            err("4-component stream (CMYK/YCCK — route to decodeJpegCmyk)")
-          if (u8(i + 9) != 3) err(s"${u8(i + 9)} components (YCbCr color only)")
-          var c = 0
-          while (c < 3) {
-            compId(c) = u8(i + 10 + 3 * c)
-            val samp = u8(i + 11 + 3 * c)
-            if (c == 0) {
-              hs = samp >> 4; vs = samp & 15
-              if (hs < 1 || hs > 2 || vs < 1 || vs > 2)
-                err(f"unsupported luma sampling ${hs}x$vs (factors 1-2 only)")
-            } else if (samp != 0x11) err("chroma sampling must be 1x1")
-            qSel(c) = u8(i + 12 + 3 * c)
-            if (qSel(c) > 3) err(s"bad quantization table selector ${qSel(c)}")
-            c += 1
-          }
-          i += 2 + u16(i + 2)
-        case 0xc2 => err("progressive JPEG unsupported (baseline only)")
-        case x if x >= 0xc1 && x <= 0xcf && x != 0xc4 && x != 0xc8 && x != 0xcc =>
-          err(f"non-baseline frame marker ff$x%02x")
-        case 0xc4 =>
-          val end = i + 2 + u16(i + 2)
-          var o = i + 4
-          while (o < end) {
-            val tc = u8(o) >> 4; val th = u8(o) & 15
-            if (tc > 1 || th > 3) err("bad DHT table class/id")
-            val counts = Array.tabulate(16)(j => u8(o + 1 + j))
-            val n = counts.sum
-            val syms = Array.tabulate(n)(j => u8(o + 17 + j))
-            if (tc == 0) dcTables(th) = new Huff(counts, syms)
-            else acTables(th) = new Huff(counts, syms)
-            o += 17 + n
-          }
-          i = end
-        case 0xdb =>
-          i = parseDqtSegment(bytes, i, qTables, err)
-        case 0xdd =>
-          restartInterval = u16(i + 4); i += 2 + u16(i + 2)
-        case 0xda => // SOS — interleaved 3-component scan
-          if (u8(i + 4) != 3) err("scan must carry all three components")
-          var c = 0
-          while (c < 3) {
-            val cid = u8(i + 5 + 2 * c)
-            val slot = compId.indexOf(cid)
-            if (slot < 0) err(s"scan references unknown component $cid")
-            dcSel(slot) = u8(i + 6 + 2 * c) >> 4
-            acSel(slot) = u8(i + 6 + 2 * c) & 15
-            if (dcSel(slot) > 3 || acSel(slot) > 3)
-              err(s"bad Huffman table selector ${dcSel(slot)}/${acSel(slot)}")
-            c += 1
-          }
-          if (u8(i + 11) != 0 || u8(i + 12) != 63 || u8(i + 13) != 0)
-            err("spectral selection / successive approximation unsupported")
-          sosAt = i + 2 + u16(i + 2)
-        case 0xd9 => err("EOI before any scan")
-        case x if (x >= 0xe0 && x <= 0xef) || x == 0xfe =>
-          i += 2 + u16(i + 2)
-        case other => err(f"unsupported marker ff$other%02x")
-      }
-    }
-    if (w == 0) err("missing SOF0")
-    val q = Array.tabulate(3) { c =>
-      if (qTables(qSel(c)) != null) qTables(qSel(c))
-      else err(s"component $c references an undefined quantization table") }
-    val dcT = Array.tabulate(3) { c =>
-      if (dcTables(dcSel(c)) != null) dcTables(dcSel(c))
-      else err(s"component $c references an undefined DC Huffman table") }
-    val acT = Array.tabulate(3) { c =>
-      if (acTables(acSel(c)) != null) acTables(acSel(c))
-      else err(s"component $c references an undefined AC Huffman table") }
-
-    var pos = sosAt
-    var bitBuf = 0; var bitCnt = 0
-    def nextBit(): Int = {
-      if (bitCnt == 0) {
-        val b = u8(pos)
-        if (b == 0xff) {
-          if (u8(pos + 1) != 0x00) err("marker inside entropy-coded segment")
-          pos += 1
-        }
-        pos += 1
-        bitBuf = b; bitCnt = 8
-      }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
-    }
-    def receive(n: Int): Int = {
-      var v = 0; var j = 0
-      while (j < n) { v = (v << 1) | nextBit(); j += 1 }
-      v
-    }
-    def extend(v: Int, t: Int): Int =
-      if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-    // full-resolution luma plane; chroma planes at their subsampled size
-    val cw = (w + 8 * hs - 1) / (8 * hs) * 8 // chroma plane width (MCU-padded)
-    val ch = (h + 8 * vs - 1) / (8 * vs) * 8
-    val yPlane = new Array[Int](w * h)
-    val cbPlane = new Array[Int](cw * ch)
-    val crPlane = new Array[Int](cw * ch)
-    val mcuW = 8 * hs; val mcuH = 8 * vs
-    val mw = (w + mcuW - 1) / mcuW; val mh = (h + mcuH - 1) / mcuH
-    val pred = new Array[Int](3)
-    val coef = new Array[Int](64)
-    val block = new Array[Int](64)
-
-    def decodeBlock(c: Int): Unit = {
-      java.util.Arrays.fill(coef, 0)
-      val t = dcT(c).decode(nextBit)
-      if (t > 11) err(s"DC category $t out of range")
-      pred(c) += extend(receive(t), t)
-      coef(0) = pred(c) * q(c)(0)
-      var z = 1
-      var eob = false
-      while (z < 64 && !eob) {
-        val rs = acT(c).decode(nextBit)
-        val r = rs >> 4; val s = rs & 15
-        if (s == 0) {
-          if (r == 15) z += 16 else eob = true
-        } else {
-          z += r
-          if (z > 63) err("AC run overruns the block")
-          coef(Zigzag(z)) = extend(receive(s), s) * q(c)(z)
-          z += 1
-        }
-      }
-      idct8x8(coef, block)
-    }
-
-    var mcu = 0
-    var my = 0
-    while (my < mh) {
-      var mx = 0
-      while (mx < mw) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bitCnt = 0
-          val exp = 0xd0 + ((mcu / restartInterval - 1) % 8)
-          if (u8(pos) != 0xff || u8(pos + 1) != exp)
-            err(f"expected restart marker ff$exp%02x at MCU $mcu")
-          pos += 2
-          pred(0) = 0; pred(1) = 0; pred(2) = 0
-        }
-        // luma blocks, raster order within the MCU
-        var bv = 0
-        while (bv < vs) {
-          var bu = 0
-          while (bu < hs) {
-            decodeBlock(0)
-            var y0 = 0
-            while (y0 < 8) {
-              val yy = my * mcuH + bv * 8 + y0
-              var x0 = 0
-              while (x0 < 8) {
-                val xx = mx * mcuW + bu * 8 + x0
-                if (yy < h && xx < w) yPlane(yy * w + xx) = block(y0 * 8 + x0)
-                x0 += 1
-              }
-              y0 += 1
-            }
-            bu += 1
-          }
-          bv += 1
-        }
-        // one chroma block each, at chroma resolution
-        var c = 1
-        while (c <= 2) {
-          decodeBlock(c)
-          val plane = if (c == 1) cbPlane else crPlane
-          var y0 = 0
-          while (y0 < 8) {
-            val yy = my * 8 + y0
-            var x0 = 0
-            while (x0 < 8) {
-              val xx = mx * 8 + x0
-              if (yy < ch && xx < cw) plane(yy * cw + xx) = block(y0 * 8 + x0)
-              x0 += 1
-            }
-            y0 += 1
-          }
-          c += 1
-        }
-        mcu += 1
-        mx += 1
-      }
-      my += 1
-    }
-    if (u8(pos) != 0xff || u8(pos + 1) != 0xd9) err("missing EOI after scan")
-
-    colorPlaneStats(w, h, hs, vs, cw, yPlane, cbPlane, crPlane)
+    val hd = new JpegHeader(bytes, err)
+    val at = hd.walk(0xc0, ycbcrFrame(hd),
+      hd.baselineScan(_, 3, "scan must carry all three components",
+        (_, cid) => hd.frameSlot(cid, 3)))
+    colorPlaneStats(decodeBaseline(hd, at, 3, c => s"component $c"))
   }
 
   def decodeJpegColor(media: Dataset[MediaRow]): Dataset[JpegColorFeatures] = {
@@ -1038,83 +1097,45 @@ object MultimodalOps extends QueryRegistry {
     val nm = (w / mcuW) * (h / mcuH)
     require(yM.length == nm && cbM.length == nm && crM.length == nm,
       "one (y, cb, cr) triple per MCU")
-    require((yM ++ cbM ++ crM).forall(v => v >= 0 && v <= 255),
+    jpegEncodeDcOnly(w, h, Seq((hs << 4) | vs, 0x11, 0x11), Array(yM, cbM, crM),
+      restartInterval, _.jfif())
+  }
+
+  /** The DC-only baseline writer behind the color and CMYK fixtures: one
+    * constant per MCU per component (`planes(c)` in MCU raster order),
+    * Q(0,0)=8 so each decodes exactly, AC all-EOB (the run-length paths
+    * are the grayscale fixture's business). Component c writes
+    * `samplings(c)` (a JFIF h<<4|v byte) blocks per MCU, all sharing its
+    * constant; slot 0's factors size the MCU. Each component DC-predicts
+    * independently; restart markers reset them all. `app` writes the
+    * APPn segments after SOI. */
+  private def jpegEncodeDcOnly(w: Int, h: Int, samplings: Seq[Int],
+      planes: Array[Array[Int]], restartInterval: Int,
+      app: JpegWriter => Unit): Array[Byte] = {
+    require(planes.forall(_.forall(v => v >= 0 && v <= 255)),
       "plane constants are sample values")
-    val qz = Array.fill(64)(16)
-    qz(0) = 8
-    val dcH = new Huff(FixtureDcCounts, FixtureDcSyms)
-    val acH = new Huff(FixtureAcCounts, FixtureAcSyms)
-
-    val out = new java.io.ByteArrayOutputStream(256 + nm * 8)
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    marker(0xe0); w16(16)
-    out.write("JFIF".getBytes("US-ASCII")); w8(0)
-    w8(1); w8(1); w8(0); w16(1); w16(1); w8(0); w8(0)
-    marker(0xdb); w16(67); w8(0x00); qz.foreach(w8)
-    marker(0xc0); w16(17); w8(8); w16(h); w16(w); w8(3) // SOF0, 3 components
-    w8(1); w8((hs << 4) | vs); w8(0) // Y
-    w8(2); w8(0x11); w8(0) // Cb
-    w8(3); w8(0x11); w8(0) // Cr
-    def dht(tc: Int, counts: Array[Int], syms: Array[Int]): Unit = {
-      marker(0xc4); w16(2 + 1 + 16 + syms.length)
-      w8(tc << 4); counts.foreach(w8); syms.foreach(w8)
-    }
-    dht(0, FixtureDcCounts, FixtureDcSyms)
-    dht(1, FixtureAcCounts, FixtureAcSyms)
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-    marker(0xda); w16(12); w8(3)
-    w8(1); w8(0x00); w8(2); w8(0x00); w8(3); w8(0x00) // dc table 0, ac table 0
-    w8(0); w8(63); w8(0)
-
-    var bitBuf = 0; var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var j = n - 1
-      while (j >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> j) & 1); bitCnt += 1
-        if (bitCnt == 8) {
-          w8(bitBuf)
-          if ((bitBuf & 0xff) == 0xff) w8(0x00)
-          bitBuf = 0; bitCnt = 0
-        }
-        j -= 1
-      }
-    }
-    def flushBits(): Unit = if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-    def putCode(huff: Huff, sym: Int): Unit = {
-      val (code, len) = huff.codeOf.getOrElse(sym,
-        throw new IllegalArgumentException(f"fixture table lacks symbol $sym%02x"))
-      putBits(code, len)
-    }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val pred = new Array[Int](3)
-    def putDcOnlyBlock(c: Int, value: Int): Unit = {
-      val dq = value - 128 // Q00=8 cancels the IDCT's ÷8
-      val diff = dq - pred(c)
-      pred(c) = dq
-      val t = category(diff)
-      putCode(dcH, t)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-      putCode(acH, 0x00) // EOB
-    }
+    val nm = planes(0).length
+    val blocks = samplings.map(s => (s >> 4) * (s & 15)).toArray
+    val wr = new JpegWriter(256 + nm * 2 * planes.length, FixtureAcCounts, FixtureAcSyms)
+    app(wr)
+    wr.frame(0xc0, w, h, samplings, fixtureQuant(ac44 = false), restartInterval)
+    wr.sos(planes.indices, 0, 63, 0, 0)
     var m = 0
     while (m < nm) {
-      if (restartInterval > 0 && m > 0 && m % restartInterval == 0) {
-        flushBits()
-        marker(0xd0 + ((m / restartInterval - 1) % 8))
-        pred(0) = 0; pred(1) = 0; pred(2) = 0
+      if (restartDue(m, restartInterval)) wr.restart(m, restartInterval)
+      var c = 0
+      while (c < planes.length) {
+        var b = 0
+        while (b < blocks(c)) {
+          wr.putDc(c, planes(c)(m) - 128) // Q00=8 cancels the IDCT's ÷8
+          wr.putAc(0x00) // EOB
+          b += 1
+        }
+        c += 1
       }
-      var lb = 0
-      while (lb < hs * vs) { putDcOnlyBlock(0, yM(m)); lb += 1 }
-      putDcOnlyBlock(1, cbM(m))
-      putDcOnlyBlock(2, crM(m))
       m += 1
     }
-    flushBits()
-    marker(0xd9)
-    out.toByteArray
+    wr.finish()
   }
 
   // DC table: the public Annex K.3.1 luminance layout (12 categories);
@@ -1148,266 +1169,49 @@ object MultimodalOps extends QueryRegistry {
   // (r = (255−c)·(255−k)/255 — exact integer floor division, so the
   // oracle reproduces it verbatim with DuckDB's `//`).
 
-  private[llm] def parseJpegCmyk(id: Long, bytes: Array[Byte]): JpegCmykFeatures =
-    jpegCmykDecode(id, bytes,
-      msg => throw new IllegalArgumentException(s"media of doc $id: $msg"))
-
-  /** 4-component baseline decode: APP14 transform detection, per-component
-    * quantization/Huffman selectors and DC predictors (restart markers
-    * reset all FOUR), interleaved MCU walk with the K plane sampled like
-    * Y, chroma replication for YCCK, and exact integer ink/RGB sums with
-    * one IEEE division each — oracle-exact. */
-  private def jpegCmykDecode(id: Long, bytes: Array[Byte],
-      err: String => Nothing): JpegCmykFeatures = {
-    def u8(o: Int): Int =
-      if (o < bytes.length) bytes(o) & 0xff else err("truncated JPEG")
-    def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
-    if (bytes.length < 2 || u16(0) != 0xffd8) err("not a JPEG (missing SOI)")
-
-    val qTables = new Array[Array[Int]](4)
-    val dcTables = new Array[Huff](4)
-    val acTables = new Array[Huff](4)
-    var w = 0; var h = 0
-    val sampH = new Array[Int](4); val sampV = new Array[Int](4)
-    val qSel = new Array[Int](4)
-    val compId = new Array[Int](4)
-    val dcSel = new Array[Int](4); val acSel = new Array[Int](4)
-    var adobeTransform = -1 // -1 = no Adobe APP14 marker seen
-    var restartInterval = 0
-    var sosAt = -1
-    var i = 2
-    while (sosAt < 0) {
-      if (u8(i) != 0xff) err(f"expected a marker at $i, got ${u8(i)}%02x")
-      val m = u8(i + 1)
-      m match {
-        case 0xc0 => // SOF0 — baseline sequential
-          if (u8(i + 4) != 8) err(s"unsupported sample precision ${u8(i + 4)}")
-          h = u16(i + 5); w = u16(i + 7)
-          if (w <= 0 || h <= 0) err(s"degenerate dimensions ${w}x$h")
-          guardPixels(w, h, err)
-          if (u8(i + 9) != 4) err(s"${u8(i + 9)} components (CMYK/YCCK is 4)")
-          var c = 0
-          while (c < 4) {
-            compId(c) = u8(i + 10 + 3 * c)
-            val samp = u8(i + 11 + 3 * c)
-            sampH(c) = samp >> 4; sampV(c) = samp & 15
-            if (sampH(c) < 1 || sampH(c) > 2 || sampV(c) < 1 || sampV(c) > 2)
-              err(f"unsupported sampling ${sampH(c)}x${sampV(c)} (factors 1-2 only)")
-            qSel(c) = u8(i + 12 + 3 * c)
-            if (qSel(c) > 3) err(s"bad quantization table selector ${qSel(c)}")
-            c += 1
-          }
-          i += 2 + u16(i + 2)
-        case 0xc2 => err("progressive CMYK unsupported (baseline only)")
-        case x if x >= 0xc1 && x <= 0xcf && x != 0xc4 && x != 0xc8 && x != 0xcc =>
-          err(f"non-baseline frame marker ff$x%02x")
-        case 0xc4 =>
-          val end = i + 2 + u16(i + 2)
-          var o = i + 4
-          while (o < end) {
-            val tc = u8(o) >> 4; val th = u8(o) & 15
-            if (tc > 1 || th > 3) err("bad DHT table class/id")
-            val counts = Array.tabulate(16)(j => u8(o + 1 + j))
-            val n = counts.sum
-            val syms = Array.tabulate(n)(j => u8(o + 17 + j))
-            if (tc == 0) dcTables(th) = new Huff(counts, syms)
-            else acTables(th) = new Huff(counts, syms)
-            o += 17 + n
-          }
-          i = end
-        case 0xdb =>
-          i = parseDqtSegment(bytes, i, qTables, err)
-        case 0xdd =>
-          restartInterval = u16(i + 4); i += 2 + u16(i + 2)
-        case 0xee => // APP14 — the Adobe transform declaration
-          val len = u16(i + 2)
-          if (len >= 14 && u8(i + 4) == 'A' && u8(i + 5) == 'd' &&
-              u8(i + 6) == 'o' && u8(i + 7) == 'b' && u8(i + 8) == 'e')
-            adobeTransform = u8(i + 15)
-          i += 2 + len
-        case 0xda => // SOS — interleaved 4-component scan
-          if (u8(i + 4) != 4) err("scan must carry all four components")
-          var c = 0
-          while (c < 4) {
-            val cid = u8(i + 5 + 2 * c)
-            val slot = compId.indexOf(cid)
-            if (slot < 0) err(s"scan references unknown component $cid")
-            // T.81 B.2.3: interleaved scan components must follow frame
-            // order — the MCU walk below decodes in frame order, so an
-            // out-of-order listing would silently assign entropy data to
-            // the wrong planes instead of erroring (ADVICE r19)
-            if (slot != c) err(s"scan component $cid out of frame order")
-            dcSel(slot) = u8(i + 6 + 2 * c) >> 4
-            acSel(slot) = u8(i + 6 + 2 * c) & 15
-            if (dcSel(slot) > 3 || acSel(slot) > 3)
-              err(s"bad Huffman table selector ${dcSel(slot)}/${acSel(slot)}")
-            c += 1
-          }
-          if (u8(i + 13) != 0 || u8(i + 14) != 63 || u8(i + 15) != 0)
-            err("spectral selection / successive approximation unsupported")
-          sosAt = i + 2 + u16(i + 2)
-        case 0xd9 => err("EOI before any scan")
-        case x if (x >= 0xe0 && x <= 0xef) || x == 0xfe =>
-          i += 2 + u16(i + 2)
-        case other => err(f"unsupported marker ff$other%02x")
-      }
-    }
-    if (w == 0) err("missing SOF0")
-    if (adobeTransform == 1 || adobeTransform > 2)
-      err(s"Adobe transform $adobeTransform invalid for a 4-component frame")
-    val ycck = adobeTransform == 2
-    val hs = sampH(0); val vs = sampV(0)
+  /** 4-component baseline decode: the shared walk with APP14 transform
+    * capture, per-component quantization/Huffman selectors, the shared
+    * MCU decoder (DC predictors reset at restarts on all FOUR, the K plane
+    * sampled like Y), chroma replication for YCCK, and exact integer
+    * ink/RGB sums with one IEEE division each — oracle-exact. */
+  private[llm] def parseJpegCmyk(id: Long, bytes: Array[Byte]): JpegCmykFeatures = {
+    val hd = new JpegHeader(bytes, docErr(id))
+    import hd.err
+    val at = hd.walk(0xc0,
+      hd.readFrame(_, n => if (n != 4) err(s"$n components (CMYK/YCCK is 4)"),
+        (_, hc, vc) => if (hc < 1 || hc > 2 || vc < 1 || vc > 2)
+          err(f"unsupported sampling ${hc}x$vc (factors 1-2 only)")),
+      hd.baselineScan(_, 4, "scan must carry all four components", { (c, cid) =>
+        val slot = hd.frameSlot(cid, 4)
+        // T.81 B.2.3: interleaved scan components must follow frame
+        // order — the MCU walk decodes in frame order, so an
+        // out-of-order listing would silently assign entropy data to
+        // the wrong planes instead of erroring (ADVICE r19)
+        if (slot != c) err(s"scan component $cid out of frame order")
+        slot
+      }),
+      progressiveRejected = "progressive CMYK unsupported (baseline only)")
+    val transform = hd.adobeTransform
+    if (transform == 1 || transform > 2)
+      err(s"Adobe transform $transform invalid for a 4-component frame")
+    val ycck = transform == 2
+    val sampH = hd.sampH; val sampV = hd.sampV
     if (ycck) {
       if (sampH(1) != 1 || sampV(1) != 1 || sampH(2) != 1 || sampV(2) != 1)
         err("YCCK chroma sampling must be 1x1")
-      if (sampH(3) != hs || sampV(3) != vs)
+      if (sampH(3) != sampH(0) || sampV(3) != sampV(0))
         err("YCCK K-plane sampling must match Y")
-    } else {
-      var c = 0
-      while (c < 4) {
-        if (sampH(c) != 1 || sampV(c) != 1)
-          err("CMYK sampling must be 1x1 on all four planes")
-        c += 1
-      }
-    }
-    val q = Array.tabulate(4) { c =>
-      if (qTables(qSel(c)) != null) qTables(qSel(c))
-      else err(s"component $c references an undefined quantization table") }
-    val dcT = Array.tabulate(4) { c =>
-      if (dcTables(dcSel(c)) != null) dcTables(dcSel(c))
-      else err(s"component $c references an undefined DC Huffman table") }
-    val acT = Array.tabulate(4) { c =>
-      if (acTables(acSel(c)) != null) acTables(acSel(c))
-      else err(s"component $c references an undefined AC Huffman table") }
-
-    var pos = sosAt
-    var bitBuf = 0; var bitCnt = 0
-    def nextBit(): Int = {
-      if (bitCnt == 0) {
-        val b = u8(pos)
-        if (b == 0xff) {
-          if (u8(pos + 1) != 0x00) err("marker inside entropy-coded segment")
-          pos += 1
-        }
-        pos += 1
-        bitBuf = b; bitCnt = 8
-      }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
-    }
-    def receive(n: Int): Int = {
-      var v = 0; var j = 0
-      while (j < n) { v = (v << 1) | nextBit(); j += 1 }
-      v
-    }
-    def extend(v: Int, t: Int): Int =
-      if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-    // full-resolution planes for comp 0 and the K plane (sampled like Y);
-    // chroma planes at their subsampled, MCU-padded size
-    val cw = (w + 8 * hs - 1) / (8 * hs) * 8
-    val ch = (h + 8 * vs - 1) / (8 * vs) * 8
-    val plane0 = new Array[Int](w * h)
-    val plane1 = new Array[Int](cw * ch)
-    val plane2 = new Array[Int](cw * ch)
-    val plane3 = new Array[Int](w * h)
-    val mcuW = 8 * hs; val mcuH = 8 * vs
-    val mw = (w + mcuW - 1) / mcuW; val mh = (h + mcuH - 1) / mcuH
-    val pred = new Array[Int](4)
-    val coef = new Array[Int](64)
-    val block = new Array[Int](64)
-
-    def decodeBlock(c: Int): Unit = {
-      java.util.Arrays.fill(coef, 0)
-      val t = dcT(c).decode(nextBit)
-      if (t > 11) err(s"DC category $t out of range")
-      pred(c) += extend(receive(t), t)
-      coef(0) = pred(c) * q(c)(0)
-      var z = 1
-      var eob = false
-      while (z < 64 && !eob) {
-        val rs = acT(c).decode(nextBit)
-        val r = rs >> 4; val s = rs & 15
-        if (s == 0) {
-          if (r == 15) z += 16 else eob = true
-        } else {
-          z += r
-          if (z > 63) err("AC run overruns the block")
-          coef(Zigzag(z)) = extend(receive(s), s) * q(c)(z)
-          z += 1
-        }
-      }
-      idct8x8(coef, block)
-    }
-
-    // one full-resolution component's hs×vs blocks within the current MCU
-    def fullResBlocks(c: Int, plane: Array[Int], mx: Int, my: Int): Unit = {
-      var bv = 0
-      while (bv < vs) {
-        var bu = 0
-        while (bu < hs) {
-          decodeBlock(c)
-          var y0 = 0
-          while (y0 < 8) {
-            val yy = my * mcuH + bv * 8 + y0
-            var x0 = 0
-            while (x0 < 8) {
-              val xx = mx * mcuW + bu * 8 + x0
-              if (yy < h && xx < w) plane(yy * w + xx) = block(y0 * 8 + x0)
-              x0 += 1
-            }
-            y0 += 1
-          }
-          bu += 1
-        }
-        bv += 1
-      }
-    }
-
-    var mcu = 0
-    var my = 0
-    while (my < mh) {
-      var mx = 0
-      while (mx < mw) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bitCnt = 0
-          val exp = 0xd0 + ((mcu / restartInterval - 1) % 8)
-          if (u8(pos) != 0xff || u8(pos + 1) != exp)
-            err(f"expected restart marker ff$exp%02x at MCU $mcu")
-          pos += 2
-          pred(0) = 0; pred(1) = 0; pred(2) = 0; pred(3) = 0
-        }
-        fullResBlocks(0, plane0, mx, my)
-        var c = 1
-        while (c <= 2) {
-          decodeBlock(c)
-          val plane = if (c == 1) plane1 else plane2
-          var y0 = 0
-          while (y0 < 8) {
-            val yy = my * 8 + y0
-            var x0 = 0
-            while (x0 < 8) {
-              val xx = mx * 8 + x0
-              if (yy < ch && xx < cw) plane(yy * cw + xx) = block(y0 * 8 + x0)
-              x0 += 1
-            }
-            y0 += 1
-          }
-          c += 1
-        }
-        fullResBlocks(3, plane3, mx, my)
-        mcu += 1
-        mx += 1
-      }
-      my += 1
-    }
-    if (u8(pos) != 0xff || u8(pos + 1) != 0xd9) err("missing EOI after scan")
+    } else if ((0 until 4).exists(c => sampH(c) != 1 || sampV(c) != 1))
+      err("CMYK sampling must be 1x1 on all four planes")
+    val p = decodeBaseline(hd, at, 4, c => s"component $c")
 
     // ink / RGB statistics: exact integer sums, one IEEE division each
-    val inverted = adobeTransform >= 0
+    val w = p.w; val h = p.h; val hs = p.hs; val vs = p.vs; val cw = p.pw(1)
+    val Array(plane0, plane1, plane2, plane3) = p.plane
+    val inverted = transform >= 0
     def clamp(d: Double): Int = {
-      val p = StrictMath.rint(d).toInt
-      if (p < 0) 0 else if (p > 255) 255 else p
+      val v = StrictMath.rint(d).toInt
+      if (v < 0) 0 else if (v > 255) 255 else v
     }
     var sC = 0L; var sM = 0L; var sY = 0L; var sK = 0L
     var sR = 0L; var sG = 0L; var sB = 0L
@@ -1455,11 +1259,10 @@ object MultimodalOps extends QueryRegistry {
   }
 
   /** Deterministic 4-component JPEG writer: per-MCU constant stored planes
-    * (`p0`-`p3` in MCU raster order), Q(0,0)=8 exactness, all-EOB AC — the
-    * color writer's discipline over four components. YCCK subsamples the
-    * chroma pair only (K rides at Y's sampling); CMYK writes all four
-    * planes 1x1. `adobe` controls the APP14 marker (and thereby the
-    * decoder's inversion convention). */
+    * (`p0`-`p3` in MCU raster order) through the DC-only baseline writer.
+    * YCCK subsamples the chroma pair only (K rides at Y's sampling); CMYK
+    * writes all four planes 1x1. `adobe` controls the APP14 marker (and
+    * thereby the decoder's inversion convention). */
   private[llm] def jpegEncodeCmyk(w: Int, h: Int, ycck: Boolean,
       sub420: Boolean, p0: Array[Int], p1: Array[Int], p2: Array[Int],
       p3: Array[Int], restartInterval: Int = 0,
@@ -1470,89 +1273,11 @@ object MultimodalOps extends QueryRegistry {
       s"fixture geometry must be MCU-aligned (${w}x$h vs ${mcuW}x$mcuH)")
     require(!sub420 || ycck, "CMYK stores four full-resolution planes")
     val nm = (w / mcuW) * (h / mcuH)
-    require(Seq(p0, p1, p2, p3).forall(_.length == nm), "one quad per MCU")
-    require((p0 ++ p1 ++ p2 ++ p3).forall(v => v >= 0 && v <= 255),
-      "plane constants are sample values")
-    val qz = Array.fill(64)(16)
-    qz(0) = 8
-    val dcH = new Huff(FixtureDcCounts, FixtureDcSyms)
-    val acH = new Huff(FixtureAcCounts, FixtureAcSyms)
-
-    val out = new java.io.ByteArrayOutputStream(256 + nm * 10)
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    if (adobe) {
-      marker(0xee); w16(14) // APP14: "Adobe" + version + flags + transform
-      out.write("Adobe".getBytes("US-ASCII"))
-      w16(100); w16(0); w16(0); w8(if (ycck) 2 else 0)
-    }
-    marker(0xdb); w16(67); w8(0x00); qz.foreach(w8)
-    marker(0xc0); w16(8 + 3 * 4); w8(8); w16(h); w16(w); w8(4)
-    w8(1); w8((hs << 4) | vs); w8(0) // C or Y
-    w8(2); w8(0x11); w8(0) // M or Cb
-    w8(3); w8(0x11); w8(0) // Y(ink) or Cr
-    w8(4); w8((hs << 4) | vs); w8(0) // K
-    def dht(tc: Int, counts: Array[Int], syms: Array[Int]): Unit = {
-      marker(0xc4); w16(2 + 1 + 16 + syms.length)
-      w8(tc << 4); counts.foreach(w8); syms.foreach(w8)
-    }
-    dht(0, FixtureDcCounts, FixtureDcSyms)
-    dht(1, FixtureAcCounts, FixtureAcSyms)
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-    marker(0xda); w16(6 + 2 * 4); w8(4)
-    w8(1); w8(0x00); w8(2); w8(0x00); w8(3); w8(0x00); w8(4); w8(0x00)
-    w8(0); w8(63); w8(0)
-
-    var bitBuf = 0; var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var j = n - 1
-      while (j >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> j) & 1); bitCnt += 1
-        if (bitCnt == 8) {
-          w8(bitBuf)
-          if ((bitBuf & 0xff) == 0xff) w8(0x00)
-          bitBuf = 0; bitCnt = 0
-        }
-        j -= 1
-      }
-    }
-    def flushBits(): Unit = if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-    def putCode(huff: Huff, sym: Int): Unit = {
-      val (code, len) = huff.codeOf.getOrElse(sym,
-        throw new IllegalArgumentException(f"fixture table lacks symbol $sym%02x"))
-      putBits(code, len)
-    }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val pred = new Array[Int](4)
-    def putDcOnlyBlock(c: Int, value: Int): Unit = {
-      val dq = value - 128 // Q00=8 cancels the IDCT's ÷8
-      val diff = dq - pred(c)
-      pred(c) = dq
-      val t = category(diff)
-      putCode(dcH, t)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-      putCode(acH, 0x00) // EOB
-    }
-    var m = 0
-    while (m < nm) {
-      if (restartInterval > 0 && m > 0 && m % restartInterval == 0) {
-        flushBits()
-        marker(0xd0 + ((m / restartInterval - 1) % 8))
-        pred(0) = 0; pred(1) = 0; pred(2) = 0; pred(3) = 0
-      }
-      var lb = 0
-      while (lb < hs * vs) { putDcOnlyBlock(0, p0(m)); lb += 1 }
-      putDcOnlyBlock(1, p1(m))
-      putDcOnlyBlock(2, p2(m))
-      lb = 0
-      while (lb < hs * vs) { putDcOnlyBlock(3, p3(m)); lb += 1 }
-      m += 1
-    }
-    flushBits()
-    marker(0xd9)
-    out.toByteArray
+    val planes = Array(p0, p1, p2, p3)
+    require(planes.forall(_.length == nm), "one quad per MCU")
+    val luma = (hs << 4) | vs
+    jpegEncodeDcOnly(w, h, Seq(luma, 0x11, 0x11, luma), planes,
+      restartInterval, wr => if (adobe) wr.adobe(if (ycck) 2 else 0))
   }
 
   /** Deterministic CMYK/YCCK corpus: even ids are Adobe CMYK (transform 0,
@@ -1611,24 +1336,14 @@ object MultimodalOps extends QueryRegistry {
       mean_r: Double, mean_g: Double, mean_b: Double,
       min_luma: Int, max_luma: Int)
 
-  /** Progressive (SOF2) YCbCr decode — multi-scan coefficient assembly,
-    * then the same dequant/IDCT/upsample/RGB pipeline as baseline color.
-    * Statistics are exact integer sums until one IEEE division each. */
+  /** Progressive (SOF2) YCbCr decode — the shared walk and bit reader
+    * around its own multi-scan coefficient assembly, then the shared
+    * dequant/IDCT/placement and the baseline color statistics. Statistics
+    * are exact integer sums until one IEEE division each. */
   private[llm] def parseJpegProgressive(id: Long,
       bytes: Array[Byte]): JpegProgressiveFeatures = {
-    def err(msg: String): Nothing =
-      throw new IllegalArgumentException(s"media of doc $id: $msg")
-    def u8(o: Int): Int =
-      if (o < bytes.length) bytes(o) & 0xff else err("truncated JPEG")
-    def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
-    if (bytes.length < 2 || u16(0) != 0xffd8) err("not a JPEG (missing SOI)")
-
-    val qTables = new Array[Array[Int]](4)
-    val dcTables = new Array[Huff](4)
-    val acTables = new Array[Huff](4)
-    var w = 0; var h = 0; var hs = 0; var vs = 0
-    val compId = new Array[Int](3); val qSel = new Array[Int](3)
-    var restartInterval = 0
+    val hd = new JpegHeader(bytes, docErr(id))
+    import hd.{err, u16, u8}
     var nScans = 0
     var mw = 0; var mh = 0
     var coefs: Array[Array[Int]] = null // per comp, padded grid, natural order
@@ -1638,6 +1353,18 @@ object MultimodalOps extends QueryRegistry {
     // else the Al the coefficient currently sits at
     val state = Array.fill(3, 64)(-1)
 
+    def frame(at: Int): Unit = {
+      if (coefs != null) err("duplicate frame header")
+      ycbcrFrame(hd)(at)
+      val w = hd.w; val h = hd.h; val hs = hd.sampH(0); val vs = hd.sampV(0)
+      mw = (w + 8 * hs - 1) / (8 * hs); mh = (h + 8 * vs - 1) / (8 * vs)
+      bw = Array(mw * hs, mw, mw); bh = Array(mh * vs, mh, mh)
+      def cdiv(a: Int, b: Int) = (a + b - 1) / b
+      nbw = Array(cdiv(w, 8), cdiv(cdiv(w, hs), 8), cdiv(cdiv(w, hs), 8))
+      nbh = Array(cdiv(h, 8), cdiv(cdiv(h, vs), 8), cdiv(cdiv(h, vs), 8))
+      coefs = Array.tabulate(3)(c => new Array[Int](bw(c) * bh(c) * 64))
+    }
+
     def decodeScan(at: Int): Int = {
       if (coefs == null) err("scan before SOF2")
       val ns = u8(at + 4)
@@ -1646,10 +1373,7 @@ object MultimodalOps extends QueryRegistry {
       val sdc = new Array[Int](ns); val sac = new Array[Int](ns)
       var ci = 0
       while (ci < ns) {
-        val cid = u8(at + 5 + 2 * ci)
-        val slot = compId.indexOf(cid)
-        if (slot < 0) err(s"scan references unknown component $cid")
-        scomp(ci) = slot
+        scomp(ci) = hd.frameSlot(u8(at + 5 + 2 * ci), 3)
         sdc(ci) = u8(at + 6 + 2 * ci) >> 4; sac(ci) = u8(at + 6 + 2 * ci) & 15
         if (sdc(ci) > 3 || sac(ci) > 3)
           err(s"bad Huffman table selector ${sdc(ci)}/${sac(ci)}")
@@ -1680,54 +1404,31 @@ object MultimodalOps extends QueryRegistry {
       }
       val dcT: Array[Huff] =
         if (isDc && ah == 0) Array.tabulate(ns) { j =>
-          if (dcTables(sdc(j)) != null) dcTables(sdc(j))
+          if (hd.dcTables(sdc(j)) != null) hd.dcTables(sdc(j))
           else err(s"scan references undefined DC table ${sdc(j)}") }
         else null
       val acT: Huff =
         if (!isDc) {
-          if (acTables(sac(0)) != null) acTables(sac(0))
+          if (hd.acTables(sac(0)) != null) hd.acTables(sac(0))
           else err(s"scan references undefined AC table ${sac(0)}")
         } else null
 
-      var pos = at + 2 + u16(at + 2)
-      var bitBuf = 0; var bitCnt = 0
-      def nextBit(): Int = {
-        if (bitCnt == 0) {
-          val b = u8(pos)
-          if (b == 0xff) {
-            if (u8(pos + 1) != 0x00) err("marker inside entropy-coded segment")
-            pos += 1
-          }
-          pos += 1
-          bitBuf = b; bitCnt = 8
-        }
-        bitCnt -= 1
-        (bitBuf >> bitCnt) & 1
-      }
-      def receive(n: Int): Int = {
-        var v = 0; var j = 0
-        while (j < n) { v = (v << 1) | nextBit(); j += 1 }
-        v
-      }
-      def extend(v: Int, t: Int): Int =
-        if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-      val pred = new Array[Int](3)
+      val bits = new JpegBits(hd, at + 2 + u16(at + 2))
       var eobrun = 0L
       val p1 = 1 << al
 
       def refineNonzero(cc: Int, idx: Int): Unit =
-        if (nextBit() == 1 && (coefs(cc)(idx) & p1) == 0)
+        if (bits.bit() == 1 && (coefs(cc)(idx) & p1) == 0)
           coefs(cc)(idx) += (if (coefs(cc)(idx) >= 0) p1 else -p1)
 
       def decodeBlock(cc: Int, base: Int, ci2: Int): Unit = {
         if (isDc) {
           if (ah == 0) {
-            val t = dcT(ci2).decode(nextBit)
+            val t = dcT(ci2).decode(bits)
             if (t > 11) err(s"DC category $t out of range")
-            pred(cc) += extend(receive(t), t)
-            coefs(cc)(base) = pred(cc) << al
-          } else if (nextBit() == 1) coefs(cc)(base) |= p1
+            bits.pred(cc) += bits.signed(t)
+            coefs(cc)(base) = bits.pred(cc) << al
+          } else if (bits.bit() == 1) coefs(cc)(base) |= p1
         } else if (ah == 0) {
           // AC first pass: standard RLE at reduced precision, EOBn runs
           if (eobrun > 0) eobrun -= 1
@@ -1735,15 +1436,15 @@ object MultimodalOps extends QueryRegistry {
             var k = ss
             var break = false
             while (k <= se && !break) {
-              val rs = acT.decode(nextBit)
+              val rs = acT.decode(bits)
               val r = rs >> 4; val s = rs & 15
               if (s == 0) {
-                if (r < 15) { eobrun = (1L << r) - 1 + receive(r); break = true }
+                if (r < 15) { eobrun = (1L << r) - 1 + bits.receive(r); break = true }
                 else k += 16
               } else {
                 k += r
                 if (k > se) err("AC run overruns the band")
-                coefs(cc)(base + Zigzag(k)) = extend(receive(s), s) << al
+                coefs(cc)(base + Zigzag(k)) = bits.signed(s) << al
                 k += 1
               }
             }
@@ -1754,17 +1455,17 @@ object MultimodalOps extends QueryRegistry {
           if (eobrun == 0) {
             var break = false
             while (k <= se && !break) {
-              val rs = acT.decode(nextBit)
+              val rs = acT.decode(bits)
               var r = rs >> 4; val s = rs & 15
               var newVal = 0
               if (s == 0) {
                 if (r < 15) {
-                  eobrun = (1L << r) + (if (r > 0) receive(r) else 0)
+                  eobrun = (1L << r) + (if (r > 0) bits.receive(r) else 0)
                   break = true
                 } // r == 15: ZRL — 16 zero-history positions consumed below
               } else {
                 if (s != 1) err("refinement coefficient size must be 1")
-                newVal = if (nextBit() == 1) p1 else -p1
+                newVal = if (bits.bit() == 1) p1 else -p1
               }
               if (!break) {
                 var placed = false
@@ -1798,22 +1499,16 @@ object MultimodalOps extends QueryRegistry {
         if (interleaved) mw * mh else nbw(scomp(0)) * nbh(scomp(0))
       var mcu = 0
       while (mcu < scanMcus) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+        if (restartDue(mcu, hd.restartInterval)) {
           if (eobrun != 0) err("EOB run crosses a restart interval")
-          bitCnt = 0
-          val exp = 0xd0 + ((mcu / restartInterval - 1) % 8)
-          if (u8(pos) != 0xff || u8(pos + 1) != exp)
-            err(f"expected restart marker ff$exp%02x at MCU $mcu")
-          pos += 2
-          pred(0) = 0; pred(1) = 0; pred(2) = 0
+          bits.restart(mcu)
         }
         if (interleaved) {
           val my = mcu / mw; val mx = mcu % mw
           var j = 0
           while (j < ns) {
             val cc = scomp(j)
-            val hc = if (cc == 0) hs else 1
-            val vc = if (cc == 0) vs else 1
+            val hc = hd.sampH(cc); val vc = hd.sampV(cc)
             var by0 = 0
             while (by0 < vc) {
               var bx0 = 0
@@ -1834,75 +1529,11 @@ object MultimodalOps extends QueryRegistry {
         mcu += 1
       }
       if (eobrun != 0) err("EOB run overruns the scan")
-      if (u8(pos) != 0xff) err("entropy data not followed by a marker")
-      pos
+      if (u8(bits.pos) != 0xff) err("entropy data not followed by a marker")
+      bits.pos
     }
 
-    var i = 2
-    var sawEoi = false
-    while (!sawEoi) {
-      if (u8(i) != 0xff) err(f"expected a marker at $i, got ${u8(i)}%02x")
-      u8(i + 1) match {
-        case 0xc2 => // SOF2 — progressive
-          if (coefs != null) err("duplicate frame header")
-          if (u8(i + 4) != 8) err(s"unsupported sample precision ${u8(i + 4)}")
-          h = u16(i + 5); w = u16(i + 7)
-          if (w <= 0 || h <= 0) err(s"degenerate dimensions ${w}x$h")
-          guardPixels(w, h, err)
-          if (u8(i + 9) == 4)
-            err("4-component stream (CMYK/YCCK — route to decodeJpegCmyk)")
-          if (u8(i + 9) != 3) err(s"${u8(i + 9)} components (YCbCr color only)")
-          var c = 0
-          while (c < 3) {
-            compId(c) = u8(i + 10 + 3 * c)
-            val samp = u8(i + 11 + 3 * c)
-            if (c == 0) {
-              hs = samp >> 4; vs = samp & 15
-              if (hs < 1 || hs > 2 || vs < 1 || vs > 2)
-                err(f"unsupported luma sampling ${hs}x$vs (factors 1-2 only)")
-            } else if (samp != 0x11) err("chroma sampling must be 1x1")
-            qSel(c) = u8(i + 12 + 3 * c)
-            if (qSel(c) > 3) err(s"bad quantization table selector ${qSel(c)}")
-            c += 1
-          }
-          mw = (w + 8 * hs - 1) / (8 * hs); mh = (h + 8 * vs - 1) / (8 * vs)
-          bw = Array(mw * hs, mw, mw); bh = Array(mh * vs, mh, mh)
-          def cdiv(a: Int, b: Int) = (a + b - 1) / b
-          nbw = Array(cdiv(w, 8), cdiv(cdiv(w, hs), 8), cdiv(cdiv(w, hs), 8))
-          nbh = Array(cdiv(h, 8), cdiv(cdiv(h, vs), 8), cdiv(cdiv(h, vs), 8))
-          coefs = Array.tabulate(3)(c2 => new Array[Int](bw(c2) * bh(c2) * 64))
-          i += 2 + u16(i + 2)
-        case 0xc0 | 0xc1 | 0xc3 =>
-          err("sequential frame in the progressive decoder (route to baseline)")
-        case x if x >= 0xc5 && x <= 0xcf && x != 0xc8 && x != 0xcc =>
-          err(f"unsupported frame marker ff$x%02x")
-        case 0xc4 =>
-          val end = i + 2 + u16(i + 2)
-          var o = i + 4
-          while (o < end) {
-            val tc = u8(o) >> 4; val th = u8(o) & 15
-            if (tc > 1 || th > 3) err("bad DHT table class/id")
-            val counts = Array.tabulate(16)(j => u8(o + 1 + j))
-            val n = counts.sum
-            val syms = Array.tabulate(n)(j => u8(o + 17 + j))
-            if (tc == 0) dcTables(th) = new Huff(counts, syms)
-            else acTables(th) = new Huff(counts, syms)
-            o += 17 + n
-          }
-          i = end
-        case 0xdb =>
-          i = parseDqtSegment(bytes, i, qTables, err)
-        case 0xdd =>
-          restartInterval = u16(i + 4); i += 2 + u16(i + 2)
-        case 0xda =>
-          i = decodeScan(i); nScans += 1
-        case 0xd9 => sawEoi = true
-        case x if (x >= 0xe0 && x <= 0xef) || x == 0xfe =>
-          i += 2 + u16(i + 2)
-        case other => err(f"unsupported marker ff$other%02x")
-      }
-    }
-    if (coefs == null) err("missing SOF2")
+    hd.walk(0xc2, frame, { at => val next = decodeScan(at); nScans += 1; next })
     if (nScans == 0) err("no scan before EOI")
     // completeness: every coefficient of every component delivered to Al=0
     var c = 0
@@ -1916,56 +1547,35 @@ object MultimodalOps extends QueryRegistry {
       }
       c += 1
     }
-    val q = Array.tabulate(3) { c2 =>
-      if (qTables(qSel(c2)) != null) qTables(qSel(c2))
-      else err(s"component $c2 references an undefined quantization table") }
+    val q = hd.selected(hd.qTables, hd.qSel, 3, "quantization table",
+      c2 => s"component $c2")
 
     // dequantize + IDCT every real block into the pixel planes
-    val cw = mw * 8; val ch = mh * 8
-    val yPlane = new Array[Int](w * h)
-    val cbPlane = new Array[Int](cw * ch)
-    val crPlane = new Array[Int](cw * ch)
+    val p = new JpegPlanes(hd, 3)
     val dq = new Array[Int](64)
     val block = new Array[Int](64)
-    def idctBlock(cc: Int, base: Int): Unit = {
-      var z = 0
-      while (z < 64) { dq(Zigzag(z)) = coefs(cc)(base + Zigzag(z)) * q(cc)(z); z += 1 }
-      idct8x8(dq, block)
-    }
-    var cc3 = 0
-    while (cc3 < 3) {
+    c = 0
+    while (c < 3) {
+      val cs = coefs(c); val qc = q(c)
       var by = 0
-      while (by < nbh(cc3)) {
+      while (by < nbh(c)) {
         var bx = 0
-        while (bx < nbw(cc3)) {
-          idctBlock(cc3, (by * bw(cc3) + bx) * 64)
-          var y0 = 0
-          while (y0 < 8) {
-            var x0 = 0
-            while (x0 < 8) {
-              val px = block(y0 * 8 + x0)
-              if (cc3 == 0) {
-                val yy = by * 8 + y0; val xx = bx * 8 + x0
-                if (yy < h && xx < w) yPlane(yy * w + xx) = px
-              } else {
-                val yy = by * 8 + y0; val xx = bx * 8 + x0
-                val plane = if (cc3 == 1) cbPlane else crPlane
-                if (yy < ch && xx < cw) plane(yy * cw + xx) = px
-              }
-              x0 += 1
-            }
-            y0 += 1
-          }
+        while (bx < nbw(c)) {
+          val base = (by * bw(c) + bx) * 64
+          var z = 0
+          while (z < 64) { dq(Zigzag(z)) = cs(base + Zigzag(z)) * qc(z); z += 1 }
+          idct8x8(dq, block)
+          p.put(c, block, by * 8, bx * 8)
           bx += 1
         }
         by += 1
       }
-      cc3 += 1
+      c += 1
     }
 
-    val d = colorPlaneStats(w, h, hs, vs, cw, yPlane, cbPlane, crPlane)
-    val n = w.toLong * h
-    JpegProgressiveFeatures(id, w, h, subsamplingName(hs, vs), nScans,
+    val d = colorPlaneStats(p)
+    val n = p.w.toLong * p.h
+    JpegProgressiveFeatures(id, p.w, p.h, subsamplingName(p.hs, p.vs), nScans,
       d.sy.toDouble / n, d.scb.toDouble / n, d.scr.toDouble / n,
       d.sr.toDouble / n, d.sg.toDouble / n, d.sb.toDouble / n, d.mn, d.mx)
   }
@@ -2100,84 +1710,33 @@ object MultimodalOps extends QueryRegistry {
       s"geometry must be MCU-aligned (${w}x$h vs ${mcuW}x$mcuH)")
     val mw = w / mcuW; val mh = h / mcuH
     val nm = mw * mh
-    val qz = Array.fill(64)(16)
-    qz(0) = 8
-    qz(39) = 8 // zigzag position of natural (4,4)
-    val dcH = new Huff(FixtureDcCounts, FixtureDcSyms)
-    val acH = new Huff(ProgAcCounts, ProgAcSyms)
     val bw = Array(mw * hs, mw, mw); val bh = Array(mh * vs, mh, mh)
-
-    val out = new java.io.ByteArrayOutputStream(512 + nm * 16)
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(mk: Int): Unit = { w8(0xff); w8(mk) }
-    marker(0xd8)
-    marker(0xe0); w16(16)
-    out.write("JFIF".getBytes("US-ASCII")); w8(0)
-    w8(1); w8(1); w8(0); w16(1); w16(1); w8(0); w8(0)
-    marker(0xdb); w16(67); w8(0x00); qz.foreach(w8)
-    marker(0xc2); w16(17); w8(8); w16(h); w16(w); w8(3) // SOF2
-    w8(1); w8((hs << 4) | vs); w8(0)
-    w8(2); w8(0x11); w8(0)
-    w8(3); w8(0x11); w8(0)
-    marker(0xc4); w16(2 + 1 + 16 + FixtureDcSyms.length)
-    w8(0x00); FixtureDcCounts.foreach(w8); FixtureDcSyms.foreach(w8)
-    marker(0xc4); w16(2 + 1 + 16 + ProgAcSyms.length)
-    w8(0x10); ProgAcCounts.foreach(w8); ProgAcSyms.foreach(w8)
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-
-    var bitBuf = 0; var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var j = n - 1
-      while (j >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> j) & 1); bitCnt += 1
-        if (bitCnt == 8) {
-          w8(bitBuf)
-          if ((bitBuf & 0xff) == 0xff) w8(0x00)
-          bitBuf = 0; bitCnt = 0
-        }
-        j -= 1
-      }
-    }
-    def flushBits(): Unit = if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-    def putCode(huff: Huff, sym: Int): Unit = {
-      val (code, len) = huff.codeOf.getOrElse(sym,
-        throw new IllegalArgumentException(f"fixture table lacks symbol $sym%02x"))
-      putBits(code, len)
-    }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
+    val wr = new JpegWriter(512 + nm * 16, ProgAcCounts, ProgAcSyms)
+    wr.jfif()
+    wr.frame(0xc2, w, h, Seq((hs << 4) | vs, 0x11, 0x11),
+      fixtureQuant(ac44 = true), restartInterval)
 
     // one scan: components (slots), band, approximation
     def scan(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      val ns = comps.length
-      marker(0xda); w16(6 + 2 * ns); w8(ns)
-      comps.foreach { c => w8(c + 1); w8(0x00) } // Td=0 / Ta=0 selectors
-      w8(ss); w8(se); w8((ah << 4) | al)
-
-      val pred = new Array[Int](3)
+      wr.sos(comps, ss, se, ah, al)
+      java.util.Arrays.fill(wr.pred, 0)
       var eobrun = 0
       val corrBits = scala.collection.mutable.ArrayBuffer.empty[Int] // with EOBn
       def emitEobRun(): Unit = {
         if (eobrun > 0) {
           val nb = 31 - Integer.numberOfLeadingZeros(eobrun)
-          putCode(acH, nb << 4)
-          if (nb > 0) putBits(eobrun - (1 << nb), nb)
+          wr.putAc(nb << 4)
+          if (nb > 0) wr.putBits(eobrun - (1 << nb), nb)
           eobrun = 0
         }
-        corrBits.foreach(b => putBits(b, 1))
+        corrBits.foreach(b => wr.putBits(b, 1))
         corrBits.clear()
       }
 
       def encodeBlock(cc: Int, base: Int): Unit = {
         if (ss == 0) { // DC
-          if (ah == 0) {
-            val v = coefs(cc)(base) >> al // arithmetic shift per the spec
-            val diff = v - pred(cc)
-            pred(cc) = v
-            val t = category(diff)
-            putCode(dcH, t)
-            if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-          } else putBits((coefs(cc)(base) >> al) & 1, 1)
+          if (ah == 0) wr.putDc(cc, coefs(cc)(base) >> al) // arithmetic shift per the spec
+          else wr.putBits((coefs(cc)(base) >> al) & 1, 1)
         } else if (ah == 0) { // AC first pass: sign-magnitude truncation
           var r = 0
           var k = ss
@@ -2187,10 +1746,10 @@ object MultimodalOps extends QueryRegistry {
             if (v == 0) r += 1
             else {
               emitEobRun()
-              while (r > 15) { putCode(acH, 0xf0); r -= 16 }
+              while (r > 15) { wr.putAc(0xf0); r -= 16 }
               val s = category(v)
-              putCode(acH, (r << 4) | s)
-              putBits(if (v < 0) v + (1 << s) - 1 else v, s)
+              wr.putAc((r << 4) | s)
+              wr.putValue(v, s)
               r = 0
             }
             k += 1
@@ -2222,16 +1781,16 @@ object MultimodalOps extends QueryRegistry {
               // beyond the span and desyncs the stream — r17 review)
               while (r > 15 && k <= lastNew) {
                 emitEobRun()
-                putCode(acH, 0xf0)
+                wr.putAc(0xf0)
                 r -= 16
-                blockBits.foreach(b => putBits(b, 1)); blockBits.clear()
+                blockBits.foreach(b => wr.putBits(b, 1)); blockBits.clear()
               }
               if (ab > 1) blockBits += (ab & 1) // history: correction bit
               else { // newly significant at this precision
                 emitEobRun()
-                putCode(acH, (r << 4) | 1)
-                putBits(if (raw < 0) 0 else 1, 1)
-                blockBits.foreach(b => putBits(b, 1)); blockBits.clear()
+                wr.putAc((r << 4) | 1)
+                wr.putBits(if (raw < 0) 0 else 1, 1)
+                blockBits.foreach(b => wr.putBits(b, 1)); blockBits.clear()
                 r = 0
               }
             }
@@ -2245,15 +1804,13 @@ object MultimodalOps extends QueryRegistry {
         }
       }
 
-      val interleaved = ns > 1
-      val scanMcus = if (interleaved) mw * mh else bw(comps.head) * bh(comps.head)
+      val interleaved = comps.length > 1
+      val scanMcus = if (interleaved) nm else bw(comps.head) * bh(comps.head)
       var mcu = 0
       while (mcu < scanMcus) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+        if (restartDue(mcu, restartInterval)) {
           emitEobRun()
-          flushBits()
-          marker(0xd0 + ((mcu / restartInterval - 1) % 8))
-          pred(0) = 0; pred(1) = 0; pred(2) = 0
+          wr.restart(mcu, restartInterval)
         }
         if (interleaved) {
           val my = mcu / mw; val mx = mcu % mw
@@ -2277,12 +1834,11 @@ object MultimodalOps extends QueryRegistry {
         mcu += 1
       }
       emitEobRun()
-      flushBits()
+      wr.flushBits()
     }
 
     script.foreach { case (comps, ss, se, ah, al) => scan(comps, ss, se, ah, al) }
-    marker(0xd9)
-    out.toByteArray
+    wr.finish()
   }
 
   // canonical table carrying the run/size symbols the progressive fixture
@@ -2670,89 +2226,34 @@ object MultimodalOps extends QueryRegistry {
     require(dc.forall(v => v >= 0 && v <= 255), "DC constants are pixel values")
     require(ac44.forall(v => math.abs(v) <= 1023),
       "AC(4,4) capped at baseline coefficient range the fixture table encodes")
-    val qz = Array.fill(64)(16)
-    qz(0) = 8 // DC dequant ×8 ÷ the IDCT's 8 → exact constants
-    qz(39) = 8 // zigzag position of natural (4,4) — same exactness for the AC term
-    val dcH = new Huff(FixtureDcCounts, FixtureDcSyms)
-    val acH = new Huff(FixtureAcCounts, FixtureAcSyms)
-
-    val out = new java.io.ByteArrayOutputStream(256 + dc.length * 4)
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8) // SOI
-    marker(0xe0); w16(16) // JFIF APP0 — ancillary, decoder skips it
-    out.write("JFIF".getBytes("US-ASCII")); w8(0)
-    w8(1); w8(1); w8(0); w16(1); w16(1); w8(0); w8(0)
-    marker(0xdb); w16(67); w8(0x00); qz.foreach(w8) // DQT, table 0, zigzag order
-    marker(0xc0); w16(11); w8(8); w16(h); w16(w); w8(1); w8(1); w8(0x11); w8(0) // SOF0
-    def dht(tc: Int, counts: Array[Int], syms: Array[Int]): Unit = {
-      marker(0xc4); w16(2 + 1 + 16 + syms.length)
-      w8(tc << 4); counts.foreach(w8); syms.foreach(w8)
-    }
-    dht(0, FixtureDcCounts, FixtureDcSyms)
-    dht(1, FixtureAcCounts, FixtureAcSyms)
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-    marker(0xda); w16(8); w8(1); w8(1); w8(0x00); w8(0); w8(63); w8(0) // SOS
-
-    // entropy writer: MSB-first bits, FF00 stuffing, 1-padded flush
-    var bitBuf = 0; var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var j = n - 1
-      while (j >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> j) & 1); bitCnt += 1
-        if (bitCnt == 8) {
-          w8(bitBuf)
-          if ((bitBuf & 0xff) == 0xff) w8(0x00)
-          bitBuf = 0; bitCnt = 0
-        }
-        j -= 1
-      }
-    }
-    def flushBits(): Unit = if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-    def putCode(huff: Huff, sym: Int): Unit = {
-      val (code, len) = huff.codeOf.getOrElse(sym,
-        throw new IllegalArgumentException(f"fixture table lacks symbol $sym%02x"))
-      putBits(code, len)
-    }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-
-    var pred = 0
+    val wr = new JpegWriter(256 + dc.length * 4, FixtureAcCounts, FixtureAcSyms)
+    wr.jfif()
+    wr.frame(0xc0, w, h, Seq(0x11), fixtureQuant(ac44 = true), restartInterval)
+    wr.sos(Seq(0), 0, 63, 0, 0)
     var b = 0
     while (b < dc.length) {
-      if (restartInterval > 0 && b > 0 && b % restartInterval == 0) {
-        flushBits()
-        marker(0xd0 + ((b / restartInterval - 1) % 8))
-        pred = 0
-      }
-      val dq = dc(b) - 128 // quantized DC (Q00=8 cancels the IDCT's ÷8)
-      val diff = dq - pred
-      pred = dq
-      val t = category(diff)
-      putCode(dcH, t)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
+      if (restartDue(b, restartInterval)) wr.restart(b, restartInterval)
+      wr.putDc(0, dc(b) - 128) // quantized DC (Q00=8 cancels the IDCT's ÷8)
       // AC run-length: all zero except zigzag 39 = ac44(b) and, when the
       // caller plants one (the stuffing spec), zigzag 40 = acNext(b)
       val k = ac44(b)
       if (k != 0) {
         var run = 38
-        while (run >= 16) { putCode(acH, 0xf0); run -= 16 }
+        while (run >= 16) { wr.putAc(0xf0); run -= 16 }
         val s = category(k)
-        putCode(acH, (run << 4) | s)
-        putBits(if (k < 0) k + (1 << s) - 1 else k, s)
+        wr.putAc((run << 4) | s)
+        wr.putValue(k, s)
         val k2 = if (acNext == null) 0 else acNext(b)
         if (k2 != 0) {
           val s2 = category(k2)
-          putCode(acH, s2) // run 0
-          putBits(if (k2 < 0) k2 + (1 << s2) - 1 else k2, s2)
+          wr.putAc(s2) // run 0
+          wr.putValue(k2, s2)
         }
-        putCode(acH, 0x00) // EOB for the trailing zeros (positions < 63)
-      } else putCode(acH, 0x00)
+      }
+      wr.putAc(0x00) // EOB for the trailing zeros (positions < 63)
       b += 1
     }
-    flushBits()
-    marker(0xd9) // EOI
-    out.toByteArray
+    wr.finish()
   }
 
   /** Real WAV (RIFF / PCM16) decode — the audio twin of [[parsePpm]] (r11):

@@ -8,11 +8,12 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
   * executor death (out-of-bounds, negative-size allocation, OOM from a
   * malicious header). Each trial mutates 1-3 random bytes of a valid
   * baseline-color / progressive / CMYK-YCCK / PNG / Y4M / MJPEG-AVI /
-  * WAV / PPM stream and decodes; any other throwable falsifies (a 1500-trial deep
-  * run was recorded clean at the r17 build). This is the gate behind the r17 hardening (the
-  * 100M-pixel allocation cap and the table-selector bounds the first
-  * fuzz draft exposed: scan selectors are 4-bit and DQT selectors a full
-  * byte, indexing size-4 table arrays). */
+  * WAV / PPM / baseline-grayscale stream and decodes; any other
+  * throwable falsifies (a 1500-trial deep run was recorded clean at the
+  * r17 build). This is the gate behind the r17 hardening (the 100M-pixel
+  * allocation cap and the table-selector bounds the first fuzz draft
+  * exposed: scan selectors are 4-bit and DQT selectors a full byte,
+  * indexing size-4 table arrays). */
 object JpegFuzzSpec extends Properties("mediaFuzz") {
 
   // 300 trials per suite run; GRAFT_FUZZ_TRIALS overrides for the recorded
@@ -59,6 +60,9 @@ object JpegFuzzSpec extends Properties("mediaFuzz") {
   private lazy val cmykBytes = MultimodalOps.jpegEncodeCmyk(
     32, 16, ycck = true, sub420 = true, Array(90, 170), Array(125, 119),
     Array(133, 137), Array(100, 140), restartInterval = 1)
+  private lazy val grayBytes = MultimodalOps.jpegEncode(24, 16,
+    Array(10, 60, 110, 160, 210, 250), Array(-2, -1, 0, 1, 2, 3),
+    restartInterval = 2)
   private lazy val ppmBytes = {
     val out = new java.io.ByteArrayOutputStream()
     out.write("P6\n# c\n4 3\n255\n".getBytes("US-ASCII"))
@@ -69,7 +73,7 @@ object JpegFuzzSpec extends Properties("mediaFuzz") {
   private case class Mutation(stream: Int, sites: Seq[(Int, Int)])
 
   private val mutationGen: Gen[Mutation] = for {
-    stream <- Gen.chooseNum(0, 7)
+    stream <- Gen.chooseNum(0, 8)
     n <- Gen.chooseNum(1, 3)
     sites <- Gen.listOfN(n, for {
       at <- Gen.chooseNum(0, 10000) // mod length at use
@@ -87,7 +91,8 @@ object JpegFuzzSpec extends Properties("mediaFuzz") {
         case 4 => aviBytes
         case 5 => wavBytes
         case 6 => cmykBytes
-        case _ => ppmBytes
+        case 7 => ppmBytes
+        case _ => grayBytes
       }
       val bytes = base.clone()
       m.sites.foreach { case (at, v) => bytes(at % bytes.length) = v.toByte }
@@ -100,7 +105,8 @@ object JpegFuzzSpec extends Properties("mediaFuzz") {
           case 4 => MultimodalOps.parseAviMjpeg(1L, bytes)
           case 5 => MultimodalOps.parseWav(1L, bytes)
           case 6 => MultimodalOps.parseJpegCmyk(1L, bytes)
-          case _ => MultimodalOps.parsePpm(1L, bytes)
+          case 7 => MultimodalOps.parsePpm(1L, bytes)
+          case _ => MultimodalOps.parseJpeg(1L, bytes)
         }
         Prop.passed
       } catch {
