@@ -627,18 +627,21 @@ object MultimodalOps extends QueryRegistry {
       s
     }
 
-    /** A baseline SOS over `n` components: Huffman selectors stored by the
-      * frame slot `slot(scan position, component id)` picks, then the full
-      * spectral band at full precision. Returns where entropy data starts. */
-    def baselineScan(at: Int, n: Int, countRejected: String,
-        slot: (Int, Int) => Int): Int = {
+    /** A baseline SOS over all `n` frame components, listed in frame order
+      * (T.81 B.2.3): [[decodeBaseline]] decodes each MCU in frame order, so
+      * an out-of-order or repeated component id would put entropy data into
+      * the wrong planes instead of failing. Stores the Huffman selectors by
+      * frame slot, then checks for the full spectral band at full precision.
+      * Returns where entropy data starts. */
+    def baselineScan(at: Int, n: Int, countRejected: String): Int = {
       if (u8(at + 4) != n) err(countRejected)
       var c = 0
       while (c < n) {
-        val s = slot(c, u8(at + 5 + 2 * c))
-        dcSel(s) = u8(at + 6 + 2 * c) >> 4; acSel(s) = u8(at + 6 + 2 * c) & 15
-        if (dcSel(s) > 3 || acSel(s) > 3)
-          err(s"bad Huffman table selector ${dcSel(s)}/${acSel(s)}")
+        val cid = u8(at + 5 + 2 * c)
+        if (frameSlot(cid, n) != c) err(s"scan component $cid out of frame order")
+        dcSel(c) = u8(at + 6 + 2 * c) >> 4; acSel(c) = u8(at + 6 + 2 * c) & 15
+        if (dcSel(c) > 3 || acSel(c) > 3)
+          err(s"bad Huffman table selector ${dcSel(c)}/${acSel(c)}")
         c += 1
       }
       if (u8(at + 5 + 2 * n) != 0 || u8(at + 6 + 2 * n) != 63 || u8(at + 7 + 2 * n) != 0)
@@ -912,7 +915,7 @@ object MultimodalOps extends QueryRegistry {
     val at = hd.walk(0xc0,
       hd.readFrame(_, n => if (n != 1) hd.err(s"$n components (grayscale only)"),
         (_, hc, vc) => if (hc != 1 || vc != 1) hd.err("subsampled grayscale is malformed")),
-      hd.baselineScan(_, 1, "multi-component scan (grayscale only)", (_, _) => 0))
+      hd.baselineScan(_, 1, "multi-component scan (grayscale only)"))
     val px = decodeBaseline(hd, at, 1, _ => "scan").plane(0)
     var sum = 0L; var mn = 255; var mx = 0
     var p = 0
@@ -1038,8 +1041,7 @@ object MultimodalOps extends QueryRegistry {
   private def jpegColorDecode(bytes: Array[Byte], err: String => Nothing): JpegColorDecoded = {
     val hd = new JpegHeader(bytes, err)
     val at = hd.walk(0xc0, ycbcrFrame(hd),
-      hd.baselineScan(_, 3, "scan must carry all three components",
-        (_, cid) => hd.frameSlot(cid, 3)))
+      hd.baselineScan(_, 3, "scan must carry all three components"))
     colorPlaneStats(decodeBaseline(hd, at, 3, c => s"component $c"))
   }
 
@@ -1181,15 +1183,7 @@ object MultimodalOps extends QueryRegistry {
       hd.readFrame(_, n => if (n != 4) err(s"$n components (CMYK/YCCK is 4)"),
         (_, hc, vc) => if (hc < 1 || hc > 2 || vc < 1 || vc > 2)
           err(f"unsupported sampling ${hc}x$vc (factors 1-2 only)")),
-      hd.baselineScan(_, 4, "scan must carry all four components", { (c, cid) =>
-        val slot = hd.frameSlot(cid, 4)
-        // T.81 B.2.3: interleaved scan components must follow frame
-        // order — the MCU walk decodes in frame order, so an
-        // out-of-order listing would silently assign entropy data to
-        // the wrong planes instead of erroring (ADVICE r19)
-        if (slot != c) err(s"scan component $cid out of frame order")
-        slot
-      }),
+      hd.baselineScan(_, 4, "scan must carry all four components"),
       progressiveRejected = "progressive CMYK unsupported (baseline only)")
     val transform = hd.adobeTransform
     if (transform == 1 || transform > 2)
@@ -2451,9 +2445,10 @@ object MultimodalOps extends QueryRegistry {
       t.charAt(0) match {
         case 'W' => w = t.drop(1).toInt
         case 'H' => h = t.drop(1).toInt
-        case 'F' =>
-          val Array(a, b) = t.drop(1).split(':')
-          fn = a.toInt; fd = b.toInt
+        case 'F' => t.drop(1).split(':') match {
+          case Array(a, b) => fn = a.toInt; fd = b.toInt
+          case _ => err(s"bad frame rate $t")
+        }
         case 'C' => chroma = t.drop(1)
         case _   => // I (interlace), A (aspect), X (extension): skipped
       }

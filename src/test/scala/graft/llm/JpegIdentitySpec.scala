@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * with SHA-256, and so are the bytes of every fixture encoder. The
   * digests were recorded before the decoders shared one JPEG core, so a
   * refactor that changes a pixel, a feature, a rejection message or an
-  * encoded byte fails here. */
+  * encoded byte fails here. The gray and MJPEG digests were re-recorded
+  * once, when the shared baseline SOS began rejecting components listed
+  * out of frame order (T.81 B.2.3): 31 gray and 1 MJPEG outcome moved,
+  * each to a scan-component rejection. */
 class JpegIdentitySpec extends AnyFunSuite {
   import MultimodalOps._
 
@@ -136,7 +139,7 @@ class JpegIdentitySpec extends AnyFunSuite {
 
   test("parseJpeg outcomes are pinned") {
     assert(digest(parseJpeg(1L, _), grayStream, grayBase, 11L) ==
-      "6e8c156fffe977b93fd4479fdcef0f86ba7fa36b44e71f72a6c1c95abc2a2e3f")
+      "73b79f12260ef21891e144d650b3ee3547e0e3f2de7a917273cf42547fbbc79b")
   }
 
   test("parseJpegColor outcomes are pinned") {
@@ -157,7 +160,7 @@ class JpegIdentitySpec extends AnyFunSuite {
 
   test("parseAviMjpeg outcomes are pinned") {
     assert(digest(parseAviMjpeg(1L, _), aviStream, aviBase, 15L) ==
-      "3f1f603f0c70e3cb9906bf581c2b18838ffbb4d3dbcf9a1c15ca59c831034f50")
+      "025afa91644d8fa6e04885578de56db38e7545857e45c6808cde71eaebde394a")
   }
 
   test("fixture encoder bytes are pinned") {

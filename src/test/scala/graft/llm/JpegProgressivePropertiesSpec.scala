@@ -17,8 +17,12 @@ import org.scalacheck.Prop.propBoolean
   * cross-script feature mismatch or a decoder error. */
 object JpegProgressivePropertiesSpec extends Properties("jpegProgressive") {
 
+  // 12 trials per suite run; GRAFT_FUZZ_TRIALS overrides for deep passes,
+  // as in JpegFuzzSpec
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(12).withMaxDiscardRatio(30.0f)
+    p.withMinSuccessfulTests(
+      sys.env.get("GRAFT_FUZZ_TRIALS").flatMap(_.toIntOption).getOrElse(12))
+      .withMaxDiscardRatio(30.0f)
 
   private case class Trial(hs: Int, vs: Int, mw: Int, mh: Int,
       restart: Int, blocks: Seq[(Int, Seq[(Int, Int)])]) // (dc, [(zz, v)])

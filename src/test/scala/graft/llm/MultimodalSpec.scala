@@ -478,6 +478,31 @@ class MultimodalSpec extends SparkSpec {
     }.getMessage.contains("K-plane sampling"))
   }
 
+  test("baseline color, MJPEG and CMYK decoders reject a scan listing components out of frame order") {
+    // T.81 B.2.3: swap the 2nd and 3rd component ids of the SOS (Cb/Cr, C/M)
+    def swapped(jpeg: Array[Byte]): Array[Byte] = {
+      val b = jpeg.clone()
+      val sos = (0 until b.length - 1).find(i =>
+        (b(i) & 0xff) == 0xff && (b(i + 1) & 0xff) == 0xda).get
+      val t = b(sos + 7); b(sos + 7) = b(sos + 9); b(sos + 9) = t
+      b
+    }
+    def rejects(decode: Array[Byte] => Any, bytes: Array[Byte]): Unit = {
+      val e = intercept[IllegalArgumentException](decode(bytes))
+      assert(e.getMessage.contains("scan component 3 out of frame order"), e.getMessage)
+    }
+    val color = MultimodalOps.jpegEncodeColor(8, 8, sub420 = false,
+      Array(100), Array(120), Array(130))
+    MultimodalOps.parseJpegColor(1L, color)
+    rejects(MultimodalOps.parseJpegColor(1L, _), swapped(color))
+    rejects(MultimodalOps.parseAviMjpeg(1L, _),
+      MultimodalOps.aviMjpegEncode(8, 8, 25, 1, Array(color, swapped(color))))
+    val cmyk = MultimodalOps.jpegEncodeCmyk(8, 8, ycck = false, sub420 = false,
+      Array(100), Array(120), Array(130), Array(90))
+    MultimodalOps.parseJpegCmyk(1L, cmyk)
+    rejects(MultimodalOps.parseJpegCmyk(1L, _), swapped(cmyk))
+  }
+
   test("parseWav decodes a hand-computed stereo clip exactly") {
     // 2 frames × 2 channels: samples 100, -100, 300, -300
     val f = MultimodalOps.parseWav(3L, wav(Seq(100, -100, 300, -300), channels = 2))
@@ -611,6 +636,9 @@ class MultimodalSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] { // missing W
       MultimodalOps.parseY4m(1L, y4m("YUV4MPEG2 H2 F25:1", Nil))
+    }
+    intercept[IllegalArgumentException] { // frame rate without a ':'
+      MultimodalOps.parseY4m(1L, y4m("YUV4MPEG2 W2 H2 F25", Nil))
     }
     intercept[IllegalArgumentException] { // garbage after the last frame
       val ok = y4m("YUV4MPEG2 W2 H2 F25:1 Cmono", Seq(("FRAME", Seq(1, 2, 3, 4))))
