@@ -499,7 +499,7 @@ object Bench {
 
     // Year-partition pruning (R6): partitioned write once, then pruned scan
     // vs full flat scan of the same data.
-    val base = java.nio.file.Files.createTempDirectory("graft_bench").toString
+    val base = Scratch.dir("graft_bench")
     try {
       // Bucketed+sorted access path for the OLTP point lookup — the honest
       // index analog (reference R2's B-tree on invoiceid): bucket pruning
@@ -750,7 +750,6 @@ object Bench {
     } finally {
       try spark.sql("DROP TABLE IF EXISTS bench_fact_by_invoice")
       catch { case _: Throwable => () }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
     Pass(results.toSeq, warns.toSeq, dirtyRows.toSeq, repLog.toMap)
     } // runSuite

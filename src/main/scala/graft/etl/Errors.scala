@@ -274,22 +274,13 @@ object Errors extends QueryRegistry {
   private def streamQualityRoundtrip(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val w = Warehouse(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_dq_stream_").toString
+    val base = Scratch.dir("graft_dq_stream_")
     val even = col("linenumber").cast("int") % 2 === 0
-    w.stgSales.filter(even).withColumn("feed", lit("a"))
-      .coalesce(1).write.parquet(s"$base/drops/a")
-    w.stgSales.filter(!even).withColumn("feed", lit("b"))
-      .coalesce(1).write.parquet(s"$base/drops/b")
-    val query = streamingQualityMonitor(s, s"$base/drops/*", s"$base/out",
-        maxFilesPerTrigger = Some(1))
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_quality_roundtrip did not finish within 300 s; log is partial")
-    }
+    Scratch.drop(w.stgSales.filter(even).withColumn("feed", lit("a")), base, "a")
+    Scratch.drop(w.stgSales.filter(!even).withColumn("feed", lit("b")), base, "b")
+    Scratch.availableNow("stream_quality_roundtrip")(streamingQualityMonitor(s,
+      s"$base/drops", s"$base/out", maxFilesPerTrigger = Some(1))
+      .option("checkpointLocation", s"$base/ckpt").trigger(_).start())
     s.read.parquet(s"$base/out")
   }
 

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.{q => oq}
 
 /** Type-2 slowly-changing-dimension maintenance (beyond parity — the
@@ -472,22 +472,13 @@ object Scd2 extends QueryRegistry {
     * so it shares `dim_product_scd2`'s oracle. */
   private def streamScd2Roundtrip(spark: SparkSession, dir: String): DataFrame = {
     val (v1, v2) = productSnapshots(Warehouse(spark, dir))
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2_stream_").toString
-    v1.withColumn("as_of", lit("2020-01-01 00:00:00"))
-      .coalesce(1).write.parquet(s"$base/drops/a")
-    v2.withColumn("as_of", lit("2020-02-01 00:00:00"))
-      .coalesce(1).write.parquet(s"$base/drops/b")
-    val query = maintainHistory(spark, s"$base/drops/*",
+    val base = Scratch.dir("graft_scd2_stream_")
+    Scratch.drop(v1.withColumn("as_of", lit("2020-01-01 00:00:00")), base, "a")
+    Scratch.drop(v2.withColumn("as_of", lit("2020-02-01 00:00:00")), base, "b")
+    Scratch.availableNow("stream_scd2_roundtrip")(maintainHistory(spark, s"$base/drops",
       keys = Seq("stockcode"), attrs = Seq("unitprice"),
       historyPath = s"$base/history", maxFilesPerTrigger = Some(1))
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_scd2_roundtrip did not finish within 300 s; history is partial")
-    }
+      .option("checkpointLocation", s"$base/ckpt").trigger(_).start())
     readHistory(spark, s"$base/history")
       .withColumn("unitprice", col("unitprice").cast("double"))
   }
@@ -534,21 +525,19 @@ object Scd2 extends QueryRegistry {
   private def streamScd2EnrichRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val w = Warehouse(spark, dir)
     val (v1, v2) = productSnapshots(w)
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2_enrich_").toString
+    val base = Scratch.dir("graft_scd2_enrich_")
     foldSnapshot(spark, v1, "1995-01-01 00:00:00",
       Seq("stockcode"), Seq("unitprice"), s"$base/hist")
     foldSnapshot(spark, v2, "1998-01-01 00:00:00",
       Seq("stockcode"), Seq("unitprice"), s"$base/hist")
     val fact = temporalFact(w)
-    fact.filter(col("invoiceid").cast("long") % 2 === 0)
-      .coalesce(1).write.parquet(s"$base/drops/a")
-    fact.filter(col("invoiceid").cast("long") % 2 =!= 0)
-      .coalesce(1).write.parquet(s"$base/drops/b")
+    Scratch.drop(fact.filter(col("invoiceid").cast("long") % 2 === 0), base, "a")
+    Scratch.drop(fact.filter(col("invoiceid").cast("long") % 2 =!= 0), base, "b")
     val hist = readHistory(spark, s"$base/hist")
-    val query = spark.readStream
-      .schema(spark.read.parquet(s"$base/drops/*").schema)
+    val writer = spark.readStream
+      .schema(spark.read.parquet(s"$base/drops").schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/drops/*")
+      .parquet(s"$base/drops")
       .writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         temporalProjection(temporalLookup(batch, hist, Seq("stockcode"), "t"))
@@ -556,13 +545,7 @@ object Scd2 extends QueryRegistry {
         ()
       }
       .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_scd2_enrich_roundtrip did not finish within 300 s; output is partial")
-    }
+    Scratch.availableNow("stream_scd2_enrich_roundtrip")(writer.trigger(_).start())
     spark.read.parquet(s"$base/out")
   }
 
@@ -613,7 +596,7 @@ object Scd2 extends QueryRegistry {
     * no-op fold) against the identical row-by-row oracle. */
   private def customerScd2Store(spark: SparkSession, dir: String): DataFrame = {
     val (v1, v2, v3) = customerSnapshots(Warehouse(spark, dir))
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2_store_").toString + "/hist"
+    val root = Scratch.dir("graft_scd2_store_") + "/hist"
     foldSnapshot(spark, v1, CT1, custKeys, custAttrs, root)
     foldSnapshot(spark, v2, CT2, custKeys, custAttrs, root)
     foldSnapshot(spark, v3, CT3, custKeys, custAttrs, root)
@@ -626,7 +609,7 @@ object Scd2 extends QueryRegistry {
     * segment retirement loses and duplicates nothing. */
   private def customerScd2Compact(spark: SparkSession, dir: String): DataFrame = {
     val (v1, v2, v3) = customerSnapshots(Warehouse(spark, dir))
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2_cmp_").toString + "/hist"
+    val root = Scratch.dir("graft_scd2_cmp_") + "/hist"
     foldSnapshot(spark, v1, CT1, custKeys, custAttrs, root)
     foldSnapshot(spark, v2, CT2, custKeys, custAttrs, root)
     foldSnapshot(spark, v3, CT3, custKeys, custAttrs, root)
@@ -643,7 +626,7 @@ object Scd2 extends QueryRegistry {
     * victim version (open or closed) or a lost survivor hash-mismatches. */
   private def customerScd2Purged(spark: SparkSession, dir: String): DataFrame = {
     val (v1, v2, v3) = customerSnapshots(Warehouse(spark, dir))
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2_purge_").toString + "/hist"
+    val root = Scratch.dir("graft_scd2_purge_") + "/hist"
     foldSnapshot(spark, v1, CT1, custKeys, custAttrs, root)
     foldSnapshot(spark, v2, CT2, custKeys, custAttrs, root)
     foldSnapshot(spark, v3, CT3, custKeys, custAttrs, root)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.{q => oq}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -224,7 +224,7 @@ object EmbeddingOps extends QueryRegistry {
   /** Build-then-serve roundtrip: the persisted index must answer exactly
     * like the in-memory bucket join — shares `emb_ann_bucketed`'s oracle. */
   private def annIndexRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft_ann_idx_").toString + "/index"
+    val path = Scratch.dir("graft_ann_idx_") + "/index"
     val e = emb(spark, dir)
     writeAnnIndex(e, path)
     annFromIndex(spark, path, withBucket(e).filter(col("vec_id") % 100 === 0))

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 
 /** Product-quantization ANN (beyond parity — the codebook compression every
   * billion-vector index uses; completes the engine's quantization ladder:
@@ -266,8 +266,7 @@ object PqAnn extends QueryRegistry {
     * serve plan must carry the dynamic-pruning subquery — if the layout or
     * the pruning ever regresses, the row turns RED, not slow. */
   private def ivfPqIndexRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx_")
-      .toString + "/index"
+    val path = Scratch.dir("graft_ivfpq_idx_") + "/index"
     val e = EmbeddingOps.emb(s, d)
     val cents = IvfAnn.train(e)
     val books = train(e)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.{q => oq}
 
 /** Training-data text-pipeline operators over the `documents` table: exact
@@ -1899,26 +1899,16 @@ object TextOps extends QueryRegistry {
   private def twoDropRoundtrip(s: SparkSession, dir: String)(
       mk: (String, DataFrame, String) => (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], () => Unit)): DataFrame = {
     val all = docs(s, dir).select(col("doc_id"), col("text"))
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_").toString
-    all.filter(col("doc_id") % 8 === 3).coalesce(1).write.parquet(s"$base/drops/a")
-    all.filter(col("doc_id") % 8 === 7).coalesce(1).write.parquet(s"$base/drops/b")
+    val base = Scratch.dir("graft_stream_")
+    Scratch.drop(all.filter(col("doc_id") % 8 === 3), base, "a")
+    Scratch.drop(all.filter(col("doc_id") % 8 === 7), base, "b")
     val (writer, release) =
-      mk(s"$base/drops/*", all.filter(col("doc_id") % 4 =!= 3), s"$base/out")
+      mk(s"$base/drops", all.filter(col("doc_id") % 4 =!= 3), s"$base/out")
     // start() sits INSIDE the release guard: a start-time failure (bad
-    // output path, source glob error) must not leak the corpus cache the
+    // output path, unreadable source) must not leak the corpus cache the
     // managed constructor just materialized.
-    // A false awaitTermination = timeout: stop the stream and fail loudly,
-    // instead of hash-checking a partial output log as a confusing oracle
-    // mismatch.
-    try {
-      val query = writer
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      if (!query.awaitTermination(300000L)) {
-        query.stop()
-        throw new IllegalStateException(
-          "streaming roundtrip did not finish within 300 s; output log is partial")
-      }
-    } finally release()
+    try Scratch.availableNow("streaming roundtrip")(writer.trigger(_).start())
+    finally release()
     s.read.parquet(s"$base/out")
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.Warehouse
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.q
 
 /** MOLAP layer (`Iteration 2/Group No.6_MOLAP.sql`): three pre-aggregation
@@ -205,7 +205,7 @@ object Molap extends QueryRegistry {
     * aggregate is then the oracle's check (decimal partials re-aggregate
     * exactly — a double partial would re-sum in a different order). */
   private def mvRewriteCountry(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mv_").toString
+    val base = Scratch.dir("graft_mv_")
     val w = Warehouse(s, dir)
     w.factSalesElt
       .filter(col("date_key") =!= graft.FallbackDateKey)
@@ -260,7 +260,7 @@ object Molap extends QueryRegistry {
     * scenario mirrors [[mvRewriteCountry]]; the query slices to months
     * from 1997 on before rolling up by country. */
   private def mvRewriteFiltered(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvfil_").toString
+    val base = Scratch.dir("graft_mvfil_")
     val w = Warehouse(s, dir)
     w.factSalesElt
       .filter(col("date_key") =!= graft.FallbackDateKey)
@@ -301,7 +301,7 @@ object Molap extends QueryRegistry {
     * divide, `min`/`max` from their partials. Plan-asserted MV-only scan;
     * numeric equality to the direct route is the oracle's check. */
   private def mvRewriteAvg(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvavg_").toString
+    val base = Scratch.dir("graft_mvavg_")
     val w = Warehouse(s, dir)
     w.factSalesElt
       .filter(col("date_key") =!= graft.FallbackDateKey)
@@ -342,7 +342,7 @@ object Molap extends QueryRegistry {
     * root, register the summary, and return the root. Identical layout to
     * [[mvRewriteCountry]]'s. */
   private def grainWithMv(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvgs_").toString
+    val base = Scratch.dir("graft_mvgs_")
     val w = Warehouse(s, dir)
     w.factSalesElt
       .filter(col("date_key") =!= graft.FallbackDateKey)
@@ -486,7 +486,7 @@ object Molap extends QueryRegistry {
     * so a stale, drifted, or wrongly-merged partial hash-mismatches; the
     * plan assert proves the serve never read the base. */
   private def mvServeRefreshed(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvloop_").toString
+    val base = Scratch.dir("graft_mvloop_")
     val root = s"$base/t"
     val w = Warehouse(s, dir)
     // rid: a synthetic row key for the CDC diff — the natural line-item key
@@ -562,7 +562,7 @@ object Molap extends QueryRegistry {
 
   private def mvAutoServeScenario(s: org.apache.spark.sql.SparkSession,
       dir: String, crossProcess: Boolean): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvauto_").toString
+    val base = Scratch.dir("graft_mvauto_")
     val root = s"$base/t"
     val w = Warehouse(s, dir)
     val grain = w.factSalesElt

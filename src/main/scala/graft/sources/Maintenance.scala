@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
+
 /** Threshold-driven maintenance policy loop (r15, VERDICT r14 #3): ONE
   * `maintain(root)` composes the versioned table's maintenance verbs —
   * [[VersionedTable.cluster]], [[VersionedTable.compact]],
@@ -235,7 +237,7 @@ object Maintenance extends graft.QueryRegistry {
     * duplicated anywhere in the append/compact/cluster chain
     * hash-mismatches. */
   private def maintainPolicy(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_maint_").toString + "/t"
+    val root = Scratch.dir("graft_maint_") + "/t"
     val events = graft.streaming.EventOps.events(s, dir)
     VersionedTable.create(s, root,
       events.filter(col("event_id") % 13 === 0).repartition(1))

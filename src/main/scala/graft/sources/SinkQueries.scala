@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Warehouse
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 
 /** Oracle-checked round trips for the write-path sinks (SURVEY.md §2.1
   * S3/S4/S5/S10) — the operators whose OUTPUT is a side effect rather than a
@@ -42,7 +40,7 @@ object SinkQueries extends QueryRegistry {
     * partition-discovering scan. */
   private def materializeRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val w = Warehouse(s, dir)
-    val out = Files.createTempDirectory("graft_sink_ctas_").toString
+    val out = Scratch.dir("graft_sink_ctas_")
     Sources.materialize(
       w.factSalesElt.withColumn("year", graft.yearOfDateKey(col("date_key"))),
       s"$out/fact", partitionBy = Seq("year"), sortWithin = Seq("date_key"))
@@ -55,7 +53,7 @@ object SinkQueries extends QueryRegistry {
     * base + append must reproduce the identity exactly. */
   private def appendRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val w = Warehouse(s, dir)
-    val out = Files.createTempDirectory("graft_sink_append_").toString
+    val out = Scratch.dir("graft_sink_append_")
     val split = 19970101000000L
     Sources.materialize(w.factSalesElt.filter(col("date_key") < split), s"$out/fact")
     Sources.append(w.factSalesElt.filter(col("date_key") >= split), s"$out/fact")
@@ -76,7 +74,7 @@ object SinkQueries extends QueryRegistry {
     * the read-back MOLAP summary must satisfy the same oracle as the live
     * `molap_month_country` aggregate. */
   private def biExportRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_bi_").toString
+    val out = Scratch.dir("graft_sink_bi_")
     BiExport.export(s, dir, out)
     s.read.parquet(s"$out/molap_month_country")
   }
@@ -90,7 +88,7 @@ object SinkQueries extends QueryRegistry {
     * an unsoundly skipped file (lost rows) hash-mismatches; the skipping
     * effectiveness itself is asserted in SkippingIndexSpec. */
   private def zorderPrunedAgg(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_zprune_").toString
+    val out = Scratch.dir("graft_sink_zprune_")
     ZOrder.materializeZordered(graft.streaming.EventOps.events(s, dir), s"$out/events_z",
       Seq("user_id", "value"), bits = 6, numFiles = 16)
     val idx = SkippingIndex.build(s, s"$out/events_z", Seq("user_id", "value"))
@@ -108,7 +106,7 @@ object SinkQueries extends QueryRegistry {
     * what the oracle computes over the surviving rows. A stale index
     * (missing the append, or keeping the vanished file) hash-mismatches. */
   private def skippingRefreshAgg(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_sidx_").toString
+    val out = Scratch.dir("graft_sink_sidx_")
     val ev = graft.streaming.EventOps.events(s, dir)
     // v1 layout: the even-id half as two DATA-DETERMINED files (ids ≡0 and
     // ≡2 mod 4) so the later deletion removes a row set the oracle can name
@@ -145,7 +143,7 @@ object SinkQueries extends QueryRegistry {
     * itself is asserted in ZOrderSpec (layout must not change semantics, so
     * it cannot show up in a correctness row). */
   private def zorderBoxAgg(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_zorder_").toString
+    val out = Scratch.dir("graft_sink_zorder_")
     // read through the EventOps accessor, which normalizes ts to µs-epoch
     // whatever encoding the feed carries (the engine's ingestion contract)
     ZOrder.materializeZordered(graft.streaming.EventOps.events(s, dir), s"$out/events_z",
@@ -165,15 +163,14 @@ object SinkQueries extends QueryRegistry {
     * NULL category), so a reader that drops pre-evolution rows, misaligns
     * columns by position, or fails to null-fill hash-mismatches. */
   private def schemaEvolutionRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_evo_").toString
+    val out = Scratch.dir("graft_sink_evo_")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice").cast("double").as("unitprice"),
         col("category"))
-    p.select(lit("a").as("v"), col("stockcode"), col("unitprice"))
-      .write.parquet(s"$out/drops/a")
-    p.select(lit("b").as("v"), col("stockcode"), col("unitprice"), col("category"))
-      .write.parquet(s"$out/drops/b")
-    Sources.readEvolved(s, s"$out/drops/*")
+    Scratch.drop(p.select(lit("a").as("v"), col("stockcode"), col("unitprice")), out, "a")
+    Scratch.drop(p.select(lit("b").as("v"), col("stockcode"), col("unitprice"),
+      col("category")), out, "b")
+    Sources.readEvolved(s, s"$out/drops")
   }
 
   /** DELETE WHERE round trip (r11): the events feed laid out in
@@ -184,7 +181,7 @@ object SinkQueries extends QueryRegistry {
     * (clean files byte-copied, not re-encoded) is asserted in
     * DmlSpec. */
   private def deleteWhereRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_del_").toString
+    val out = Scratch.dir("graft_sink_del_")
     graft.streaming.EventOps.events(s, dir)
       .withColumn("ubucket", expr("user_id div 50"))
       .write.partitionBy("ubucket").parquet(s"$out/events_v1")
@@ -202,7 +199,7 @@ object SinkQueries extends QueryRegistry {
     * oracle aggregates the CASE-doubled feed, so a missed victim, a
     * doubled survivor, or a dropped/duplicated file all hash-mismatch. */
   private def updateWhereRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_upd_").toString
+    val out = Scratch.dir("graft_sink_upd_")
     val events = graft.streaming.EventOps.events(s, dir)
     events.withColumn("ubucket", expr("user_id div 50"))
       .write.partitionBy("ubucket").parquet(s"$out/events_v1")
@@ -228,7 +225,7 @@ object SinkQueries extends QueryRegistry {
     * (`ubucket_sum` from the PARTITION column), and row preservation
     * against the CASE-shifted oracle. */
   private def updateMoveRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_umv_").toString + "/t"
+    val root = Scratch.dir("graft_sink_umv_") + "/t"
     val events = graft.streaming.EventOps.events(s, dir)
     // 5-user buckets + a sparse mover set (one user in 15): most partition
     // files hold no mover, so the commit's cost is the movers' files plus
@@ -263,7 +260,7 @@ object SinkQueries extends QueryRegistry {
     * 0`, so a surviving victim row, a lost survivor, or a double-copied
     * clean file all hash-mismatch. */
   private def deleteKeysRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_gdpr_").toString
+    val out = Scratch.dir("graft_sink_gdpr_")
     val events = graft.streaming.EventOps.events(s, dir)
     events.withColumn("ubucket", expr("user_id div 50"))
       .write.partitionBy("ubucket").parquet(s"$out/events_v1")
@@ -282,7 +279,7 @@ object SinkQueries extends QueryRegistry {
     * rows as pre/post image pairs (every victim's price genuinely changes,
     * so none may drop out as unchanged). */
   private def versionedUpdateWhere(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtupd_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtupd_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -306,7 +303,7 @@ object SinkQueries extends QueryRegistry {
     * count genuinely shrank, and v1 stays time-travelable; the oracle then
     * hash-checks the compacted read against the dim identity. */
   private def versionedCompact(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtcomp_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtcomp_") + "/t"
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, root, p.repartition(40))
@@ -338,7 +335,7 @@ object SinkQueries extends QueryRegistry {
     * plus the merged inserts. */
   private def versionedEvolve(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val root = Files.createTempDirectory("graft_sink_vtevo_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtevo_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -386,7 +383,7 @@ object SinkQueries extends QueryRegistry {
     * fired at plan level), and the oracle — the same repaired-and-filtered
     * state — proves the pruned scan lost nothing. */
   private def versionedStatsAuto(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtsa_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtsa_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -428,7 +425,7 @@ object SinkQueries extends QueryRegistry {
     * treatment in min/max, or an unmaintained stats row all
     * hash-mismatch. */
   private def versionedStatsMetaAgg(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtmeta_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtmeta_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -487,7 +484,7 @@ object SinkQueries extends QueryRegistry {
 
   private def statsAutoRegScenario(s: SparkSession, dir: String,
       crossProcess: Boolean): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtsar_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtsar_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -537,7 +534,7 @@ object SinkQueries extends QueryRegistry {
     * duplicates a row, or a prune that skips a matching file, cannot
     * pass. */
   private def versionedZorderServe(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtzo_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtzo_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -587,7 +584,7 @@ object SinkQueries extends QueryRegistry {
     * order (the delete applied, then the repair over the survivors) — a
     * lost update on either side hash-mismatches. */
   private def versionedConcurrent(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtcc_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtcc_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -623,7 +620,7 @@ object SinkQueries extends QueryRegistry {
     * The oracle spells the repaired-and-filtered state, so a stale stats
     * row, a wrongly-skipped file, or a lost update all hash-mismatch. */
   private def versionedStatsPrune(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtstats_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtstats_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -667,7 +664,7 @@ object SinkQueries extends QueryRegistry {
     * incremental refresh to keep the blooms serving, and the oracle spells
     * the needles' rows exactly. */
   private def versionedStatsBloom(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtbloom_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtbloom_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -705,7 +702,7 @@ object SinkQueries extends QueryRegistry {
     * validate). The oracle spells the valid-repair-only state: a leaked
     * violating row, or a rejected-but-committed version, hash-mismatches. */
   private def versionedConstraint(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtchk_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtchk_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -734,7 +731,7 @@ object SinkQueries extends QueryRegistry {
     * pure re-inserts). The oracle is the original dim identity: a restore
     * that lost or duplicated a row hash-mismatches. */
   private def versionedRestore(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtrst_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtrst_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -765,7 +762,7 @@ object SinkQueries extends QueryRegistry {
     * a clause misfire, a wrong-order application, or a leaked unmatched
     * row hash-mismatches. */
   private def versionedMergeClauses(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtmc_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtmc_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -800,7 +797,7 @@ object SinkQueries extends QueryRegistry {
     * column, and DML continuing under the narrowed schema (a delete commits
     * v3). The oracle spells the narrowed post-delete state. */
   private def versionedDrop(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtdrop_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtdrop_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -830,7 +827,7 @@ object SinkQueries extends QueryRegistry {
     * (it would surface as a spurious delete image), or a wrong change class
     * all hash-mismatch against the oracle's spelled-out delete set. */
   private def versionedDeleteKeys(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_vtgdpr_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vtgdpr_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -855,7 +852,7 @@ object SinkQueries extends QueryRegistry {
     * inserts), so a lost row, a stale pre-update version, or a dropped
     * insert hash-mismatches. */
   private def mergeIntoRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_sink_merge_").toString
+    val out = Scratch.dir("graft_sink_merge_")
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -882,7 +879,7 @@ object SinkQueries extends QueryRegistry {
     * mutations, and the latest read must see exactly the post-delete,
     * post-merge table. */
   private def versionedScenario(s: SparkSession, dir: String): String = {
-    val root = Files.createTempDirectory("graft_sink_vt_").toString + "/t"
+    val root = Scratch.dir("graft_sink_vt_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -911,7 +908,7 @@ object SinkQueries extends QueryRegistry {
     * missed class, a leaked unchanged row, or a pre/post image swap
     * hash-mismatches. */
   private def cdcChanges(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sink_cdc_").toString + "/t"
+    val root = Scratch.dir("graft_sink_cdc_") + "/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -952,27 +949,22 @@ object SinkQueries extends QueryRegistry {
     * skipped span, a double-delivered span, or per-commit (non-span)
     * delivery all hash-mismatch. */
   private def versionedChangesFeed(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory("graft_sink_cdcs_").toString
+    val base = Scratch.dir("graft_sink_cdcs_")
     val root = s"$base/t"
     val code = col("stockcode").cast("long")
     val p = Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, root, p)
     val spans = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def run(ckpt: String): Unit = {
-      val q = VersionedTable.changesStream(s, root, Seq("stockcode"),
+    def run(ckpt: String): Unit = Scratch.availableNow("stream_versioned_changes_feed")(
+      VersionedTable.changesStream(s, root, Seq("stockcode"),
         s"$base/state", startAfter = 1) { (from, to, feed) =>
         val proj = feed.select(col("stockcode"), col("change_type"),
           col("unitprice").cast("double").as("unitprice"), col("category"),
           lit(from).as("from_v"), lit(to).as("to_v"))
         val rows = java.util.Arrays.asList(proj.collect(): _*)
         spans += s.createDataFrame(rows, proj.schema)
-      }.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(300000L)) {
-        q.stop(); throw new IllegalStateException("changes stream did not finish in 300 s")
-      }
-    }
+      }.option("checkpointLocation", ckpt).trigger(_).start())
     // phase 1: v2 (delete mix) + v3 (merge) already committed → ONE span
     VersionedTable.deleteWhere(s, root, code % 7 === 0)
     val updates = p.filter(code % 4 === 0 && code % 7 =!= 0)

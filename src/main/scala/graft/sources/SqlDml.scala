@@ -693,13 +693,13 @@ object SqlDml extends graft.QueryRegistry {
 
   // ---------------------------------------------------------------- gates
 
-  import java.nio.file.Files
+  import graft.Scratch
 
   /** SQL DELETE, gated like `sink_delete_where` (same oracle): the events
     * feed committed as a versioned table, the user-range delete issued as
     * a SQL string, survivors aggregated. */
   private def sqlDeleteWhere(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqldel_").toString + "/t"
+    val root = Scratch.dir("graft_sqldel_") + "/t"
     val events = graft.streaming.EventOps.events(s, dir)
       .withColumn("ubucket", expr("user_id div 50"))
     VersionedTable.create(s, root, events.repartition(col("ubucket")), Seq("ubucket"))
@@ -714,7 +714,7 @@ object SqlDml extends graft.QueryRegistry {
   /** SQL UPDATE, gated like `sink_update_where` (same oracle): every 9th
     * user's value doubled through the SQL string. */
   private def sqlUpdateWhere(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqlupd_").toString + "/t"
+    val root = Scratch.dir("graft_sqlupd_") + "/t"
     val events = graft.streaming.EventOps.events(s, dir)
       .withColumn("ubucket", expr("user_id div 50"))
     VersionedTable.create(s, root, events.repartition(col("ubucket")), Seq("ubucket"))
@@ -732,7 +732,7 @@ object SqlDml extends graft.QueryRegistry {
     * session view — matched rows take the source price/category, unmatched
     * source rows INSERT *. */
   private def sqlMergeInto(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqlmrg_").toString + "/t"
+    val root = Scratch.dir("graft_sqlmrg_") + "/t"
     val code = col("stockcode").cast("long")
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -766,7 +766,7 @@ object SqlDml extends graft.QueryRegistry {
     * non-positive prices keep themselves (the statement's own COALESCE
     * quirk, reproduced faithfully), everything else untouched. */
   private def sqlUpdateFrom(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqluf_").toString + "/t"
+    val root = Scratch.dir("graft_sqluf_") + "/t"
     val code = col("stockcode").cast("long")
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -795,7 +795,7 @@ object SqlDml extends graft.QueryRegistry {
     * replace — three statements, three committed versions, oracle over the
     * final state. */
   private def sqlInsertInto(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqlins_").toString + "/t"
+    val root = Scratch.dir("graft_sqlins_") + "/t"
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, root, p.repartition(4))
@@ -824,7 +824,7 @@ object SqlDml extends graft.QueryRegistry {
     * target rows are DELETED when cheap (&lt; 2) else MARKED stale when
     * &lt; 5 — ordered NMBS clauses, first true wins. */
   private def sqlMergeSync(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqlsync_").toString + "/t"
+    val root = Scratch.dir("graft_sqlsync_") + "/t"
     val code = col("stockcode").cast("long")
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
@@ -858,8 +858,8 @@ object SqlDml extends graft.QueryRegistry {
     * DROP COLUMNS with IF EXISTS skipping a missing name. Oracle over the
     * final evolved state. */
   private def sqlDdlLifecycle(s: SparkSession, dir: String): DataFrame = {
-    val rootP = Files.createTempDirectory("graft_sqlddl_p_").toString + "/t"
-    val rootW = Files.createTempDirectory("graft_sqlddl_w_").toString + "/t"
+    val rootP = Scratch.dir("graft_sqlddl_p_") + "/t"
+    val rootW = Scratch.dir("graft_sqlddl_w_") + "/t"
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, rootP, p.repartition(4))
@@ -912,7 +912,7 @@ object SqlDml extends graft.QueryRegistry {
     * head at v1), a leaked update into v1, or a lost head update all
     * hash-mismatch against the oracle's two spelled states. */
   private def sqlTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqltt_").toString + "/t"
+    val root = Scratch.dir("graft_sqltt_") + "/t"
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, root, p.repartition(4))
@@ -938,7 +938,7 @@ object SqlDml extends graft.QueryRegistry {
     * plain `spark.sql` SELECT over the registered name — no router entry
     * point in sight, the deployment-shaped path. */
   private def sqlSessionSurface(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqlsess_g_").toString + "/t"
+    val root = Scratch.dir("graft_sqlsess_g_") + "/t"
     val events = graft.streaming.EventOps.events(s, dir)
       .withColumn("ubucket", expr("user_id div 50"))
     VersionedTable.create(s, root, events.repartition(col("ubucket")), Seq("ubucket"))
@@ -963,7 +963,7 @@ object SqlDml extends graft.QueryRegistry {
     * invariant) the final rows byte-for-byte the original identity:
     * maintenance moves bytes, never rows. */
   private def sqlOptimizeVacuum(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqlopt_").toString + "/t"
+    val root = Scratch.dir("graft_sqlopt_") + "/t"
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, root, p.repartition(32))
@@ -993,7 +993,7 @@ object SqlDml extends graft.QueryRegistry {
     * pre/post image pairs, so a leaked unchanged row, a missing image, or
     * a wrong change class hash-mismatches. */
   private def sqlTableChanges(s: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft_sqltc_").toString + "/t"
+    val root = Scratch.dir("graft_sqltc_") + "/t"
     val p = graft.etl.Warehouse(s, dir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(s, root, p.repartition(4))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.{q => oq}
 
 /** Event-stream processing over the `events` table — the reference's
@@ -683,23 +683,16 @@ object EventOps extends QueryRegistry {
     * independent of which copy the state keeps. */
   private def streamDedupRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_dedup_").toString
-    ev.filter(col("event_id") % 4 === 1).coalesce(1).write.parquet(s"$base/drops/a")
-    ev.filter(col("event_id") % 4 === 3 || col("event_id") % 8 === 1)
-      .coalesce(1).write.parquet(s"$base/drops/b")
-    val query = streamingDedup(s, s"$base/drops/*",
+    val base = Scratch.dir("graft_stream_dedup_")
+    Scratch.drop(ev.filter(col("event_id") % 4 === 1), base, "a")
+    Scratch.drop(ev.filter(col("event_id") % 4 === 3 || col("event_id") % 8 === 1), base, "b")
+    Scratch.availableNow("stream_dedup_roundtrip")(streamingDedup(s, s"$base/drops",
         watermark = "87600 hours", maxFilesPerTrigger = Some(1))
       .writeStream.outputMode("append")
       .format("parquet")
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_dedup_roundtrip did not finish within 300 s; output log is partial")
-    }
+      .trigger(_).start())
     s.read.parquet(s"$base/out")
       .select(col("event_id"), col("t").cast("timestamp_ntz").as("t"),
         col("user_id"), col("event_type"), col("value"))
@@ -775,21 +768,16 @@ object EventOps extends QueryRegistry {
     val ev = events(s, dir)
     val r = ev.agg(min("ts"), max("ts")).head()
     val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_hourly_").toString
-    ev.filter(col("ts") <= mid).coalesce(1).write.parquet(s"$base/drops/a")
-    ev.filter(col("ts") > mid).coalesce(1).write.parquet(s"$base/drops/b")
-    val query = streamingHourlyAgg(s, s"$base/drops/*", maxFilesPerTrigger = Some(1))
-      .writeStream.outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_hourly_roundtrip did not finish within 300 s; output log is partial")
-    }
+    val base = Scratch.dir("graft_stream_hourly_")
+    Scratch.drop(ev.filter(col("ts") <= mid), base, "a")
+    Scratch.drop(ev.filter(col("ts") > mid), base, "b")
+    Scratch.availableNow("stream_hourly_roundtrip")(
+      streamingHourlyAgg(s, s"$base/drops", maxFilesPerTrigger = Some(1))
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(_).start())
     s.read.parquet(s"$base/out")
   }
 
@@ -813,26 +801,20 @@ object EventOps extends QueryRegistry {
     val r = ev.agg(min("ts"), max("ts")).head()
     val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
     val mid2 = mid + (r.getLong(1) - mid) / 2
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_late_").toString
+    val base = Scratch.dir("graft_stream_late_")
     // third quarter, then fourth (carrying the max — the watermark stands
     // at max − 1h from batch 2 on) ...
-    ev.filter(col("ts") > mid && col("ts") <= mid2)
-      .coalesce(1).write.parquet(s"$base/drops/a")
-    ev.filter(col("ts") > mid2).coalesce(1).write.parquet(s"$base/drops/b")
+    Scratch.drop(ev.filter(col("ts") > mid && col("ts") <= mid2), base, "a")
+    Scratch.drop(ev.filter(col("ts") > mid2), base, "b")
     // ... then the whole first half arrives entirely behind it
-    ev.filter(col("ts") <= mid).coalesce(1).write.parquet(s"$base/drops/c")
-    val query = streamingHourlyAgg(s, s"$base/drops/*", maxFilesPerTrigger = Some(1))
-      .writeStream.outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_late_data_roundtrip did not finish within 300 s; output log is partial")
-    }
+    Scratch.drop(ev.filter(col("ts") <= mid), base, "c")
+    Scratch.availableNow("stream_late_data_roundtrip")(
+      streamingHourlyAgg(s, s"$base/drops", maxFilesPerTrigger = Some(1))
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(_).start())
     s.read.parquet(s"$base/out")
   }
 
@@ -884,21 +866,16 @@ object EventOps extends QueryRegistry {
     val ev = events(s, dir)
     val r = ev.agg(min("ts"), max("ts")).head()
     val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_swin_").toString
-    ev.filter(col("ts") <= mid).coalesce(1).write.parquet(s"$base/drops/a")
-    ev.filter(col("ts") > mid).coalesce(1).write.parquet(s"$base/drops/b")
-    val query = streamingSessionWindow(s, s"$base/drops/*", maxFilesPerTrigger = Some(1))
-      .writeStream.outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_session_window_roundtrip did not finish within 300 s; output log is partial")
-    }
+    val base = Scratch.dir("graft_stream_swin_")
+    Scratch.drop(ev.filter(col("ts") <= mid), base, "a")
+    Scratch.drop(ev.filter(col("ts") > mid), base, "b")
+    Scratch.availableNow("stream_session_window_roundtrip")(
+      streamingSessionWindow(s, s"$base/drops", maxFilesPerTrigger = Some(1))
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(_).start())
     s.read.parquet(s"$base/out")
   }
 
@@ -917,25 +894,20 @@ object EventOps extends QueryRegistry {
     val ev = events(s, dir).select(col("user_id"), col("ts"))
     val r = ev.agg(min("ts"), max("ts")).head()
     val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_sess_").toString
-    ev.filter(col("ts") <= mid).coalesce(1).write.parquet(s"$base/drops/a")
-    ev.filter(col("ts") > mid).coalesce(1).write.parquet(s"$base/drops/b")
+    val base = Scratch.dir("graft_stream_sess_")
+    Scratch.drop(ev.filter(col("ts") <= mid), base, "a")
+    Scratch.drop(ev.filter(col("ts") > mid), base, "b")
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts", LongType)))
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/drops/*").as[SessionEvent]
-    val query = sessionize(stream, gapMinutes = 30)
-      .toDF().writeStream.outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_sessionize_roundtrip did not finish within 300 s; output log is partial")
-    }
+      .parquet(s"$base/drops").as[SessionEvent]
+    Scratch.availableNow("stream_sessionize_roundtrip")(
+      sessionize(stream, gapMinutes = 30)
+        .toDF().writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(_).start())
     s.read.parquet(s"$base/out")
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.{QueryDef, QueryRegistry}
+import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.etl.{Transforms, Warehouse}
 import graft.oracle.OracleSql.q
 
@@ -183,25 +183,18 @@ object IncrementalEtl extends QueryRegistry {
     * batch, or a restart reprocessing A would all break the row multiset. */
   private def streamVersionedCommit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
     val w = Warehouse(s, dir) // memoized — shared with every other gate
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_vt_").toString
+    val base = Scratch.dir("graft_stream_vt_")
     val root = s"$base/fact_table"
     val ckpt = s"$base/ckpt"
     // coalesce: a null/non-numeric linenumber must land in exactly one
     // drop — a bare null predicate would vanish from BOTH splits while
     // the oracle aggregates the full fact
     val even = coalesce(col("linenumber").cast("int") % 2 === 0, lit(true))
-    w.stgSales.filter(even).coalesce(1).write.parquet(s"$base/drops/a")
-    def runStream(): Unit = {
-      val q = streamIntoVersioned(s, s"$base/drops/*", w, root)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(300000L)) {
-        q.stop()
-        throw new IllegalStateException("versioned-commit stream did not finish in 300 s")
-      }
-    }
+    Scratch.drop(w.stgSales.filter(even), base, "a")
+    def runStream(): Unit = Scratch.availableNow("stream_versioned_commit")(
+      streamIntoVersioned(s, s"$base/drops", w, root)
+        .option("checkpointLocation", ckpt).trigger(_).start())
     runStream() // batch 0 = drop A → v1
     require(graft.sources.VersionedTable.latestVersion(s, root) == 1,
       "drop A must commit exactly one snapshot")
@@ -216,7 +209,7 @@ object IncrementalEtl extends QueryRegistry {
       "the replay must leave the table at v1")
     // mid-feed restart: drop B arrives, the stream restarts from the SAME
     // checkpoint and must process only the new file as batch 1
-    w.stgSales.filter(!even).coalesce(1).write.parquet(s"$base/drops/b")
+    Scratch.drop(w.stgSales.filter(!even), base, "b")
     runStream()
     require(graft.sources.VersionedTable.latestVersion(s, root) == 2,
       "drop B must commit exactly one more snapshot")
@@ -249,22 +242,15 @@ object IncrementalEtl extends QueryRegistry {
   private def streamMolapRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val w = Warehouse(s, dir) // memoized — shared with every other gate
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_molap_").toString
+    val base = Scratch.dir("graft_stream_molap_")
     // coalesce: a null/non-numeric linenumber must land in exactly one
     // drop — a bare null predicate would vanish from BOTH splits while
     // the oracle aggregates the full fact
     val even = coalesce(col("linenumber").cast("int") % 2 === 0, lit(true))
-    w.stgSales.filter(even).coalesce(1).write.parquet(s"$base/drops/a")
-    w.stgSales.filter(!even).coalesce(1).write.parquet(s"$base/drops/b")
-    val query = maintainMonthCountry(s, s"$base/drops/*", w, s"$base/summary",
-        maxFilesPerTrigger = Some(1))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "stream_molap_roundtrip did not finish within 300 s; summary is partial")
-    }
+    Scratch.drop(w.stgSales.filter(even), base, "a")
+    Scratch.drop(w.stgSales.filter(!even), base, "b")
+    Scratch.availableNow("stream_molap_roundtrip")(maintainMonthCountry(s, s"$base/drops", w,
+      s"$base/summary", maxFilesPerTrigger = Some(1)).trigger(_).start())
     readMonthCountry(s, s"$base/summary")
       .select(col("month"), col("country"),
         col("revenue").cast("double").as("revenue"),
@@ -298,7 +284,7 @@ object IncrementalEtl extends QueryRegistry {
   private def buildMvServingScenario(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions._
     val w = Warehouse(s, dir) // memoized — shared with every other gate
-    val base = java.nio.file.Files.createTempDirectory("graft_mv_serve_").toString
+    val base = Scratch.dir("graft_mv_serve_")
     // the enriched base-grain table the dashboards query
     w.factSales.filter(col("date_key") =!= graft.FallbackDateKey)
       .join(w.dimCustomer.select("customer_key", "country"), Seq("customer_key"), "left")
@@ -311,17 +297,10 @@ object IncrementalEtl extends QueryRegistry {
     // drop — a bare null predicate would vanish from BOTH splits while
     // the oracle aggregates the full fact
     val even = coalesce(col("linenumber").cast("int") % 2 === 0, lit(true))
-    w.stgSales.filter(even).coalesce(1).write.parquet(s"$base/drops/a")
-    w.stgSales.filter(!even).coalesce(1).write.parquet(s"$base/drops/b")
-    val query = maintainMonthCountry(s, s"$base/drops/*", w, s"$base/summary",
-        maxFilesPerTrigger = Some(1))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000L)) {
-      query.stop()
-      throw new IllegalStateException(
-        "mv serving scenario did not finish within 300 s; summary is partial")
-    }
+    Scratch.drop(w.stgSales.filter(even), base, "a")
+    Scratch.drop(w.stgSales.filter(!even), base, "b")
+    Scratch.availableNow("mv serving scenario")(maintainMonthCountry(s, s"$base/drops", w,
+      s"$base/summary", maxFilesPerTrigger = Some(1)).trigger(_).start())
     graft.plans.MvRewrite.register(s, s"$base/grain", s.read.parquet(s"$base/summary"),
       keys = Seq("month", "country"),
       sums = Map("totalamount" -> "revenue", "quantity" -> "qty"),

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * verify mains, the calibration recorder behind
   * `Bench.CalibrationRecordedSec`, and the `PLANS.md` generator. A one-off
   * probe or measurement main belongs under `src/test` or outside the repo;
-  * this spec fails when one lands in `src/main`. */
+  * this spec fails when one lands in `src/main`. It also keeps scratch
+  * placement and the AvailableNow run in the one module that owns them,
+  * [[Scratch]]. */
 class EntryPointsSpec extends AnyFunSuite {
   private val objectDecl = """\bobject\s+(\w+)""".r
   private val mainDecl = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
@@ -29,5 +31,17 @@ class EntryPointsSpec extends AnyFunSuite {
     val mains = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
       .flatMap(mainObjects).toList finally walk.close()
     assert(mains.sorted == List("Bench", "CalibProbe", "PlanDump", "Verify"))
+  }
+
+  test("src/main makes temp dirs and runs AvailableNow queries only through Scratch") {
+    val banned = Seq("createTempDirectory", "createTempFile", "Trigger.AvailableNow")
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val hits = try walk.iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Scratch.scala")
+      .flatMap { f =>
+        val src = new String(Files.readAllBytes(f), "UTF-8")
+        banned.filter(src.contains).map(b => s"$f: $b")
+      }.toList finally walk.close()
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

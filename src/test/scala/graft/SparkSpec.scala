@@ -13,7 +13,7 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     // bucketed-table specs saveAsTable; keep the warehouse out of the repo
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
+      Scratch.dir("graft_test_wh"))
     .getOrCreate()
 }
 

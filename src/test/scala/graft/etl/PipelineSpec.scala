@@ -2,14 +2,14 @@ package graft.etl
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** End-to-end ETL/ELT pipeline runs: materialized star + validation frame +
   * error sink with parseable JSON payloads. */
 class PipelineSpec extends SparkSpec {
 
   test("runEtl materializes the star, reconciles revenue, and logs JSON rejects") {
-    val out = java.nio.file.Files.createTempDirectory("graft_etl").toString
+    val out = Scratch.dir("graft_etl")
     val v = Pipeline.runEtl(spark, sfDir, out)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v("staging_sales_rows") === v("fact_rows"))
@@ -24,17 +24,15 @@ class PipelineSpec extends SparkSpec {
       col("error_message"))
     assert(parsed.filter(col("inv").isNull).count() === 0)
     assert(errors.filter(col("source_table") =!= "staging.sales_clean").count() === 0)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("runElt lands raw copies then the same star (ELT ordering)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_elt").toString
+    val out = Scratch.dir("graft_elt")
     val v = Pipeline.runElt(spark, sfDir, out)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v("staging_sales_rows") === v("fact_rows"))
     val w = Warehouse(spark, sfDir)
     assert(spark.read.parquet(s"$out/raw_sales").count() === w.stgSales.count())
     assert(spark.read.parquet(s"$out/raw_customers").count() === w.stgCustomers.count())
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 }

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Plan-quality assertions: the physical plans the engine relies on at 100 TB
   * must actually materialize — pushed parquet filters, partition pruning,
@@ -12,7 +12,7 @@ class PlanQualitySpec extends SparkSpec {
   private lazy val w = Warehouse(spark, sfDir)
 
   private def materializedFact: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft_plan").toString
+    val out = Scratch.dir("graft_plan")
     Warehouse.materialize(spark, sfDir, out)
     out
   }
@@ -25,7 +25,6 @@ class PlanQualitySpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(date_key), GreaterThanOrEqual(date_key"), plan)
     assert(plan.contains("ReadSchema: struct<date_key:bigint,totalamount:decimal(18,2)>"), plan)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("year-partitioned fact write prunes partitions on a year filter") {
@@ -33,7 +32,6 @@ class PlanQualitySpec extends SparkSpec {
     val q = spark.read.parquet(s"$out/fact_sales").filter(col("year") === 1996)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(year"), plan)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("a calendar window runs as a pushed date_key range on the materialized fact") {
@@ -51,7 +49,6 @@ class PlanQualitySpec extends SparkSpec {
     // carries the upper bound un-truncated
     assert(plan.contains("<= 19960331235959)"), plan)
     assert(!plan.contains("Join"), plan)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("top-k uses TakeOrderedAndProject, not a global sort") {

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Semantics + plan shape of the SCD Type-2 merge. */
 class Scd2Spec extends SparkSpec {
@@ -77,7 +77,7 @@ class Scd2Spec extends SparkSpec {
   test("streaming maintainer folds TWO snapshots landing in ONE batch in as_of order") {
     // no maxFilesPerTrigger: both drops arrive in a single micro-batch and
     // correctness hangs on the per-as_of ascending driver loop
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2_onebatch_").toString
+    val base = Scratch.dir("graft_scd2_onebatch_")
     snap((1L, "a", 1.0), (2L, "b", 2.0)).withColumn("as_of", lit(T1))
       .coalesce(1).write.parquet(s"$base/drops/a")
     snap((1L, "a", 9.0)).withColumn("as_of", lit(T2))
@@ -98,7 +98,7 @@ class Scd2Spec extends SparkSpec {
   // -- segmented store (r11) ------------------------------------------------
 
   test("segmented store: fold chain equals the batch merge chain") {
-    val root = java.nio.file.Files.createTempDirectory("graft_seg_eq_").toString + "/h"
+    val root = Scratch.dir("graft_seg_eq_") + "/h"
     Scd2.foldSnapshot(spark, snap((1L, "a", 1.0), (2L, "b", 2.0)), T1,
       Seq("id"), Seq("name", "price"), root)
     Scd2.foldSnapshot(spark, snap((1L, "a", 9.0)), T2,
@@ -111,7 +111,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("segmented store: committed closed segments are byte-stable across later folds") {
-    val root = java.nio.file.Files.createTempDirectory("graft_seg_stable_").toString + "/h"
+    val root = Scratch.dir("graft_seg_stable_") + "/h"
     val ks = Seq("id"); val as = Seq("name", "price")
     Scd2.foldSnapshot(spark, snap((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)), T1, ks, as, root)
     Scd2.foldSnapshot(spark, snap((1L, "a", 9.0), (2L, "b", 2.0)), T2, ks, as, root)
@@ -141,7 +141,7 @@ class Scd2Spec extends SparkSpec {
   test("history purge erases every version of the tombstoned keys, segment-selectively") {
     val ks = Seq("id"); val as = Seq("name", "price")
     def buildStore(): String = {
-      val root = java.nio.file.Files.createTempDirectory("graft_seg_purge_").toString + "/h"
+      val root = Scratch.dir("graft_seg_purge_") + "/h"
       Scd2.foldSnapshot(spark, snap((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)), T1, ks, as, root)
       Scd2.foldSnapshot(spark, snap((1L, "a", 9.0), (2L, "b", 2.0)), T2, ks, as, root) // seg2: id1 v1 + deleted id3
       Scd2.foldSnapshot(spark, snap((1L, "a", 8.0), (2L, "b", 2.0)), T3, ks, as, root) // seg3: id1 v2
@@ -181,7 +181,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("segmented store: out-of-order folds fail; committed-asOf replays skip") {
-    val root = java.nio.file.Files.createTempDirectory("graft_seg_order_").toString + "/h"
+    val root = Scratch.dir("graft_seg_order_") + "/h"
     val ks = Seq("id"); val as = Seq("name", "price")
     assert(Scd2.foldSnapshot(spark, snap((1L, "a", 1.0)), T2, ks, as, root))
     // a replay of the committed fold is an at-least-once no-op
@@ -195,7 +195,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("segment compaction merges committed segments, sweeps debris, and changes nothing readable") {
-    val root = java.nio.file.Files.createTempDirectory("graft_seg_cmp_").toString + "/h"
+    val root = Scratch.dir("graft_seg_cmp_") + "/h"
     val ks = Seq("id"); val as = Seq("name", "price")
     Scd2.foldSnapshot(spark, snap((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)), T1, ks, as, root)
     Scd2.foldSnapshot(spark, snap((1L, "a", 9.0), (2L, "b", 2.0)), T2, ks, as, root)
@@ -220,7 +220,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("segmented store: a fold that closes every key leaves a readable empty open set") {
-    val root = java.nio.file.Files.createTempDirectory("graft_seg_empty_").toString + "/h"
+    val root = Scratch.dir("graft_seg_empty_") + "/h"
     val ks = Seq("id"); val as = Seq("name", "price")
     Scd2.foldSnapshot(spark, snap((1L, "a", 1.0)), T1, ks, as, root)
     Scd2.foldSnapshot(spark, snap((1L, "a", 1.0)).limit(0), T2, ks, as, root)
@@ -232,7 +232,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("streaming maintainer with in-stream compaction keeps history identical and segments bounded") {
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2_mcomp_").toString
+    val base = Scratch.dir("graft_scd2_mcomp_")
     snap((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).withColumn("as_of", lit(T1))
       .coalesce(1).write.parquet(s"$base/drops/a")
     snap((1L, "a", 9.0), (2L, "b", 2.0)).withColumn("as_of", lit(T2))

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Behavioral tests for the training-data pipeline operators. */
 class LlmOpsSpec extends SparkSpec {
@@ -520,7 +520,7 @@ class LlmOpsSpec extends SparkSpec {
       (11L, txt), // corpus dup
       (12L, "too short"), // cascade reject
       (13L, "the a " + (31 to 60).map(i => s"v$i").mkString(" "))) // clean
-    val base = java.nio.file.Files.createTempDirectory("graft_curation_drops")
+    val base = Scratch.dir("graft_curation_drops")
     newDocs.filter($"doc_id" <= 12).write.parquet(s"$base/drops/a")
     newDocs.filter($"doc_id" > 12).write.parquet(s"$base/drops/b")
 
@@ -548,7 +548,7 @@ class LlmOpsSpec extends SparkSpec {
       (11L, text), // dup of corpus doc 1
       (12L, text + " extended"), // near-dup of 1
       (13L, "nothing in common with anything here at all whatsoever truly")) // clean
-    val base = java.nio.file.Files.createTempDirectory("graft_doc_drops")
+    val base = Scratch.dir("graft_doc_drops")
     val dropDir = s"$base/drops"
     val outPath = s"$base/pairs"
     val Array(dropA, dropB) = Array(newDocs.filter($"doc_id" <= 12), newDocs.filter($"doc_id" > 12))
@@ -938,7 +938,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("persisted ANN index serves identically to the in-memory bucket join, with partition pruning") {
     val e = EmbeddingOps.emb(spark, sfDir)
-    val path = java.nio.file.Files.createTempDirectory("graft_idx_spec_").toString + "/index"
+    val path = Scratch.dir("graft_idx_spec_") + "/index"
     EmbeddingOps.writeAnnIndex(e, path)
     val queries = spark.read.parquet(path).filter(col("vec_id") % 100 === 0)
       .select(col("vec_id"), col("embedding"), col("bucket"))

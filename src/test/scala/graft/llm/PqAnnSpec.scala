@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Determinism, fidelity, and composition of the PQ codec. */
 class PqAnnSpec extends SparkSpec {
@@ -102,8 +102,7 @@ class PqAnnSpec extends SparkSpec {
 
   test("persisted IVF-PQ index serves identically to in-memory IVF-ADC, with partition pruning") {
     val cents = IvfAnn.train(emb)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_")
-      .toString + "/index"
+    val path = Scratch.dir("graft_ivfpq_spec_") + "/index"
     PqAnn.writeIvfPqIndex(emb, cents, books, path)
     // the layout is one directory per IVF list, holding codes (no floats)
     val dirs = new java.io.File(path).listFiles()

@@ -3,7 +3,7 @@ package graft.olap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.olap.IncrementalMv.MeasureSpec
 
 /** Contract tests for CDC-driven summary maintenance: the maintained
@@ -120,7 +120,7 @@ class IncrementalMvSpec extends SparkSpec {
   }
 
   test("maintainFromVersioned: span catch-up, no-op when current, crashed publish rolls forward") {
-    val base = java.nio.file.Files.createTempDirectory("graft_imvm_").toString
+    val base = Scratch.dir("graft_imvm_")
     val root = s"$base/t"
     val t0 = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L), (4L, "b", 7L))
       .toDF("id", "k", "v")
@@ -166,7 +166,7 @@ class IncrementalMvSpec extends SparkSpec {
   }
 
   test("autoServe catches a lagging summary up BEFORE registering it (ADVICE r14)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_imvas_").toString
+    val base = Scratch.dir("graft_imvas_")
     val root = s"$base/t"
     val t0 = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L)).toDF("id", "k", "v")
     graft.sources.VersionedTable.create(spark, root, t0)
@@ -195,7 +195,7 @@ class IncrementalMvSpec extends SparkSpec {
   }
 
   test("concurrent maintainFromVersioned calls serialize per summary path (ADVICE r14)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_imvcc_").toString
+    val base = Scratch.dir("graft_imvcc_")
     val root = s"$base/t"
     val t0 = (1L to 40L).map(i => (i, if (i % 2 == 0) "a" else "b", i * 10L))
       .toDF("id", "k", "v")
@@ -259,7 +259,7 @@ class IncrementalMvSpec extends SparkSpec {
   }
 
   test("refreshPath rolls a crashed publish forward and keeps the watermark (r16)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_imv_rp_").toString
+    val dir = Scratch.dir("graft_imv_rp_")
     val base = Seq(("a", 10L), ("b", 5L)).toDF("k", "v")
     IncrementalMv.initSummaryAt(spark, s"$dir/s", summarize(base), 7)
     // simulate a crash between the publish's delete and rename: only the

@@ -1,13 +1,10 @@
 package graft.plans
 
-import java.io.File
-
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 class InferYearBoundsSpec extends SparkSpec {
 
@@ -36,37 +33,33 @@ class InferYearBoundsSpec extends SparkSpec {
   }
 
   test("date_key range infers year bounds that prune partitions, same result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_yearpart").toString
-    try {
-      writePartitioned(dir)
-      def q() = spark.read.parquet(dir)
-        .filter(col("date_key").between(19960101000000L, 19961231235959L))
-        .agg(sum("amount").as("rev"))
-      val expected = q().head.getDouble(0)
+    val dir = Scratch.dir("graft_yearpart")
+    writePartitioned(dir)
+    def q() = spark.read.parquet(dir)
+      .filter(col("date_key").between(19960101000000L, 19961231235959L))
+      .agg(sum("amount").as("rev"))
+    val expected = q().head.getDouble(0)
 
-      withRule {
-        val pruned = q()
-        assert(pruned.head.getDouble(0) == expected)
-        val scan = fileScan(pruned.queryExecution.executedPlan)
-        assert(scan.metadata("PartitionFilters").contains("year"),
-          scan.metadata("PartitionFilters"))
-        assert(scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
-          .map(_.values.getInt(0)).toSet == Set(1996))
-      }
-    } finally FileUtils.deleteQuietly(new File(dir))
+    withRule {
+      val pruned = q()
+      assert(pruned.head.getDouble(0) == expected)
+      val scan = fileScan(pruned.queryExecution.executedPlan)
+      assert(scan.metadata("PartitionFilters").contains("year"),
+        scan.metadata("PartitionFilters"))
+      assert(scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+        .map(_.values.getInt(0)).toSet == Set(1996))
+    }
   }
 
   test("point lookup on date_key prunes to a single year") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_yearpart2").toString
-    try {
-      writePartitioned(dir)
-      withRule {
-        val pruned = spark.read.parquet(dir).filter(col("date_key") === 19970520140000L)
-        assert(pruned.select("amount").collect().map(_.getDouble(0)).toSeq == Seq(30.0))
-        val scan = fileScan(pruned.queryExecution.executedPlan)
-        assert(scan.metadata("PartitionFilters").contains("year"))
-      }
-    } finally FileUtils.deleteQuietly(new File(dir))
+    val dir = Scratch.dir("graft_yearpart2")
+    writePartitioned(dir)
+    withRule {
+      val pruned = spark.read.parquet(dir).filter(col("date_key") === 19970520140000L)
+      assert(pruned.select("amount").collect().map(_.getDouble(0)).toSeq == Seq(30.0))
+      val scan = fileScan(pruned.queryExecution.executedPlan)
+      assert(scan.metadata("PartitionFilters").contains("year"))
+    }
   }
 
   test("rule is a no-op when year is already constrained or absent") {
@@ -86,22 +79,20 @@ class InferYearBoundsSpec extends SparkSpec {
   }
 
   test("rule is inert when installed but not enabled via the session flag") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_yearpart3").toString
+    val dir = Scratch.dir("graft_yearpart3")
+    writePartitioned(dir)
+    // installed globally (the GraftExtensions scenario) but NOT opted in:
+    // the plan must carry no inferred year partition filter
+    spark.experimental.extraOptimizations = Seq(InferYearBoundsFromDateKey)
     try {
-      writePartitioned(dir)
-      // installed globally (the GraftExtensions scenario) but NOT opted in:
-      // the plan must carry no inferred year partition filter
-      spark.experimental.extraOptimizations = Seq(InferYearBoundsFromDateKey)
-      try {
-        val q = spark.read.parquet(dir)
-          .filter(col("date_key").between(19960101000000L, 19961231235959L))
-          .agg(sum("amount").as("rev"))
-        assert(q.head.getDouble(0) == 45.0)
-        val scan = fileScan(q.queryExecution.executedPlan)
-        assert(!scan.metadata("PartitionFilters").contains("year"),
-          scan.metadata("PartitionFilters"))
-      } finally spark.experimental.extraOptimizations = Nil
-    } finally FileUtils.deleteQuietly(new File(dir))
+      val q = spark.read.parquet(dir)
+        .filter(col("date_key").between(19960101000000L, 19961231235959L))
+        .agg(sum("amount").as("rev"))
+      assert(q.head.getDouble(0) == 45.0)
+      val scan = fileScan(q.queryExecution.executedPlan)
+      assert(!scan.metadata("PartitionFilters").contains("year"),
+        scan.metadata("PartitionFilters"))
+    } finally spark.experimental.extraOptimizations = Nil
   }
 
   test("GraftExtensions registers the rule on a session builder") {

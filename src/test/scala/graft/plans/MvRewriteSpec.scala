@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The MV-rewrite contract: aggregates derivable from the registered
   * summary reroute to it (and only those), results are identical either
@@ -21,7 +21,7 @@ class MvRewriteSpec extends SparkSpec {
     }.flatten
 
   private def withMv[A](f: String => A): A = {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvspec_").toString
+    val base = Scratch.dir("graft_mvspec_")
     // base grain: exact decimal measure + long measure, two keys
     (1L to 100L).map(i => (i % 7, s"c${i % 3}", BigDecimal(i).setScale(2), i * 2))
       .toDF("k", "c", "amount", "qty")
@@ -148,7 +148,7 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("empty base: rewritten global count is 0 (not NULL) and schema stays non-nullable") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvempty_").toString
+    val base = Scratch.dir("graft_mvempty_")
     Seq.empty[(String, Long)].toDF("c", "qty").write.parquet(s"$base/grain")
     spark.read.parquet(s"$base/grain").groupBy("c")
       .agg(sum("qty").as("qty_p"), count(lit(1)).as("n_rows"))
@@ -184,7 +184,7 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("approx distinct: routes onto the sketch only under its own opt-in, exact in sparse regime") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mvhll_").toString
+    val base = Scratch.dir("graft_mvhll_")
     (1L to 100L).map(i => (s"c${i % 3}", i % 40, BigDecimal(i).setScale(2)))
       .toDF("c", "inv", "amount")
       .write.parquet(s"$base/grain")
@@ -406,7 +406,7 @@ class MvRewriteSpec extends SparkSpec {
       assert(scannedPaths(q).forall(_.endsWith("/grain")))
       spark.conf.set(MvRewrite.EnabledKey, "true")
       // a foreign parquet table with matching column names is untouched
-      val other = java.nio.file.Files.createTempDirectory("graft_mvother_").toString + "/t"
+      val other = Scratch.dir("graft_mvother_") + "/t"
       (1L to 10L).map(i => (s"c${i % 2}", i)).toDF("c", "qty").write.parquet(other)
       val fq = spark.read.parquet(other).groupBy("c").agg(sum("qty").as("t"))
       assert(scannedPaths(fq).forall(p => !p.endsWith("/mv")))

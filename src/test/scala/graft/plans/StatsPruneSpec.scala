@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.sources.{VersionedStats, VersionedTable}
 
 /** The automatic data-skipping rule: plan-level file pruning for filtered
@@ -25,7 +25,7 @@ class StatsPruneSpec extends SparkSpec {
   }
 
   private def mkRegistered(prefix: String): String = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    val root = Scratch.dir(prefix) + "/t"
     val df = (1L to 100L).map(i => (i, s"p_$i", (i * 37) % 97)).toDF("id", "payload", "w")
       .repartitionByRange(4, col("id"))
     VersionedTable.create(spark, root, df)
@@ -75,7 +75,7 @@ class StatsPruneSpec extends SparkSpec {
   }
 
   test("a LIKE-prefix filter prunes via its [prefix, prefix+1) box") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sp_like_").toString + "/t"
+    val root = Scratch.dir("graft_sp_like_") + "/t"
     // zero-padded names range-tile across 4 files — no '_' in the data:
     // underscore is itself a LIKE wildcard, and only wildcard-free-prefix
     // patterns simplify to the StartsWith the box extraction reads
@@ -121,7 +121,7 @@ class StatsPruneSpec extends SparkSpec {
   }
 
   test("an IN-list on a bloom-indexed column admits a file only when SOME value might be present") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sp_inbloom_").toString + "/t"
+    val root = Scratch.dir("graft_sp_inbloom_") + "/t"
     val df = (1L to 4000L).map(i => (i, s"p_$i")).toDF("id", "payload").repartition(8)
     VersionedTable.create(spark, root, df)
     VersionedStats.enable(spark, root, Seq("id"))
@@ -143,7 +143,7 @@ class StatsPruneSpec extends SparkSpec {
   }
 
   test("a point filter on a bloom-indexed column prunes files min/max cannot") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sp_bloom_").toString + "/t"
+    val root = Scratch.dir("graft_sp_bloom_") + "/t"
     // hash-shuffled: every file's id range spans the domain — min/max alone
     // admits all 8 files for any point; the per-file bloom is what prunes
     val df = (1L to 4000L).map(i => (i, s"p_$i")).toDF("id", "payload").repartition(8)
@@ -237,7 +237,7 @@ class StatsPruneSpec extends SparkSpec {
   }
 
   test("the rule prunes a partitioned table's scan and rebuilds partition values via basePath") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sp_part_").toString + "/t"
+    val root = Scratch.dir("graft_sp_part_") + "/t"
     val df = (1L to 120L).map(i => (i, i % 3)).toDF("id", "bucket")
     VersionedTable.create(spark, root, df, Seq("bucket"))
     VersionedStats.enable(spark, root, Seq("bucket", "id"))
@@ -271,7 +271,7 @@ class StatsPruneSpec extends SparkSpec {
       val q3 = VersionedTable.read(spark, root).filter(col("id") >= 26L && col("id") <= 50L)
       assert(scanFiles(q3) === Some(4))
       // a different, unregistered table is never touched
-      val other = java.nio.file.Files.createTempDirectory("graft_sp_o_").toString + "/t"
+      val other = Scratch.dir("graft_sp_o_") + "/t"
       VersionedTable.create(spark, other, (1L to 10L).map(i => (i, i)).toDF("id", "w"))
       StatsPrune.servingScoped(spark) {
         val q = VersionedTable.read(spark, other).filter(col("id") <= 3L)
@@ -287,7 +287,7 @@ class StatsPruneSpec extends SparkSpec {
     // the new head's file set is a strict subset of the pinned older
     // version's — the case a subset-means-pruned-output gate would skip
     // forever, leaving every filtered head read a full scan.
-    val root = java.nio.file.Files.createTempDirectory("graft_sp_shrink_").toString + "/t"
+    val root = Scratch.dir("graft_sp_shrink_") + "/t"
     // contiguous id ranges per bucket: each partition file gets a disjoint
     // [min,max] box, so an id filter can prove pruning after the heal
     val df = (1L to 100L).map(i => (i, s"p_$i", (i - 1) / 25))

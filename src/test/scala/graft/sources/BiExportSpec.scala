@@ -1,12 +1,12 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** BI export writes every semantic-model table and the facts prune by year. */
 class BiExportSpec extends SparkSpec {
 
   test("exports all 9 model tables; year-partitioned facts read back whole") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bi").toString
+    val out = Scratch.dir("graft_bi")
     BiExport.export(spark, sfDir, out)
     val tables = Seq("customers_etl", "customers_elt", "products", "dates",
       "fact_sales_etl", "fact_sales_elt", "molap_month_country",
@@ -31,42 +31,39 @@ class BiExportSpec extends SparkSpec {
         .select("date_key").collect().map(_.getLong(0))
       assert(keys.sameElements(keys.sorted), f.getName)
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("sliced export: year-sliced read lists only matching partitions; refresh rewrites only its slice") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bi_slice").toString
-    try {
-      BiExport.export(spark, sfDir, out)
-      val table = "fact_sales_elt"
-      val full = spark.read.parquet(s"$out/$table")
-      val totalBefore = full.count()
-      val years = full.select("year").distinct().collect().map(_.getInt(0)).sorted
-      assert(years.length >= 2, s"need >=2 year partitions, got ${years.toSeq}")
-      val (target, untouched) = (years.last, years.head)
+    val out = Scratch.dir("graft_bi_slice")
+    BiExport.export(spark, sfDir, out)
+    val table = "fact_sales_elt"
+    val full = spark.read.parquet(s"$out/$table")
+    val totalBefore = full.count()
+    val years = full.select("year").distinct().collect().map(_.getInt(0)).sorted
+    assert(years.length >= 2, s"need >=2 year partitions, got ${years.toSeq}")
+    val (target, untouched) = (years.last, years.head)
 
-      // import side: the files the pruned read ACTUALLY scans (inputFiles is
-      // the pre-pruning index) are only year=<target>'s
-      val sliced = BiExport.readFactYears(spark, out, table, Seq(target))
-      val readFiles = sliced
-        .select(org.apache.spark.sql.functions.input_file_name().as("f"))
-        .distinct().collect().map(_.getString(0))
-      assert(readFiles.nonEmpty)
-      assert(readFiles.forall(_.contains(s"year=$target")),
-        s"unpruned files: ${readFiles.filterNot(_.contains(s"year=$target")).take(3).toSeq}")
-      val slicedCount = sliced.count()
+    // import side: the files the pruned read ACTUALLY scans (inputFiles is
+    // the pre-pruning index) are only year=<target>'s
+    val sliced = BiExport.readFactYears(spark, out, table, Seq(target))
+    val readFiles = sliced
+      .select(org.apache.spark.sql.functions.input_file_name().as("f"))
+      .distinct().collect().map(_.getString(0))
+    assert(readFiles.nonEmpty)
+    assert(readFiles.forall(_.contains(s"year=$target")),
+      s"unpruned files: ${readFiles.filterNot(_.contains(s"year=$target")).take(3).toSeq}")
+    val slicedCount = sliced.count()
 
-      // export side: dynamic-partition refresh replaces ONLY the target year
-      def fileSet(y: Int) = Option(new java.io.File(s"$out/$table/year=$y").listFiles())
-        .fold(Set.empty[String])(_.map(f => f.getName -> f.lastModified).toSet.map((p: (String, Long)) => s"${p._1}@${p._2}"))
-      val untouchedBefore = fileSet(untouched)
-      val targetBefore = fileSet(target)
-      BiExport.refreshFactYears(spark, sfDir, out, table, Seq(target))
-      assert(fileSet(untouched) === untouchedBefore, "untouched year was rewritten")
-      assert(fileSet(target) !== targetBefore, "target year was not rewritten")
-      // table integrity: row counts preserved overall and per slice
-      assert(spark.read.parquet(s"$out/$table").count() === totalBefore)
-      assert(BiExport.readFactYears(spark, out, table, Seq(target)).count() === slicedCount)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    // export side: dynamic-partition refresh replaces ONLY the target year
+    def fileSet(y: Int) = Option(new java.io.File(s"$out/$table/year=$y").listFiles())
+      .fold(Set.empty[String])(_.map(f => f.getName -> f.lastModified).toSet.map((p: (String, Long)) => s"${p._1}@${p._2}"))
+    val untouchedBefore = fileSet(untouched)
+    val targetBefore = fileSet(target)
+    BiExport.refreshFactYears(spark, sfDir, out, table, Seq(target))
+    assert(fileSet(untouched) === untouchedBefore, "untouched year was rewritten")
+    assert(fileSet(target) !== targetBefore, "target year was not rewritten")
+    // table integrity: row counts preserved overall and per slice
+    assert(spark.read.parquet(s"$out/$table").count() === totalBefore)
+    assert(BiExport.readFactYears(spark, out, table, Seq(target)).count() === slicedCount)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.etl.Warehouse
 
 /** Co-located joins over bucketed layouts must plan without a shuffle. */
@@ -77,7 +77,7 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed write keeps session-width parallelism when buckets < width, without fragmenting buckets (ADVICE r18)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt_width_").toString
+    val dir = Scratch.dir("graft_bkt_width_")
     // 4 arbitrary input partitions, 2 buckets: a naive bucketed write emits
     // a file per (partition × bucket) = up to 8; collapsing to exactly 2
     // partitions serializes the write. Key-aligned k·buckets partitioning
@@ -94,9 +94,6 @@ class BucketedJoinSpec extends SparkSpec {
       val perBucket = files.groupBy(_.getName.split("_")(1).take(5))
       assert(perBucket.values.forall(_.size <= 2), s"got ${files.map(_.getName)}")
       assert(spark.table("bkt_width_t").count() === 1000L)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_width_t")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS bkt_width_t")
   }
 }

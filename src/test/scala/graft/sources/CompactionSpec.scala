@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Compaction: plan invariants on a synthetic catalog, then a real
   * end-to-end rewrite of an intentionally-fragmented parquet table. */
@@ -36,8 +36,8 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compactDir: fragmented table → fewer files, identical rows, big files untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_frag").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = Scratch.dir("graft_frag")
+    val out = Scratch.dir("graft_compact")
     // 40-way fragmented small table: every file is tiny relative to target
     val df = spark.range(0, 4000)
       .select(col("id"), (col("id") % 97).as("k"), md5(col("id").cast("string")).as("payload"))
@@ -61,8 +61,8 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compactDir: keep-as-is files are byte-copied, not rewritten") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mix").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_mix_out").toString
+    val dir = Scratch.dir("graft_mix")
+    val out = Scratch.dir("graft_mix_out")
     // one big file + several small ones
     spark.range(0, 20000).select(col("id"), md5(col("id").cast("string")).as("p"))
       .coalesce(1).write.mode("overwrite").parquet(dir)

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** File-selective DELETE WHERE: victims disappear, survivors are intact,
   * and files with no matching rows are byte-copied, never re-encoded. */
@@ -20,7 +20,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("deleteWhere removes exactly the matching rows and byte-copies clean files") {
-    val base = java.nio.file.Files.createTempDirectory("graft_del_").toString
+    val base = Scratch.dir("graft_del_")
     // three partition dirs (ids 1-19 → bucket 0, 20-39 → 1, 40 → 2);
     // victims (id 10..19) live only in bucket 0
     (1L to 40L).map(i => (i, s"row_$i", i / 20))
@@ -49,7 +49,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("updateWhere rewrites victims in place, byte-copies clean files, sees OLD values") {
-    val base = java.nio.file.Files.createTempDirectory("graft_upd_").toString
+    val base = Scratch.dir("graft_upd_")
     // victims (id 10..19) live only in bucket 0; a NULL-pred row (id 40
     // with NULL flag) must survive untouched
     (1L to 40L).map(i => (i, i * 10L, i * 100L,
@@ -87,7 +87,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("updateMove relocates movers partition-routed; survivors and clean files intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_umv_").toString
+    val base = Scratch.dir("graft_umv_")
     // buckets 0/1/2; one NULL-bucket row (id 41) and one NULL-pred row (id 40)
     ((1L to 40L).map(i => (i, s"row_$i",
       if (i == 40L) null.asInstanceOf[java.lang.Long] else java.lang.Long.valueOf(i),
@@ -140,7 +140,7 @@ class DmlSpec extends SparkSpec {
       Dml.updateMove(spark, s"$base/v1", s"$base/vx",
         col("id") === 1L, Map("payload" -> lit("p")))
     }
-    val flat = java.nio.file.Files.createTempDirectory("graft_umvflat_").toString
+    val flat = Scratch.dir("graft_umvflat_")
     (1L to 5L).map(i => (i, i)).toDF("id", "v").write.parquet(s"$flat/v1")
     intercept[IllegalArgumentException] {
       Dml.updateMove(spark, s"$flat/v1", s"$flat/v2",
@@ -149,7 +149,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("mergeInto replaces matched rows, inserts new keys, and moves rows across partitions") {
-    val base = java.nio.file.Files.createTempDirectory("graft_merge_").toString
+    val base = Scratch.dir("graft_merge_")
     (1L to 40L).map(i => (i, s"old_$i", i / 20))
       .toDF("id", "payload", "bucket")
       .repartition(2, col("bucket"))
@@ -174,7 +174,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("deleteKeys purges exactly the tombstoned keys, byte-copies clean files, keeps NULL-key rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_delkeys_").toString
+    val base = Scratch.dir("graft_delkeys_")
     // victims (ids 10..19) live only in bucket 0; a NULL-key row rides in
     // bucket 2 and must survive (join equality never matches NULL)
     ((1L to 40L).map(i => (Some(i), s"row_$i", i / 20)) :+
@@ -204,7 +204,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("mergeClauses: ordered matched clauses (first wins), src() references, conditional insert, untouched non-matches") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mc_").toString
+    val base = Scratch.dir("graft_mc_")
     // target: (id, qty, price); files split so ids 1-10 / 11-20 separate
     (1L to 20L).map(i => (i, i * 10L, i.toDouble)).toDF("id", "qty", "price")
       .repartitionByRange(2, col("id")).write.parquet(s"$base/v1")
@@ -241,7 +241,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("mergeClauses: clause order decides when both conditions hold; clean files byte-copy") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mc2_").toString
+    val base = Scratch.dir("graft_mc2_")
     (1L to 20L).map(i => (i, i * 10L)).toDF("id", "qty")
       .repartitionByRange(2, col("id")).write.parquet(s"$base/v1")
     val before = fileBytes(s"$base/v1")
@@ -259,7 +259,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("mergeClauses: NULL-key source rows are legitimate inserts, not cardinality violations") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mcnull_").toString
+    val base = Scratch.dir("graft_mcnull_")
     (1L to 5L).map(i => (i, i * 10L)).toDF("id", "qty")
       .coalesce(1).write.parquet(s"$base/v1")
     // two NULL-key rows: under SQL MERGE semantics NULL keys never match a
@@ -285,7 +285,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("mergeClauses: a source column named _matched reaches clause conditions intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mcm_").toString
+    val base = Scratch.dir("graft_mcm_")
     (1L to 4L).map(i => (i, i * 10L)).toDF("id", "qty")
       .coalesce(1).write.parquet(s"$base/v1")
     // the rename maps _matched → __src__matched, which the OLD marker name
@@ -304,7 +304,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("SQL DELETE semantics: NULL predicate rows are kept") {
-    val base = java.nio.file.Files.createTempDirectory("graft_delnull_").toString
+    val base = Scratch.dir("graft_delnull_")
     Seq((1L, Some(5.0)), (2L, None), (3L, Some(50.0)))
       .toDF("id", "score")
       .coalesce(1).write.parquet(s"$base/v1")
@@ -314,7 +314,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("mergeInto aligns update rows to the table schema; partial rows are loud (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_mal_").toString + "/t"
+    val root = Scratch.dir("graft_mal_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 5L).map(i => (i, i * 100L, s"p_$i")).toDF("id", "v", "payload"))
     // updates carrying `v` as INT (a literal-built frame) must be cast to
@@ -339,7 +339,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("insert-only mergeClauses rewrites NOTHING; reserved names are loud (r16)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mio_").toString
+    val base = Scratch.dir("graft_mio_")
     (1L to 20L).map(i => (i, s"p_$i")).toDF("id", "payload")
       .coalesce(2).write.parquet(s"$base/v1")
     val before = fileBytes(s"$base/v1")
@@ -368,7 +368,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("a data column named _probe_file cannot skew the affected-file probe (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_pfp_").toString + "/t"
+    val root = Scratch.dir("graft_pfp_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, s"f_$i")).toDF("id", "_probe_file"))
     assert(VersionedTable.mergeInto(spark, root,

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.etl.Warehouse
 
 /** The reference's LIST/HASH partitioning demo (reference
@@ -22,7 +22,7 @@ class ListPartitionSpec extends SparkSpec {
 
   test("LIST layout: country-partitioned write prunes to one directory on equality") {
     val w = Warehouse(spark, sfDir)
-    val out = java.nio.file.Files.createTempDirectory("graft_list_part").toString
+    val out = Scratch.dir("graft_list_part")
     val withCountry = w.factSalesElt
       .join(w.dimCustomerElt.select("customer_key", "country"), Seq("customer_key"), "left")
       .withColumn("country", coalesce(col("country"), lit("UNKNOWN")))
@@ -48,6 +48,5 @@ class ListPartitionSpec extends SparkSpec {
     // and the pruned read agrees with the unpartitioned filter
     val expected = withCountry.filter(col("country") === target).count()
     assert(pruned.count() === expected)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 }

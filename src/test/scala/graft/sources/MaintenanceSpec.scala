@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The maintenance policy loop's trigger logic. The full standing-pipeline
   * composition (fragment → cluster → prune) is the `sink_maintain_policy`
@@ -14,7 +12,7 @@ class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val root = Files.createTempDirectory("graft_maintspec_").toString + "/t"
+    val root = Scratch.dir("graft_maintspec_") + "/t"
     val df = (0L until 2000L).map(i => (i, i % 7, s"p$i")).toDF("k", "grp", "payload")
     VersionedTable.create(spark, root, df.repartition(1))
     root

@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The prepared-statement surface: one planning, many serves, and the
   * versioned-table head check that forbids serving a stale snapshot. */
@@ -29,7 +29,7 @@ class PreparedSqlSpec extends SparkSpec {
   }
 
   test("a handle over a versioned table rebuilds when the head moves, never serves stale") {
-    val root = java.nio.file.Files.createTempDirectory("graft_prep_").toString + "/t"
+    val root = Scratch.dir("graft_prep_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 50L).map(i => (i, i * 10L)).toDF("id", "qty"))
     val h = PreparedSql.prepare(spark,

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.sources.SkippingIndex.Box
 
 /** The manifest layer: soundness (never lose a row), effectiveness (skip
@@ -16,7 +14,7 @@ class SkippingIndexSpec extends SparkSpec {
     val rnd = new scala.util.Random(31)
     val df = (1 to 40000).map(_ => (rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
       .toDF("x", "y")
-    val out = Files.createTempDirectory("graft_skip_").toString
+    val out = Scratch.dir("graft_skip_")
     ZOrder.materializeZordered(df, out, Seq("x", "y"), bits = 6, numFiles = 16)
     val idx = SkippingIndex.build(spark, out, Seq("x", "y")).cache()
 
@@ -33,7 +31,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("a file whose indexed column is all null is kept, not skipped") {
-    val out = Files.createTempDirectory("graft_skip_null_").toString
+    val out = Scratch.dir("graft_skip_null_")
     Seq((1L, Some(5L)), (2L, Some(6L))).toDF("id", "v").coalesce(1).write.parquet(s"$out/d")
     Seq((3L, None: Option[Long]), (4L, None)).toDF("id", "v")
       .coalesce(1).write.mode("append").parquet(s"$out/d")
@@ -45,7 +43,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("no surviving files yields an empty frame with the layout's schema") {
-    val out = Files.createTempDirectory("graft_skip_empty_").toString
+    val out = Scratch.dir("graft_skip_empty_")
     Seq((1L, 5L), (2L, 6L)).toDF("id", "v").write.parquet(s"$out/d")
     val idx = SkippingIndex.build(spark, s"$out/d", Seq("v"))
     val pruned = SkippingIndex.prunedRead(spark, s"$out/d", idx, Seq(Box("v", 100L, 200L)))
@@ -54,7 +52,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("refresh restats only new files and drops vanished ones — equal to a full rebuild") {
-    val out = Files.createTempDirectory("graft_skip_refresh_").toString
+    val out = Scratch.dir("graft_skip_refresh_")
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1).write.parquet(s"$out/d")
     Seq((3L, 30L), (4L, 40L)).toDF("id", "v").coalesce(1).write.mode("append").parquet(s"$out/d")
     val idx0 = SkippingIndex.build(spark, s"$out/d", Seq("v")).cache()

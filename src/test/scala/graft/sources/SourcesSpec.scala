@@ -1,13 +1,13 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** S1: the CSV staging reader must land every column as a nullable string,
   * preserving dirty values verbatim for the cleaning layer. */
 class SourcesSpec extends SparkSpec {
 
   test("csvStaging reads headers, keeps all columns string, preserves dirty values") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
+    val dir = java.nio.file.Paths.get(Scratch.dir("graft_csv"))
     val csv = dir.resolve("stg_customers.csv")
     java.nio.file.Files.writeString(csv,
       """customerid,customername,country,signupdate
@@ -28,12 +28,11 @@ class SourcesSpec extends SparkSpec {
     // and the cleaning layer consumes it directly
     val cleaned = graft.etl.Transforms.customersBase(df)
     assert(cleaned.count() === 2) // blank-id row dropped
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("readEvolved merges schema versions; readAs null-fills identically with no footer scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = Scratch.dir("graft_evo")
     Seq((1L, "x")).toDF("id", "a").write.parquet(s"$dir/drops/v1")
     Seq((2L, "y", 9.0)).toDF("id", "a", "b").write.parquet(s"$dir/drops/v2")
     val merged = Sources.readEvolved(spark, s"$dir/drops/*")
@@ -48,6 +47,5 @@ class SourcesSpec extends SparkSpec {
     assert(explicit.collect().map(_.toString).sorted ===
       merged.select(merged.columns.map(org.apache.spark.sql.functions.col): _*)
         .collect().map(_.toString).sorted)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

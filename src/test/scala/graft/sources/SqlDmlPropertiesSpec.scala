@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
@@ -60,7 +58,7 @@ object SqlDmlPropertiesSpec extends Properties("sqlDml") {
     Assign("id", "id + 1000", col("id") + 1000)).map(_.toSeq)
 
   private def fresh(prefix: String): String = {
-    val root = Files.createTempDirectory(prefix).toString + "/t"
+    val root = graft.Scratch.dir(prefix) + "/t"
     VersionedTable.create(spark, root, base.repartition(3))
     root
   }

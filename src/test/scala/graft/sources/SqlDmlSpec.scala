@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The SQL DML router — statement shapes, alias rewriting, clause
   * ordering, and the loud rejections at the surface's deliberate bounds.
@@ -15,7 +13,7 @@ import graft.SparkSpec
 class SqlDmlSpec extends SparkSpec {
 
   private def freshProducts(): (String, DataFrame) = {
-    val root = Files.createTempDirectory("graft_sqldml_").toString + "/t"
+    val root = Scratch.dir("graft_sqldml_") + "/t"
     val p = graft.etl.Warehouse(spark, sfDir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(spark, root, p)
@@ -66,7 +64,7 @@ class SqlDmlSpec extends SparkSpec {
   }
 
   test("UPDATE assigning a partition column routes to the row-move verb") {
-    val root = Files.createTempDirectory("graft_sqlmove_").toString + "/t"
+    val root = Scratch.dir("graft_sqlmove_") + "/t"
     val events = graft.streaming.EventOps.events(spark, sfDir)
       .withColumn("ubucket", expr("user_id div 50"))
     VersionedTable.create(spark, root,
@@ -181,7 +179,7 @@ class SqlDmlSpec extends SparkSpec {
 
   test("DDL: CTAS, TRUNCATE, ADD/DROP COLUMNS and constraint statements route to the lifecycle verbs") {
     val (root, p) = freshProducts()
-    val root2 = Files.createTempDirectory("graft_sqlctas_").toString + "/t"
+    val root2 = Scratch.dir("graft_sqlctas_") + "/t"
     val t = Map("p" -> root, "c" -> root2)
     assert(SqlDml.execute(spark,
       "CREATE TABLE c AS SELECT stockcode, unitprice FROM p WHERE unitprice >= 5", t) == 1)
@@ -244,7 +242,7 @@ class SqlDmlSpec extends SparkSpec {
 
   test("INSERT INTO … SELECT FROM table_changes applies a CDC span downstream") {
     val (root, p) = freshProducts()
-    val auditRoot = Files.createTempDirectory("graft_sqlaud_").toString + "/t"
+    val auditRoot = Scratch.dir("graft_sqlaud_") + "/t"
     val empty = p.select(col("stockcode"), lit("").as("change_type")).limit(0)
     VersionedTable.create(spark, auditRoot, empty)
     val t = Map("p" -> root, "audit" -> auditRoot)
@@ -273,7 +271,7 @@ class SqlDmlSpec extends SparkSpec {
 
   test("DDL rejections: non-identity partitioning, column positions, unknown constraint") {
     val (root, p) = freshProducts()
-    val root2 = Files.createTempDirectory("graft_sqlctasrej_").toString + "/t"
+    val root2 = Scratch.dir("graft_sqlctasrej_") + "/t"
     val t = Map("p" -> root, "c" -> root2)
     assert(intercept[IllegalArgumentException] {
       SqlDml.execute(spark,

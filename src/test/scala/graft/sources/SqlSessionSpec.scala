@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The `spark.sql` statement integration: with `GraftExtensions` on the
   * session, registered versioned tables are first-class in plain SQL —
@@ -15,7 +13,7 @@ class SqlSessionSpec extends SparkSpec {
   private lazy val s2 = GraftSqlSession.forBase(spark)
 
   private def freshProducts(name: String): String = {
-    val root = Files.createTempDirectory(s"graft_sqlsess_").toString + "/t"
+    val root = Scratch.dir(s"graft_sqlsess_") + "/t"
     val p = graft.etl.Warehouse(spark, sfDir).dimProduct
       .select(col("stockcode"), col("unitprice"), col("category"))
     VersionedTable.create(spark, root, p.repartition(4))
@@ -71,7 +69,7 @@ class SqlSessionSpec extends SparkSpec {
 
   test("spark.sql reads through the extension session compose with StatsPrune data skipping") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_sqlsess_pr_").toString + "/t"
+    val root = Scratch.dir("graft_sqlsess_pr_") + "/t"
     val df = (1L to 100L).map(i => (i, s"p_$i")).toDF("id", "payload")
       .repartitionByRange(4, col("id"))
     VersionedTable.create(spark, root, df)
@@ -103,7 +101,7 @@ class SqlSessionSpec extends SparkSpec {
 
   test("spark.sql aggregates through the extension session reroute to a registered MV") {
     import spark.implicits._
-    val dirBase = Files.createTempDirectory("graft_sqlsess_mv_").toString
+    val dirBase = Scratch.dir("graft_sqlsess_mv_")
     val root = dirBase + "/t"
     val grain = (1L to 100L)
       .map(i => (i % 7, s"c${i % 3}", BigDecimal(i).setScale(2)))
@@ -160,7 +158,7 @@ class SqlSessionSpec extends SparkSpec {
 
   test("persistent catalog: registrations survive a fresh process; a direct file write resolves (r16)") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_sqlsess_cat_").toString
+    val base = Scratch.dir("graft_sqlsess_cat_")
     val catalog = s"$base/_catalog.tsv"
     val rootA = s"$base/ta"
     val rootB = s"$base/tb"
@@ -202,7 +200,7 @@ class SqlSessionSpec extends SparkSpec {
   }
 
   test("persistent catalog replace is atomic and merge-safe: no missing-file window, no lost update (r16)") {
-    val base = Files.createTempDirectory("graft_sqlsess_atom_").toString
+    val base = Scratch.dir("graft_sqlsess_atom_")
     val catalog = s"$base/_catalog.tsv"
     try {
       // seed one entry that lives ONLY in the file (not this JVM's map),

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The cross-process story of the persistent catalog, proven across a
   * REAL process boundary (r17, VERDICT r16 #5): `SqlSession.persistTo`
@@ -17,7 +15,8 @@ import graft.SparkSpec
 class TwoProcessCatalogSpec extends SparkSpec {
   import spark.implicits._
 
-  private def spawnChild(catalogPath: String, table: String): (Int, String) = {
+  private def spawnChild(catalogPath: String, table: String,
+      childRoot: String): (Int, String) = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     // the forked test JVM's own module opens are exactly what a Spark
     // child needs; classpath likewise
@@ -27,7 +26,7 @@ class TwoProcessCatalogSpec extends SparkSpec {
         Seq("--add-opens", v) }.toSeq.flatten
     val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g",
       "-cp", System.getProperty("java.class.path"),
-      "graft.tools.CatalogChild", catalogPath, table)
+      "graft.tools.CatalogChild", catalogPath, table, childRoot)
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     val p = pb.start()
@@ -37,7 +36,7 @@ class TwoProcessCatalogSpec extends SparkSpec {
   }
 
   test("a second JVM resolves, mutates, and extends the persisted catalog; this one observes it all") {
-    val base = Files.createTempDirectory("graft_2proc_").toString
+    val base = Scratch.dir("graft_2proc_")
     val root = s"$base/t"
     val catalog = s"$base/_catalog.tsv"
     VersionedTable.create(spark, root,
@@ -50,7 +49,7 @@ class TwoProcessCatalogSpec extends SparkSpec {
     GraftCatalog.persistTo(spark, catalog)
     GraftCatalog.register("twoproc_t", root)
     try {
-      val (rc, out) = spawnChild(catalog, "twoproc_t")
+      val (rc, out) = spawnChild(catalog, "twoproc_t", s"$base/child_t")
       assert(rc == 0, s"child JVM failed (rc=$rc):\n${out.takeRight(4000)}")
       assert(out.contains("CHILD_OK rows=100 version=2"), out.takeRight(1000))
 

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** The versioned-table protocol proven across a REAL process boundary
   * (r18, VERDICT r17 #6 — the TwoProcessCatalogSpec treatment for
@@ -50,7 +48,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
       childCmd("graft.tools.VersionedCrashChild", root, mode): _*)
     pb.environment().put("GRAFT_VT_PAUSE", phase)
     pb.redirectErrorStream(true)
-    pb.redirectOutput(java.io.File.createTempFile("graft_crash_child_", ".log"))
+    pb.redirectOutput(new java.io.File(Scratch.dir("graft_crash_child_"), "child.log"))
     (pb.start(), new java.io.File(root, s"_paused_$phase"))
   }
 
@@ -67,7 +65,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
   }
 
   test("SIGKILL between staging write and the commit rename: no torn state, next writer recovers, aged carcass reclaimed (r19)") {
-    val root = Files.createTempDirectory("graft_2proc_crash1_").toString + "/t"
+    val root = Scratch.dir("graft_2proc_crash1_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 100L).map(i => (i, s"p_$i")).toDF("id", "payload")
         .repartitionByRange(4, col("id")))
@@ -116,7 +114,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
   }
 
   test("SIGKILL mid-vacuum: retained versions stay readable and the next vacuum completes the reclaim (r19)") {
-    val root = Files.createTempDirectory("graft_2proc_crash2_").toString + "/t"
+    val root = Scratch.dir("graft_2proc_crash2_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 100L).map(i => (i, s"p_$i")).toDF("id", "payload")
         .repartitionByRange(4, col("id")))
@@ -149,7 +147,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
   }
 
   test("a parent-pinned reader survives a second JVM's commits and vacuum; the vacuumed version dies loudly") {
-    val root = Files.createTempDirectory("graft_2proc_vt_").toString + "/t"
+    val root = Scratch.dir("graft_2proc_vt_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 100L).map(i => (i, s"p_$i")).toDF("id", "payload")
         .repartitionByRange(4, col("id")))

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, ConcurrentLinkedQueue}
 
 import org.apache.spark.sql.functions._
@@ -43,7 +42,7 @@ object VersionedStatsConcurrencySpec extends Properties("versionedStatsConcurren
   property("publish/refresh/heal storm keeps per-version stats exact") =
     Prop.forAll(planGen) { plan =>
       import spark.implicits._
-      val root = Files.createTempDirectory("graft_vsc_").toString + "/t"
+      val root = graft.Scratch.dir("graft_vsc_") + "/t"
       val rnd = new scala.util.Random(plan.seed)
       VersionedTable.create(spark, root,
         (1L to 200L).map(i => (i, i * 3)).toDF("id", "payload")

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StructField, StringType}
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.sources.SkippingIndex.Box
 
 /** Versioned data-skipping stats: per-version stats tables maintained
@@ -14,7 +14,7 @@ class VersionedStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkTable(prefix: String): String = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    val root = Scratch.dir(prefix) + "/t"
     // 4 range-tight files on id: [1..25] [26..50] [51..75] [76..100]
     val df = (1L to 100L).map(i => (i, s"p_$i", i % 7)).toDF("id", "payload", "grp")
       .repartitionByRange(4, col("id"))
@@ -87,7 +87,7 @@ class VersionedStatsSpec extends SparkSpec {
   }
 
   test("null stats keep the file; multi-box conjunction prunes on every box") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vs_null_").toString + "/t"
+    val root = Scratch.dir("graft_vs_null_") + "/t"
     val withVal = (1L to 20L).map(i => (i, Some(i * 10L))).toDF("id", "v")
       .repartitionByRange(2, col("id"))
     val allNull = Seq((100L, None: Option[Long]), (101L, None)).toDF("id", "v")
@@ -111,7 +111,7 @@ class VersionedStatsSpec extends SparkSpec {
   }
 
   test("partition-column stats subsume partition pruning") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vs_part_").toString + "/t"
+    val root = Scratch.dir("graft_vs_part_") + "/t"
     val df = (1L to 60L).map(i => (i, i % 3)).toDF("id", "bucket")
     VersionedTable.create(spark, root, df, Seq("bucket"))
     VersionedStats.enable(spark, root, Seq("bucket", "id"))
@@ -123,7 +123,7 @@ class VersionedStatsSpec extends SparkSpec {
   }
 
   test("cluster (OPTIMIZE ZORDER) commits a row-identical snapshot whose 2-D pruning strictly improves") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vs_zo_").toString + "/t"
+    val root = Scratch.dir("graft_vs_zo_") + "/t"
     // v1 sorted on a ONLY: a narrow b box can't prune an a-ranged layout
     // beyond what the (wide) a box already does
     val df = (0L until 1024L).map(i => (i, (i * 37) % 97)).toDF("a", "b")
@@ -145,7 +145,7 @@ class VersionedStatsSpec extends SparkSpec {
     assert(got === (0L until 1024L).filter(i => { val b = (i * 37) % 97; b >= 10 && b <= 30 }).toSet)
     // a partitioned table clusters WITHIN each partition; clustering on a
     // partition column is rejected (constant within its directory)
-    val root2 = java.nio.file.Files.createTempDirectory("graft_vs_zo2_").toString + "/t"
+    val root2 = Scratch.dir("graft_vs_zo2_") + "/t"
     VersionedTable.create(spark, root2,
       (1L to 200L).map(i => (i, (i * 37) % 97, i % 2)).toDF("id", "w", "p"),
       Seq("p"))
@@ -165,7 +165,7 @@ class VersionedStatsSpec extends SparkSpec {
   }
 
   test("bloom point skipping: unsorted point lookups open only bloom-admitted files; refresh maintains blooms") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vs_bloom_").toString + "/t"
+    val root = Scratch.dir("graft_vs_bloom_") + "/t"
     // hash-shuffled layout: every file's [min,max] spans ~the whole id
     // domain, so a point lookup is exactly the case min/max can't prune
     val df = (1L to 4000L).map(i => (i, s"p_$i")).toDF("id", "payload").repartition(8)
@@ -243,8 +243,7 @@ class VersionedStatsSpec extends SparkSpec {
       VersionedStats.prunedRead(spark, root, Seq(Box("payload", "a", "b")))
     }
     intercept[IllegalStateException] {
-      VersionedStats.refresh(spark, java.nio.file.Files
-        .createTempDirectory("graft_vs_none_").toString)
+      VersionedStats.refresh(spark, Scratch.dir("graft_vs_none_"))
     }
     // dropping an INDEXED column invalidates the index with the remedy
     VersionedTable.dropColumns(spark, root, Seq("id"))

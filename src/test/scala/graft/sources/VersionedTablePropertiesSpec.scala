@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -105,7 +103,7 @@ object VersionedTablePropertiesSpec extends Properties("versionedTable") {
   property("every retained version reads as its model; CDC equals the model diff") =
     Prop.forAll(Gen.listOfN(6, opGen)) { ops =>
       import spark.implicits._
-      val root = Files.createTempDirectory("graft_vt_prop_").toString + "/t"
+      val root = graft.Scratch.dir("graft_vt_prop_") + "/t"
       val init: Model = (1L to 60L).map(i => i -> i * 10L).toMap
       VersionedTable.create(spark, root,
         init.toSeq.toDF("id", "payload").repartition(4))

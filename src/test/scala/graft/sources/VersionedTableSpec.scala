@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Snapshot semantics of the versioned table: mutations commit new
   * versions, time travel pins old ones, orphans of crashed commits are
@@ -11,7 +11,7 @@ class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
   test("create → delete → merge → time travel across three versions") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_").toString + "/t"
+    val root = Scratch.dir("graft_vt_") + "/t"
     val v1 = (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload")
     assert(VersionedTable.create(spark, root, v1) === 1)
     assert(VersionedTable.deleteWhere(spark, root, col("id") > 8L) === 2)
@@ -28,7 +28,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("deleteKeys commits a purge snapshot whose CDC feed carries exactly the deletes") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_dk_").toString + "/t"
+    val root = Scratch.dir("graft_vt_dk_") + "/t"
     val v1 = (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload")
       .union(Seq((null.asInstanceOf[java.lang.Long], "nullkey"))
         .toDF("id", "payload").select(col("id").cast("long"), col("payload")))
@@ -47,7 +47,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("updateMove commits a move snapshot; CDC pairs pre/post images per moved key") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_umv_").toString + "/t"
+    val root = Scratch.dir("graft_vt_umv_") + "/t"
     val v1 = (1L to 30L).map(i => (i, s"p_$i", i / 10)).toDF("id", "payload", "bucket")
     assert(VersionedTable.create(spark, root, v1, Seq("bucket")) === 1)
     // ids 4,8,12,… relocate to bucket 7 — a partition-column assignment,
@@ -75,7 +75,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("compaction commits a byte-moving snapshot: same rows, empty feed, fewer files") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_c_").toString + "/t"
+    val root = Scratch.dir("graft_vt_c_") + "/t"
     val v1 = (1L to 200L).map(i => (i, s"p_$i")).toDF("id", "payload")
     VersionedTable.create(spark, root, v1.repartition(16))
     assert(VersionedTable.compact(spark, root, targetBytes = 1L << 30) === 2)
@@ -89,7 +89,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("an orphan version dir from a crashed commit is invisible and overwritten") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_o_").toString + "/t"
+    val root = Scratch.dir("graft_vt_o_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a")).toDF("id", "payload"))
     // simulate a crash: v2 data written, manifest never swapped
     Seq((99L, "ghost")).toDF("id", "payload").write.parquet(s"$root/v00002")
@@ -101,7 +101,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("insertInto: append aligns by name + null-fills, CDC carries pure inserts, crashed orphan retried, feed stream sees the commit") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_ins_").toString + "/t"
+    val root = Scratch.dir("graft_vt_ins_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     // by-name alignment: reordered columns land right, missing ones null-fill
@@ -137,7 +137,7 @@ class VersionedTableSpec extends SparkSpec {
   // -- CDC change feed (r11) -----------------------------------------------
 
   test("change feed classifies insert / delete / update with pre+post images") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_cdc_").toString + "/t"
+    val root = Scratch.dir("graft_vt_cdc_") + "/t"
     VersionedTable.create(spark, root,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload"))
     VersionedTable.deleteWhere(spark, root, col("id") === 3L)
@@ -159,7 +159,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("change feed diffs states, not DML history: delete + re-insert spans as update") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_cdc2_").toString + "/t"
+    val root = Scratch.dir("graft_vt_cdc2_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "old"), (2L, "keep")).toDF("id", "payload"))
     VersionedTable.deleteWhere(spark, root, col("id") === 1L)
     VersionedTable.mergeInto(spark, root,
@@ -186,7 +186,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("appendBatch is exactly-once: a replayed batch id commits nothing") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_b_").toString + "/t"
+    val root = Scratch.dir("graft_vt_b_") + "/t"
     assert(VersionedTable.appendBatch(spark, root, 0L,
       Seq((1L, "a")).toDF("id", "payload")) === Some(1))
     assert(VersionedTable.appendBatch(spark, root, 1L,
@@ -210,7 +210,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("appendBatch stays exactly-once across an interleaved NON-batch commit (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_ib_").toString + "/t"
+    val root = Scratch.dir("graft_vt_ib_") + "/t"
     assert(VersionedTable.appendBatch(spark, root, 0L,
       Seq((1L, "a"), (2L, "b")).toDF("id", "payload")) === Some(1))
     // maintenance/DML land a marker-less version ON TOP of the batch —
@@ -230,7 +230,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("appendBatch stays exactly-once after vacuum retires the marker version (r17)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_vb_").toString + "/t"
+    val root = Scratch.dir("graft_vt_vb_") + "/t"
     assert(VersionedTable.appendBatch(spark, root, 0L,
       Seq((1L, "a"), (2L, "b")).toDF("id", "payload")) === Some(1))
     // marker-less maintenance/DML commits land ON TOP of the batch version
@@ -255,7 +255,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum persists the rolled-forward head before retiring _txn markers (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_vr_").toString + "/t"
+    val root = Scratch.dir("graft_vt_vr_") + "/t"
     VersionedTable.create(spark, root, (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     // two transact commits (delete-only mutations: carry the survivors)
     (1 to 2).foreach { k =>
@@ -282,7 +282,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("partition layout survives a transiently empty head (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_pl_").toString + "/t"
+    val root = Scratch.dir("graft_vt_pl_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 8L).map(i => (i, i % 2)).toDF("id", "b"), Seq("b"))
     assert(VersionedTable.deleteWhere(spark, root, lit(true)) === 2)
@@ -300,7 +300,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("appendBatch recovers a crashed orphan: retry of the batch commits once") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_o_").toString + "/t"
+    val root = Scratch.dir("graft_vt_o_") + "/t"
     VersionedTable.appendBatch(spark, root, 0L, Seq((1L, "a")).toDF("id", "payload"))
     // simulate a crash AFTER writing v2's files but BEFORE the manifest
     // swap: an orphan v00002 exists, _latest still names v1
@@ -315,7 +315,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("evolve adds a column with zero rewrite; reads, DML and CDC run under the evolved schema") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_evo_").toString + "/t"
+    val root = Scratch.dir("graft_vt_evo_") + "/t"
     val v1 = (1L to 20L).map(i => (i, s"p_$i", i % 3)).toDF("id", "payload", "bucket")
     assert(VersionedTable.create(spark, root, v1, Seq("bucket")) === 1)
     assert(VersionedTable.evolve(spark, root,
@@ -350,7 +350,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("evolve rejects non-nullable and colliding columns; a crashed evolve's schema entry is not inherited") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_evo2_").toString + "/t"
+    val root = Scratch.dir("graft_vt_evo2_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a")).toDF("id", "payload"))
     intercept[IllegalArgumentException] {
       VersionedTable.evolve(spark, root,
@@ -375,7 +375,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("appendBatch aligns an evolved table's batches: missing column null-fills, unknown column fails") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_evo3_").toString + "/t"
+    val root = Scratch.dir("graft_vt_evo3_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a")).toDF("id", "payload"))
     VersionedTable.evolve(spark, root, StructType(Seq(StructField("tag", StringType))))
     // a producer not yet emitting the new column keeps streaming
@@ -392,7 +392,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("CHECK constraints: registration validates, commits enforce new files only, violations leave the table untouched") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_chk_").toString + "/t"
+    val root = Scratch.dir("graft_vt_chk_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 20L).map(i => (i, i * 10L)).toDF("id", "qty"))
     VersionedTable.addConstraint(spark, root, "qty_pos", "qty >= 0")
@@ -437,7 +437,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("restore commits an old version's content as the new head; CDC reads the inverse of the mistake") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_rst_").toString + "/t"
+    val root = Scratch.dir("graft_vt_rst_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     assert(VersionedTable.deleteWhere(spark, root, col("id") > 3L) === 2) // the mistake
@@ -461,7 +461,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("restore validates the restored content against the CURRENT constraints") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_rstc_").toString + "/t"
+    val root = Scratch.dir("graft_vt_rstc_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, i * 10L - 50L)).toDF("id", "qty")) // ids 1-4 negative
     assert(VersionedTable.deleteWhere(spark, root, col("qty") < 0L) === 2)
@@ -482,7 +482,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("transact does not inherit a crashed evolve's stale schema entry") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_txns_").toString + "/t"
+    val root = Scratch.dir("graft_vt_txns_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a")).toDF("id", "payload"))
     // simulate a crashed evolve: schema entry written for v2, manifest never
     // swapped — a transact commit claiming v2 must not inherit the ghost
@@ -504,7 +504,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("mergeClauses commits a conditional merge whose CDC carries updates, deletes and inserts") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_mc_").toString + "/t"
+    val root = Scratch.dir("graft_vt_mc_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, i * 10L)).toDF("id", "qty"))
     assert(VersionedTable.mergeClauses(spark, root,
@@ -524,7 +524,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("dropColumns: zero rewrite, empty feed, narrowed DML, tombstoned re-add, time travel keeps the column") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_drop_").toString + "/t"
+    val root = Scratch.dir("graft_vt_drop_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 20L).map(i => (i, s"p_$i", s"t_$i")).toDF("id", "payload", "tag"))
     assert(VersionedTable.dropColumns(spark, root, Seq("tag")) === 2)
@@ -555,7 +555,7 @@ class VersionedTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       VersionedTable.dropColumns(spark, root, Seq("id", "payload", "tag2"))
     }
-    val part = java.nio.file.Files.createTempDirectory("graft_vt_drop2_").toString + "/t"
+    val part = Scratch.dir("graft_vt_drop2_") + "/t"
     VersionedTable.create(spark, part,
       (1L to 10L).map(i => (i, i % 2)).toDF("id", "b"), Seq("b"))
     intercept[IllegalArgumentException] {
@@ -564,7 +564,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("transact: a lost race re-runs the mutation against the new head — both writers' effects land") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_txn_").toString + "/t"
+    val root = Scratch.dir("graft_vt_txn_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 100L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     var bDone = false
@@ -589,7 +589,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("transact: crash after the rename rolls forward; crashed stage orphans are invisible and vacuumed; a squatting direct orphan is cleared") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_txn2_").toString + "/t"
+    val root = Scratch.dir("graft_vt_txn2_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     assert(VersionedTable.transact(spark, root) { (_, snap, stage) =>
@@ -633,7 +633,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("transact gives up with ConcurrentModificationException after maxRetries lost races") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_txn3_").toString + "/t"
+    val root = Scratch.dir("graft_vt_txn3_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     intercept[java.util.ConcurrentModificationException] {
@@ -656,7 +656,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum reachability-sweeps the pool: orphans die, shared files survive (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_rs_").toString + "/t"
+    val root = Scratch.dir("graft_vt_rs_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 100L).map(i => (i, s"p_$i")).toDF("id", "payload").repartition(4))
     VersionedTable.deleteWhere(spark, root, col("id") > 90L) // v2 shares v1 files
@@ -681,7 +681,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("DML over an emptied table: truncate, insert into empty, read schema intact (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_empty_").toString + "/t"
+    val root = Scratch.dir("graft_vt_empty_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 10L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     assert(VersionedTable.deleteWhere(spark, root, lit(true)) === 2) // TRUNCATE
@@ -703,7 +703,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("segmented manifests: untouched segments share by NAME, fragments coalesce, vacuum sweeps dead segments (r16)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_seg_").toString + "/t"
+    val root = Scratch.dir("graft_vt_seg_") + "/t"
     VersionedTable.create(spark, root,
       (1L to 400L).map(i => (i, i % 20, s"p_$i")).toDF("id", "bucket", "payload")
         .repartition(col("bucket")), Seq("bucket"))
@@ -744,7 +744,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("orphan sweep gates on the newest mtime in the staging SUBTREE, not the root entry (ADVICE r18)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_sweep_").toString + "/t"
+    val root = Scratch.dir("graft_vt_sweep_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a")).toDF("id", "payload"))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -772,7 +772,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("writers heartbeat-stamp their staging roots, so a live commit of any duration never ages out") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_hb_").toString + "/t"
+    val root = Scratch.dir("graft_vt_hb_") + "/t"
     VersionedTable.create(spark, root, (1L to 5L).map(i => (i, s"p_$i")).toDF("id", "payload"))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -797,7 +797,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum retires old versions and keeps time travel to the rest") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_v_").toString + "/t"
+    val root = Scratch.dir("graft_vt_v_") + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "payload"))
     VersionedTable.deleteWhere(spark, root, col("id") === 2L)
     VersionedTable.deleteWhere(spark, root, col("id") === 1L)

@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Morton-key mechanics + the data-skipping property the layout exists for. */
 class ZOrderSpec extends SparkSpec {
@@ -29,7 +27,7 @@ class ZOrderSpec extends SparkSpec {
   test("z-ordered write preserves the exact row multiset") {
     val df = (1 to 5000).map(i => (i.toLong % 37, (i * 7919L) % 1000, s"p$i"))
       .toDF("x", "y", "payload")
-    val out = Files.createTempDirectory("graft_zorder_rt_").toString
+    val out = Scratch.dir("graft_zorder_rt_")
     ZOrder.materializeZordered(df, out, Seq("x", "y"), bits = 5, numFiles = 8)
     val back = spark.read.parquet(out)
     assert(back.count() === 5000)
@@ -49,7 +47,7 @@ class ZOrderSpec extends SparkSpec {
     val rnd = new scala.util.Random(23)
     val df = (1 to 50000).map(_ => (rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
       .toDF("x", "y")
-    val base = Files.createTempDirectory("graft_zorder_skip_").toString
+    val base = Scratch.dir("graft_zorder_skip_")
 
     // layout A: classic single-column clustering (range-partitioned + sorted on x)
     df.repartitionByRange(16, col("x")).sortWithinPartitions("x")

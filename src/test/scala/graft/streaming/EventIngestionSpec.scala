@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Testdata-schema canary (VERDICT r9 #3): the events ingestion contract
   * must hold for EVERY `ts` encoding a feed can carry. Round 9 broke when
@@ -24,7 +24,7 @@ class EventIngestionSpec extends SparkSpec {
   private val wantUs = Seq(baseUs, baseUs + 1000000L, baseUs + 2000000L)
 
   private def writeFixture(df: DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ev_canary_").toString
+    val dir = Scratch.dir("graft_ev_canary_")
     df.coalesce(1).write.parquet(s"$dir/events.parquet")
     dir
   }

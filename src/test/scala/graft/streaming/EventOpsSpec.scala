@@ -2,14 +2,14 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Streaming-vs-batch equivalence for the event pipeline. */
 class EventOpsSpec extends SparkSpec {
 
   test("structured-streaming hourly agg equals the batch computation") {
     // file-source streams read directories of drops, not single files
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_events")
+    val dropDir = java.nio.file.Paths.get(Scratch.dir("graft_events"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dropDir.resolve("events.parquet"))
@@ -149,7 +149,7 @@ class EventOpsSpec extends SparkSpec {
   }
 
   test("streaming dedup collapses re-delivered files to distinct event_ids") {
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_dedup")
+    val dropDir = java.nio.file.Paths.get(Scratch.dir("graft_dedup"))
     // the same parquet delivered twice = an at-least-once redelivery
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"), dropDir.resolve("a.parquet"))
@@ -185,7 +185,7 @@ class EventOpsSpec extends SparkSpec {
   }
 
   test("stream-stream interval join matches the batch attribution pairs") {
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_attr")
+    val dropDir = java.nio.file.Paths.get(Scratch.dir("graft_attr"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"), dropDir.resolve("events.parquet"))
     val q = EventOps.streamingAttribution(spark, dropDir.toString)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.etl.{Staging, Transforms, Warehouse}
 
 /** Streaming fact ingestion must produce exactly the batch fact rows for the
@@ -12,7 +12,7 @@ class IncrementalEtlSpec extends SparkSpec {
 
   test("streaming fact load over two drops equals the batch fact build") {
     val w = Warehouse(spark, sfDir)
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_sales_drops").toString
+    val dropDir = Scratch.dir("graft_sales_drops")
 
     // two separate drops → two micro-batch inputs
     val staged = Staging.sales(spark, sfDir).limit(2000).cache()
@@ -39,8 +39,8 @@ class IncrementalEtlSpec extends SparkSpec {
 
   test("incrementally maintained month×country summary equals the one-shot build") {
     val w = Warehouse(spark, sfDir)
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_molap_drops").toString
-    val summary = java.nio.file.Files.createTempDirectory("graft_molap_sum").toString + "/mc"
+    val dropDir = Scratch.dir("graft_molap_drops")
+    val summary = Scratch.dir("graft_molap_sum") + "/mc"
 
     val staged = Staging.sales(spark, sfDir).limit(2000).cache()
     val Array(dropA, dropB) = staged.randomSplit(Array(0.5, 0.5), seed = 42)
@@ -82,7 +82,7 @@ class IncrementalEtlSpec extends SparkSpec {
 
   test("summary maintenance is exactly-once under batch replay; a crashed swap rolls forward (r16)") {
     val w = Warehouse(spark, sfDir)
-    val summary = java.nio.file.Files.createTempDirectory("graft_molap_eo_").toString + "/mc"
+    val summary = Scratch.dir("graft_molap_eo_") + "/mc"
     val staged = Staging.sales(spark, sfDir).limit(1000).cache()
     val batchFact = Transforms.factSales(
       Transforms.salesFinal(Transforms.salesParsed(staged), w.dimProduct),

@@ -9,10 +9,12 @@ import org.apache.spark.sql.SparkSession
   * skipping (the stats live on disk under the table root), and registers
   * a table of its own for the first process to resolve. Exits non-zero on
   * any failed expectation; the launching spec asserts the exit code and
-  * the `CHILD_OK` marker. Args: `<catalogPath> <tableName>`. */
+  * the `CHILD_OK` marker. Args: `<catalogPath> <tableName> <childRoot>`,
+  * the last a path under the launcher's scratch, so the table the launcher
+  * reads after this process exits outlives it. */
 object CatalogChild {
   def main(args: Array[String]): Unit = {
-    val Array(catalogPath, table) = args
+    val Array(catalogPath, table, childRoot) = args
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-catalog-child")
@@ -44,8 +46,6 @@ object CatalogChild {
         .head().getLong(0)
       require(s == 55L, s"child pruned read got $s, want 55")
       // write-through: a registration the parent must see via the file
-      val childRoot = java.nio.file.Files
-        .createTempDirectory("graft_child_t_").toString + "/t"
       import spark.implicits._
       graft.sources.VersionedTable.create(spark, childRoot,
         Seq((1L, "from_child")).toDF("id", "payload"))

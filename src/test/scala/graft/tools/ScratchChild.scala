@@ -1,0 +1,24 @@
+package graft.tools
+
+import org.apache.spark.sql.SparkSession
+
+/** Second-JVM half of `ScratchSpec`'s lifetime test: writes a parquet file
+  * into a scratch directory from a live local session, prints that
+  * directory's path as `SCRATCH_DIR=<path>`, and returns from `main`
+  * without stopping the session or deleting anything. Spark's shutdown
+  * hook then stops the context and the scratch hook deletes the root; the
+  * launching spec asserts the root is gone once this process has exited. */
+object ScratchChild {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder()
+      .master("local[1]")
+      .appName("graft-scratch-child")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val dir = graft.Scratch.dir("graft_child_")
+    spark.range(10).write.parquet(s"$dir/t")
+    require(spark.read.parquet(s"$dir/t").count() == 10L)
+    println(s"SCRATCH_DIR=$dir")
+  }
+}
