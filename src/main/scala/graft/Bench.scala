@@ -309,9 +309,7 @@ object Bench {
       decode: Dataset[T] => Dataset[U]): Unit = {
     val fx = scala.util.Try(fixture.localCheckpoint())
     try time(name)(decode(fx.get).toDF())
-    finally fx.foreach(_.toDF().queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-    })
+    finally fx.foreach(f => Warehouse.releaseLocalCheckpoint(f.toDF()))
   }
 
   private def loadNow(): Double = java.lang.management.ManagementFactory

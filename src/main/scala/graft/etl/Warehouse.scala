@@ -90,9 +90,7 @@ final case class Warehouse(
     }
     (cachedFrames.map(_._2) ++ built).foreach { df =>
       df.unpersist(blocking = false)
-      df.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      }
+      Warehouse.releaseLocalCheckpoint(df)
     }
   }
 }
@@ -117,6 +115,15 @@ object Warehouse {
     * action. */
   private def leaf(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY).cache()
+
+  /** Drop a `localCheckpoint()` frame's executor-local blocks now instead of
+    * at the ContextCleaner's leisure. Safe only AFTER the last consumer of
+    * the checkpointed lineage has run — the truncated lineage cannot
+    * recompute. */
+  private[graft] def releaseLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    }
 
   /** Builds the star and caches each reused frame as a shallow [[leaf]]. */
   def build(spark: SparkSession, dir: String): Warehouse = {

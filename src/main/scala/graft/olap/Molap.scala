@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.Warehouse
 import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.q
+import graft.plans.PlanRuleSupport.requireServedFrom
 
 /** MOLAP layer (`Iteration 2/Group No.6_MOLAP.sql`): three pre-aggregation
   * tables + the query suite over them + the MOLAP-vs-OLAP consistency check.
@@ -205,53 +206,21 @@ object Molap extends QueryRegistry {
     * aggregate is then the oracle's check (decimal partials re-aggregate
     * exactly — a double partial would re-sum in a different order). */
   private def mvRewriteCountry(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = Scratch.dir("graft_mv_")
-    val w = Warehouse(s, dir)
-    w.factSalesElt
-      .filter(col("date_key") =!= graft.FallbackDateKey)
-      .join(w.dimCustomerElt.select("customer_key", "country"), Seq("customer_key"), "left")
-      .select(keyMonth,
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        col("totalamount"), col("quantity"))
-      .write.parquet(s"$base/grain")
-    s.read.parquet(s"$base/grain")
-      .groupBy("month", "country")
-      .agg(sum("totalamount").as("rev_p"), sum("quantity").as("qty_p"),
-        count(lit(1)).as("n_rows"))
-      .write.parquet(s"$base/mv")
-    graft.plans.MvRewrite.register(s, s"$base/grain", s.read.parquet(s"$base/mv"),
-      keys = Seq("month", "country"),
-      sums = Map("totalamount" -> "rev_p", "quantity" -> "qty_p"),
-      countCol = Some("n_rows"))
+    val base = grainWithMv(s, dir)
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.read.parquet(s"$base/grain")
+      requireMvScan(s.read.parquet(s"$base/grain")
         .groupBy("country")
         .agg(sum("totalamount").as("rev"), sum("quantity").as("total_quantity"),
           count(lit(1)).as("n_rows"))
         .select(col("country"), col("rev").cast("double").as("revenue"),
-          col("total_quantity"), col("n_rows"))
-      requireMvScan(out)
-      out
+          col("total_quantity"), col("n_rows")))
     }
   }
 
-  /** Shared plan assert for the MV-rewrite gate rows: the optimized LOGICAL
-    * relations (the physical plan hides its scans inside the adaptive
-    * wrapper until execution) must read the /mv layout and never /grain. */
-  private def requireMvScan(out: DataFrame): Unit = {
-    val scanned = out.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    require(scanned.exists(_.endsWith("/mv")),
-      s"MV rewrite did not reroute the aggregate; scanned: ${scanned.mkString(", ")}")
-    require(!scanned.exists(_.endsWith("/grain")),
-      s"MV rewrite left a base-table scan in the plan: ${scanned.mkString(", ")}")
-  }
+  /** Shared plan assert for the MV-rewrite gate rows: the optimized plan
+    * must read the /mv layout of [[grainWithMv]] and never its /grain. */
+  private def requireMvScan(out: DataFrame): DataFrame =
+    requireServedFrom(out, _.endsWith("/mv"), _.endsWith("/grain"))
 
   /** Key-filter derivability gate (r12): the dashboard slice — an aggregate
     * WITH a WHERE on a group-key column — must still serve from the MV: a
@@ -260,34 +229,15 @@ object Molap extends QueryRegistry {
     * scenario mirrors [[mvRewriteCountry]]; the query slices to months
     * from 1997 on before rolling up by country. */
   private def mvRewriteFiltered(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = Scratch.dir("graft_mvfil_")
-    val w = Warehouse(s, dir)
-    w.factSalesElt
-      .filter(col("date_key") =!= graft.FallbackDateKey)
-      .join(w.dimCustomerElt.select("customer_key", "country"), Seq("customer_key"), "left")
-      .select(keyMonth,
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        col("totalamount"), col("quantity"))
-      .write.parquet(s"$base/grain")
-    s.read.parquet(s"$base/grain")
-      .groupBy("month", "country")
-      .agg(sum("totalamount").as("rev_p"), sum("quantity").as("qty_p"),
-        count(lit(1)).as("n_rows"))
-      .write.parquet(s"$base/mv")
-    graft.plans.MvRewrite.register(s, s"$base/grain", s.read.parquet(s"$base/mv"),
-      keys = Seq("month", "country"),
-      sums = Map("totalamount" -> "rev_p", "quantity" -> "qty_p"),
-      countCol = Some("n_rows"))
+    val base = grainWithMv(s, dir)
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.read.parquet(s"$base/grain")
+      requireMvScan(s.read.parquet(s"$base/grain")
         .filter(col("month") >= lit(java.sql.Date.valueOf("1997-01-01")))
         .groupBy("country")
         .agg(sum("totalamount").as("rev"), sum("quantity").as("total_quantity"),
           count(lit(1)).as("n_rows"))
         .select(col("country"), col("rev").cast("double").as("revenue"),
-          col("total_quantity"), col("n_rows"))
-      requireMvScan(out)
-      out
+          col("total_quantity"), col("n_rows")))
     }
   }
 
@@ -301,15 +251,7 @@ object Molap extends QueryRegistry {
     * divide, `min`/`max` from their partials. Plan-asserted MV-only scan;
     * numeric equality to the direct route is the oracle's check. */
   private def mvRewriteAvg(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = Scratch.dir("graft_mvavg_")
-    val w = Warehouse(s, dir)
-    w.factSalesElt
-      .filter(col("date_key") =!= graft.FallbackDateKey)
-      .join(w.dimCustomerElt.select("customer_key", "country"), Seq("customer_key"), "left")
-      .select(keyMonth,
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        col("totalamount"), col("quantity"))
-      .write.parquet(s"$base/grain")
+    val base = grain(s, dir)
     s.read.parquet(s"$base/grain")
       .groupBy("month", "country")
       .agg(sum("totalamount").as("rev_p"), count(col("totalamount")).as("rev_cnt"),
@@ -325,24 +267,20 @@ object Molap extends QueryRegistry {
       mins = Map("totalamount" -> "rev_min"),
       maxs = Map("totalamount" -> "rev_max"))
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.read.parquet(s"$base/grain")
+      requireMvScan(s.read.parquet(s"$base/grain")
         .groupBy("country")
         .agg(avg("totalamount").cast("double").as("avg_amount"),
           avg("quantity").as("avg_qty"),
           min("totalamount").cast("double").as("min_amount"),
           max("totalamount").cast("double").as("max_amount"),
-          count(lit(1)).as("n_rows"))
-      requireMvScan(out)
-      out
+          count(lit(1)).as("n_rows")))
     }
   }
 
-  /** Shared scenario for the r13 gate rows: materialize the (month, country,
-    * amount, quantity) base grain + its sum/count summary under a fresh temp
-    * root, register the summary, and return the root. Identical layout to
-    * [[mvRewriteCountry]]'s. */
-  private def grainWithMv(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val base = Scratch.dir("graft_mvgs_")
+  /** Materialize the (month, country, amount, quantity) base grain the MV
+    * gate rows aggregate under a fresh temp root, and return the root. */
+  private def grain(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val base = Scratch.dir("graft_mv_")
     val w = Warehouse(s, dir)
     w.factSalesElt
       .filter(col("date_key") =!= graft.FallbackDateKey)
@@ -351,6 +289,14 @@ object Molap extends QueryRegistry {
         coalesce(col("country"), lit("UNKNOWN")).as("country"),
         col("totalamount"), col("quantity"))
       .write.parquet(s"$base/grain")
+    base
+  }
+
+  /** The shared scenario of the sum/count MV gate rows: the [[grain]], its
+    * (month, country) sum/count summary at `$base/mv`, registered as the
+    * serving table; returns the root. */
+  private def grainWithMv(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val base = grain(s, dir)
     s.read.parquet(s"$base/grain")
       .groupBy("month", "country")
       .agg(sum("totalamount").as("rev_p"), sum("quantity").as("qty_p"),
@@ -371,14 +317,12 @@ object Molap extends QueryRegistry {
   private def mvRewriteHaving(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val base = grainWithMv(s, dir)
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.read.parquet(s"$base/grain")
+      requireMvScan(s.read.parquet(s"$base/grain")
         .groupBy("country")
         .agg(sum("totalamount").as("rev"), count(lit(1)).as("n_rows"))
         .filter(col("rev") > 1000)
         .select(col("country"), col("rev").cast("double").as("revenue"),
-          col("n_rows"))
-      requireMvScan(out)
-      out
+          col("n_rows")))
     }
   }
 
@@ -391,15 +335,13 @@ object Molap extends QueryRegistry {
     val base = grainWithMv(s, dir)
     s.read.parquet(s"$base/grain").createOrReplaceTempView("graft_mv_grain")
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.sql("""
+      requireMvScan(s.sql("""
         SELECT country, CAST(sum(totalamount) AS DOUBLE) AS revenue,
                sum(quantity) AS total_quantity, count(*) AS n_rows
         FROM graft_mv_grain
         WHERE month >= DATE '1997-01-01'
         GROUP BY country
-        HAVING count(*) > 50""")
-      requireMvScan(out)
-      out
+        HAVING count(*) > 50"""))
     }
   }
 
@@ -419,13 +361,11 @@ object Molap extends QueryRegistry {
     s.read.parquet(s"$base/grain").createOrReplaceTempView("graft_star_grain")
     s.read.parquet(s"$base/regions").createOrReplaceTempView("graft_star_regions")
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.sql("""
+      requireMvScan(s.sql("""
         SELECT region, country, CAST(sum(totalamount) AS DOUBLE) AS revenue,
                sum(quantity) AS total_quantity, count(*) AS n_rows
         FROM graft_star_grain JOIN graft_star_regions USING (country)
-        GROUP BY ROLLUP (region, country)""")
-      requireMvScan(out)
-      out
+        GROUP BY ROLLUP (region, country)"""))
     }
   }
 
@@ -438,15 +378,13 @@ object Molap extends QueryRegistry {
   private def mvRewriteRollup(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val base = grainWithMv(s, dir)
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.read.parquet(s"$base/grain")
+      requireMvScan(s.read.parquet(s"$base/grain")
         .rollup("month", "country")
         .agg(sum("totalamount").as("rev"), sum("quantity").as("total_quantity"),
           count(lit(1)).as("n_rows"))
         .select(col("month"), col("country"),
           col("rev").cast("double").as("revenue"),
-          col("total_quantity"), col("n_rows"))
-      requireMvScan(out)
-      out
+          col("total_quantity"), col("n_rows")))
     }
   }
 
@@ -464,15 +402,13 @@ object Molap extends QueryRegistry {
         concat(lit("R"), (length(col("country")) % 3).cast("string")))
       .write.parquet(s"$base/regions")
     graft.plans.MvRewrite.servingScoped(s) {
-      val out = s.read.parquet(s"$base/grain")
+      requireMvScan(s.read.parquet(s"$base/grain")
         .join(s.read.parquet(s"$base/regions"), Seq("country"))
         .groupBy("region")
         .agg(sum("totalamount").as("rev"), sum("quantity").as("total_quantity"),
           count(lit(1)).as("n_rows"))
         .select(col("region"), col("rev").cast("double").as("revenue"),
-          col("total_quantity"), col("n_rows"))
-      requireMvScan(out)
-      out
+          col("total_quantity"), col("n_rows")))
     }
   }
 
@@ -487,52 +423,76 @@ object Molap extends QueryRegistry {
     * plan assert proves the serve never read the base. */
   private def mvServeRefreshed(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val base = Scratch.dir("graft_mvloop_")
-    val root = s"$base/t"
+    val root = commitRidGrain(s, dir, base)
+    sumCountSummary(graft.sources.VersionedTable.read(s, root, Some(1)))
+      .write.parquet(s"$base/summary")
+    upliftEverySixth(s, root)
+    val feed = graft.sources.VersionedTable.changes(s, root, 1, 2, Seq("rid"))
+    IncrementalMv.refreshPath(s, s"$base/summary", feed,
+      Seq("month", "country"), "n_rows", sumCountMeasures,
+      () => throw new IllegalStateException(
+        "sum/count refresh must read ONLY the change feed, never the base"))
+    registerSumCount(s, root, 2, s"$base/summary")
+    graft.plans.MvRewrite.servingScoped(s)(serveByCountry(s, root))
+  }
+
+  /** The versioned MV loop's base: the (rid, invoiceid, month, country,
+    * amount, quantity) grain committed as v1 of `$base/t`; returns the table
+    * root. rid: a synthetic row key for the CDC diff — the natural line-item
+    * key (invoiceid, stockcode, linenumber) is NOT unique in this feed. Its
+    * values are stable across versions (v2's copy-on-write preserves the
+    * column) and never enter the compared output. */
+  private def commitRidGrain(s: org.apache.spark.sql.SparkSession, dir: String,
+      base: String): String = {
     val w = Warehouse(s, dir)
-    // rid: a synthetic row key for the CDC diff — the natural line-item key
-    // (invoiceid, stockcode, linenumber) is NOT unique in this feed. Its
-    // values are stable across versions (v2's copy-on-write preserves the
-    // column) and never enter the compared output.
-    val grain = w.factSalesElt
+    val root = s"$base/t"
+    graft.sources.VersionedTable.create(s, root, w.factSalesElt
       .filter(col("date_key") =!= graft.FallbackDateKey)
       .join(w.dimCustomerElt.select("customer_key", "country"), Seq("customer_key"), "left")
       .select(monotonically_increasing_id().as("rid"), col("invoiceid"), keyMonth,
         coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        col("totalamount"), col("quantity"))
-    graft.sources.VersionedTable.create(s, root, grain)
-    graft.sources.VersionedTable.read(s, root, Some(1))
-      .groupBy("month", "country")
+        col("totalamount"), col("quantity")))
+    root
+  }
+
+  /** The loop's (month, country) summary: sum and count partials per
+    * measure plus the row count — what AVG re-derives from. */
+  private def sumCountSummary(grain: DataFrame): DataFrame =
+    grain.groupBy("month", "country")
       .agg(sum("totalamount").as("rev_p"), count(col("totalamount")).as("rev_cnt"),
         sum("quantity").as("qty_p"), count(col("quantity")).as("qty_cnt"),
         count(lit(1)).as("n_rows"))
-      .write.parquet(s"$base/summary")
-    // the mutation: +1.00 on every 6th invoice's rows, as a committed v2
-    graft.sources.VersionedTable.updateWhere(s, root,
-      col("invoiceid").cast("long") % 6 === 0,
-      Map("totalamount" -> (col("totalamount") + lit(BigDecimal("1.00")))))
-    val feed = graft.sources.VersionedTable.changes(s, root, 1, 2, Seq("rid"))
-    IncrementalMv.refreshPath(s, s"$base/summary", feed,
-      Seq("month", "country"), "n_rows",
-      Seq(IncrementalMv.MeasureSpec("totalamount", "rev_p", "rev_cnt"),
-        IncrementalMv.MeasureSpec("quantity", "qty_p", "qty_cnt")),
-      () => throw new IllegalStateException(
-        "sum/count refresh must read ONLY the change feed, never the base"))
-    graft.plans.MvRewrite.registerVersioned(s, root, 2, s.read.parquet(s"$base/summary"),
+
+  private val sumCountMeasures = Seq(
+    IncrementalMv.MeasureSpec("totalamount", "rev_p", "rev_cnt"),
+    IncrementalMv.MeasureSpec("quantity", "qty_p", "qty_cnt"))
+
+  /** Register the [[sumCountSummary]] at `summary` as the serving table for
+    * snapshot `version` of `root`. */
+  private def registerSumCount(s: org.apache.spark.sql.SparkSession, root: String,
+      version: Int, summary: String): Unit =
+    graft.plans.MvRewrite.registerVersioned(s, root, version, s.read.parquet(summary),
       keys = Seq("month", "country"),
       sums = Map("totalamount" -> "rev_p", "quantity" -> "qty_p"),
       countCol = Some("n_rows"),
       counts = Map("totalamount" -> "rev_cnt", "quantity" -> "qty_cnt"))
-    graft.plans.MvRewrite.servingScoped(s) {
-      val out = graft.sources.VersionedTable.read(s, root, Some(2))
-        .groupBy("country")
-        .agg(sum("totalamount").as("rev"), avg("totalamount").as("avg_amt"),
-          count(lit(1)).as("n_rows"))
-        .select(col("country"), col("rev").cast("double").as("revenue"),
-          col("avg_amt").cast("double").as("avg_amount"), col("n_rows"))
-      requireServedFrom(out, mustScan = "/summary", mustNotScan = "/t/_data")
-      out
-    }
-  }
+
+  /** The loop's mutation: +1.00 on every 6th invoice's rows, committed as v2. */
+  private def upliftEverySixth(s: org.apache.spark.sql.SparkSession, root: String): Unit =
+    graft.sources.VersionedTable.updateWhere(s, root,
+      col("invoiceid").cast("long") % 6 === 0,
+      Map("totalamount" -> (col("totalamount") + lit(BigDecimal("1.00")))))
+
+  /** The loop's serve: revenue and average by country over v2, which must
+    * read the summary and no base data file. */
+  private def serveByCountry(s: org.apache.spark.sql.SparkSession, root: String): DataFrame =
+    requireServedFrom(graft.sources.VersionedTable.read(s, root, Some(2))
+      .groupBy("country")
+      .agg(sum("totalamount").as("rev"), avg("totalamount").as("avg_amt"),
+        count(lit(1)).as("n_rows"))
+      .select(col("country"), col("rev").cast("double").as("revenue"),
+        col("avg_amt").cast("double").as("avg_amount"), col("n_rows")),
+      _.contains("/summary"), _.contains("/t/_data"))
 
   /** AUTO-served MV loop (r14, VERDICT r13 #2): the same build → refresh →
     * serve composition as [[mvServeRefreshed]], with NOTHING refreshed or
@@ -563,45 +523,22 @@ object Molap extends QueryRegistry {
   private def mvAutoServeScenario(s: org.apache.spark.sql.SparkSession,
       dir: String, crossProcess: Boolean): DataFrame = {
     val base = Scratch.dir("graft_mvauto_")
-    val root = s"$base/t"
-    val w = Warehouse(s, dir)
-    val grain = w.factSalesElt
-      .filter(col("date_key") =!= graft.FallbackDateKey)
-      .join(w.dimCustomerElt.select("customer_key", "country"), Seq("customer_key"), "left")
-      .select(monotonically_increasing_id().as("rid"), col("invoiceid"), keyMonth,
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        col("totalamount"), col("quantity"))
-    graft.sources.VersionedTable.create(s, root, grain)
+    val root = commitRidGrain(s, dir, base)
     IncrementalMv.initSummaryAt(s, s"$base/summary",
-      graft.sources.VersionedTable.read(s, root, Some(1))
-        .groupBy("month", "country")
-        .agg(sum("totalamount").as("rev_p"), count(col("totalamount")).as("rev_cnt"),
-          sum("quantity").as("qty_p"), count(col("quantity")).as("qty_cnt"),
-          count(lit(1)).as("n_rows")),
-      version = 1)
+      sumCountSummary(graft.sources.VersionedTable.read(s, root, Some(1))), version = 1)
     IncrementalMv.autoServe(s, root, s"$base/summary",
       rowKeys = Seq("rid"), mvKeys = Seq("month", "country"),
-      rowCount = "n_rows",
-      measures = Seq(IncrementalMv.MeasureSpec("totalamount", "rev_p", "rev_cnt"),
-        IncrementalMv.MeasureSpec("quantity", "qty_p", "qty_cnt")),
+      rowCount = "n_rows", measures = sumCountMeasures,
       rescanBase = _ => throw new IllegalStateException(
         "sum/count maintenance must read ONLY the change feed, never the base")) {
-      (sess, v) =>
-        graft.plans.MvRewrite.registerVersioned(sess, root, v,
-          sess.read.parquet(s"$base/summary"),
-          keys = Seq("month", "country"),
-          sums = Map("totalamount" -> "rev_p", "quantity" -> "qty_p"),
-          countCol = Some("n_rows"),
-          counts = Map("totalamount" -> "rev_cnt", "quantity" -> "qty_cnt"))
+      (sess, v) => registerSumCount(sess, root, v, s"$base/summary")
     }
     try {
       // cross-process simulation: the foreign writer's commit never fires
       // THIS process's listeners — only the head check can close the gap
       if (crossProcess) IncrementalMv.detachListenerKeepHeadCheck(root)
       // the mutation commits — and the commit IS the refresh trigger
-      graft.sources.VersionedTable.updateWhere(s, root,
-        col("invoiceid").cast("long") % 6 === 0,
-        Map("totalamount" -> (col("totalamount") + lit(BigDecimal("1.00")))))
+      upliftEverySixth(s, root)
       if (crossProcess)
         require(IncrementalMv.appliedVersion(s, s"$base/summary").contains(1),
           "the detached listener must NOT have refreshed the summary")
@@ -609,36 +546,13 @@ object Molap extends QueryRegistry {
         require(IncrementalMv.appliedVersion(s, s"$base/summary").contains(2),
           "the commit listener must have caught the summary up to v2")
       graft.plans.MvRewrite.servingScoped(s) {
-        val out = graft.sources.VersionedTable.read(s, root, Some(2))
-          .groupBy("country")
-          .agg(sum("totalamount").as("rev"), avg("totalamount").as("avg_amt"),
-            count(lit(1)).as("n_rows"))
-          .select(col("country"), col("rev").cast("double").as("revenue"),
-            col("avg_amt").cast("double").as("avg_amount"), col("n_rows"))
-        requireServedFrom(out, mustScan = "/summary", mustNotScan = "/t/_data")
+        val out = serveByCountry(s, root)
         if (crossProcess)
           require(IncrementalMv.appliedVersion(s, s"$base/summary").contains(2),
             "the plan-time head check must have healed the summary to v2")
         out
       }
     } finally IncrementalMv.stopAutoServe(root)
-  }
-
-  /** Like [[requireMvScan]] but with configurable path markers. */
-  private def requireServedFrom(out: DataFrame, mustScan: String,
-      mustNotScan: String): Unit = {
-    val scanned = out.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    require(scanned.exists(_.contains(mustScan)),
-      s"MV rewrite did not reroute the aggregate; scanned: ${scanned.mkString(", ")}")
-    require(!scanned.exists(_.contains(mustNotScan)),
-      s"a base-table scan survived in the plan: ${scanned.mkString(", ")}")
   }
 
   /** Shared by `molap_mv_autoserve` and `molap_mv_headcheck` — the two

@@ -458,24 +458,15 @@ object Olap extends QueryRegistry {
   def ltvQuartilesApproxReleasable(w: Warehouse, accuracy: Int = 10000)
       : (DataFrame, () => Unit) = {
     val frame = ltvFrame(w).localCheckpoint()
-    (ltvQuartilesApproxOver(frame, accuracy), () => releaseLocalCheckpoint(frame))
+    (ltvQuartilesApproxOver(frame, accuracy), () => Warehouse.releaseLocalCheckpoint(frame))
   }
-
-  /** Drop a `localCheckpoint()` frame's executor-local blocks now instead of
-    * at the ContextCleaner's leisure. Safe only AFTER the last consumer of
-    * the checkpointed lineage has run — the truncated lineage cannot
-    * recompute. */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-    }
 
   /** [[rfmSegmentsApprox]]'s release-handle form — same contract as
     * [[ltvQuartilesApproxReleasable]]. */
   def rfmSegmentsApproxReleasable(w: Warehouse, accuracy: Int = 10000)
       : (DataFrame, () => Unit) = {
     val frame = rfmPerCustomer(w).localCheckpoint()
-    (rfmSegmentsApproxOver(frame, accuracy), () => releaseLocalCheckpoint(frame))
+    (rfmSegmentsApproxOver(frame, accuracy), () => Warehouse.releaseLocalCheckpoint(frame))
   }
 
   private def ltvQuartilesApproxOver(ltv: DataFrame, accuracy: Int): DataFrame = {
@@ -710,6 +701,44 @@ object Olap extends QueryRegistry {
       FROM pc JOIN itn i1 ON pc.s1 = i1.stockcode
               JOIN itn i2 ON pc.s2 = i2.stockcode, tot""")
 
+  /** Shared by `olap_rfm_segments` and its approx twin, which proves its
+    * bucketing within the sketch bound and then emits the exact frame. */
+  private lazy val rfmSegmentsOracle: String = q("""
+      , rcust AS (
+          SELECT customerid,
+                 max(CAST(sale_ts AS DATE)) AS last_date,
+                 count(DISTINCT invoiceid) AS n_orders,
+                 CAST(sum(CAST(totalamount * 100 AS BIGINT)) AS BIGINT) AS cents
+          FROM sales_final
+          WHERE customerid IS NOT NULL AND trim(customerid) <> ''
+          GROUP BY 1),
+      ranchor AS (SELECT max(last_date) AS anchor_date FROM rcust),
+      rq AS (
+          SELECT customerid, n_orders, cents,
+                 ntile(5) OVER (ORDER BY date_diff('day', last_date, anchor_date) ASC, customerid) AS r_quintile,
+                 ntile(5) OVER (ORDER BY n_orders DESC, customerid) AS f_quintile,
+                 ntile(5) OVER (ORDER BY cents DESC, customerid) AS m_quintile
+          FROM rcust, ranchor)
+      SELECT CAST(r_quintile AS INT) AS r_quintile,
+             CAST(f_quintile AS INT) AS f_quintile,
+             CAST(m_quintile AS INT) AS m_quintile,
+             count(*) AS n_customers, CAST(sum(cents) AS BIGINT) AS monetary_cents
+      FROM rq GROUP BY 1, 2, 3""")
+
+  /** Shared by `olap_ltv_quartiles` and its approx twin (same contract). */
+  private lazy val ltvQuartilesOracle: String = q("""
+      , ltv AS (
+          SELECT c.customerid, sum(f.totalamount) AS ltv
+          FROM fact_sales_elt f
+          JOIN dim_customer_elt c ON f.customer_key = c.customer_key
+          GROUP BY 1),
+        bucketed AS (
+          SELECT ltv, CAST(ntile(4) OVER (ORDER BY ltv DESC, customerid) AS INT) AS quartile
+          FROM ltv)
+      SELECT quartile, count(*) AS n_customers,
+             CAST(CAST(sum(ltv) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
+      FROM bucketed GROUP BY quartile""")
+
   def defs: Seq[QueryDef] = Seq(
     QueryDef("olap_cohort_ltv_curve", (s, dir) => cohortLtvCurve(Warehouse(s, dir)), Some(q("""
       , csales AS (
@@ -751,81 +780,21 @@ object Olap extends QueryRegistry {
       (s, dir) => basketLiftPruned(Warehouse(s, dir)),
       Some(basketLiftOracle)),
 
-    QueryDef("olap_rfm_segments", (s, dir) => rfmSegments(Warehouse(s, dir)), Some(q("""
-      , rcust AS (
-          SELECT customerid,
-                 max(CAST(sale_ts AS DATE)) AS last_date,
-                 count(DISTINCT invoiceid) AS n_orders,
-                 CAST(sum(CAST(totalamount * 100 AS BIGINT)) AS BIGINT) AS cents
-          FROM sales_final
-          WHERE customerid IS NOT NULL AND trim(customerid) <> ''
-          GROUP BY 1),
-      ranchor AS (SELECT max(last_date) AS anchor_date FROM rcust),
-      rq AS (
-          SELECT customerid, n_orders, cents,
-                 ntile(5) OVER (ORDER BY date_diff('day', last_date, anchor_date) ASC, customerid) AS r_quintile,
-                 ntile(5) OVER (ORDER BY n_orders DESC, customerid) AS f_quintile,
-                 ntile(5) OVER (ORDER BY cents DESC, customerid) AS m_quintile
-          FROM rcust, ranchor)
-      SELECT CAST(r_quintile AS INT) AS r_quintile,
-             CAST(f_quintile AS INT) AS f_quintile,
-             CAST(m_quintile AS INT) AS m_quintile,
-             count(*) AS n_customers, CAST(sum(cents) AS BIGINT) AS monetary_cents
-      FROM rq GROUP BY 1, 2, 3"""))),
+    QueryDef("olap_rfm_segments", (s, dir) => rfmSegments(Warehouse(s, dir)),
+      Some(rfmSegmentsOracle)),
 
     // the approx (100 TB) variant runs its map-side bucketing, PROVES it
     // within the sketch's analytical bound, then emits the exact frame —
     // so it shares the exact oracle and a divergence beyond the bound
     // fails loudly at run time, not as a silent hash mismatch
     QueryDef("olap_rfm_segments_approx",
-      (s, dir) => rfmSegmentsApproxChecked(Warehouse(s, dir)), Some(q("""
-      , rcust AS (
-          SELECT customerid,
-                 max(CAST(sale_ts AS DATE)) AS last_date,
-                 count(DISTINCT invoiceid) AS n_orders,
-                 CAST(sum(CAST(totalamount * 100 AS BIGINT)) AS BIGINT) AS cents
-          FROM sales_final
-          WHERE customerid IS NOT NULL AND trim(customerid) <> ''
-          GROUP BY 1),
-      ranchor AS (SELECT max(last_date) AS anchor_date FROM rcust),
-      rq AS (
-          SELECT customerid, n_orders, cents,
-                 ntile(5) OVER (ORDER BY date_diff('day', last_date, anchor_date) ASC, customerid) AS r_quintile,
-                 ntile(5) OVER (ORDER BY n_orders DESC, customerid) AS f_quintile,
-                 ntile(5) OVER (ORDER BY cents DESC, customerid) AS m_quintile
-          FROM rcust, ranchor)
-      SELECT CAST(r_quintile AS INT) AS r_quintile,
-             CAST(f_quintile AS INT) AS f_quintile,
-             CAST(m_quintile AS INT) AS m_quintile,
-             count(*) AS n_customers, CAST(sum(cents) AS BIGINT) AS monetary_cents
-      FROM rq GROUP BY 1, 2, 3"""))),
+      (s, dir) => rfmSegmentsApproxChecked(Warehouse(s, dir)), Some(rfmSegmentsOracle)),
 
     QueryDef("olap_ltv_quartiles_approx",
-      (s, dir) => ltvQuartilesApproxChecked(Warehouse(s, dir)), Some(q("""
-      , ltv AS (
-          SELECT c.customerid, sum(f.totalamount) AS ltv
-          FROM fact_sales_elt f
-          JOIN dim_customer_elt c ON f.customer_key = c.customer_key
-          GROUP BY 1),
-        bucketed AS (
-          SELECT ltv, CAST(ntile(4) OVER (ORDER BY ltv DESC, customerid) AS INT) AS quartile
-          FROM ltv)
-      SELECT quartile, count(*) AS n_customers,
-             CAST(CAST(sum(ltv) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
-      FROM bucketed GROUP BY quartile"""))),
+      (s, dir) => ltvQuartilesApproxChecked(Warehouse(s, dir)), Some(ltvQuartilesOracle)),
 
-    QueryDef("olap_ltv_quartiles", (s, dir) => ltvQuartiles(Warehouse(s, dir)), Some(q("""
-      , ltv AS (
-          SELECT c.customerid, sum(f.totalamount) AS ltv
-          FROM fact_sales_elt f
-          JOIN dim_customer_elt c ON f.customer_key = c.customer_key
-          GROUP BY 1),
-        bucketed AS (
-          SELECT ltv, CAST(ntile(4) OVER (ORDER BY ltv DESC, customerid) AS INT) AS quartile
-          FROM ltv)
-      SELECT quartile, count(*) AS n_customers,
-             CAST(CAST(sum(ltv) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
-      FROM bucketed GROUP BY quartile"""))),
+    QueryDef("olap_ltv_quartiles", (s, dir) => ltvQuartiles(Warehouse(s, dir)),
+      Some(ltvQuartilesOracle)),
 
     QueryDef("olap_country_percentiles",
       (s, dir) => countryPercentiles(Warehouse(s, dir)), Some(q("""

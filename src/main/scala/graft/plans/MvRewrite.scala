@@ -119,15 +119,9 @@ object MvRewrite extends Rule[LogicalPlan] {
       distincts: Map[String, String] = Map.empty,
       counts: Map[String, String] = Map.empty,
       mins: Map[String, String] = Map.empty,
-      maxs: Map[String, String] = Map.empty): Unit = {
-    val mvPlan = mvDf.queryExecution.analyzed
-    val out = mvPlan.output.map(_.name).toSet
-    require((keys ++ sums.values ++ countCol ++ distincts.values ++
-      counts.values ++ mins.values ++ maxs.values).forall(out),
-      s"MV output ${out.mkString(",")} is missing registered columns")
-    registry.add(Registration(qualify(spark, basePath), mvPlan,
-      keys.toSet, sums, countCol, distincts, counts, mins, maxs))
-  }
+      maxs: Map[String, String] = Map.empty): Unit =
+    add(qualify(spark, basePath), None, mvDf, keys, sums, countCol, distincts,
+      counts, mins, maxs)
 
   /** Register `mvDf` as the serving summary for snapshot `version` of the
     * VERSIONED table at `root` (r16): the registration pins the snapshot's
@@ -140,17 +134,26 @@ object MvRewrite extends Rule[LogicalPlan] {
       distincts: Map[String, String] = Map.empty,
       counts: Map[String, String] = Map.empty,
       mins: Map[String, String] = Map.empty,
-      maxs: Map[String, String] = Map.empty): Unit = {
+      maxs: Map[String, String] = Map.empty): Unit =
+    add(qualify(spark, graft.sources.VersionedTable.dataDir(root)),
+      Some(graft.sources.VersionedTable.snapshotPathSet(spark, root, version)),
+      mvDf, keys, sums, countCol, distincts, counts, mins, maxs)
+
+  /** The one registration path: check that `mvDf` outputs every registered
+    * column, then add its registration. The base identity is by-name, so it
+    * is resolved only after the check passes. */
+  private def add(baseLocation: => String, baseFiles: => Option[Set[String]],
+      mvDf: DataFrame, keys: Seq[String], sums: Map[String, String],
+      countCol: Option[String], distincts: Map[String, String],
+      counts: Map[String, String], mins: Map[String, String],
+      maxs: Map[String, String]): Unit = {
     val mvPlan = mvDf.queryExecution.analyzed
     val out = mvPlan.output.map(_.name).toSet
     require((keys ++ sums.values ++ countCol ++ distincts.values ++
       counts.values ++ mins.values ++ maxs.values).forall(out),
       s"MV output ${out.mkString(",")} is missing registered columns")
-    registry.add(Registration(
-      qualify(spark, graft.sources.VersionedTable.dataDir(root)), mvPlan,
-      keys.toSet, sums, countCol, distincts, counts, mins, maxs,
-      baseFiles = Some(
-        graft.sources.VersionedTable.snapshotPathSet(spark, root, version))))
+    registry.add(Registration(baseLocation, mvPlan, keys.toSet, sums, countCol,
+      distincts, counts, mins, maxs, baseFiles))
   }
 
   def clear(): Unit = registry.clear()

@@ -293,14 +293,8 @@ object Maintenance extends graft.QueryRegistry {
       graft.plans.StatsPrune.servingScoped(s) {
         val q = VersionedTable.read(s, root)
           .filter(col("user_id") >= 0L && col("user_id") <= 2L)
-        val scanned = (q.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case pl => pl
-        }).collectFirst {
-          case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-            sc.relation.location.inputFiles.length
-        }
+        val scanned = graft.plans.PlanRuleSupport.fileScans(q.queryExecution.executedPlan)
+          .headOption.map(_.relation.location.inputFiles.length)
         require(scanned.exists(_ < nAfter),
           s"stats pruning must survive the maintenance pass (scanned $scanned of $nAfter)")
         q.agg(count(lit(1)).as("n_events"),

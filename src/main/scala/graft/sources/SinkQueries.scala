@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Warehouse
 import graft.{QueryDef, QueryRegistry, Scratch}
+import graft.plans.PlanRuleSupport
 
 /** Oracle-checked round trips for the write-path sinks (SURVEY.md §2.1
   * S3/S4/S5/S10) — the operators whose OUTPUT is a side effect rather than a
@@ -383,37 +384,52 @@ object SinkQueries extends QueryRegistry {
     * fired at plan level), and the oracle — the same repaired-and-filtered
     * state — proves the pruned scan lost nothing. */
   private def versionedStatsAuto(s: SparkSession, dir: String): DataFrame = {
-    val root = Scratch.dir("graft_sink_vtsa_") + "/t"
-    val code = col("stockcode").cast("long")
-    val p = Warehouse(s, dir).dimProduct
-      .select(col("stockcode"), col("unitprice"), col("category"))
-      .withColumn("code", code)
-    VersionedTable.create(s, root, p.repartitionByRange(8, col("code")))
-    require(VersionedStats.enable(s, root, Seq("code")) == 1,
-      "stats must publish for v1")
-    val maxCode = p.agg(max("code")).head().getLong(0)
-    val lo = maxCode / 10
-    require(VersionedTable.updateWhere(s, root, col("code") <= lo,
-      Map("unitprice" -> col("unitprice") * 2)) == 2, "repair must commit as v2")
+    val (root, p) = statsProductTable(s, dir, "graft_sink_vtsa_", Seq("code"))
+    val lo = repairLowTenth(s, root, p)
     VersionedStats.refresh(s, root)
     val total = VersionedTable.listSnapshotFiles(s, root, 2).count()
     graft.plans.StatsPrune.register(s, root)
-    try graft.plans.StatsPrune.servingScoped(s) {
-      val q = VersionedTable.read(s, root)
-        .filter(col("code") >= 0L && col("code") <= 2 * lo)
-      val scanned = (q.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case pl => pl
-      }).collectFirst {
-        case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-          sc.relation.location.inputFiles.length
-      }
-      require(scanned.exists(_ < total),
-        s"the rule must prune the plain filtered read (scanned $scanned of $total)")
-      q.select(col("stockcode"), col("unitprice").cast("double").as("unitprice"),
-        col("category"))
-    } finally graft.plans.StatsPrune.clear()
+    try graft.plans.StatsPrune.servingScoped(s)(
+      requirePrunedRead(s, root, lo, total, "the rule must prune the plain filtered read"))
+    finally graft.plans.StatsPrune.clear()
+  }
+
+  /** The product dim with a numeric `code` (its stockcode), committed as v1
+    * of a fresh versioned table range-clustered on `code` in 8 files, with
+    * stats published on `statsCols`. Returns the root and the dim frame. */
+  private def statsProductTable(s: SparkSession, dir: String, prefix: String,
+      statsCols: Seq[String]): (String, DataFrame) = {
+    val root = Scratch.dir(prefix) + "/t"
+    val p = Warehouse(s, dir).dimProduct
+      .select(col("stockcode"), col("unitprice"), col("category"))
+      .withColumn("code", col("stockcode").cast("long"))
+    VersionedTable.create(s, root, p.repartitionByRange(8, col("code")))
+    require(VersionedStats.enable(s, root, statsCols) == 1,
+      "stats must publish for v1")
+    (root, p)
+  }
+
+  /** The stats scenarios' repair: doubles the price of the lowest tenth of
+    * `p`'s codes as v2 of `root`. Returns that tenth's upper bound. */
+  private def repairLowTenth(s: SparkSession, root: String, p: DataFrame): Long = {
+    val lo = p.agg(max("code")).head().getLong(0) / 10
+    require(VersionedTable.updateWhere(s, root, col("code") <= lo,
+      Map("unitprice" -> col("unitprice") * 2)) == 2, "repair must commit as v2")
+    lo
+  }
+
+  /** The plain filtered read of codes [0, 2·lo] from the head of `root`,
+    * which must plan a scan of fewer than `total` files; fails with `what`
+    * and the scanned count otherwise. */
+  private def requirePrunedRead(s: SparkSession, root: String, lo: Long,
+      total: Long, what: String): DataFrame = {
+    val q = VersionedTable.read(s, root)
+      .filter(col("code") >= 0L && col("code") <= 2 * lo)
+    val scanned = PlanRuleSupport.fileScans(q.queryExecution.executedPlan)
+      .headOption.map(_.relation.location.inputFiles.length)
+    require(scanned.exists(_ < total), s"$what (scanned $scanned of $total)")
+    q.select(col("stockcode"), col("unitprice").cast("double").as("unitprice"),
+      col("category"))
   }
 
   /** Metadata-only aggregate serving (r15): a global count(*)/min/max
@@ -425,19 +441,12 @@ object SinkQueries extends QueryRegistry {
     * treatment in min/max, or an unmaintained stats row all
     * hash-mismatch. */
   private def versionedStatsMetaAgg(s: SparkSession, dir: String): DataFrame = {
-    val root = Scratch.dir("graft_sink_vtmeta_") + "/t"
-    val code = col("stockcode").cast("long")
-    val p = Warehouse(s, dir).dimProduct
-      .select(col("stockcode"), col("unitprice"), col("category"))
-      .withColumn("code", code)
-    VersionedTable.create(s, root, p.repartitionByRange(8, col("code")))
-    require(VersionedStats.enable(s, root, Seq("code", "unitprice")) == 1,
-      "stats must publish for v1")
+    val (root, _) = statsProductTable(s, dir, "graft_sink_vtmeta_", Seq("code", "unitprice"))
     graft.plans.StatsPrune.register(s, root)
     try {
       // DML behind the registration: the commit listener must refresh the
       // stats and re-pin, so the metadata answer reflects v2
-      require(VersionedTable.deleteWhere(s, root, code % 9 === 0) == 2,
+      require(VersionedTable.deleteWhere(s, root, col("code") % 9 === 0) == 2,
         "the delete must commit as v2")
       graft.plans.StatsPrune.servingScoped(s) {
         val q = VersionedTable.read(s, root)
@@ -445,14 +454,7 @@ object SinkQueries extends QueryRegistry {
             min("code").as("min_code"), max("code").as("max_code"),
             min("unitprice").cast("double").as("min_price"),
             max("unitprice").cast("double").as("max_price"))
-        val scanned = (q.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case pl => pl
-        }).collectFirst {
-          case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
-        }
-        require(scanned.isEmpty,
+        require(PlanRuleSupport.fileScans(q.queryExecution.executedPlan).isEmpty,
           "a metadata-served aggregate must open NO data file")
         q
       }
@@ -484,40 +486,16 @@ object SinkQueries extends QueryRegistry {
 
   private def statsAutoRegScenario(s: SparkSession, dir: String,
       crossProcess: Boolean): DataFrame = {
-    val root = Scratch.dir("graft_sink_vtsar_") + "/t"
-    val code = col("stockcode").cast("long")
-    val p = Warehouse(s, dir).dimProduct
-      .select(col("stockcode"), col("unitprice"), col("category"))
-      .withColumn("code", code)
-    VersionedTable.create(s, root, p.repartitionByRange(8, col("code")))
-    require(VersionedStats.enable(s, root, Seq("code")) == 1,
-      "stats must publish for v1")
+    val (root, p) = statsProductTable(s, dir, "graft_sink_vtsar_", Seq("code"))
     graft.plans.StatsPrune.register(s, root) // BEFORE the mutation
     try {
       if (crossProcess) graft.plans.StatsPrune.detachListenerKeepHeadCheck(root)
-      val maxCode = p.agg(max("code")).head().getLong(0)
-      val lo = maxCode / 10
-      require(VersionedTable.updateWhere(s, root, col("code") <= lo,
-        Map("unitprice" -> col("unitprice") * 2)) == 2, "repair must commit as v2")
+      val lo = repairLowTenth(s, root, p)
       // NO refresh, NO re-register — the commit hook (or, cross-process,
       // the plan-time head check) must do both
       val total = VersionedTable.listSnapshotFiles(s, root, 2).count()
-      graft.plans.StatsPrune.servingScoped(s) {
-        val q = VersionedTable.read(s, root)
-          .filter(col("code") >= 0L && col("code") <= 2 * lo)
-        val scanned = (q.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case pl => pl
-        }).collectFirst {
-          case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-            sc.relation.location.inputFiles.length
-        }
-        require(scanned.exists(_ < total),
-          s"the auto-refreshed registration must prune the v2 read (scanned $scanned of $total)")
-        q.select(col("stockcode"), col("unitprice").cast("double").as("unitprice"),
-          col("category"))
-      }
+      graft.plans.StatsPrune.servingScoped(s)(requirePrunedRead(s, root, lo, total,
+        "the auto-refreshed registration must prune the v2 read"))
     } finally graft.plans.StatsPrune.clear()
   }
 
@@ -620,18 +598,8 @@ object SinkQueries extends QueryRegistry {
     * The oracle spells the repaired-and-filtered state, so a stale stats
     * row, a wrongly-skipped file, or a lost update all hash-mismatch. */
   private def versionedStatsPrune(s: SparkSession, dir: String): DataFrame = {
-    val root = Scratch.dir("graft_sink_vtstats_") + "/t"
-    val code = col("stockcode").cast("long")
-    val p = Warehouse(s, dir).dimProduct
-      .select(col("stockcode"), col("unitprice"), col("category"))
-      .withColumn("code", code)
-    VersionedTable.create(s, root, p.repartitionByRange(8, col("code")))
-    require(VersionedStats.enable(s, root, Seq("code")) == 1,
-      "stats must publish for v1")
-    val maxCode = p.agg(max("code")).head().getLong(0)
-    val lo = maxCode / 10
-    require(VersionedTable.updateWhere(s, root, col("code") <= lo,
-      Map("unitprice" -> col("unitprice") * 2)) == 2, "repair must commit as v2")
+    val (root, p) = statsProductTable(s, dir, "graft_sink_vtstats_", Seq("code"))
+    val lo = repairLowTenth(s, root, p)
     def names(v: Int) = VersionedTable.snapshotFiles(s, root, v).toSet
     val (n1, n2) = (names(1), names(2))
     val dec = VersionedStats.refresh(s, root)

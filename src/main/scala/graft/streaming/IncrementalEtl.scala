@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.etl.{Transforms, Warehouse}
 import graft.oracle.OracleSql.q
+import graft.plans.PlanRuleSupport.requireServedFrom
 
 /** Incremental ETL: the reference's "Incremental ETL / Automated scheduling"
   * roadmap item (`README.md:180-184`, SURVEY.md §2.10) built Spark-first —
@@ -321,34 +322,17 @@ object IncrementalEtl extends QueryRegistry {
     base
   }
 
-  /** Self-assert that `out`'s optimized plan reads the maintained summary
-    * and never the base grain — the rewrite's firing is part of the gate. */
-  private def requireServedFromSummary(out: DataFrame): DataFrame = {
-    val scanned = out.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    require(scanned.exists(_.endsWith("/summary")),
-      s"query was not rewritten onto the maintained summary; scanned: ${scanned.mkString(", ")}")
-    require(!scanned.exists(_.endsWith("/grain")),
-      s"rewrite left a base-grain scan in the plan: ${scanned.mkString(", ")}")
-    out
-  }
-
   private def streamMvServingRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val base = mvServingScenario(s, dir)
     graft.plans.MvRewrite.servingScoped(s) {
-      requireServedFromSummary(
+      requireServedFrom(
         s.read.parquet(s"$base/grain")
           .groupBy("country")
           .agg(sum("totalamount").as("rev"), sum("quantity").as("total_quantity"))
           .select(col("country"), col("rev").cast("double").as("revenue"),
-            col("total_quantity")))
+            col("total_quantity")),
+        _.endsWith("/summary"), _.endsWith("/grain"))
     }
   }
 
@@ -364,10 +348,11 @@ object IncrementalEtl extends QueryRegistry {
     import org.apache.spark.sql.functions._
     val base = mvServingScenario(s, dir)
     graft.plans.MvRewrite.servingScoped(s, withApproxDistinct = true) {
-      requireServedFromSummary(
+      requireServedFrom(
         s.read.parquet(s"$base/grain")
           .groupBy("month", "country")
-          .agg(count_distinct(col("invoiceid")).as("order_count")))
+          .agg(count_distinct(col("invoiceid")).as("order_count")),
+        _.endsWith("/summary"), _.endsWith("/grain"))
     }
   }
 
@@ -382,13 +367,14 @@ object IncrementalEtl extends QueryRegistry {
     import org.apache.spark.sql.functions._
     val base = mvServingScenario(s, dir)
     graft.plans.MvRewrite.servingScoped(s) {
-      requireServedFromSummary(
+      requireServedFrom(
         s.read.parquet(s"$base/grain")
           .groupBy("country")
           .agg(avg("totalamount").cast("double").as("avg_amount"),
             min("totalamount").cast("double").as("min_amount"),
             max("totalamount").cast("double").as("max_amount"),
-            count(lit(1)).as("n_rows")))
+            count(lit(1)).as("n_rows")),
+        _.endsWith("/summary"), _.endsWith("/grain"))
     }
   }
 

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * probe or measurement main belongs under `src/test` or outside the repo;
   * this spec fails when one lands in `src/main`. It also keeps scratch
   * placement and the AvailableNow run in the one module that owns them,
-  * [[Scratch]]. */
+  * [[Scratch]], and the walk through adaptive plans in
+  * `graft.plans.PlanRuleSupport`. */
 class EntryPointsSpec extends AnyFunSuite {
   private val objectDecl = """\bobject\s+(\w+)""".r
   private val mainDecl = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
@@ -33,15 +34,27 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(mains.sorted == List("Bench", "CalibProbe", "PlanDump", "Verify"))
   }
 
-  test("src/main makes temp dirs and runs AvailableNow queries only through Scratch") {
-    val banned = Seq("createTempDirectory", "createTempFile", "Trigger.AvailableNow")
+  /** `file: token` for every `banned` token in a `src/main` file other
+    * than `owner`. */
+  private def usesOutside(owner: String, banned: Seq[String]): List[String] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
-    val hits = try walk.iterator.asScala
-      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Scratch.scala")
+    try walk.iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != owner)
       .flatMap { f =>
         val src = new String(Files.readAllBytes(f), "UTF-8")
         banned.filter(src.contains).map(b => s"$f: $b")
       }.toList finally walk.close()
+  }
+
+  test("src/main makes temp dirs and runs AvailableNow queries only through Scratch") {
+    val hits = usesOutside("Scratch.scala",
+      Seq("createTempDirectory", "createTempFile", "Trigger.AvailableNow"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main walks adaptive plans only through PlanRuleSupport") {
+    val hits = usesOutside("PlanRuleSupport.scala",
+      Seq("AdaptiveSparkPlanExec", "QueryStageExec"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

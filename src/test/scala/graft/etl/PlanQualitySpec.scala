@@ -73,17 +73,15 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("the native simhash kernel runs inside whole-stage codegen") {
-    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
     val q = graft.llm.TextOps.simhash(graft.llm.TextOps.docs(spark, sfDir))
     q.collect() // the spread repartition makes the plan adaptive — finalize it
-    def codegenWithKernel(p: SparkPlan): Boolean = p.exists {
-      case a: AdaptiveSparkPlanExec => codegenWithKernel(a.executedPlan)
-      case s: QueryStageExec => codegenWithKernel(s.plan)
-      case w: WholeStageCodegenExec => w.toString.contains("simhash64")
-      case _ => false
-    }
-    assert(codegenWithKernel(q.queryExecution.executedPlan),
+    val codegenWithKernel =
+      graft.plans.PlanRuleSupport.physicalNodes(q.queryExecution.executedPlan).exists {
+        case w: WholeStageCodegenExec => w.toString.contains("simhash64")
+        case _ => false
+      }
+    assert(codegenWithKernel,
       q.queryExecution.executedPlan.toString)
   }
 

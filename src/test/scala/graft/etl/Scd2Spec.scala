@@ -78,11 +78,9 @@ class Scd2Spec extends SparkSpec {
     // no maxFilesPerTrigger: both drops arrive in a single micro-batch and
     // correctness hangs on the per-as_of ascending driver loop
     val base = Scratch.dir("graft_scd2_onebatch_")
-    snap((1L, "a", 1.0), (2L, "b", 2.0)).withColumn("as_of", lit(T1))
-      .coalesce(1).write.parquet(s"$base/drops/a")
-    snap((1L, "a", 9.0)).withColumn("as_of", lit(T2))
-      .coalesce(1).write.parquet(s"$base/drops/b")
-    val q = Scd2.maintainHistory(spark, s"$base/drops/*",
+    Scratch.drop(snap((1L, "a", 1.0), (2L, "b", 2.0)).withColumn("as_of", lit(T1)), base, "a")
+    Scratch.drop(snap((1L, "a", 9.0)).withColumn("as_of", lit(T2)), base, "b")
+    val q = Scd2.maintainHistory(spark, s"$base/drops",
         Seq("id"), Seq("name", "price"), s"$base/history")
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -233,13 +231,13 @@ class Scd2Spec extends SparkSpec {
 
   test("streaming maintainer with in-stream compaction keeps history identical and segments bounded") {
     val base = Scratch.dir("graft_scd2_mcomp_")
-    snap((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).withColumn("as_of", lit(T1))
-      .coalesce(1).write.parquet(s"$base/drops/a")
-    snap((1L, "a", 9.0), (2L, "b", 2.0)).withColumn("as_of", lit(T2))
-      .coalesce(1).write.parquet(s"$base/drops/b")
-    snap((1L, "a", 9.0)).withColumn("as_of", lit(T3))
-      .coalesce(1).write.parquet(s"$base/drops/c")
-    val q = Scd2.maintainHistory(spark, s"$base/drops/*",
+    // one file per snapshot, landed oldest first: maxFilesPerTrigger = 1
+    // folds them one per trigger in that order
+    Scratch.drop(snap((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
+      .withColumn("as_of", lit(T1)), base, "a")
+    Scratch.drop(snap((1L, "a", 9.0), (2L, "b", 2.0)).withColumn("as_of", lit(T2)), base, "b")
+    Scratch.drop(snap((1L, "a", 9.0)).withColumn("as_of", lit(T3)), base, "c")
+    val q = Scd2.maintainHistory(spark, s"$base/drops",
         Seq("id"), Seq("name", "price"), s"$base/history",
         maxFilesPerTrigger = Some(1), compactAtSegments = Some(2))
       .option("checkpointLocation", s"$base/ckpt")

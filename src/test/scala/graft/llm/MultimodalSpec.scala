@@ -18,19 +18,12 @@ class MultimodalSpec extends SparkSpec {
     * r18 second review; ReusedExchangeExec is a leaf alias, checked by its
     * own output). */
   private def assertPayloadLocal(df: org.apache.spark.sql.Dataset[_]): Unit = {
-    def exchanges(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        exchanges(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        exchanges(s.plan)
-      case e: org.apache.spark.sql.execution.exchange.Exchange =>
-        e +: e.children.flatMap(exchanges)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        Seq(r)
-      case other => other.children.flatMap(exchanges)
-    }
-    exchanges(df.queryExecution.executedPlan).foreach { e =>
+    val exchanges = graft.plans.PlanRuleSupport.physicalNodes(df.queryExecution.executedPlan)
+      .collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+      }
+    exchanges.foreach { e =>
       assert(e.output.map(_.name) == Seq("doc_id"),
         s"payload-bearing exchange in a decode plan (${e.nodeName}): " +
           e.output.map(_.name))

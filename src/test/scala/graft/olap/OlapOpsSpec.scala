@@ -92,16 +92,10 @@ class OlapOpsSpec extends SparkSpec {
     // wrapper and query-stage leaves — a bare collect over an
     // AdaptiveSparkPlanExec inspects only the leaf wrapper and can never
     // fail (r18 review).
-    def windowsIn(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.window.WindowExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        windowsIn(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        windowsIn(s.plan)
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w +: w.children.flatMap(windowsIn)
-      case other => other.children.flatMap(windowsIn)
-    }
+    def windowsIn(p: org.apache.spark.sql.execution.SparkPlan) =
+      graft.plans.PlanRuleSupport.physicalNodes(p).collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
     // negative control first: the EXACT form must show its NTILE window,
     // proving the traversal actually sees windows
     val exact = Olap.rfmSegments(wh)

@@ -1,8 +1,7 @@
 package graft.perf
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 
 import graft.SparkSpec
 import graft.etl.Warehouse
@@ -41,12 +40,10 @@ class SkewSpec extends SparkSpec {
       assert(row.getLong(0) === 20000L && row.getLong(1) === 20000L * 32)
       // query stages are leaf nodes wrapping their stage plan — recurse into
       // them or the traversal stops at the ResultQueryStage
-      def skewedReads(p: SparkPlan): Seq[AQEShuffleReadExec] = p.collect {
-        case a: AdaptiveSparkPlanExec => skewedReads(a.executedPlan)
-        case q: QueryStageExec => skewedReads(q.plan)
-        case r: AQEShuffleReadExec if r.hasSkewedPartition => Seq(r)
-      }.flatten
-      assert(skewedReads(joined.queryExecution.executedPlan).nonEmpty,
+      val skewedReads = graft.plans.PlanRuleSupport
+        .physicalNodes(joined.queryExecution.executedPlan)
+        .collect { case r: AQEShuffleReadExec if r.hasSkewedPartition => r }
+      assert(skewedReads.nonEmpty,
         joined.queryExecution.executedPlan.toString)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -1,18 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.{Scratch, SparkSpec}
 
 class InferYearBoundsSpec extends SparkSpec {
-
-  private def fileScan(plan: SparkPlan): FileSourceScanExec =
-    (plan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).collect { case s: FileSourceScanExec => s }.head
 
   private def withRule[A](f: => A): A = {
     spark.experimental.extraOptimizations = Seq(InferYearBoundsFromDateKey)
@@ -43,7 +35,7 @@ class InferYearBoundsSpec extends SparkSpec {
     withRule {
       val pruned = q()
       assert(pruned.head.getDouble(0) == expected)
-      val scan = fileScan(pruned.queryExecution.executedPlan)
+      val scan = PlanRuleSupport.fileScans(pruned.queryExecution.executedPlan).head
       assert(scan.metadata("PartitionFilters").contains("year"),
         scan.metadata("PartitionFilters"))
       assert(scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
@@ -57,7 +49,7 @@ class InferYearBoundsSpec extends SparkSpec {
     withRule {
       val pruned = spark.read.parquet(dir).filter(col("date_key") === 19970520140000L)
       assert(pruned.select("amount").collect().map(_.getDouble(0)).toSeq == Seq(30.0))
-      val scan = fileScan(pruned.queryExecution.executedPlan)
+      val scan = PlanRuleSupport.fileScans(pruned.queryExecution.executedPlan).head
       assert(scan.metadata("PartitionFilters").contains("year"))
     }
   }
@@ -89,7 +81,7 @@ class InferYearBoundsSpec extends SparkSpec {
         .filter(col("date_key").between(19960101000000L, 19961231235959L))
         .agg(sum("amount").as("rev"))
       assert(q.head.getDouble(0) == 45.0)
-      val scan = fileScan(q.queryExecution.executedPlan)
+      val scan = PlanRuleSupport.fileScans(q.queryExecution.executedPlan).head
       assert(!scan.metadata("PartitionFilters").contains("year"),
         scan.metadata("PartitionFilters"))
     } finally spark.experimental.extraOptimizations = Nil

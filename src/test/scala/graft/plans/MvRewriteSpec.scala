@@ -1,24 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.{Scratch, SparkSpec}
+import PlanRuleSupport.scanRoots
 
 /** The MV-rewrite contract: aggregates derivable from the registered
   * summary reroute to it (and only those), results are identical either
   * route, and the rule is inert without its flag / registration. */
 class MvRewriteSpec extends SparkSpec {
   import spark.implicits._
-
-  private def scannedPaths(df: DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
-        case _ => Seq.empty[String]
-      }
-    }.flatten
 
   private def withMv[A](f: String => A): A = {
     val base = Scratch.dir("graft_mvspec_")
@@ -53,7 +44,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(sum("amount").as("rev"), sum("qty").as("tq"), count(lit(1)).as("n"))
         .select(col("c"), col("rev").cast("double").as("rev"), col("tq"), col("n"))
       val rewritten = query()
-      assert(scannedPaths(rewritten).forall(_.endsWith("/mv")), scannedPaths(rewritten))
+      assert(scanRoots(rewritten).forall(_.endsWith("/mv")), scanRoots(rewritten))
       val served = rewritten.as[(String, Double, Long, Long)].collect().toSet
       val direct = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
@@ -69,7 +60,7 @@ class MvRewriteSpec extends SparkSpec {
     withMv { base =>
       val q = spark.read.parquet(s"$base/grain").groupBy("k", "c")
         .agg(sum("qty").as("tq"))
-      assert(scannedPaths(q).forall(_.endsWith("/mv")))
+      assert(scanRoots(q).forall(_.endsWith("/mv")))
       assert(q.select(sum("tq")).as[Long].head() === (1L to 100L).map(_ * 2).sum)
     }
   }
@@ -79,18 +70,18 @@ class MvRewriteSpec extends SparkSpec {
       val grain = spark.read.parquet(s"$base/grain")
       // count distinct is not re-aggregable
       val cd = grain.groupBy("c").agg(count_distinct(col("qty")).as("d"))
-      assert(scannedPaths(cd).forall(_.endsWith("/grain")), scannedPaths(cd))
+      assert(scanRoots(cd).forall(_.endsWith("/grain")), scanRoots(cd))
       // min has a registered partial for amount but NOT for qty
       val mn = grain.groupBy("c").agg(min("qty").as("m"))
-      assert(scannedPaths(mn).forall(_.endsWith("/grain")))
+      assert(scanRoots(mn).forall(_.endsWith("/grain")))
       // count(NULL) is constantly 0, not the row count — it must never
       // route onto the Σ n_rows partial (ADVICE r11)
       val cn = grain.groupBy("c").agg(count(lit(null)).as("z"))
-      assert(scannedPaths(cn).forall(_.endsWith("/grain")), scannedPaths(cn))
+      assert(scanRoots(cn).forall(_.endsWith("/grain")), scanRoots(cn))
       assert(cn.as[(String, Long)].collect().forall(_._2 === 0L))
       // grouping by a non-key (measure) column must not reroute
       val ng = grain.groupBy("qty").agg(sum("amount").as("s"))
-      assert(scannedPaths(ng).forall(_.endsWith("/grain")))
+      assert(scanRoots(ng).forall(_.endsWith("/grain")))
     }
   }
 
@@ -101,7 +92,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(avg("amount").as("avg_dec"), avg("qty").as("avg_int"),
           min("amount").as("mn"), max("amount").as("mx"))
       val rewritten = query()
-      assert(scannedPaths(rewritten).forall(_.endsWith("/mv")), scannedPaths(rewritten))
+      assert(scanRoots(rewritten).forall(_.endsWith("/mv")), scanRoots(rewritten))
       val direct = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
         try query().collect().toSet
@@ -116,7 +107,7 @@ class MvRewriteSpec extends SparkSpec {
       val dbl = spark.read.parquet(s"$base/grain")
         .withColumn("amount", col("amount").cast("double"))
         .groupBy("c").agg(avg("amount").as("a"))
-      assert(scannedPaths(dbl).forall(_.endsWith("/grain")))
+      assert(scanRoots(dbl).forall(_.endsWith("/grain")))
     }
   }
 
@@ -128,7 +119,7 @@ class MvRewriteSpec extends SparkSpec {
       def query() = grain.filter(col("k") >= 3L)
         .groupBy("c").agg(sum("qty").as("tq"), count(lit(1)).as("n"))
       val rr = query()
-      assert(scannedPaths(rr).forall(_.endsWith("/mv")), scannedPaths(rr))
+      assert(scanRoots(rr).forall(_.endsWith("/mv")), scanRoots(rr))
       val direct = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
         try query().as[(String, Long, Long)].collect().toSet
@@ -139,11 +130,11 @@ class MvRewriteSpec extends SparkSpec {
         (1L to 100L).count(i => i % 7 >= 3).toLong)
       // a predicate on a MEASURE filters rows inside a cell — not derivable
       val mf = grain.filter(col("qty") > 50L).groupBy("c").agg(sum("qty").as("t"))
-      assert(scannedPaths(mf).forall(_.endsWith("/grain")), scannedPaths(mf))
+      assert(scanRoots(mf).forall(_.endsWith("/grain")), scanRoots(mf))
       // a nondeterministic predicate never reroutes, even when it touches
       // no measure column (rand() < 1 gets constant-folded; .999999 doesn't)
       val nd = grain.filter(rand() < 0.999999).groupBy("c").agg(sum("qty").as("t"))
-      assert(scannedPaths(nd).forall(_.endsWith("/grain")), scannedPaths(nd))
+      assert(scanRoots(nd).forall(_.endsWith("/grain")), scanRoots(nd))
     }
   }
 
@@ -159,7 +150,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.conf.set(MvRewrite.EnabledKey, "true")
     try {
       val g = spark.read.parquet(s"$base/grain").agg(count(lit(1)).as("n"))
-      assert(scannedPaths(g).forall(_.endsWith("/mv")), scannedPaths(g))
+      assert(scanRoots(g).forall(_.endsWith("/mv")), scanRoots(g))
       assert(!g.schema("n").nullable)
       assert(g.as[Long].head() === 0L)
     } finally {
@@ -174,7 +165,7 @@ class MvRewriteSpec extends SparkSpec {
       def agg1 = spark.read.parquet(s"$base/grain").groupBy("c")
         .agg(sum("amount").as("v"))
       val u = agg1.union(agg1)
-      assert(scannedPaths(u).forall(_.endsWith("/mv")), scannedPaths(u))
+      assert(scanRoots(u).forall(_.endsWith("/mv")), scanRoots(u))
       val got = u.groupBy("c").agg(sum("v").cast("double").as("t"))
         .as[(String, Double)].collect().toMap
       val expect = (1L to 100L).groupBy(i => s"c${i % 3}")
@@ -201,10 +192,10 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count_distinct(col("inv")).as("d"))
       // without the approx opt-in, a distinct count NEVER reroutes — the
       // semantics change requires its own flag, not just a registration
-      assert(scannedPaths(q()).forall(_.endsWith("/grain")))
+      assert(scanRoots(q()).forall(_.endsWith("/grain")))
       spark.conf.set(MvRewrite.ApproxDistinctKey, "true")
       val served = q()
-      assert(scannedPaths(served).forall(_.endsWith("/mv")), scannedPaths(served))
+      assert(scanRoots(served).forall(_.endsWith("/mv")), scanRoots(served))
       // sparse-regime exactness: the estimate equals the exact count
       val got = served.as[(String, Long)].collect().toMap
       val exact = Map("c0" -> 40L, "c1" -> 40L, "c2" -> 40L)
@@ -228,7 +219,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(sum("qty").as("tq"), count(lit(1)).as("n"))
         .filter(col("tq") > 3350L)
       val rr = query()
-      assert(scannedPaths(rr).forall(_.endsWith("/mv")), scannedPaths(rr))
+      assert(scanRoots(rr).forall(_.endsWith("/mv")), scanRoots(rr))
       val direct = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
         try query().as[(String, Long, Long)].collect().toSet
@@ -252,7 +243,7 @@ class MvRewriteSpec extends SparkSpec {
           min("amount").as("mn"), count(lit(1)).as("n"),
           grouping_id().as("gid"))
       val rr = query()
-      assert(scannedPaths(rr).forall(_.endsWith("/mv")), scannedPaths(rr))
+      assert(scanRoots(rr).forall(_.endsWith("/mv")), scanRoots(rr))
       val direct = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
         try query().collect().toSet
@@ -266,11 +257,11 @@ class MvRewriteSpec extends SparkSpec {
       // cube and a coarser one-key rollup take the same path
       val cube = spark.read.parquet(s"$base/grain")
         .cube("k", "c").agg(sum("qty").as("tq"))
-      assert(scannedPaths(cube).forall(_.endsWith("/mv")), scannedPaths(cube))
+      assert(scanRoots(cube).forall(_.endsWith("/mv")), scanRoots(cube))
       assert(cube.count() === (7 * 3 + 7 + 3 + 1))
       val r1 = spark.read.parquet(s"$base/grain")
         .rollup("c").agg(sum("qty").as("tq"))
-      assert(scannedPaths(r1).forall(_.endsWith("/mv")))
+      assert(scanRoots(r1).forall(_.endsWith("/mv")))
       assert(r1.filter(col("c").isNull).as[(String, Long)].head()._2 ===
         (1L to 100L).map(_ * 2).sum)
     }
@@ -281,10 +272,10 @@ class MvRewriteSpec extends SparkSpec {
       val grain = spark.read.parquet(s"$base/grain")
       // rollup over a measure column is not replayable on the summary
       val mr = grain.rollup("c", "qty").agg(sum("amount").as("s"))
-      assert(scannedPaths(mr).forall(_.endsWith("/grain")), scannedPaths(mr))
+      assert(scanRoots(mr).forall(_.endsWith("/grain")), scanRoots(mr))
       // a non-derivable aggregate disqualifies the whole rollup
       val cd = grain.rollup("k", "c").agg(count_distinct(col("qty")).as("d"))
-      assert(scannedPaths(cd).forall(_.endsWith("/grain")), scannedPaths(cd))
+      assert(scanRoots(cd).forall(_.endsWith("/grain")), scanRoots(cd))
     }
   }
 
@@ -302,8 +293,8 @@ class MvRewriteSpec extends SparkSpec {
           count(lit(1)).as("n"))
       for (jt <- Seq("inner", "left")) {
         val rr = query(jt)
-        assert(scannedPaths(rr).exists(_.endsWith("/mv")), (jt, scannedPaths(rr)))
-        assert(!scannedPaths(rr).exists(_.endsWith("/grain")), jt)
+        assert(scanRoots(rr).exists(_.endsWith("/mv")), (jt, scanRoots(rr)))
+        assert(!scanRoots(rr).exists(_.endsWith("/grain")), jt)
         val direct = {
           spark.conf.set(MvRewrite.EnabledKey, "false")
           try query(jt).collect().toSet
@@ -315,7 +306,7 @@ class MvRewriteSpec extends SparkSpec {
       val mixed = spark.read.parquet(s"$base/grain")
         .join(spark.read.parquet(dimPath), Seq("c"), "inner")
         .groupBy("region", "k").agg(sum("qty").as("tq"))
-      assert(scannedPaths(mixed).exists(_.endsWith("/mv")), scannedPaths(mixed))
+      assert(scanRoots(mixed).exists(_.endsWith("/mv")), scanRoots(mixed))
       assert(mixed.select(sum("tq")).as[Long].head() === (1L to 100L).map(_ * 2).sum)
       // a non-unique dim key duplicates cells exactly as it duplicated rows
       val dup = dim.union(Seq(("c1", "north")).toDF("c", "region"))
@@ -324,7 +315,7 @@ class MvRewriteSpec extends SparkSpec {
         .join(spark.read.parquet(s"$base/dimdup"), Seq("c"), "inner")
         .groupBy("region").agg(sum("qty").as("tq"), count(lit(1)).as("n"))
       val rrD = dupQ()
-      assert(scannedPaths(rrD).exists(_.endsWith("/mv")))
+      assert(scanRoots(rrD).exists(_.endsWith("/mv")))
       val directD = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
         try dupQ().as[(String, Long, Long)].collect().toSet
@@ -352,8 +343,8 @@ class MvRewriteSpec extends SparkSpec {
         FROM mvspec_grain g JOIN mvspec_dim d USING (c)
         GROUP BY ROLLUP (region, k)""")
       val rr = query()
-      assert(scannedPaths(rr).exists(_.endsWith("/mv")), scannedPaths(rr))
-      assert(!scannedPaths(rr).exists(_.endsWith("/grain")))
+      assert(scanRoots(rr).exists(_.endsWith("/mv")), scanRoots(rr))
+      assert(!scanRoots(rr).exists(_.endsWith("/grain")))
       val direct = {
         spark.conf.set(MvRewrite.EnabledKey, "false")
         try query().collect().toSet
@@ -368,7 +359,7 @@ class MvRewriteSpec extends SparkSpec {
         SELECT region, qty, sum(amount) AS s
         FROM mvspec_grain g JOIN mvspec_dim d USING (c)
         GROUP BY ROLLUP (region, qty)""")
-      assert(scannedPaths(bad).forall(p => !p.endsWith("/mv")), scannedPaths(bad))
+      assert(scanRoots(bad).forall(p => !p.endsWith("/mv")), scanRoots(bad))
     }
   }
 
@@ -380,21 +371,21 @@ class MvRewriteSpec extends SparkSpec {
       // join on a MEASURE column: cells cannot replay it — stays on base
       val mj = spark.read.parquet(s"$base/grain").join(dimQ, Seq("qty"), "inner")
         .groupBy("cls").agg(sum("amount").as("s"))
-      assert(scannedPaths(mj).forall(p => !p.endsWith("/mv")), scannedPaths(mj))
+      assert(scanRoots(mj).forall(p => !p.endsWith("/mv")), scanRoots(mj))
       // an aggregate over a DIM column sees per-row duplication — declines
       val dimC = Seq(("c0", 5L), ("c1", 6L), ("c2", 7L)).toDF("c", "wt")
       dimC.write.parquet(s"$base/dimc")
       val da = spark.read.parquet(s"$base/grain")
         .join(spark.read.parquet(s"$base/dimc"), Seq("c"), "inner")
         .groupBy("k").agg(sum("wt").as("s"))
-      assert(scannedPaths(da).forall(p => !p.endsWith("/mv")), scannedPaths(da))
+      assert(scanRoots(da).forall(p => !p.endsWith("/mv")), scanRoots(da))
       // RIGHT OUTER keeps unmatched dim rows — count(*) is not derivable
       val dimR = Seq(("c0", "west"), ("cX", "ghost")).toDF("c", "region")
       dimR.write.parquet(s"$base/dimr")
       val ro = spark.read.parquet(s"$base/grain")
         .join(spark.read.parquet(s"$base/dimr"), Seq("c"), "right")
         .groupBy("region").agg(count(lit(1)).as("n"))
-      assert(scannedPaths(ro).forall(p => !p.endsWith("/mv")), scannedPaths(ro))
+      assert(scanRoots(ro).forall(p => !p.endsWith("/mv")), scanRoots(ro))
       assert(ro.filter(col("region") === "ghost").as[(String, Long)].head()._2 === 1L)
     }
   }
@@ -403,13 +394,13 @@ class MvRewriteSpec extends SparkSpec {
     withMv { base =>
       spark.conf.set(MvRewrite.EnabledKey, "false")
       val q = spark.read.parquet(s"$base/grain").groupBy("c").agg(sum("qty").as("t"))
-      assert(scannedPaths(q).forall(_.endsWith("/grain")))
+      assert(scanRoots(q).forall(_.endsWith("/grain")))
       spark.conf.set(MvRewrite.EnabledKey, "true")
       // a foreign parquet table with matching column names is untouched
       val other = Scratch.dir("graft_mvother_") + "/t"
       (1L to 10L).map(i => (s"c${i % 2}", i)).toDF("c", "qty").write.parquet(other)
       val fq = spark.read.parquet(other).groupBy("c").agg(sum("qty").as("t"))
-      assert(scannedPaths(fq).forall(p => !p.endsWith("/mv")))
+      assert(scanRoots(fq).forall(p => !p.endsWith("/mv")))
       assert(fq.select(sum("t")).as[Long].head() === 55L)
     }
   }
@@ -423,7 +414,7 @@ class MvRewriteSpec extends SparkSpec {
         .toDF("k", "c", "amount", "qty").write.parquet(extra)
       val q = spark.read.parquet(s"$base/grain", extra)
         .groupBy("c").agg(sum("qty").as("t"))
-      assert(scannedPaths(q).forall(p => !p.endsWith("/mv")), scannedPaths(q))
+      assert(scanRoots(q).forall(p => !p.endsWith("/mv")), scanRoots(q))
       assert(q.filter(col("c") === "cX").select("t").as[Long].head() === 10L)
     }
   }
@@ -437,13 +428,13 @@ class MvRewriteSpec extends SparkSpec {
       val inAgg = spark.read.parquet(s"$base/grain")
         .groupBy(col("c")).agg(col("c").as("cat"), sum("qty").as("t"))
         .select("cat", "t")
-      assert(scannedPaths(inAgg).forall(_.endsWith("/mv")), scannedPaths(inAgg))
+      assert(scanRoots(inAgg).forall(_.endsWith("/mv")), scanRoots(inAgg))
       val served = inAgg.as[(String, Long)].collect().toSet
       spark.conf.set(MvRewrite.EnabledKey, "false")
       val direct = try inAgg.as[(String, Long)].collect().toSet
         finally spark.conf.set(MvRewrite.EnabledKey, "true")
       assert(served === direct && served.nonEmpty)
-      assert(scannedPaths(query()).forall(_.endsWith("/mv")))
+      assert(scanRoots(query()).forall(_.endsWith("/mv")))
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.{Scratch, SparkSpec}
 import graft.sources.{VersionedStats, VersionedTable}
@@ -12,17 +11,9 @@ import graft.sources.{VersionedStats, VersionedTable}
 class StatsPruneSpec extends SparkSpec {
   import spark.implicits._
 
-  private def scanFiles(df: org.apache.spark.sql.DataFrame): Option[Int] = {
-    // unwrap AQE: AdaptiveSparkPlanExec hides its subtree from collect
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    plan.collectFirst {
-      case s: FileSourceScanExec => s.relation.location.inputFiles.length
-    }
-  }
+  private def scanFiles(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    PlanRuleSupport.fileScans(df.queryExecution.executedPlan).headOption
+      .map(_.relation.location.inputFiles.length)
 
   private def mkRegistered(prefix: String): String = {
     val root = Scratch.dir(prefix) + "/t"

@@ -1,11 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.{Scratch, SparkSpec}
 import graft.etl.Warehouse
+import graft.plans.PlanRuleSupport
 
 /** Co-located joins over bucketed layouts must plan without a shuffle. */
 class BucketedJoinSpec extends SparkSpec {
@@ -27,14 +27,16 @@ class BucketedJoinSpec extends SparkSpec {
     val rows = joined.collect()
     assert(rows.nonEmpty)
 
-    val plan = joined.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val joinShuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    // one line per node of the executed plan, query stages included
+    def nodeLines(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      PlanRuleSupport.physicalNodes(df.queryExecution.executedPlan)
+        .map(_.simpleString(Int.MaxValue))
+    val plan = joined.queryExecution.executedPlan.toString
+    val joinShuffles = PlanRuleSupport.physicalNodes(joined.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeExec => e }
     // the only exchange allowed is the final groupBy("category") shuffle
-    assert(joinShuffles.size <= 1, plan.toString)
-    assert(!plan.toString.contains("hashpartitioning(product_key"), plan.toString)
+    assert(joinShuffles.size <= 1, plan)
+    assert(!nodeLines(joined).exists(_.contains("hashpartitioning(product_key")), plan)
     // the sorted-bucket ordering guarantee (r19): Spark 3+ only propagates
     // a bucketed scan's sort order when the deployment opts in (the
     // planner must list files to prove one-file-per-bucket — that listing
@@ -45,29 +47,23 @@ class BucketedJoinSpec extends SparkSpec {
     val orderingFlag = "spark.sql.legacy.bucketedTableScan.outputOrdering"
     spark.conf.set(orderingFlag, "true")
     try {
-      def planOf(df: org.apache.spark.sql.DataFrame) = {
+      def keySorts(df: org.apache.spark.sql.DataFrame) = {
         df.collect()
-        df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
+        nodeLines(df).exists(l => l.contains("Sort [") && l.contains("product_key"))
       }
-      def keySorts(p: org.apache.spark.sql.execution.SparkPlan) =
-        p.toString.linesIterator.exists(l =>
-          l.contains("Sort [") && l.contains("product_key"))
-      val sortedJoin = planOf(spark.table("fact_bucketed")
+      val sortedJoin = spark.table("fact_bucketed")
         .join(spark.table("products_bucketed").hint("MERGE"),
           Seq("product_key"))
-        .groupBy("category").agg(sum("totalamount").as("rev")))
-      assert(!keySorts(sortedJoin), sortedJoin.toString)
+        .groupBy("category").agg(sum("totalamount").as("rev"))
+      assert(!keySorts(sortedJoin), sortedJoin.queryExecution.executedPlan.toString)
       Sources.bucketTable(
         w.dimProduct.select("product_key", "category"),
         "products_bucketed_nosort", buckets = 4, key = "product_key")
-      val unsortedJoin = planOf(spark.table("fact_bucketed")
+      val unsortedJoin = spark.table("fact_bucketed")
         .join(spark.table("products_bucketed_nosort").hint("MERGE"),
           Seq("product_key"))
-        .groupBy("category").agg(sum("totalamount").as("rev")))
-      assert(keySorts(unsortedJoin), unsortedJoin.toString)
+        .groupBy("category").agg(sum("totalamount").as("rev"))
+      assert(keySorts(unsortedJoin), unsortedJoin.queryExecution.executedPlan.toString)
     } finally spark.conf.set(orderingFlag, "false")
 
     spark.sql("DROP TABLE IF EXISTS fact_bucketed")

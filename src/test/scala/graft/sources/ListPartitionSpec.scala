@@ -37,9 +37,7 @@ class ListPartitionSpec extends SparkSpec {
 
     // the scan's file listing under the partition filter touches ONLY the
     // target directory — the PG "only the Online partition is scanned" check
-    val scan = pruned.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.get
+    val scan = graft.plans.PlanRuleSupport.fileScans(pruned.queryExecution.executedPlan).head
     val files = scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
       .flatMap(_.files.map(_.getPath.toString))
     assert(files.nonEmpty)

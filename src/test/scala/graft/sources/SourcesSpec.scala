@@ -33,16 +33,16 @@ class SourcesSpec extends SparkSpec {
   test("readEvolved merges schema versions; readAs null-fills identically with no footer scan") {
     import spark.implicits._
     val dir = Scratch.dir("graft_evo")
-    Seq((1L, "x")).toDF("id", "a").write.parquet(s"$dir/drops/v1")
-    Seq((2L, "y", 9.0)).toDF("id", "a", "b").write.parquet(s"$dir/drops/v2")
-    val merged = Sources.readEvolved(spark, s"$dir/drops/*")
+    Scratch.drop(Seq((1L, "x")).toDF("id", "a"), dir, "v1")
+    Scratch.drop(Seq((2L, "y", 9.0)).toDF("id", "a", "b"), dir, "v2")
+    val merged = Sources.readEvolved(spark, s"$dir/drops")
     assert(merged.columns.toSet === Set("id", "a", "b"))
     val rows = merged.select("id", "a", "b").collect()
       .map(r => (r.getLong(0), r.getString(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
       .toSet
     assert(rows === Set((1L, "x", None), (2L, "y", Some(9.0))))
     // the explicit-schema scale path reads the same frame
-    val explicit = Sources.readAs(spark, merged.schema, s"$dir/drops/*")
+    val explicit = Sources.readAs(spark, merged.schema, s"$dir/drops")
       .select(merged.columns.map(org.apache.spark.sql.functions.col): _*)
     assert(explicit.collect().map(_.toString).sorted ===
       merged.select(merged.columns.map(org.apache.spark.sql.functions.col): _*)

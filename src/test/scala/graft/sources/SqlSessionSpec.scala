@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.{Scratch, SparkSpec}
+import graft.plans.PlanRuleSupport
 
 /** The `spark.sql` statement integration: with `GraftExtensions` on the
   * session, registered versioned tables are first-class in plain SQL —
@@ -82,15 +83,8 @@ class SqlSessionSpec extends SparkSpec {
         val q = s2.sql(
           "SELECT sum(id) AS s FROM sess_pruned WHERE id BETWEEN 1 AND 10")
         assert(q.head().getLong(0) == 55L)
-        val plan = q.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case p => p
-        }
-        val opened = plan.collectFirst {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-            s.relation.location.inputFiles.length
-        }
+        val opened = PlanRuleSupport.fileScans(q.queryExecution.executedPlan)
+          .headOption.map(_.relation.location.inputFiles.length)
         assert(opened.exists(_ < 4),
           s"the extension-session scan must open a stats-pruned file subset (got $opened of 4)")
       } finally s2.conf.unset(graft.plans.StatsPrune.EnabledKey)
@@ -122,14 +116,7 @@ class SqlSessionSpec extends SparkSpec {
           SELECT c, CAST(sum(amount) AS DOUBLE) AS rev, count(1) AS n
           FROM sess_mv GROUP BY c""")
         val routed = q()
-        val scanned = routed.queryExecution.optimizedPlan.collect {
-          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            lr.relation match {
-              case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-              case _ => Seq.empty[String]
-            }
-        }.flatten
+        val scanned = PlanRuleSupport.scanRoots(routed)
         assert(scanned.nonEmpty && scanned.forall(_.endsWith("/mv")),
           s"the extension-session aggregate must serve from the MV (scanned $scanned)")
         val served = routed.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet

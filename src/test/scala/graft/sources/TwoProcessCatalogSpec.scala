@@ -70,15 +70,8 @@ class TwoProcessCatalogSpec extends SparkSpec {
         val q = s2.sql(
           "SELECT sum(id) AS s FROM twoproc_t WHERE id BETWEEN 90 AND 100")
         assert(q.head().getLong(0) === (90L to 100L).sum)
-        val plan = q.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case p => p
-        }
-        val opened = plan.collectFirst {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-            s.relation.location.inputFiles.length
-        }
+        val opened = graft.plans.PlanRuleSupport.fileScans(q.queryExecution.executedPlan)
+          .headOption.map(_.relation.location.inputFiles.length)
         assert(opened.exists(_ < 4),
           s"post-child-DML pruned scan must skip files (opened $opened of 4)")
       } finally s2.conf.unset(graft.plans.StatsPrune.EnabledKey)
