@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.oracle.OracleSql.{q => oq}
+import graft.sources.MetaFile
+import graft.sources.MetaFile.fsOf
 
 /** Type-2 slowly-changing-dimension maintenance (beyond parity — the
   * reference keeps current-state dims only, with keep-latest dedup:
@@ -170,47 +172,29 @@ object Scd2 extends QueryRegistry {
     * read. */
   private final case class Commit(fold: Int, asOf: String, segs: Seq[String])
 
-  private def fsOf(spark: SparkSession, root: String) = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  private def commitPath(root: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(root, "_commit")
 
+  // the swap window (tmp written, old commit deleted, rename pending) rolls
+  // forward on read, so the committed fold is never lost
   private def readCommit(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Commit] = {
-    val c = new org.apache.hadoop.fs.Path(root, "_commit")
-    val tmp = new org.apache.hadoop.fs.Path(root, "_commit.tmp")
-    // the swap window: tmp written, old commit deleted, rename pending —
-    // roll the tmp forward so the committed fold is never lost
-    if (!fs.exists(c) && fs.exists(tmp)) fs.rename(tmp, c)
-    if (!fs.exists(c)) None
-    else {
-      val in = fs.open(c)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      root: org.apache.hadoop.fs.Path): Option[Commit] =
+    MetaFile.readSwapped(fs, commitPath(root)).map { txt =>
       txt.split("\n").toList match {
         case fold :: asOf :: rest =>
           val segs = rest.find(_.startsWith("segs:"))
             .map(_.stripPrefix("segs:").split(",").map(_.trim).filter(_.nonEmpty).toSeq)
             .getOrElse(Seq.empty)
-          Some(Commit(fold.trim.toInt, asOf.trim, segs))
+          Commit(fold.trim.toInt, asOf.trim, segs)
         case _ => throw new IllegalStateException(
-          s"corrupt SCD2 commit manifest at $c: '$txt'")
+          s"corrupt SCD2 commit manifest at ${commitPath(root)}: '$txt'")
       }
     }
-  }
 
   private def writeCommit(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, commit: Commit): Unit = {
-    val c = new org.apache.hadoop.fs.Path(root, "_commit")
-    val tmp = new org.apache.hadoop.fs.Path(root, "_commit.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"${commit.fold}\n${commit.asOf}\nsegs:${commit.segs.mkString(",")}\n"
-        .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(c)) fs.delete(c, false)
-    fs.rename(tmp, c)
-  }
+      root: org.apache.hadoop.fs.Path, commit: Commit): Unit =
+    MetaFile.swap(fs, commitPath(root),
+      Seq(commit.fold.toString, commit.asOf, s"segs:${commit.segs.mkString(",")}"))
 
   /** Fold one snapshot into the segmented store at `root` (creating it on
     * first use). Ordering contract (ADVICE r10): drops must arrive in

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Warehouse
-import graft.sources.VersionedTable
+import graft.sources.{MetaFile, VersionedTable}
+import graft.sources.MetaFile.fsOf
 import graft.{QueryDef, QueryRegistry, Scratch}
 
 /** Incremental materialized-view maintenance from a CDC feed (r13, VERDICT
@@ -175,9 +176,8 @@ object IncrementalMv extends QueryRegistry {
   def refreshPath(spark: SparkSession, summaryPath: String, changes: DataFrame,
       keys: Seq[String], rowCount: String, measures: Seq[MeasureSpec],
       rescanBase: () => DataFrame): DataFrame = {
-    val dest = new org.apache.hadoop.fs.Path(summaryPath)
+    val (fs, dest) = fsOf(spark, summaryPath)
     val tmp = new org.apache.hadoop.fs.Path(summaryPath + ".tmp")
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
     // roll a crashed publish forward (same discipline as the versioned
     // maintainer): a crash between the delete and the rename left only the
     // COMPLETE staged dir — without this, the summary is gone for good
@@ -204,36 +204,24 @@ object IncrementalMv extends QueryRegistry {
 
   /** The applied-version marker of a maintained summary (None before
     * [[initSummaryAt]]) — the watermark the continuous maintainers move. */
-  def appliedVersion(spark: SparkSession, summaryPath: String): Option[Int] = {
-    val fs = new org.apache.hadoop.fs.Path(summaryPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    readMarker(fs, summaryPath)
-  }
+  def appliedVersion(spark: SparkSession, summaryPath: String): Option[Int] =
+    readMarker(fsOf(spark, summaryPath)._1, summaryPath)
 
   private def markerOf(summaryPath: String) =
     new org.apache.hadoop.fs.Path(summaryPath, "_applied_version")
 
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
       summaryPath: String): Option[Int] = {
-    val m = markerOf(summaryPath)
-    if (!fs.exists(m)) None
-    else {
-      // exists→open races the publish swap (delete-dest → rename): a poll
-      // landing in the gap reads mid-swap — that is "not yet applied", not
-      // an error worth failing a caller's await loop over
-      try {
-        val in = fs.open(m)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    }
+    // exists→open races the publish swap (delete-dest → rename): a poll
+    // landing in the gap reads mid-swap — that is "not yet applied", not
+    // an error worth failing a caller's await loop over
+    try MetaFile.read(fs, markerOf(summaryPath)).map(_.trim.toInt)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      v: Int): Unit = {
-    val out = fs.create(markerOf(dir), true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-  }
+      v: Int): Unit =
+    MetaFile.write(fs, markerOf(dir), Seq(v.toString))
 
   /** Materialize `df` as the summary of the versioned table's snapshot
     * `version`, stamping the applied-version marker INTO the summary
@@ -243,9 +231,7 @@ object IncrementalMv extends QueryRegistry {
   def initSummaryAt(spark: SparkSession, summaryPath: String, df: DataFrame,
       version: Int): Unit = {
     df.write.parquet(summaryPath)
-    val fs = new org.apache.hadoop.fs.Path(summaryPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    writeMarker(fs, summaryPath, version)
+    writeMarker(fsOf(spark, summaryPath)._1, summaryPath, version)
   }
 
   /** The resumable CONTINUOUS maintainer (r13): catch the summary up to the
@@ -287,9 +273,8 @@ object IncrementalMv extends QueryRegistry {
       summaryPath: String, rowKeys: Seq[String], mvKeys: Seq[String],
       rowCount: String, measures: Seq[MeasureSpec],
       rescanBase: Int => DataFrame): Option[(Int, DataFrame)] = {
-    val dest = new org.apache.hadoop.fs.Path(summaryPath)
+    val (fs, dest) = fsOf(spark, summaryPath)
     val tmp = new org.apache.hadoop.fs.Path(summaryPath + ".tmp")
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
     // roll a crashed publish forward: the staged dir is a COMPLETE state
     // (summary files + marker written before the swap began)
     if (!fs.exists(dest) && fs.exists(tmp)) {

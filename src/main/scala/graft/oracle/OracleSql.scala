@@ -1,7 +1,5 @@
 package graft.oracle
 
-import scala.io.Source
-
 /** DuckDB oracle-SQL assembly.
   *
   * Every correctness query ships with an equivalent DuckDB SQL statement the
@@ -24,7 +22,7 @@ object OracleSql {
   /** Shared CTE prelude: staging synthesis + dims + facts. */
   lazy val prefix: String = {
     val in = getClass.getResourceAsStream("/graft/prefix.sql")
-    try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** Assemble a full oracle statement from a query suffix. */

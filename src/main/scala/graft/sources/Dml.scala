@@ -43,9 +43,6 @@ object Dml {
     def paths: Seq[String] = files.map { case (p, n) => path(p, n) }
   }
 
-  private def relOf(part: String, name: String): String =
-    if (part == ".") name else s"$part/$name"
-
   /** The partition column names a `part` directory string encodes
     * ("year=2011/month=3" → year, month); "." = unpartitioned. ONE
     * implementation — this derivation used to be copy-pasted across the
@@ -75,9 +72,6 @@ object Dml {
       snap.schema.map(spark.read.schema(_)).getOrElse(spark.read)
         .option("basePath", snap.dataDir).parquet(snap.paths: _*)
 
-  /** The relative names of the snapshot's files holding at least one row
-    * of `probe` (a frame derived from [[readSnapshot]] that kept
-    * `input_file_name()` as column `f`) — metadata-sized by construction. */
   /** Tag each snapshot row with its source file under a name GUARANTEED
     * fresh: a data column named `_probe_file` would otherwise be replaced
     * before the key join, skewing the probe's hit set — files whose rows
@@ -88,16 +82,38 @@ object Dml {
     (df.withColumn(n, input_file_name()), n)
   }
 
-  private def affectedNames(spark: SparkSession, snap: Snapshot,
-      probe: DataFrame): Set[String] = {
-    val root = new Path(snap.dataDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  /** The snapshot's files split into (hit, clean): hit files hold at least
+    * one row of `probe` (a frame derived from [[readSnapshot]] that kept
+    * `input_file_name()` as its one column) — metadata-sized by
+    * construction. */
+  private def splitByProbe(spark: SparkSession, snap: Snapshot,
+      probe: DataFrame): (Seq[(String, String)], Seq[(String, String)]) = {
+    val (fs, root) = MetaFile.fsOf(spark, snap.dataDir)
     val rootAbs = fs.makeQualified(root).toUri.getPath
-    probe.distinct().collect()
+    val affected = probe.distinct().collect()
       .map(r => new Path(new java.net.URI(r.getString(0))).toUri.getPath)
       .map(_.stripPrefix(rootAbs).stripPrefix("/"))
       .toSet
+    snap.files.partition { case (p, n) => affected(if (p == ".") n else s"$p/$n") }
   }
+
+  /** Fail on UPDATE assignments to columns `schema` lacks. */
+  private def requireKnown(schema: StructType, assigned: Set[String]): Unit = {
+    val unknown = assigned.filterNot(schema.fieldNames.contains)
+    require(unknown.isEmpty, s"UPDATE assigns unknown columns: ${unknown.mkString(", ")}")
+  }
+
+  /** SQL UPDATE's SET projection over `schema`: rows where `pred` holds take
+    * each assignment, cast back to the column's type (so the layout's
+    * schema can never fork); every expression sees the OLD row values. */
+  private def setProjection(schema: StructType, pred: Column,
+      assignments: Map[String, Column]): Seq[Column] =
+    schema.fields.map { f =>
+      assignments.get(f.name)
+        .map(a => when(coalesce(pred, lit(false)), a.cast(f.dataType))
+          .otherwise(col(f.name)).as(f.name))
+        .getOrElse(col(f.name))
+    }.toSeq
 
   /** The hit-file rewrite as ONE Spark job (r13): all affected files read
     * together with `basePath` (partition values ride in from the directory
@@ -123,11 +139,20 @@ object Dml {
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(outDir)
   }
 
-  /** Byte-copy `clean` files of `snap` into `outDir` — the raw-layout
-    * consumers' half of the core/copy split (a versioned table never calls
-    * this: its manifest shares clean files by reference). */
-  private def copyClean(spark: SparkSession, snap: Snapshot, outDir: String,
-      clean: Seq[(String, String)]): Unit = {
+  /** Run a core over the raw layout at `dir` — the raw-layout verbs' half
+    * of the core/copy split: the core writes the rewritten files to
+    * `outDir`, the clean ones byte-copy beside them (a versioned table never
+    * takes this path: its manifest shares clean files by reference), and
+    * the per-file decision frame `(part, file_id, rewritten)` comes back. */
+  private def onRawLayout(spark: SparkSession, dir: String, outDir: String,
+      tableSchema: Option[StructType])
+      (core: Snapshot => (Seq[(String, String)], Seq[(String, String)])): DataFrame = {
+    import spark.implicits._
+    val snap = Snapshot(dir,
+      Compaction.listFiles(spark, dir).collect()
+        .map(r => (r.getAs[String]("part"), r.getAs[String]("file_id"))).toSeq,
+      tableSchema)
+    val (hit, clean) = core(snap)
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(snap.dataDir).getFileSystem(conf)
     clean.foreach { case (part, name) =>
@@ -136,22 +161,10 @@ object Dml {
       FileUtil.copy(fs, new Path(snap.path(part, name)),
         fs, new Path(dstDir, name), false, conf)
     }
-  }
-
-  private def decisionFrame(spark: SparkSession, hit: Seq[(String, String)],
-      clean: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
     (hit.map { case (p, n) => (p, n, true) } ++
       clean.map { case (p, n) => (p, n, false) })
       .toDF("part", "file_id", "rewritten")
   }
-
-  private def snapshotOfDir(spark: SparkSession, dir: String,
-      tableSchema: Option[StructType]): Snapshot =
-    Snapshot(dir,
-      Compaction.listFiles(spark, dir).collect()
-        .map(r => (r.getAs[String]("part"), r.getAs[String]("file_id"))).toSeq,
-      tableSchema)
 
   // ------------------------------------------------------------ DELETE WHERE
 
@@ -162,9 +175,8 @@ object Dml {
     * one does not fold in. */
   private[graft] def deleteWhereCore(spark: SparkSession, snap: Snapshot,
       outDir: String, pred: Column): (Seq[(String, String)], Seq[(String, String)]) = {
-    val affected = affectedNames(spark, snap,
-      readSnapshot(spark, snap).filter(pred).select(input_file_name().as("f")))
-    val (hit, clean) = snap.files.partition { case (p, n) => affected(relOf(p, n)) }
+    val (hit, clean) = splitByProbe(spark, snap,
+      readSnapshot(spark, snap).filter(pred).select(input_file_name()))
     // rewrite ONLY the affected files — one job, keeping rows where the
     // predicate is not TRUE (SQL DELETE semantics)
     rewriteHits(spark, snap, outDir, hit)(_.filter(!coalesce(pred, lit(false))))
@@ -177,12 +189,9 @@ object Dml {
     * frame `(part, file_id, rewritten)` — metadata-sized. */
   def deleteWhere(spark: SparkSession, dir: String, outDir: String,
       pred: Column,
-      tableSchema: Option[StructType] = None): DataFrame = {
-    val snap = snapshotOfDir(spark, dir, tableSchema)
-    val (hit, clean) = deleteWhereCore(spark, snap, outDir, pred)
-    copyClean(spark, snap, outDir, clean)
-    decisionFrame(spark, hit, clean)
-  }
+      tableSchema: Option[StructType] = None): DataFrame =
+    onRawLayout(spark, dir, outDir, tableSchema)(
+      deleteWhereCore(spark, _, outDir, pred))
 
   // ------------------------------------------------------------ UPDATE WHERE
 
@@ -197,24 +206,16 @@ object Dml {
       outDir: String, pred: Column, assignments: Map[String, Column])
       : (Seq[(String, String)], Seq[(String, String)]) = {
     val schema = snapSchema(spark, snap)
-    val unknown = assignments.keySet.filterNot(schema.fieldNames.contains)
-    require(unknown.isEmpty, s"UPDATE assigns unknown columns: ${unknown.mkString(", ")}")
+    requireKnown(schema, assignments.keySet)
     val partCols = partColsOf(snap.files.map(_._1)).toSet
     val partitionAssigns = assignments.keySet.intersect(partCols)
     require(partitionAssigns.isEmpty,
       s"UPDATE cannot assign partition columns: ${partitionAssigns.mkString(", ")}")
 
-    val affected = affectedNames(spark, snap,
-      readSnapshot(spark, snap).filter(pred).select(input_file_name().as("f")))
-    val (hit, clean) = snap.files.partition { case (p, n) => affected(relOf(p, n)) }
-    rewriteHits(spark, snap, outDir, hit) { src =>
-      src.select(src.schema.fields.map { f =>
-        assignments.get(f.name)
-          .map(a => when(coalesce(pred, lit(false)), a.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name))
-          .getOrElse(col(f.name))
-      }.toSeq: _*)
-    }
+    val (hit, clean) = splitByProbe(spark, snap,
+      readSnapshot(spark, snap).filter(pred).select(input_file_name()))
+    rewriteHits(spark, snap, outDir, hit)(
+      _.select(setProjection(schema, pred, assignments): _*))
     (hit, clean)
   }
 
@@ -222,12 +223,9 @@ object Dml {
     * files byte-copy. Returns the per-file decision frame. */
   def updateWhere(spark: SparkSession, dir: String, outDir: String,
       pred: Column, assignments: Map[String, Column],
-      tableSchema: Option[StructType] = None): DataFrame = {
-    val snap = snapshotOfDir(spark, dir, tableSchema)
-    val (hit, clean) = updateWhereCore(spark, snap, outDir, pred, assignments)
-    copyClean(spark, snap, outDir, clean)
-    decisionFrame(spark, hit, clean)
-  }
+      tableSchema: Option[StructType] = None): DataFrame =
+    onRawLayout(spark, dir, outDir, tableSchema)(
+      updateWhereCore(spark, _, outDir, pred, assignments))
 
   // ------------------------------------------------------------- UPDATE MOVE
 
@@ -245,8 +243,7 @@ object Dml {
       outDir: String, pred: Column, assignments: Map[String, Column])
       : (Seq[(String, String)], Seq[(String, String)]) = {
     val schema = snapSchema(spark, snap)
-    val unknown = assignments.keySet.filterNot(schema.fieldNames.contains)
-    require(unknown.isEmpty, s"UPDATE assigns unknown columns: ${unknown.mkString(", ")}")
+    requireKnown(schema, assignments.keySet)
     // partition column order from the directory layout itself (nested
     // dirs = nested partitionBy order) — the routed insert must reproduce it
     val partCols: Seq[String] = partColsOf(snap.files.map(_._1))
@@ -255,23 +252,14 @@ object Dml {
     require(assignments.keySet.exists(partCols.contains),
       s"no partition column assigned (${partCols.mkString(", ")}); use updateWhere")
 
-    val affected = affectedNames(spark, snap,
-      readSnapshot(spark, snap).filter(pred).select(input_file_name().as("f")))
-    val (hit, clean) = snap.files.partition { case (p, n) => affected(relOf(p, n)) }
+    val (hit, clean) = splitByProbe(spark, snap,
+      readSnapshot(spark, snap).filter(pred).select(input_file_name()))
     // one job: the basePath read rides partition values in from the
-    // directory names, the conditional projection applies every assignment
-    // to movers only — each expression seeing the OLD row values, casts
-    // pinning each column's original type — and the dynamic partitionBy
-    // write routes every row to the directory its (old or new) partition
-    // values name
-    rewriteHits(spark, snap, outDir, hit) { src =>
-      src.select(schema.fields.map { f =>
-        assignments.get(f.name)
-          .map(a => when(coalesce(pred, lit(false)), a.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name))
-          .getOrElse(col(f.name))
-      }.toSeq: _*)
-    }
+    // directory names, the SET projection applies to movers only, and the
+    // dynamic partitionBy write routes every row to the directory its (old
+    // or new) partition values name
+    rewriteHits(spark, snap, outDir, hit)(
+      _.select(setProjection(schema, pred, assignments): _*))
     (hit, clean)
   }
 
@@ -279,12 +267,9 @@ object Dml {
     * per-file decision frame. */
   def updateMove(spark: SparkSession, dir: String, outDir: String,
       pred: Column, assignments: Map[String, Column],
-      tableSchema: Option[StructType] = None): DataFrame = {
-    val snap = snapshotOfDir(spark, dir, tableSchema)
-    val (hit, clean) = updateMoveCore(spark, snap, outDir, pred, assignments)
-    copyClean(spark, snap, outDir, clean)
-    decisionFrame(spark, hit, clean)
-  }
+      tableSchema: Option[StructType] = None): DataFrame =
+    onRawLayout(spark, dir, outDir, tableSchema)(
+      updateMoveCore(spark, _, outDir, pred, assignments))
 
   // -------------------------------------------------------------- MERGE INTO
 
@@ -330,12 +315,9 @@ object Dml {
   def mergeInto(spark: SparkSession, dir: String, outDir: String,
       updates: DataFrame, keys: Seq[String],
       partitionCols: Seq[String] = Nil,
-      tableSchema: Option[StructType] = None): DataFrame = {
-    val snap = snapshotOfDir(spark, dir, tableSchema)
-    val (hit, clean) = mergeIntoCore(spark, snap, outDir, updates, keys, partitionCols)
-    copyClean(spark, snap, outDir, clean)
-    decisionFrame(spark, hit, clean)
-  }
+      tableSchema: Option[StructType] = None): DataFrame =
+    onRawLayout(spark, dir, outDir, tableSchema)(
+      mergeIntoCore(spark, _, outDir, updates, keys, partitionCols))
 
   /** One ordered `WHEN MATCHED` clause of [[mergeClauses]]. */
   sealed trait MergeClause { def cond: Column }
@@ -401,10 +383,7 @@ object Dml {
       "MERGE cardinality violation: source holds duplicate keys")
     val schema = snapSchema(spark, snap)
     (matched ++ notMatchedBySource).collect { case u: WhenMatchedUpdate => u }
-      .foreach { u =>
-        val unknown = u.set.keySet.filterNot(schema.fieldNames.contains)
-        require(unknown.isEmpty, s"UPDATE assigns unknown columns: ${unknown.mkString(", ")}")
-      }
+      .foreach(u => requireKnown(schema, u.set.keySet))
     // the match marker lives OUTSIDE the __src_ rename image (ADVICE r13:
     // the old __src__matched name collided with a source column named
     // `_matched`, whose rename the withColumn silently replaced — clause
@@ -435,11 +414,9 @@ object Dml {
       else if (notMatchedBySource.nonEmpty) (snap.files, Seq.empty[(String, String)])
       else {
         val (tagged, tag) = tagFile(readSnapshot(spark, snap))
-        val affected = affectedNames(spark, snap,
-          tagged
-            .join(source.select(keys.map(col): _*).distinct(), keys, "left_semi")
-            .select(col(tag).as("f")))
-        snap.files.partition { case (p, n) => affected(relOf(p, n)) }
+        splitByProbe(spark, snap, tagged
+          .join(source.select(keys.map(col): _*).distinct(), keys, "left_semi")
+          .select(col(tag)))
       }
 
     // one ordered clause list: matched clauses fire on key-matched rows,
@@ -492,13 +469,10 @@ object Dml {
       notMatchedInsert: Option[Column] = None,
       partitionCols: Seq[String] = Nil,
       tableSchema: Option[StructType] = None,
-      notMatchedBySource: Seq[MergeClause] = Nil): DataFrame = {
-    val snap = snapshotOfDir(spark, dir, tableSchema)
-    val (hit, clean) = mergeClausesCore(spark, snap, outDir, source, keys,
-      matched, notMatchedInsert, partitionCols, notMatchedBySource)
-    copyClean(spark, snap, outDir, clean)
-    decisionFrame(spark, hit, clean)
-  }
+      notMatchedBySource: Seq[MergeClause] = Nil): DataFrame =
+    onRawLayout(spark, dir, outDir, tableSchema)(
+      mergeClausesCore(spark, _, outDir, source, keys, matched,
+        notMatchedInsert, partitionCols, notMatchedBySource))
 
   // ------------------------------------------------------------- DELETE KEYS
 
@@ -522,12 +496,9 @@ object Dml {
     * Returns the per-file `(part, file_id, rewritten)` decision frame. */
   def deleteKeys(spark: SparkSession, dir: String, outDir: String,
       tombstones: DataFrame, keys: Seq[String],
-      tableSchema: Option[StructType] = None): DataFrame = {
-    val snap = snapshotOfDir(spark, dir, tableSchema)
-    val (hit, clean) = deleteKeysCore(spark, snap, outDir, tombstones, keys)
-    copyClean(spark, snap, outDir, clean)
-    decisionFrame(spark, hit, clean)
-  }
+      tableSchema: Option[StructType] = None): DataFrame =
+    onRawLayout(spark, dir, outDir, tableSchema)(
+      deleteKeysCore(spark, _, outDir, tombstones, keys))
 
   /** The shared copy-on-write kernel of [[mergeIntoCore]] and
     * [[deleteKeysCore]]: drop every row whose key appears in `keySet`
@@ -539,11 +510,8 @@ object Dml {
     // file name is tagged BEFORE the join: input_file_name() is only
     // defined against a single source, and the tag pins it to the scan
     val (tagged, tag) = tagFile(readSnapshot(spark, snap))
-    val affected = affectedNames(spark, snap,
-      tagged
-        .join(keySet, keys, "left_semi")
-        .select(col(tag).as("f")))
-    val (hit, clean) = snap.files.partition { case (p, n) => affected(relOf(p, n)) }
+    val (hit, clean) = splitByProbe(spark, snap,
+      tagged.join(keySet, keys, "left_semi").select(col(tag)))
     rewriteHits(spark, snap, outDir, hit)(_.join(keySet, keys, "left_anti"))
     (hit, clean)
   }

@@ -44,8 +44,8 @@ object GraftCatalog {
   // SparkSession process saw no registered tables — the one layer of the
   // session-extension surface without the cross-process story the
   // head-check layers already have. [[persistTo]] binds the catalog to a
-  // tiny file beside the warehouse (`name\troot` lines; replaced by an
-  // ATOMIC overwriting rename under a cross-process claim lock, so readers
+  // tiny file beside the warehouse (`name\troot` lines; replaced by
+  // [[MetaFile.replace]] under a cross-process claim lock, so readers
   // never see a missing catalog, a crash leaves the old file intact, and
   // two processes registering concurrently both land): registrations write
   // through, and every lookup READS THROUGH a modification-time-checked cache, so a
@@ -55,7 +55,6 @@ object GraftCatalog {
   // it); unregister removes from both.
 
   private case class Store(fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
       path: org.apache.hadoop.fs.Path) {
     // cache token: (mtime, length) — mtime alone has 1s granularity on
     // some filesystems, so two writes in one tick could serve stale
@@ -68,56 +67,27 @@ object GraftCatalog {
       val c = cached
       if (c._1 == token) c._2
       else {
-        val in = fs.open(path)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val entries = txt.split("\n").filter(_.contains("\t")).map { l =>
-          val Array(n, r) = l.split("\t", 2); n -> r
-        }.toMap
+        val entries = MetaFile.read(fs, path).toSeq
+          .flatMap(_.split("\n").filter(_.contains("\t"))).map { l =>
+            val Array(n, r) = l.split("\t", 2); n -> r
+          }.toMap
         cached = (token, entries)
         entries
       }
     }
 
     /** Mutate the persisted map under a cross-process claim lock, then
-      * replace the file with an ATOMIC overwriting rename (FileContext
-      * OVERWRITE — readers always see the old or the new catalog, never a
-      * missing one, and a crash mid-write leaves the old file intact).
-      * The read-merge-write runs INSIDE the lock, so two processes
-      * registering different tables both land. A lock older than
-      * [[StaleLockMs]] is a crashed holder and is broken. */
+      * replace the file atomically ([[MetaFile.replace]] — readers always
+      * see the old or the new catalog, never a missing one, and a crash
+      * mid-write leaves the old file intact). The read-merge-write runs
+      * INSIDE the lock, so two processes registering different tables both
+      * land. A lock older than [[StaleLockMs]] is a crashed holder and is
+      * broken. */
     def mutate(f: Map[String, String] => Map[String, String]): Unit = synchronized {
       fs.mkdirs(path.getParent)
       withClaim {
-        val next = f(load())
-        val bytes = next.toSeq.sorted.map { case (n, r) => s"$n\t$r" }
-          .mkString("", "\n", "\n").getBytes("UTF-8")
-        val tmp = new org.apache.hadoop.fs.Path(
-          path.getParent, s".${path.getName}.tmp_${java.util.UUID.randomUUID()}")
-        if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-          // local: Hadoop's OVERWRITE rename is delete-then-rename inside
-          // (a reader window), so write + POSIX-atomic-move via nio —
-          // bypassing the checksummed LocalFileSystem so no .crc sidecar
-          // is created (and any legacy one is dropped: a stale checksum
-          // would fail every later fs.open of the replaced file)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(tmp.toUri.getPath), bytes)
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp.toUri.getPath),
-            java.nio.file.Paths.get(path.toUri.getPath),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          val crc = new org.apache.hadoop.fs.Path(
-            path.getParent, s".${path.getName}.crc")
-          try if (fs.exists(crc)) fs.delete(crc, false)
-          catch { case _: java.io.IOException => () }
-        } else {
-          // HDFS-like stores: FileContext's rename2 is atomic server-side
-          val out = fs.create(tmp, true)
-          try out.write(bytes) finally out.close()
-          org.apache.hadoop.fs.FileContext.getFileContext(path.toUri, conf)
-            .rename(tmp, path, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        }
+        MetaFile.replace(fs, path,
+          f(load()).toSeq.sorted.map { case (n, r) => s"$n\t$r" })
         cached = ((-1L, -1L), Map.empty) // next load re-reads
       }
     }
@@ -186,7 +156,7 @@ object GraftCatalog {
       var attempts = 0
       while (true) {
         val claimed =
-          try { fs.create(lock, false).close(); true }
+          try { MetaFile.create(fs, lock, Nil); true }
           catch { case _: java.io.IOException => false }
         if (claimed)
           try return body finally fs.delete(lock, false)
@@ -206,19 +176,12 @@ object GraftCatalog {
             // protocol at all: it holds a kernel FileLock)
             val myToken = java.util.UUID.randomUUID().toString
             val breaking =
-              try {
-                val o = fs.create(breakMutex, false)
-                try o.write(myToken.getBytes("UTF-8")) finally o.close()
-                true
-              } catch { case _: java.io.IOException => false }
+              try { MetaFile.create(fs, breakMutex, Seq(myToken)); true }
+              catch { case _: java.io.IOException => false }
             if (breaking) {
               def ownMutex(): Boolean =
-                try {
-                  val in = fs.open(breakMutex)
-                  val t = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                    finally in.close()
-                  t == myToken
-                } catch { case _: java.io.IOException => false }
+                try MetaFile.read(fs, breakMutex).contains(s"$myToken\n")
+                catch { case _: java.io.IOException => false }
               try {
                 // re-stat INSIDE the mutex: any instance observed stale
                 // here was created >StaleLockMs ago (mtime cannot regress),
@@ -256,9 +219,8 @@ object GraftCatalog {
     * writes are picked up by modification time on every lookup. Call once
     * at session setup; `persistTo(None)` detaches (tests). */
   def persistTo(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    store = Some(Store(p.getFileSystem(conf), conf, p))
+    val (fs, p) = MetaFile.fsOf(spark, path)
+    store = Some(Store(fs, p))
   }
 
   def detachStore(): Unit = store = None

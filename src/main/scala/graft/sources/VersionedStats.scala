@@ -53,11 +53,7 @@ import org.apache.spark.util.sketch.BloomFilter
 object VersionedStats {
 
   import SkippingIndex.Box
-
-  private def fsOf(spark: SparkSession, root: String) = {
-    val p = new Path(root)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  import MetaFile.fsOf
 
   private def statsRoot(root: String) = s"$root/_stats"
   private def colsPath(root: String) = new Path(statsRoot(root), "columns")
@@ -81,34 +77,18 @@ object VersionedStats {
     rootLocks.computeIfAbsent(statsRoot(root), _ => new Object)
 
   /** The indexed column names, or None when stats were never enabled. */
-  def indexedColumns(spark: SparkSession, root: String): Option[Seq[String]] = {
-    val (fs, _) = fsOf(spark, root)
-    val p = colsPath(root)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq)
-    }
-  }
+  def indexedColumns(spark: SparkSession, root: String): Option[Seq[String]] =
+    MetaFile.read(fsOf(spark, root)._1, colsPath(root))
+      .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSeq)
 
   /** Bloom-indexed columns and their filter sizing: col → (expectedItems,
     * numBits). Empty when blooms were never enabled. */
-  def bloomConfig(spark: SparkSession, root: String): Map[String, (Long, Long)] = {
-    val (fs, _) = fsOf(spark, root)
-    val p = bloomPath(root)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.split("\n").filter(_.contains("\t")).map { l =>
+  def bloomConfig(spark: SparkSession, root: String): Map[String, (Long, Long)] =
+    MetaFile.read(fsOf(spark, root)._1, bloomPath(root)).toSeq
+      .flatMap(_.split("\n").filter(_.contains("\t"))).map { l =>
         val Array(c, items, bits) = l.split("\t", 3)
         c -> ((items.toLong, bits.toLong))
       }.toMap
-    }
-  }
 
   /** Versions that have a published stats table. */
   def stattedVersions(spark: SparkSession, root: String): Seq[Int] = {
@@ -232,10 +212,7 @@ object VersionedStats {
     val snapshot = VersionedTable.read(spark, root, Some(latest))
     val missing = cols.filterNot(snapshot.columns.contains)
     require(missing.isEmpty, s"indexed columns not in table: ${missing.mkString(", ")}")
-    val (fs, _) = fsOf(spark, root)
-    fs.mkdirs(new Path(statsRoot(root)))
-    val out = fs.create(colsPath(root), true)
-    try out.write((cols.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
+    MetaFile.write(fsOf(spark, root)._1, colsPath(root), cols)
     val files = VersionedTable.snapshotFiles(spark, root, latest)
     publish(spark, root, latest,
       scanStats(spark, VersionedTable.dataDir(root), files, cols,
@@ -266,11 +243,8 @@ object VersionedStats {
     require(bloomConfig(spark, root).isEmpty,
       s"blooms already enabled at $root")
     val numBits = BloomFilter.optimalNumOfBits(expectedItemsPerFile, fpp)
-    val (fs, _) = fsOf(spark, root)
-    val out = fs.create(bloomPath(root), true)
-    try out.write(cols.map(c => s"$c\t$expectedItemsPerFile\t$numBits")
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    MetaFile.write(fsOf(spark, root)._1, bloomPath(root),
+      cols.map(c => s"$c\t$expectedItemsPerFile\t$numBits"))
     val latest = VersionedTable.latestVersion(spark, root)
     val files = VersionedTable.snapshotFiles(spark, root, latest)
     publish(spark, root, latest,

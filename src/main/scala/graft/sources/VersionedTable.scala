@@ -37,10 +37,7 @@ import org.apache.spark.sql.types.StructType
   * works. */
 object VersionedTable {
 
-  private def fsOf(spark: SparkSession, root: String) = {
-    val p = new Path(root)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  import MetaFile.fsOf
 
   private[graft] def vDir(root: String, v: Int) = f"$root/v$v%05d"
 
@@ -95,14 +92,10 @@ object VersionedTable {
   private def writeSegment(fs: org.apache.hadoop.fs.FileSystem, root: String,
       entries: Seq[FileEntry]): SegRef = {
     val name = s"seg_${java.util.UUID.randomUUID()}.seg"
-    val p = new Path(segsDir(root), name)
-    fs.mkdirs(p.getParent)
     val sorted = entries.sortBy(e => (e.part, e.name))
-    val out = fs.create(p, false) // written ONCE; a collision is a bug
-    try out.write(sorted
-      .map(e => s"${e.part}\t${e.name}\t${e.bytes}")
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    // written ONCE; a collision is a bug
+    MetaFile.create(fs, new Path(segsDir(root), name),
+      sorted.map(e => s"${e.part}\t${e.name}\t${e.bytes}"))
     segCache.synchronized {
       segCache.put(s"$root#$name", sorted)
       segCacheEntries += sorted.size
@@ -141,12 +134,9 @@ object VersionedTable {
       val hit = segCache.get(key)
       if (hit != null) return hit
     }
-    val p = new Path(segsDir(root), name)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"manifest segment $name missing at $root (vacuumed while referenced?)")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val txt = MetaFile.read(fs, new Path(segsDir(root), name)).getOrElse(
+      throw new IllegalStateException(
+        s"manifest segment $name missing at $root (vacuumed while referenced?)"))
     val entries = txt.split("\n").filter(_.contains("\t")).toSeq.map { l =>
       val Array(part, nm, bytes) = l.split("\t", 3)
       FileEntry(part, nm, bytes.toLong)
@@ -166,25 +156,13 @@ object VersionedTable {
   private[graft] def snapshotSegRefs(spark: SparkSession, root: String,
       v: Int): Seq[SegRef] = {
     val (fs, _) = fsOf(spark, root)
-    val p = manifestPath(vDir(root, v))
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"no snapshot manifest for v$v at $root (never committed, or vacuumed)")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val txt = MetaFile.read(fs, manifestPath(vDir(root, v))).getOrElse(
+      throw new IllegalStateException(
+        s"no snapshot manifest for v$v at $root (never committed, or vacuumed)"))
     txt.split("\n").filter(_.startsWith("seg\t")).toSeq.map { l =>
       val Array(_, name, count) = l.split("\t", 3)
       SegRef(name, count.toInt)
     }
-  }
-
-  private def writeManifestList(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, refs: Seq[SegRef]): Unit = {
-    fs.mkdirs(new Path(dir))
-    val out = fs.create(manifestPath(dir), true)
-    try out.write(refs.map(r => s"seg\t${r.name}\t${r.count}")
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
   }
 
   /** Publish version `dir`'s manifest: base segments whose files ALL
@@ -221,7 +199,8 @@ object VersionedTable {
       } else (big ++ small).toSeq
     val freshRefs = loose.grouped(SegmentEntries)
       .map(chunk => writeSegment(fs, root, chunk.toSeq)).toSeq
-    writeManifestList(fs, dir, refs ++ freshRefs)
+    MetaFile.write(fs, manifestPath(dir),
+      (refs ++ freshRefs).map(r => s"seg\t${r.name}\t${r.count}"))
   }
 
   /** The manifest of snapshot `v` — the complete file list the version
@@ -356,17 +335,8 @@ object VersionedTable {
 
   // ------------------------------------------------------------ commit point
 
-  private def readLatestRaw(fs: org.apache.hadoop.fs.FileSystem, rootP: Path): Option[Int] = {
-    val c = new Path(rootP, "_latest")
-    val tmp = new Path(rootP, "_latest.tmp")
-    if (!fs.exists(c) && fs.exists(tmp)) fs.rename(tmp, c) // roll the swap forward
-    if (!fs.exists(c)) None
-    else {
-      val in = fs.open(c)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
-    }
-  }
+  private def readLatestRaw(fs: org.apache.hadoop.fs.FileSystem, rootP: Path): Option[Int] =
+    MetaFile.readSwapped(fs, new Path(rootP, "_latest")).map(_.trim.toInt)
 
   /** Deterministic crash-gate pause point (r19, VERDICT r18 #5): when
     * GRAFT_VT_PAUSE names this phase, the process drops a
@@ -398,12 +368,7 @@ object VersionedTable {
     }
 
   private def commit(fs: org.apache.hadoop.fs.FileSystem, rootP: Path, v: Int): Unit = {
-    val c = new Path(rootP, "_latest")
-    val tmp = new Path(rootP, "_latest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    if (fs.exists(c)) fs.delete(c, false)
-    fs.rename(tmp, c)
+    MetaFile.swap(fs, new Path(rootP, "_latest"), Seq(v.toString))
     writeLogMarker(fs, rootP.toString, v)
   }
 
@@ -428,12 +393,8 @@ object VersionedTable {
   private[graft] def logDir(root: String) = s"$root/_log"
 
   private def writeLogMarker(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Int): Unit = {
-    val p = new Path(logDir(root), f"v$v%05d.commit")
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-  }
+      root: String, v: Int): Unit =
+    MetaFile.write(fs, new Path(logDir(root), f"v$v%05d.commit"), Seq(v.toString))
 
   private val commitListeners =
     new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String, Int) => Unit]()
@@ -557,8 +518,7 @@ object VersionedTable {
         val moved = moveIntoPool(spark, root, stage.toString)
         publishManifest(spark, root, claim.toString, Some(base),
           Some(e => carried((e.part, e.name))), moved)
-        val out = fs.create(txnMarker(claim.toString), true)
-        try out.write(s"$base\n".getBytes("UTF-8")) finally out.close()
+        MetaFile.write(fs, txnMarker(claim.toString), Seq(base.toString))
         val target = new Path(vDir(root, base + 1))
         if (fs.exists(target) && !fs.exists(txnMarker(target.toString))
             && latestVersion(spark, root) == base)
@@ -625,12 +585,8 @@ object VersionedTable {
     new Path(s"$root/_schema", f"v$v%05d.ddl")
 
   private def writeSchemaEntry(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Int, schema: StructType): Unit = {
-    val p = schemaEntry(root, v)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write((schema.toDDL + "\n").getBytes("UTF-8")) finally out.close()
-  }
+      root: String, v: Int, schema: StructType): Unit =
+    MetaFile.write(fs, schemaEntry(root, v), Seq(schema.toDDL))
 
   /** The stored table schema, normalized the way a file-source read
     * reports it: every field nullable (Spark file scans force nullability),
@@ -655,13 +611,8 @@ object VersionedTable {
         n.stripPrefix("v").stripSuffix(".ddl").toInt }
       .filter(_ <= version)
     if (entries.isEmpty) None
-    else {
-      val v = entries.max
-      val in = fs.open(schemaEntry(root, v))
-      val ddl = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some(StructType.fromDDL(ddl))
-    }
+    else MetaFile.read(fs, schemaEntry(root, entries.max))
+      .map(ddl => StructType.fromDDL(ddl.trim))
   }
 
   // ----------------------------------------------------------- constraints
@@ -676,19 +627,19 @@ object VersionedTable {
   private def constraintsLog(root: String) = new Path(s"$root/_constraints")
 
   /** The registered CHECK constraints: (name, SQL expression). */
-  def constraints(spark: SparkSession, root: String): Seq[(String, String)] = {
-    val (fs, _) = fsOf(spark, root)
-    val p = constraintsLog(root)
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.split("\n").filter(_.contains("\t")).toSeq.map { l =>
+  def constraints(spark: SparkSession, root: String): Seq[(String, String)] =
+    MetaFile.read(fsOf(spark, root)._1, constraintsLog(root)).toSeq
+      .flatMap(_.split("\n").filter(_.contains("\t")).toSeq).map { l =>
         val Array(n, e) = l.split("\t", 2); (n, e)
       }
-    }
-  }
+
+  /** Replace the constraint log ATOMICALLY: a truncating overwrite that
+    * crashed mid-write would leave an empty log, silently dropping every
+    * CHECK. */
+  private def writeConstraints(spark: SparkSession, root: String,
+      all: Seq[(String, String)]): Unit =
+    MetaFile.replace(fsOf(spark, root)._1, constraintsLog(root),
+      all.map { case (n, e) => s"$n\t$e" })
 
   /** Register `CHECK (exprSql)` under `name`. The CURRENT table must
     * already satisfy it (one validation scan — the registration cost);
@@ -703,22 +654,11 @@ object VersionedTable {
       .filter(!coalesce(expr(exprSql).cast("boolean"), lit(true))).count()
     require(bad == 0,
       s"existing rows violate CHECK $name ($exprSql): $bad row(s)")
-    val (fs, _) = fsOf(spark, root)
-    val all = constraints(spark, root) :+ (name -> exprSql)
-    val out = fs.create(constraintsLog(root), true)
-    try out.write(all.map { case (n, e) => s"$n\t$e" }.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
+    writeConstraints(spark, root, constraints(spark, root) :+ (name -> exprSql))
   }
 
-  def dropConstraint(spark: SparkSession, root: String, name: String): Unit = {
-    val (fs, _) = fsOf(spark, root)
-    val rest = constraints(spark, root).filterNot(_._1 == name)
-    val out = fs.create(constraintsLog(root), true)
-    try out.write(rest.map { case (n, e) => s"$n\t$e" }.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
+  def dropConstraint(spark: SparkSession, root: String, name: String): Unit =
+    writeConstraints(spark, root, constraints(spark, root).filterNot(_._1 == name))
 
   /** Enforce every registered constraint on `df` (the mutation's NEW rows,
     * or a restore's full content). Throws before the caller's manifest
@@ -760,17 +700,9 @@ object VersionedTable {
   private def droppedLog(root: String) = new Path(s"$root/_schema", "dropped")
 
   /** Column names ever dropped from this table (the re-add tombstone set). */
-  def droppedColumns(spark: SparkSession, root: String): Set[String] = {
-    val (fs, _) = fsOf(spark, root)
-    val p = droppedLog(root)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.split("\n").map(_.trim).filter(_.nonEmpty).toSet
-    }
-  }
+  def droppedColumns(spark: SparkSession, root: String): Set[String] =
+    MetaFile.read(fsOf(spark, root)._1, droppedLog(root))
+      .fold(Set.empty[String])(_.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
 
   // ------------------------------------------------------------- lifecycle
 
@@ -919,27 +851,16 @@ object VersionedTable {
   private def partsPath(root: String) = new Path(s"$root/_schema", "parts")
 
   private def writePartitionCols(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, cols: Seq[String]): Unit = {
-    val p = partsPath(root)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write((cols.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+      root: String, cols: Seq[String]): Unit =
+    MetaFile.write(fs, partsPath(root), cols)
 
   /** Partition columns of the table — how every statement-level verb knows
     * where appended rows must route. */
   private[graft] def partitionColumns(spark: SparkSession, root: String): Seq[String] = {
-    val (fs, _) = fsOf(spark, root)
-    val p = partsPath(root)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    } else { // pre-sidecar table: derive from the head's directory layout
-      val latest = latestVersion(spark, root)
-      Dml.partColsOf(snapshotEntries(spark, root, latest).map(_.part))
+    MetaFile.read(fsOf(spark, root)._1, partsPath(root)) match {
+      case Some(txt) => txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+      case None => // pre-sidecar table: derive from the head's directory layout
+        Dml.partColsOf(snapshotEntries(spark, root, latestVersion(spark, root)).map(_.part))
     }
   }
 
@@ -1044,10 +965,7 @@ object VersionedTable {
     // tombstone BEFORE the commit: a crash between leaves extra tombstones
     // for columns that still exist, which only ever REJECT a later re-add —
     // never corrupt a read
-    val all = droppedColumns(spark, root) ++ names
-    val out = fs.create(droppedLog(root), true)
-    try out.write((all.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    MetaFile.write(fs, droppedLog(root), (droppedColumns(spark, root) ++ names).toSeq.sorted)
     publishManifest(spark, root, dir, Some(latest), None, Nil)
     commitVersion(spark, root, next)
     next
@@ -1185,15 +1103,8 @@ object VersionedTable {
 
   private def batchMarker(dir: String) = new Path(dir, "_batch_id")
 
-  private def readBatchId(fs: org.apache.hadoop.fs.FileSystem, dir: String): Option[Long] = {
-    val m = batchMarker(dir)
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
+  private def readBatchId(fs: org.apache.hadoop.fs.FileSystem, dir: String): Option[Long] =
+    MetaFile.read(fs, batchMarker(dir)).map(_.trim.toLong)
 
   /** Root-level sidecar carrying the high-water batch id across the
     * vacuum horizon (ADVICE r16): [[vacuum]] persists the newest marker
@@ -1204,15 +1115,8 @@ object VersionedTable {
   private def lastBatchSidecar(root: String) = new Path(root, "_last_batch")
 
   private def readBatchSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[Long] = {
-    val p = lastBatchSidecar(root)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
+      root: String): Option[Long] =
+    MetaFile.read(fs, lastBatchSidecar(root)).map(_.trim.toLong)
 
   /** The highest batch id committed into any RETAINED version, walked
     * from the head DOWNWARD — the head alone is not enough: an
@@ -1300,8 +1204,7 @@ object VersionedTable {
       writePartitionCols(fs, root, partitionCols)
     }
     publishManifest(spark, root, dir, latest, None, moved)
-    val out = fs.create(batchMarker(dir), true)
-    try out.write(s"$batchId\n".getBytes("UTF-8")) finally out.close()
+    MetaFile.write(fs, batchMarker(dir), Seq(batchId.toString))
     commitVersion(spark, root, next)
     Some(next)
   }
@@ -1406,13 +1309,7 @@ object VersionedTable {
         if (!batch.isEmpty) {
           val stateP = new Path(stateDir, "_applied_version")
           val fs = stateP.getFileSystem(spark.sessionState.newHadoopConf())
-          val from =
-            if (!fs.exists(stateP)) startAfter
-            else {
-              val in = fs.open(stateP)
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-              finally in.close()
-            }
+          val from = MetaFile.read(fs, stateP).fold(startAfter)(_.trim.toInt)
           val to = latestVersion(spark, root)
           if (to > from) {
             // a lagging consumer whose watermark version was vacuumed away
@@ -1426,9 +1323,9 @@ object VersionedTable {
                   "Retain more versions (vacuum keep / Maintenance " +
                   "keepVersions) or reseed the consumer from a full read.")
             consume(from, to, changes(spark, root, from, to, keys))
-            fs.mkdirs(stateP.getParent)
-            val out = fs.create(stateP, true)
-            try out.write(s"$to\n".getBytes("UTF-8")) finally out.close()
+            // atomic: a truncated watermark would fail this parse on every
+            // later batch — the crash loop the check above exists to avoid
+            MetaFile.replace(fs, stateP, Seq(to.toString))
           }
         }
         ()
@@ -1455,38 +1352,12 @@ object VersionedTable {
     // Persist the high-water batch id BEFORE any version dir dies (ADVICE
     // r16): if the sweep retires the version carrying the newest batch
     // marker, the sidecar keeps exactly-once replay detection alive.
-    // ATOMIC overwriting replace (the catalog store's pattern): a
-    // truncating in-place overwrite could crash mid-write and leave a torn
-    // sidecar that fails every later recovery read, and a delete-then-
-    // rename would give a concurrent restart-recovery reader a missing-
-    // file window at the vacuum horizon — the replace leaves the file
-    // always readable as the old or the new value
-    latestBatchId(fs, root, Some(latest)).foreach { id =>
-      val c = lastBatchSidecar(root)
-      val tmp = new Path(root, s"._last_batch.tmp_${java.util.UUID.randomUUID()}")
-      val bytes = s"$id\n".getBytes("UTF-8")
-      if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-        // a checksummed LocalFileSystem sidecar from a pre-r17 fs.create
-        // leaves a .crc matching the OLD bytes: drop it BEFORE the move
-        // (a crc-less file reads fine; new-bytes-vs-old-crc would fail a
-        // concurrent recovery reader in the window after the move), and
-        // loudly — a swallowed failure here would break every later read
-        val crc = new Path(root, "._last_batch.crc")
-        if (fs.exists(crc)) fs.delete(crc, false)
-        java.nio.file.Files.write(java.nio.file.Paths.get(tmp.toUri.getPath), bytes)
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp.toUri.getPath),
-          java.nio.file.Paths.get(c.toUri.getPath),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } else {
-        val out = fs.create(tmp, true)
-        try out.write(bytes) finally out.close()
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(c.toUri, spark.sessionState.newHadoopConf())
-          .rename(tmp, c, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      }
-    }
+    // ATOMIC replace: a truncating in-place overwrite could crash mid-write
+    // and leave a torn sidecar that fails every later recovery read, and a
+    // delete-then-rename would give a concurrent restart-recovery reader a
+    // missing-file window at the vacuum horizon
+    latestBatchId(fs, root, Some(latest)).foreach(id =>
+      MetaFile.replace(fs, lastBatchSidecar(root), Seq(id.toString)))
     val dropped = (1 to latest - keep)
       .filter(v => fs.exists(new Path(vDir(root, v))))
     dropped.foreach(v => fs.delete(new Path(vDir(root, v)), true))
@@ -1560,7 +1431,8 @@ object VersionedTable {
         val n = st.getPath.getName
         (n.startsWith(".txn_") || n.startsWith(".stage_")
           || n.startsWith(".claim_")
-          || n.startsWith("._last_batch.tmp_")) && // crashed sidecar writes
+          || n.startsWith("._last_batch.tmp_") // crashed sidecar replaces
+          || n.startsWith("._constraints.tmp_")) &&
           nowMs - newestMtime(st) > orphanHorizonMs
       }
       .foreach(st => fs.delete(st.getPath, true))

@@ -7,6 +7,7 @@ import graft.{QueryDef, QueryRegistry, Scratch}
 import graft.etl.{Transforms, Warehouse}
 import graft.oracle.OracleSql.q
 import graft.plans.PlanRuleSupport.requireServedFrom
+import graft.sources.MetaFile
 
 /** Incremental ETL: the reference's "Incremental ETL / Automated scheduling"
   * roadmap item (`README.md:180-184`, SURVEY.md §2.10) built Spark-first —
@@ -112,9 +113,8 @@ object IncrementalEtl extends QueryRegistry {
       w: Warehouse, summaryPath: String, batch: DataFrame,
       batchId: Long): Unit = {
     import org.apache.spark.sql.functions._
-    val dest = new org.apache.hadoop.fs.Path(summaryPath)
+    val (fs, dest) = MetaFile.fsOf(spark, summaryPath)
     val tmp = new org.apache.hadoop.fs.Path(summaryPath + ".tmp")
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
     def markerOf(dir: String) =
       new org.apache.hadoop.fs.Path(dir, "_applied_batch")
     // roll a crashed publish forward: the staged dir is COMPLETE state
@@ -124,13 +124,7 @@ object IncrementalEtl extends QueryRegistry {
       fs.rename(tmp, dest)
       spark.catalog.refreshByPath(summaryPath)
     }
-    val applied =
-      if (!fs.exists(markerOf(summaryPath))) None
-      else {
-        val in = fs.open(markerOf(summaryPath))
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-        finally in.close()
-      }
+    val applied = MetaFile.read(fs, markerOf(summaryPath)).map(_.trim.toLong)
     if (!applied.exists(_ >= batchId)) {
       val cells = monthCountryCells(batch, w.dimCustomer)
       val merged =
@@ -146,8 +140,7 @@ object IncrementalEtl extends QueryRegistry {
       // snapshot of the input is needed and the window where `dest` is
       // absent is a single metadata rename, not a whole job
       merged.write.mode("overwrite").parquet(tmp.toString)
-      val out = fs.create(markerOf(tmp.toString), true)
-      try out.write(s"$batchId\n".getBytes("UTF-8")) finally out.close()
+      MetaFile.write(fs, markerOf(tmp.toString), Seq(batchId.toString))
       if (fs.exists(dest)) fs.delete(dest, true)
       fs.rename(tmp, dest)
       // the swap changed the path's files out of band — invalidate any

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * probe or measurement main belongs under `src/test` or outside the repo;
   * this spec fails when one lands in `src/main`. It also keeps scratch
   * placement and the AvailableNow run in the one module that owns them,
-  * [[Scratch]], and the walk through adaptive plans in
-  * `graft.plans.PlanRuleSupport`. */
+  * [[Scratch]], the walk through adaptive plans in
+  * `graft.plans.PlanRuleSupport`, and Hadoop file reads, writes and atomic
+  * replaces in `graft.sources.MetaFile`. */
 class EntryPointsSpec extends AnyFunSuite {
   private val objectDecl = """\bobject\s+(\w+)""".r
   private val mainDecl = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
@@ -55,6 +56,12 @@ class EntryPointsSpec extends AnyFunSuite {
   test("src/main walks adaptive plans only through PlanRuleSupport") {
     val hits = usesOutside("PlanRuleSupport.scala",
       Seq("AdaptiveSparkPlanExec", "QueryStageExec"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main opens, creates and atomically replaces files only through MetaFile") {
+    val hits = usesOutside("MetaFile.scala",
+      Seq("fs.open(", "fs.create(", "fromInputStream(in", "Rename.OVERWRITE", "ATOMIC_MOVE"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

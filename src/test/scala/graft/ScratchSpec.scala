@@ -46,18 +46,7 @@ class ScratchSpec extends SparkSpec {
   }
 
   test("a child JVM's root is gone once it exits normally") {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.map(_.toString)
-      .sliding(2).collect { case Array("--add-opens", v) =>
-        Seq("--add-opens", v) }.toSeq.flatten
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx1g",
-      "-cp", System.getProperty("java.class.path"), "graft.tools.ScratchChild")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString
-    val rc = p.waitFor()
+    val (rc, out) = graft.tools.ChildJvm.run("1g", "graft.tools.ScratchChild")
     assert(rc == 0, s"child JVM failed (rc=$rc):\n${out.takeRight(4000)}")
     val dir = "(?m)^SCRATCH_DIR=(.+)$".r.findFirstMatchIn(out).map(m => Paths.get(m.group(1)))
       .getOrElse(fail(s"child printed no scratch dir:\n${out.takeRight(2000)}"))

@@ -146,8 +146,7 @@ class IncrementalMvSpec extends SparkSpec {
     assert(maintain().isEmpty)
     // crash between the delete and the rename: only the staged dir exists —
     // the next call rolls it forward and continues from ITS marker
-    val fs = new org.apache.hadoop.fs.Path(s"$base/s")
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = graft.sources.MetaFile.fsOf(spark, s"$base/s")
     fs.rename(new org.apache.hadoop.fs.Path(s"$base/s"),
       new org.apache.hadoop.fs.Path(s"$base/s.tmp"))
     assert(maintain().isEmpty) // rolled forward, still current
@@ -264,8 +263,7 @@ class IncrementalMvSpec extends SparkSpec {
     IncrementalMv.initSummaryAt(spark, s"$dir/s", summarize(base), 7)
     // simulate a crash between the publish's delete and rename: only the
     // complete staged dir exists
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = graft.sources.MetaFile.fsOf(spark, dir)
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/s"),
       new org.apache.hadoop.fs.Path(s"$dir/s.tmp")))
     val dec = IncrementalMv.refreshPath(spark, s"$dir/s",

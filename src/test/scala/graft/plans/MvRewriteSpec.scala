@@ -37,6 +37,13 @@ class MvRewriteSpec extends SparkSpec {
     }
   }
 
+  /** `body` evaluated with the rewrite switched off: the direct answer an
+    * MV-served query must equal. */
+  private def withoutRewrite[A](body: => A): A = {
+    spark.conf.set(MvRewrite.EnabledKey, "false")
+    try body finally spark.conf.set(MvRewrite.EnabledKey, "true")
+  }
+
   test("coarser-grain sum/count aggregates reroute to the MV with identical results") {
     withMv { base =>
       def query() = spark.read.parquet(s"$base/grain")
@@ -46,11 +53,7 @@ class MvRewriteSpec extends SparkSpec {
       val rewritten = query()
       assert(scanRoots(rewritten).forall(_.endsWith("/mv")), scanRoots(rewritten))
       val served = rewritten.as[(String, Double, Long, Long)].collect().toSet
-      val direct = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try query().as[(String, Double, Long, Long)].collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val direct = withoutRewrite(query().as[(String, Double, Long, Long)].collect().toSet)
       assert(served === direct)
       assert(served.toSeq.map(_._4).sum === 100L)
     }
@@ -93,11 +96,7 @@ class MvRewriteSpec extends SparkSpec {
           min("amount").as("mn"), max("amount").as("mx"))
       val rewritten = query()
       assert(scanRoots(rewritten).forall(_.endsWith("/mv")), scanRoots(rewritten))
-      val direct = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try query().collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val direct = withoutRewrite(query().collect().toSet)
       // Row equality compares the decimal avg exactly — the rewrite must
       // reproduce Average's decimal divide bit-for-bit, not approximately
       assert(rewritten.collect().toSet === direct)
@@ -120,11 +119,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy("c").agg(sum("qty").as("tq"), count(lit(1)).as("n"))
       val rr = query()
       assert(scanRoots(rr).forall(_.endsWith("/mv")), scanRoots(rr))
-      val direct = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try query().as[(String, Long, Long)].collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val direct = withoutRewrite(query().as[(String, Long, Long)].collect().toSet)
       assert(rr.as[(String, Long, Long)].collect().toSet === direct)
       assert(rr.select(sum("n")).as[Long].head() ===
         (1L to 100L).count(i => i % 7 >= 3).toLong)
@@ -220,11 +215,7 @@ class MvRewriteSpec extends SparkSpec {
         .filter(col("tq") > 3350L)
       val rr = query()
       assert(scanRoots(rr).forall(_.endsWith("/mv")), scanRoots(rr))
-      val direct = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try query().as[(String, Long, Long)].collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val direct = withoutRewrite(query().as[(String, Long, Long)].collect().toSet)
       assert(rr.as[(String, Long, Long)].collect().toSet === direct)
       // the predicate actually splits the groups (not vacuous): sums are
       // c2=3300, c0=3366, c1=3434 — the 3350 cut keeps c0/c1, drops c2
@@ -244,11 +235,7 @@ class MvRewriteSpec extends SparkSpec {
           grouping_id().as("gid"))
       val rr = query()
       assert(scanRoots(rr).forall(_.endsWith("/mv")), scanRoots(rr))
-      val direct = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try query().collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val direct = withoutRewrite(query().collect().toSet)
       // decimal sum/avg must be bit-identical at every grain incl. the
       // grand total; row set covers all 3 rollup grains
       assert(rr.collect().toSet === direct)
@@ -295,11 +282,7 @@ class MvRewriteSpec extends SparkSpec {
         val rr = query(jt)
         assert(scanRoots(rr).exists(_.endsWith("/mv")), (jt, scanRoots(rr)))
         assert(!scanRoots(rr).exists(_.endsWith("/grain")), jt)
-        val direct = {
-          spark.conf.set(MvRewrite.EnabledKey, "false")
-          try query(jt).collect().toSet
-          finally spark.conf.set(MvRewrite.EnabledKey, "true")
-        }
+        val direct = withoutRewrite(query(jt).collect().toSet)
         assert(rr.collect().toSet === direct, jt)
       }
       // grouping by BOTH a dim column and an MV key still routes
@@ -316,11 +299,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy("region").agg(sum("qty").as("tq"), count(lit(1)).as("n"))
       val rrD = dupQ()
       assert(scanRoots(rrD).exists(_.endsWith("/mv")))
-      val directD = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try dupQ().as[(String, Long, Long)].collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val directD = withoutRewrite(dupQ().as[(String, Long, Long)].collect().toSet)
       assert(rrD.as[(String, Long, Long)].collect().toSet === directD)
     }
   }
@@ -345,11 +324,7 @@ class MvRewriteSpec extends SparkSpec {
       val rr = query()
       assert(scanRoots(rr).exists(_.endsWith("/mv")), scanRoots(rr))
       assert(!scanRoots(rr).exists(_.endsWith("/grain")))
-      val direct = {
-        spark.conf.set(MvRewrite.EnabledKey, "false")
-        try query().collect().toSet
-        finally spark.conf.set(MvRewrite.EnabledKey, "true")
-      }
+      val direct = withoutRewrite(query().collect().toSet)
       // every grain — (region,k), (region), grand total — bit-identical,
       // decimal avg included, grouping_id intact
       assert(rr.collect().toSet === direct)

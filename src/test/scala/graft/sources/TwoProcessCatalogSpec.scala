@@ -15,26 +15,6 @@ import graft.{Scratch, SparkSpec}
 class TwoProcessCatalogSpec extends SparkSpec {
   import spark.implicits._
 
-  private def spawnChild(catalogPath: String, table: String,
-      childRoot: String): (Int, String) = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    // the forked test JVM's own module opens are exactly what a Spark
-    // child needs; classpath likewise
-    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.map(_.toString)
-      .sliding(2).collect { case Array("--add-opens", v) =>
-        Seq("--add-opens", v) }.toSeq.flatten
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.tools.CatalogChild", catalogPath, table, childRoot)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString
-    val rc = p.waitFor()
-    (rc, out)
-  }
-
   test("a second JVM resolves, mutates, and extends the persisted catalog; this one observes it all") {
     val base = Scratch.dir("graft_2proc_")
     val root = s"$base/t"
@@ -49,7 +29,8 @@ class TwoProcessCatalogSpec extends SparkSpec {
     GraftCatalog.persistTo(spark, catalog)
     GraftCatalog.register("twoproc_t", root)
     try {
-      val (rc, out) = spawnChild(catalog, "twoproc_t", s"$base/child_t")
+      val (rc, out) = graft.tools.ChildJvm.run("3g", "graft.tools.CatalogChild",
+        catalog, "twoproc_t", s"$base/child_t")
       assert(rc == 0, s"child JVM failed (rc=$rc):\n${out.takeRight(4000)}")
       assert(out.contains("CHILD_OK rows=100 version=2"), out.takeRight(1000))
 

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.{Scratch, SparkSpec}
+import graft.tools.ChildJvm
 
 /** The versioned-table protocol proven across a REAL process boundary
   * (r18, VERDICT r17 #6 — the TwoProcessCatalogSpec treatment for
@@ -16,28 +17,6 @@ import graft.{Scratch, SparkSpec}
 class TwoProcessVersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
-  /** One child-JVM command line for both helpers: the orderly protocol
-    * child and the kill-target crash child must run under identical JVM
-    * settings (flags fixed here apply to both families of tests). */
-  private def childCmd(mainClass: String, args: String*): Seq[String] = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.map(_.toString)
-      .sliding(2).collect { case Array("--add-opens", v) =>
-        Seq("--add-opens", v) }.toSeq.flatten
-    Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g",
-      "-cp", System.getProperty("java.class.path"), mainClass) ++ args
-  }
-
-  private def spawnChild(root: String): (Int, String) = {
-    val pb = new ProcessBuilder(childCmd("graft.tools.VersionedChild", root): _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString
-    val rc = p.waitFor()
-    (rc, out)
-  }
-
   /** Launch the kill-target child parked at `phase` via the pause hook;
     * returns the process and the pause-marker file the parent polls. The
     * child's output goes to a temp file (never read on success — the pipe
@@ -45,7 +24,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
   private def spawnCrashChild(root: String, mode: String,
       phase: String): (Process, java.io.File) = {
     val pb = new ProcessBuilder(
-      childCmd("graft.tools.VersionedCrashChild", root, mode): _*)
+      ChildJvm.command("3g", "graft.tools.VersionedCrashChild", root, mode): _*)
     pb.environment().put("GRAFT_VT_PAUSE", phase)
     pb.redirectErrorStream(true)
     pb.redirectOutput(new java.io.File(Scratch.dir("graft_crash_child_"), "child.log"))
@@ -83,8 +62,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(spark, root) === 2)
     assert(VersionedTable.read(spark, root).count() === 100L)
     assert(pinned.count() === 100L)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = MetaFile.fsOf(spark, root)
     def staging() = fs.listStatus(new org.apache.hadoop.fs.Path(root))
       .map(_.getPath.getName)
       .filter(n => n.startsWith(".txn_") || n.startsWith(".claim_")).toSet
@@ -138,8 +116,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
     // exactly its referenced files
     VersionedTable.vacuum(spark, root, keep = 1)
     assert(VersionedTable.read(spark, root).count() === 80L)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = MetaFile.fsOf(spark, root)
     val liveSegs = VersionedTable.snapshotSegRefs(spark, root, 3).map(_.name).toSet
     val onDisk = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_manifests"))
       .map(_.getPath.getName).filter(_.startsWith("seg_")).toSet
@@ -161,7 +138,7 @@ class TwoProcessVersionedTableSpec extends SparkSpec {
     val pinnedV1 = VersionedTable.read(spark, root, Some(1))
     assert(pinnedHead.count() === 100L) // materialized pre-child
 
-    val (rc, out) = spawnChild(root)
+    val (rc, out) = ChildJvm.run("3g", "graft.tools.VersionedChild", root)
     assert(rc == 0, s"child JVM failed (rc=$rc):\n${out.takeRight(4000)}")
     assert(out.contains("CHILD_OK v3=3 v4=4 dropped=1"), out.takeRight(1000))
 

@@ -63,8 +63,7 @@ class VersionedStatsSpec extends SparkSpec {
       else r
     }
     import scala.jdk.CollectionConverters._
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = MetaFile.fsOf(spark, root)
     val sdir = new org.apache.hadoop.fs.Path(VersionedStats.statsDir(root, 1))
     fs.delete(sdir, true)
     spark.createDataFrame(poked.asJava, schema).coalesce(1).write.parquet(sdir.toString)
@@ -203,8 +202,7 @@ class VersionedStatsSpec extends SparkSpec {
     // plant a crashed half-written tmp for v2 — STALE by mtime, the sweep's
     // criterion (a young tmp may be another PROCESS's live staging write
     // the per-root lock cannot see, so age is what proves it dead)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = MetaFile.fsOf(spark, root)
     val tmp = new org.apache.hadoop.fs.Path(s"$root/_stats/.tmp_v00002")
     fs.mkdirs(tmp)
     val junk = fs.create(new org.apache.hadoop.fs.Path(tmp, "part-junk.parquet"), true)

@@ -102,8 +102,7 @@ class IncrementalEtlSpec extends SparkSpec {
     // crash between the swap's delete and rename: only the staged dir
     // remains — the next batch must roll it forward, not rebuild from its
     // own cells (which would silently erase every prior batch)
-    val fs = new org.apache.hadoop.fs.Path(summary)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = graft.sources.MetaFile.fsOf(spark, summary)
     assert(fs.rename(new org.apache.hadoop.fs.Path(summary),
       new org.apache.hadoop.fs.Path(summary + ".tmp")))
     IncrementalEtl.mergeBatchIntoSummary(spark, w, summary, batchFact, 2L)

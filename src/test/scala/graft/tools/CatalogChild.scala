@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM half of the cross-process catalog gate (r17, VERDICT r16
   * #5): a FRESH process — no shared in-memory state with the launcher —
   * binds the persisted catalog file, resolves a table the FIRST process
@@ -15,16 +13,9 @@ import org.apache.spark.sql.SparkSession
 object CatalogChild {
   def main(args: Array[String]): Unit = {
     val Array(catalogPath, table, childRoot) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-catalog-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production deployment route: extensions installed up front
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the production deployment route: extensions installed up front
+    val spark = ChildJvm.session("graft-catalog-child",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions")
     try {
       graft.sources.GraftCatalog.persistTo(spark, catalogPath)
       // resolve the parent's registration purely from the persisted file

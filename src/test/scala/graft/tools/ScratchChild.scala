@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM half of `ScratchSpec`'s lifetime test: writes a parquet file
   * into a scratch directory from a live local session, prints that
   * directory's path as `SCRATCH_DIR=<path>`, and returns from `main`
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
   * launching spec asserts the root is gone once this process has exited. */
 object ScratchChild {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[1]")
-      .appName("graft-scratch-child")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ChildJvm.session("graft-scratch-child")
     val dir = graft.Scratch.dir("graft_child_")
     spark.range(10).write.parquet(s"$dir/t")
     require(spark.read.parquet(s"$dir/t").count() == 10L)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Second-JVM half of the cross-process versioned-table gate (r18,
@@ -14,14 +13,7 @@ import org.apache.spark.sql.functions._
 object VersionedChild {
   def main(args: Array[String]): Unit = {
     val Array(root) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-versioned-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ChildJvm.session("graft-versioned-child")
     try {
       import spark.implicits._
       val vt = graft.sources.VersionedTable

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Kill-target half of the versioned-table crash gate (r19, VERDICT r18
@@ -14,14 +13,7 @@ import org.apache.spark.sql.functions._
 object VersionedCrashChild {
   def main(args: Array[String]): Unit = {
     val Array(root, mode) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-versioned-crash-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ChildJvm.session("graft-versioned-crash-child")
     val vt = graft.sources.VersionedTable
     mode match {
       case "delete" => // transact: pauses at pre-rename with a full claim staged
